@@ -60,28 +60,46 @@ object Bench {
     // identical run — environment, not code; floor the published minima
     "q_sessionize", "q_null_safe_join")
 
+  /** The benched session, shared with [[Profile]] so a profiled plan is
+    * the benched plan: [[GraftSession]] with scan splits sized to the
+    * benched SF (SURVEY §5: fit maxPartitionBytes to the data). The sf0.1
+    * files are all <11 MB, so the 128 MB default serializes every map
+    * stage onto one core; 4 MB keeps splits big enough to amortize task
+    * setup while letting every core work (the BASELINE.md protocol).
+    * Production-scale files use the default, as does ScalingBench. */
+  private[graft] def session(appName: String): SparkSession = {
+    val spark = GraftSession(appName)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
+    spark
+  }
+
+  /** The standing per-query map in a previous run's artifact `json`, or
+    * empty when it is no valid reference for a `cpus`-core run.
+    * Cross-regime guard (VERDICT r18 #5): the driver's 8-core scaling run
+    * once overwrote BENCH_LOCAL.json, so a 32-core run was adjudicating
+    * against 8-core minima — a different performance regime (8c is
+    * FASTER on many barrier-bound rows at sf0.1). A standing map whose
+    * recorded core count differs, or that records none (an unknown
+    * regime), skips the adjudication protocol outright. */
+  private[graft] def standingMap(json: String, cpus: Int): Map[String, Double] = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val standingCpus = root.path("cpus")
+    if (!standingCpus.canConvertToInt || standingCpus.asInt() != cpus) {
+      val regime = if (standingCpus.isMissingNode) "unknown" else standingCpus.toString
+      System.err.println(s"[bench] standing map is cpus=$regime, " +
+        s"this run is cpus=$cpus: skipping standing adjudication")
+      Map.empty
+    } else {
+      import scala.jdk.CollectionConverters._
+      root.path("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble()).toMap
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // size scan splits to the benched SF (SURVEY §5: fit
-      // maxPartitionBytes to the data): the sf0.1 files are all <11 MB, so
-      // the 128 MB default serializes every map stage onto one core. 4 MB
-      // keeps splits big enough to amortize task setup while letting the
-      // 32 threads work. Production-scale files use the default.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "4m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = session("graft-bench")
 
     /** One timed execution. A failure is NOT a time: time-to-exception on
       * a broken query (0.06-0.22 s for an analysis error) is
@@ -196,27 +214,7 @@ object Bench {
       try {
         val f = repoRoot.resolve("BENCH_LOCAL.json")
         if (!java.nio.file.Files.exists(f)) Map.empty
-        else {
-          val txt = java.nio.file.Files.readString(f)
-          val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-          // Cross-regime guard (VERDICT r18 #5): the driver's 8-core
-          // scaling run once overwrote this file, so a 32-core run was
-          // adjudicating against 8-core minima — a different performance
-          // regime (8c is FASTER on many barrier-bound rows at sf0.1).
-          // The artifact now records its core count; a standing map
-          // whose cpus differ from this run's is not a valid reference
-          // and the adjudication protocol is skipped outright.
-          val standingCpus = root.path("cpus")
-          if (!standingCpus.isMissingNode && standingCpus.asInt() != cpus.toInt) {
-            System.err.println(s"[bench] standing map is cpus=${standingCpus.asInt()}, " +
-              s"this run is cpus=$cpus: skipping standing adjudication")
-            Map.empty
-          } else {
-            val node = root.path("queries")
-            import scala.jdk.CollectionConverters._
-            node.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap
-          }
-        }
+        else standingMap(java.nio.file.Files.readString(f), cpus)
       } catch { case _: Exception => Map.empty }
     val adjudicatedNames = scala.collection.mutable.ListBuffer.empty[String]
     val adjudicated = retried.map {
@@ -252,7 +250,7 @@ object Bench {
     }
     val (stdoutLine, compactLine, line) =
       summarize(adjudicated, sfDir, only.isDefined, repCounts.toMap,
-        adjudicatedNames.toSeq, Some(cpus.toInt))
+        adjudicatedNames.toSeq, Some(cpus))
     // The driver keeps only the LAST ~2000 chars of stdout and parses the
     // LAST JSON it finds there. Print order matters (VERDICT r18 #1): in
     // r18 the compact total-only line printed LAST, so the driver's

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Slope probe for the O(delta) change feed (VERDICT r13 ask #1's
@@ -20,16 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object CdcSlope {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cdc-slope")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-cdc-slope")
     import graft.sources.LakeTable
 
     val baseRows = sys.env.getOrElse("SPARK_GRAFT_CDC_BASE", "200000").toLong

@@ -1,25 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session factory for the graft engine.
+import graft.functions.GraftFunctions
+
+/** Session factory for the graft engine — the one place a session is built.
   *
   * Tuning rationale (100 TB / multi-executor design, exercised on local[N]):
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join splitting,
   *    so plans written here survive scale-up without manual re-tuning.
-  *  - shuffle.partitions sized to the local core count (the driver contract
-  *    passes SPARK_GRAFT_CPUS); on a real cluster this would be ~2-3x total
-  *    cores and AQE coalesces down.
+  *  - shuffle.partitions sized to the local core count (SPARK_GRAFT_CPUS,
+  *    else every available processor); on a real cluster this would be
+  *    ~2-3x total cores and AQE coalesces down.
   *  - UTC session timezone: oracle (DuckDB) parity for all temporal ops.
+  *  - [[GraftExtensions]]: graft's SQL functions and planner strategies, in
+  *    this session and every `newSession()` / clone of it.
   */
 object GraftSession {
+  /** Local core count: SPARK_GRAFT_CPUS, else every available processor. */
+  private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def apply(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -27,15 +36,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // cosine_sim etc. in SQL
-    spark
-  }
-
-  /** Apply graft's standard configs to an externally-built session (the
-    * driver owns the session in Verify/Bench; tests own their own). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
 
@@ -57,5 +57,23 @@ object GraftSession {
     Tables.events(spark, dir).createOrReplaceTempView("events")
     graft.ingest.IngestOps.cardsCorpus(spark).createOrReplaceTempView("cards")
     graft.ingest.IngestOps.setsCorpus(spark).createOrReplaceTempView("sets")
+  }
+}
+
+/** graft's one session extension: every [[GraftFunctions.builders]] kernel
+  * as a SQL function, the top-k-per-group strategy
+  * ([[graft.plans.GraftStrategies]]) and graftlake SQL DML
+  * ([[graft.plans.LakeDmlStrategy]]). [[GraftSession]] installs it; an
+  * externally built session needs
+  * `spark.sql.extensions=graft.GraftExtensions`. Spark applies it once per
+  * session state, so every derived session carries it. */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftFunctions.builders.foreach { case (name, className, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
+    }
+    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
+    ext.injectPlannerStrategy(_ => graft.plans.LakeDmlStrategy)
   }
 }

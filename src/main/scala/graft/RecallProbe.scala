@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: measure each ANN variant's true per-query recall@10
@@ -20,14 +19,7 @@ object RecallProbe {
     val sections = args.lift(1).map(_.split(",").toSet)
       .getOrElse(Set("lsh", "knn", "ivf", "range"))
     def on(s: String) = sections.contains(s)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-recall-probe")
     // GRAFT_PROBE_AMPLIFY=k: probe the k-fold amplified corpus (the
     // ScalingBench amplifier — within-replica similarity preserved,
     // cross-replica destroyed) instead of the raw dir.

@@ -514,19 +514,12 @@ object ScalingBench {
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Spark's default maxPartitionBytes, unlike Bench: the amplified dirs
+    // are written as 32 part files, so scans parallelize without it
+    // (BASELINE.md)
+    val spark = GraftSession("graft-scaling-bench")
 
     val times = scala.collection.mutable.LinkedHashMap[String, Map[Int, Double]]()
     for (k <- scales) {

@@ -738,10 +738,8 @@ object DedupOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** The containment miner's mining stages under ONE definition, so the
-    * [[containmentDiag]] stage sizes can never drift from the registered
-    * query they explain (the prefix rule changed twice in r8/r9 — a
-    * copy-pasted diagnostic would have kept reporting the old pipeline).
+  /** The containment miner's mining stages: the materialized shingle
+    * sets and the distinct candidate pairs the verify joins read.
     *
     * Prefix length for t=0.8 on the candidate-shorter doc:
     * n − ceil(0.8n) + 1. NO positional (PPJoin) filter on this
@@ -752,8 +750,7 @@ object DedupOps {
     * order too, so the positional bound 1 + min(n_s−p_s, n_l−p_l)
     * almost never bites. The symmetric jaccard miner keeps the filter
     * (both sides already ranked — free). */
-  private case class ContainmentStages(docs: DataFrame, postings: DataFrame,
-      dfreq: DataFrame, prefix: DataFrame, candsPre: DataFrame, cands: DataFrame)
+  private case class ContainmentStages(docs: DataFrame, cands: DataFrame)
 
   private def containmentStages(spark: SparkSession, dir: String): ContainmentStages = {
     // shingle once — same materialization rationale as
@@ -768,28 +765,14 @@ object DedupOps {
       .withColumn("__rk", row_number().over(byRarity))
       .filter(col("__rk") <= col("n") - ceil(col("n") * 0.8) + 1)
       .select(col("h"), col("doc_id").as("doc_s"), col("n").as("n_s"))
-    val candsPre = prefix
+    val cands = prefix
       .join(postings.select(col("h"), col("doc_id").as("doc_l"), col("n").as("n_l")), Seq("h"))
       .filter(col("n_s") < col("n_l") ||
         (col("n_s") === col("n_l") && col("doc_s") < col("doc_l")))
-    val cands = candsPre
       .select(least(col("doc_s"), col("doc_l")).as("doc_a"),
         greatest(col("doc_s"), col("doc_l")).as("doc_b"))
       .distinct()
-    ContainmentStages(docs, postings, dfreq, prefix, candsPre, cands)
-  }
-
-  /** Stage-size diagnostic for the containment miner (graft.Diag only):
-    * how many rows each mining stage produces at `dir` — the numbers that
-    * explain a slope change without touching the registered query. Built
-    * on the SAME [[containmentStages]] the miner runs. */
-  private[graft] def containmentDiag(spark: SparkSession, dir: String): String = {
-    val st = containmentStages(spark, dir)
-    val hotDf = st.dfreq.agg(max("df")).head().getLong(0)
-    s"docs=${st.docs.count()} postings=${st.postings.count()} " +
-      s"distinctShingles=${st.dfreq.count()} maxDf=$hotDf " +
-      s"prefixRows=${st.prefix.count()} candRowsPreDistinct=${st.candsPre.count()} " +
-      s"cands=${st.cands.count()} verified=${qDedupContainment(spark, dir).count()}"
+    ContainmentStages(docs, cands)
   }
 
   /** Prefix-filtered variant (AllPairs/PPJoin lineage), same exact result.
@@ -872,8 +855,8 @@ object DedupOps {
     * probe scan).
     *
     * Everything stays in ONE plan: `bloom_filter_agg` (Spark's
-    * catalyst BloomFilterAggregate surfaced via
-    * [[graft.functions.GraftFunctions.register]]) builds the filter
+    * catalyst BloomFilterAggregate surfaced as SQL by
+    * [[graft.GraftExtensions]]) builds the filter
     * inside a scalar subquery — no driver-side sketch collect — and the
     * codegen'd `bloom_might_contain` probes it per batch row. Keys are
     * `xxhash64(text)`: the bloom ingests 8-byte longs, never the text.
@@ -893,7 +876,6 @@ object DedupOps {
     * every 11th base doc under new ids — the planted guaranteed-dup
     * traffic for the no-false-negative leg at every SF. */
   def qDedupBloomProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).createOrReplaceTempView("__bloom_docs")
     // sized for a 200k-item base at 1% fpp (the production knob; the
     // test corpora sit far under it, driving realized fpp toward zero —

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst cosine-similarity expression (SURVEY.md §2.G).
@@ -200,10 +198,9 @@ object GraftFunctions {
     IntegerPowRoot(exprs.head,
       intLit("int_pow_root p", exprs(1)), intLit("int_pow_root q", exprs(2)))
 
-  /** Name → builder for every graft kernel — ONE table drives both the
-    * runtime [[register]] path and the [[GraftExtensions]] injection, so
-    * the two surfaces cannot drift (every native expression is
-    * SQL-callable on either path). */
+  /** Name → builder for every graft kernel: the table
+    * [[graft.GraftExtensions]] injects into every graft session, so each
+    * native expression is SQL-callable under the name listed here. */
   val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim", classOf[CosineSimilarity].getName, cosineSimBuilder),
     ("dot_product", classOf[ArrayDotProduct].getName, dotProductBuilder),
@@ -227,15 +224,6 @@ object GraftFunctions {
     ("sorted_intersect_count", classOf[SortedIntersectCount].getName,
       sortedIntersectCountBuilder),
     ("int_pow_root", classOf[IntegerPowRoot].getName, intPowRootBuilder))
-
-  /** Idempotent runtime SQL registration on an existing session (the driver
-    * owns session construction, so extensions alone aren't enough). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, _, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
 
   import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
 
@@ -262,14 +250,4 @@ object GraftFunctions {
   def wsTokenize(text: Column): Column = toCol(WsTokenizeExpr(toExpr(text)))
   def wsTokenCount(text: Column): Column = toCol(WsTokenCountExpr(toExpr(text)))
   def intPowRoot(x: Column, p: Int, q: Int): Column = toCol(IntegerPowRoot(toExpr(x), p, q))
-}
-
-/** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)` or
-  * spark.sql.extensions=graft.functions.GraftExtensions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.builders.foreach { case (name, className, builder) =>
-      ext.injectFunction(
-        (FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
-    }
 }

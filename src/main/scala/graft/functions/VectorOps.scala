@@ -26,10 +26,4 @@ object VectorOps {
   /** Cosine similarity: dot / (||a|| * ||b||), all sequential folds. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
-  /** L2-normalize an array<double> column. */
-  def l2Normalize(v: Column): Column = {
-    val n = sqrt(dot(v, v))
-    transform(v, x => x / n)
-  }
 }

@@ -185,14 +185,20 @@ object GovernanceOps {
     *     dedup_exact rule),
     *   - `token_start`: the doc's position in the packed training
     *     manifest (the prefix sum needs the FULL corpus — a subject's
-    *     position depends on every predecessor — so this is the one
-    *     corpus-priced column; the rest compute on the request-sized
-    *     slice).
+    *     position depends on every predecessor — so this column reads
+    *     the pipeline-held packed manifest; the rest compute on the
+    *     request-sized slice).
     *
     * Scale shape: requests broadcast; the chunker and classifier run on
-    * the SEMI-JOINED (request-sized) slice only; the dedup election and
-    * the pack are one linear corpus pass each; the final assembly is
-    * request-sized left joins. */
+    * the SEMI-JOINED (request-sized) slice only; the dedup election is
+    * one linear corpus pass; the final assembly is request-sized left
+    * joins. The pack is NOT a per-call corpus pass: it rides the
+    * session-cached packed manifest
+    * ([[graft.text.TextOps.cachedPackedManifest]]) that the forget
+    * audits share, built once per session and data dir. The tradeoff is
+    * the one [[graft.SessionCache]] flags for large intermediates: the
+    * manifest's corpus-row-sized localCheckpoint blocks stay pinned for
+    * the session's lifetime. */
   def qGdprAccessReport(spark: SparkSession, dir: String): DataFrame = {
     val spark2 = spark
     import spark2.implicits._

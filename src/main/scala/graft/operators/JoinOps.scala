@@ -194,7 +194,6 @@ object JoinOps {
     * (selectivity × fact + fp) enter the exchange — at a 1/5-selective
     * dimension that is ~80% of the join's shuffle bytes gone. */
   def qBloomSemijoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.customer(spark, dir).createOrReplaceTempView("__bsj_customer")
     Tables.orders(spark, dir).createOrReplaceTempView("__bsj_orders")
     // sized for a 1M-key dimension at 1% fpp (the production knob)

@@ -21,7 +21,8 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeTable}
   * other V2 table the analyzer resolves the command and the PLANNER
   * refuses it ("does not support MERGE INTO TABLE"). That planner seam
   * is exactly where a whole-operator extension belongs (the brief's
-  * option (c): custom strategy via extraStrategies): [[LakeDmlStrategy]]
+  * option (c): a custom planner strategy): [[LakeDmlStrategy]], which
+  * [[graft.GraftExtensions]] injects into every graft session,
   * claims the RESOLVED `MergeIntoTable`/`UpdateTable` whose target is a
   * [[GraftLakeCatalogTable]] and lowers it onto the lake's native
   * transactional ops — the keyed copy-on-write [[LakeTable.mergeDelete]]
@@ -68,14 +69,6 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeTable}
   * race rebases exactly like the programmatic API).
   */
 object LakeDml extends PredicateHelper {
-  /** Idempotently inject the strategy (the TopKPerGroup registration
-    * pattern). [[graft.sources.GraftLakeCatalog.initialize]] calls this,
-    * so configuring the catalog IS enabling its SQL DML. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(LakeDmlStrategy))
-      spark.experimental.extraStrategies =
-        LakeDmlStrategy +: spark.experimental.extraStrategies
-
   /** Largest doomed-key set a row-level DELETE commits as an
     * equality-delete sidecar; beyond it the statement rewrites the
     * survivors instead (the sidecar would otherwise ride every reader's

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -95,17 +95,11 @@ object GraftStrategies extends SparkStrategy {
 }
 
 object TopK {
-  /** Ensure the strategy is installed on the session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        GraftStrategies +: spark.experimental.extraStrategies
-
-  /** Top-k rows per group through the custom operator. orderCols may be
-    * plain columns (ascending) or col.desc/col.asc forms. */
+  /** Top-k rows per group through the custom operator (planned by
+    * [[GraftStrategies]], which [[graft.GraftExtensions]] installs).
+    * orderCols may be plain columns (ascending) or col.desc/col.asc forms. */
   def topKPerGroup(df: DataFrame, k: Int, groupCols: Seq[Column], orderCols: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val sortOrders = orderCols.map(c => ColumnBridge.eagerExpression(spark, c) match {
       case s: SortOrder => s
       case e => SortOrder(e, Ascending)

@@ -51,7 +51,6 @@ object SimilarityOps {
 
   /** Embeddings with the float vectors widened to array<double>. */
   private def vectors(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     assertIdSpace(spark, dir)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))

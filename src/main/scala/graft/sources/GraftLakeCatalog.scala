@@ -53,11 +53,9 @@ class GraftLakeCatalog extends TableCatalog
     warehouse = Option(options.get("warehouse")).getOrElse(
       throw new IllegalArgumentException(s"graftlake catalog '$name': set " +
         s"spark.sql.catalog.$name.warehouse=<directory>"))
-    // configuring the catalog IS enabling its SQL DML: MERGE INTO /
-    // UPDATE lower onto the lake's transactional merge/delete through
-    // the planner extension (graft.plans.LakeDml)
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.LakeDml.register)
+    // SQL MERGE INTO / UPDATE lower onto the lake's transactional
+    // merge/delete through graft.plans.LakeDmlStrategy, which only a
+    // session built with graft.GraftExtensions plans
   }
 
   override def name(): String = catalogName

@@ -641,7 +641,6 @@ object LakeTable {
       bloomCols: Seq[(String, DataType)],
       maxFileRows: Long): Map[String, Map[String, String]] = {
     if (bloomCols.isEmpty || files.isEmpty) return Map.empty
-    graft.functions.GraftFunctions.register(spark)
     val est = math.max(maxFileRows, 64L)
     val numBits = math.min(
       org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(est, 0.01),

@@ -96,4 +96,13 @@ class BenchSpec extends AnyFunSuite {
     }
     assert(artifact.contains("\"q_dead\":\"intermittent network unreachable\""))
   }
+
+  test("the standing map adjudicates only a run of its own recorded core count") {
+    val queries = "\"queries\":{\"q_a\":1.250,\"q_b\":0.500}"
+    // a map recording no core count is an unknown regime: no reference
+    assert(Bench.standingMap(s"{$queries}", cpus = 8).isEmpty)
+    assert(Bench.standingMap(s"""{"cpus":8,$queries}""", cpus = 8) ==
+      Map("q_a" -> 1.25, "q_b" -> 0.5))
+    assert(Bench.standingMap(s"""{"cpus":32,$queries}""", cpus = 8).isEmpty)
+  }
 }

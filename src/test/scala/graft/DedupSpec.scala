@@ -121,7 +121,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("bloom probe: no false negatives, bounded fps, planted replays flagged") {
-    graft.functions.GraftFunctions.register(spark)
     // direct round-trip of the registered functions: every member of the
     // build set must hit (a bloom has NO false negatives), and probes of
     // a disjoint id range must mostly miss (1%-fpp sizing, slack 10x)

@@ -327,7 +327,6 @@ class RelationalExtSpec extends SparkSpec {
 
   test("bloom semijoin: the probe genuinely reduces the pre-join stream, fp-safe") {
     import org.apache.spark.util.sketch.BloomFilter
-    graft.functions.GraftFunctions.register(spark)
     Tables.customer(spark, SfDir).createOrReplaceTempView("__bsj_customer")
     Tables.orders(spark, SfDir).createOrReplaceTempView("__bsj_orders")
     val numBits = BloomFilter.optimalNumOfBits(1000000L, 0.01)

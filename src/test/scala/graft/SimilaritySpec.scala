@@ -9,7 +9,6 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("native cosine_sim expression matches the column-algebra fold bit-for-bit") {
-    GraftFunctions.register(spark)
     val vecs = Tables.embeddings(spark, SfDir)
       .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
     val a = vecs.select(col("vec_id").as("ida"), col("vec").as("va")).filter(col("ida") < 20)
@@ -24,7 +23,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim is registered for SQL and self-similarity is 1") {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, SfDir).createOrReplaceTempView("emb")
     val bad = spark.sql(
       "SELECT vec_id, cosine_sim(embedding, embedding) c FROM emb")
@@ -40,7 +38,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native sign_buckets matches the per-plane dot-product construction bit-for-bit") {
-    GraftFunctions.register(spark)
     val bits = 8
     val planes = SimilarityOps.hyperplanes(64, bits)
     val vecs = Tables.embeddings(spark, SfDir)
@@ -93,7 +90,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native adc_lookup matches the aggregate-HOF algebra bit-for-bit and rejects bad codes") {
-    GraftFunctions.register(spark)
     // random-ish but deterministic codes/tables: 8 blocks x 16 cells
     val rows = (0 until 200).map { i =>
       val codes = Array.tabulate(8)(b => (i * 31 + b * 7) % 16)

@@ -613,7 +613,6 @@ class TextOpsSpec extends SparkSpec {
     // was silently dropped (and the oracle mirrored it, so the gate
     // could not catch it). With the fallback those docs must bucket by
     // the GLOBAL sample cutoffs.
-    graft.functions.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_ccnet_unsampled").toString
     // 4 re-keyed copies -> 2000 docs -> cap = ceil(1024*1000/2000) = 512:
     // roughly half the corpus sits outside the sample, so unsampled
@@ -1134,9 +1133,8 @@ class TextOpsSpec extends SparkSpec {
       case w: WholeStageCodegenExec => w.toString }
     assert(wsc.exists(s => s.contains("ws_tokenize") && s.contains("ws_token_count")),
       "tokenizer projection fell out of whole-stage codegen")
-    // SQL surface: runtime registration and the extension injection share
-    // one builder table; probe the runtime path end-to-end
-    GraftFunctions.register(spark)
+    // SQL surface: the session extension injects the same builder
+    // table; probe the SQL path end-to-end
     assert(spark.sql("SELECT ws_token_count(' a  b\tc ')").head().getLong(0) == 3L)
     assert(spark.sql("SELECT ws_tokenize('a  b')").head().getSeq[String](0) == Seq("a", "b"))
     assert(spark.sql(
