@@ -15,6 +15,8 @@ import graft.functions.GraftFunctions
   *    else every available processor); on a real cluster this would be
   *    ~2-3x total cores and AQE coalesces down.
   *  - UTC session timezone: oracle (DuckDB) parity for all temporal ops.
+  *  - Generated-class cache of [[CodegenCacheEntries]] instead of Spark's
+  *    100: see that constant for the measured working set.
   *  - [[GraftExtensions]]: graft's SQL functions and planner strategies, in
   *    this session and every `newSession()` / clone of it.
   */
@@ -22,6 +24,19 @@ object GraftSession {
   /** Local core count: SPARK_GRAFT_CPUS, else every available processor. */
   private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `spark.sql.codegen.cache.maxEntries` (Spark's default is 100). It
+    * is a STATIC conf: Spark sizes its one JVM-wide cache of compiled
+    * generated classes from it once, so an externally built session
+    * (spark-submit, a notebook) has to set it itself.
+    *
+    * Measured working set (perfbench traced steady-state ops, 4 cores):
+    * at 100 entries every op recompiles its plans — 52 compiles per op
+    * on card_refresh, 138.5 on corpus_gate. card_refresh reaches 0 at
+    * 150; corpus_gate needs 14 at 200 and reaches its floor of 7 at 250
+    * (still 7 at 1000: plans whose code changes from op to op). 400
+    * keeps ~1.6x headroom over that ~250-entry working set. */
+  private[graft] val CodegenCacheEntries = 400
 
   def apply(appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -33,6 +48,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -111,6 +111,12 @@ object RecallProbe {
         report(s"ivf 1/$denom", SimilarityOps.annTopkIvfRanked(spark, dir))
         report(s"ivfpq 1/$denom", SimilarityOps.annTopkIvfPqRanked(spark, dir))
       }
+      // the same IVF+PQ index persisted and served from the store (the
+      // ann_index_serve path), at the default probe fraction
+      sys.props.remove("graft.ivf.probe.denom")
+      val store = s"$scratch/ann_index"
+      graft.sources.AnnIndexStore.write(spark, dir, store)
+      report("index_serve", graft.sources.AnnIndexStore.serve(spark, dir, store))
     } finally sys.props.remove("graft.ivf.probe.denom")
 
     // Range search (cos >= tau ball): found is a SUBSET of true (exact

@@ -569,45 +569,84 @@ object SimilarityOps {
         first(col("vec")).as("vec"),
         min(struct(col("__d"), col("cell"))).getField("cell").as("cell"))
 
-  /** Coarse k-means quantizer, DataFrame-native: centroids live on the
-    * driver (K x dim doubles — quantizer metadata, like a broadcast dim);
-    * each Lloyd iteration is one broadcast-join assignment pass + one
-    * explode+groupBy mean pass. Converges enough for cell routing in very
-    * few iterations; ml.KMeans costs ~4x the wall time for identical
-    * recall. Deterministic: stride-seeded init, tie-broken assignment. */
-  private[similarity] def kmeansLite(
-      data: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
-    // seed selection by id-hash order: deterministic, spread uniformly over
-    // the corpus, and robust to ANY id distribution (a modulo-stride pick
-    // silently under-seeds offset or sparse id spaces)
-    var centroids: Array[Array[Double]] = data
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
-      .select("vec").collect()
-      .map(_.getSeq[Double](0).toArray)
+  /** Coarse k-means quantizer, trained on the driver: ONE collect of the
+    * (already bounded) training sample, then Lloyd over driver arrays.
+    *
+    * Deterministic spec — the same rules the distributed [[assignCells]]
+    * applies, so the trained quantizer routes exactly like the served one:
+    *  - seeds = the first k rows in (xxhash64(vec_id), vec_id) order
+    *    (spread uniformly over the corpus and robust to ANY id
+    *    distribution — a modulo-stride pick silently under-seeds offset or
+    *    sparse id spaces);
+    *  - distance = ‖v‖² − 2⟨v,c⟩ + ‖c‖², each dot product summed in
+    *    element order (the `dot_product` kernel's order), ties to the
+    *    lowest cell;
+    *  - new centroid = per-dimension sum / count, summed in seed order;
+    *    a cell that captured no points keeps its previous centroid.
+    *
+    * Cost model: training is ~(64·k)·k·d per iteration (3 iterations)
+    * against n·k·d for the one distributed full-corpus assignment, so with
+    * the n ≈ 8k² the [[ivfCells]] sizing implies, training is ~24/k of the
+    * build — a bounded driver loop next to the part that has to scale,
+    * at the price of one Spark job instead of several per iteration. */
+  private[graft] def kmeansLite(
+      data: DataFrame, k: Int, iters: Int): Array[Array[Double]] =
+    lloyd(seedOrdered(data), k, iters)
+
+  /** The `vec` column of (vec_id, vec) rows, collected once and sorted
+    * into [[kmeansLite]]'s seed order (xxhash64(vec_id), vec_id). */
+  private def seedOrdered(data: DataFrame): Array[Array[Double]] =
+    data.select(xxhash64(col("vec_id")), col("vec_id"), col("vec")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray))
+      .sortBy(r => (r._1, r._2))
+      .map(_._3)
+
+  /** Left-to-right dot product — the `dot_product` kernel's summation
+    * order, so driver distances equal the served ones bit-for-bit. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** Lloyd over `points` already in seed order: seeds = the first k
+    * points, then `iters` assign/update rounds ([[kmeansLite]]'s rules).
+    * Returns fewer than k centroids only when there are fewer than k
+    * points; callers that need exactly k check. */
+  private def lloyd(points: Array[Array[Double]], k: Int,
+      iters: Int): Array[Array[Double]] = {
+    var centroids = points.take(k)
+    val norms = points.map(v => dot(v, v))
     (1 to iters).foreach { _ =>
-      val updated = assignCells(data, cellsDf(data.sparkSession, centroids))
-        .select(col("cell"), posexplode_outer(col("vec")).as(Seq("pos", "x")))
-        .groupBy("cell", "pos").agg(avg("x").as("m"))
-        .groupBy("cell").agg(map_from_arrays(
-          collect_list(col("pos")), collect_list(col("m"))).as("mm"))
-        .collect()
-        .map { r =>
-          val m = r.getMap[Int, Double](1)
-          r.getInt(0) -> Array.tabulate(m.size)(i => m(i))
-        }.toMap
-      // a cell that captured no points keeps its previous centroid
-      centroids = centroids.indices.map(i => updated.getOrElse(i, centroids(i))).toArray
+      val cnorms = centroids.map(c => dot(c, c))
+      val sums = centroids.map(c => new Array[Double](c.length))
+      val counts = new Array[Long](centroids.length)
+      var i = 0
+      while (i < points.length) {
+        val v = points(i)
+        var best = 0
+        var bestD = Double.PositiveInfinity
+        var c = 0
+        while (c < centroids.length) {
+          val d = norms(i) - dot(v, centroids(c)) * 2.0 + cnorms(c)
+          if (d < bestD) { bestD = d; best = c }
+          c += 1
+        }
+        val s = sums(best)
+        var j = 0
+        while (j < s.length) { s(j) += v(j); j += 1 }
+        counts(best) += 1
+        i += 1
+      }
+      centroids = centroids.indices.map { c =>
+        if (counts(c) == 0) centroids(c) else sums(c).map(_ / counts(c))
+      }.toArray
     }
     centroids
   }
 
-  /** Session-scoped IVF index over the corpus at `dir`: the k-means cell
-    * table (broadcastable quantizer metadata) and the one-shuffle cell
-    * assignment, built once per session and served from [[SessionCache]].
-    * This mirrors how IVF is actually deployed (FAISS lineage: TRAIN the
-    * quantizer and assign the corpus once at index time, serve many
-    * queries) — so the registered query prices the SEARCH, while the spec
-    * exercises the build directly via [[kmeansLite]]. */
   /** Cell count for an IVF index over n vectors: K ~ sqrt(n) — the
     * classic balance point (serve work per query ~ nProbe * n/K and build
     * work ~ n * K meet at sqrt). A FIXED K is quadratic at scale: cells
@@ -645,12 +684,19 @@ object SimilarityOps {
     sys.props.get("graft.ivf.probe.denom").map(_.toInt).getOrElse(4)
   private def ivfProbes(k: Int): Int = math.max(6, (k + probeDenom - 1) / probeDenom)
 
+  /** Session-scoped IVF index over the corpus at `dir`: the k-means cell
+    * table (broadcastable quantizer metadata) and the one-shuffle cell
+    * assignment, built once per session and served from [[SessionCache]].
+    * This mirrors how IVF is actually deployed (FAISS lineage: TRAIN the
+    * quantizer and assign the corpus once at index time, serve many
+    * queries) — so the registered query prices the SEARCH, while
+    * SimilaritySpec exercises the training directly via [[kmeansLite]]. */
   private def ivfIndex(spark: SparkSession, dir: String, k: Int): (DataFrame, DataFrame) = {
     val base = withPlanted(vectors(spark, dir))
     // FAISS-lineage split: TRAIN the quantizer on a bounded deterministic
-    // sample (~64 vectors per cell — Lloyd needs no more), then assign the
-    // FULL corpus once. Training on everything would make the build
-    // superlinear for no recall gain.
+    // sample (~64 vectors per cell — Lloyd needs no more) on the driver,
+    // then assign the FULL corpus once, distributed. Training on
+    // everything would make the build superlinear for no recall gain.
     val n = corpusSize(spark, dir)
     val trainCap = 64L * k
     val train =
@@ -883,8 +929,9 @@ object SimilarityOps {
     * centroid (same rule as [[kmeansLite]]).
     *
     * Scale shape (the reason this is Spark-shaped and not a driver
-    * loop): centroids are k×d quantizer METADATA (the sanctioned-collect
-    * list — ≤ k·d longs per round, like [[kmeansLite]]'s train step);
+    * loop like [[kmeansLite]], which trains on a bounded sample: this
+    * clusters the WHOLE corpus): centroids are k×d quantizer METADATA
+    * (the sanctioned-collect list — ≤ k·d longs per round);
     * each assignment pass is one broadcast join + a map-side-combined
     * groupBy(vec_id) argmin (shuffle volume n rows, never n·k — the k
     * candidate rows for a vector are produced inside one task and the
@@ -959,8 +1006,9 @@ object SimilarityOps {
   private val PqCells = 16
 
   /** PQ codebooks, one 16-cell k-means per 8-dim sub-block, trained on
-    * RESIDUALS (vec − coarse-cell centroid) over the same bounded
-    * deterministic sample the IVF quantizer uses, memoized per
+    * RESIDUALS (vec − coarse-cell centroid) over a bounded
+    * deterministic sample (~64 vectors per code) collected ONCE and
+    * sliced into its 8 sub-blocks on the driver, memoized per
     * (dir, file-snapshot): ~1k doubles of quantizer metadata — the
     * train/serve split of the sanctioned-collect list. Residual encoding
     * is the FAISS IVFPQ default (r9): the coarse quantizer removes the
@@ -1007,19 +1055,20 @@ object SimilarityOps {
     val key = graft.SessionCache.dirKey(dir)
     pqMemo.computeIfAbsent(key, _ => {
       val (cells, assigned) = ivfIndex(spark, dir, ivfCells(corpusSize(spark, dir)))
-      val resid = residualized(assigned, cells)
-      val dim = resid.select(size(col("rvec"))).head().getInt(0)
+      val dim = vecDim(spark, dir)
       require(dim % PqBlocks == 0, s"PQ: dim $dim not divisible by $PqBlocks blocks")
       val sub = dim / PqBlocks
       val n = corpusSize(spark, dir)
       val trainCap = 64L * PqCells
+      val resid = residualized(assigned, cells)
       val train =
         if (n > trainCap) resid.filter(pmod(xxhash64(col("vec_id")), lit(n / trainCap + 1)) === 0)
         else resid
+      // one collect of the residual sample; each block trains on its
+      // driver-side slice (same seed order for every block)
+      val sample = seedOrdered(train.select(col("vec_id"), col("rvec").as("vec")))
       Array.tabulate(PqBlocks) { b =>
-        val cb = kmeansLite(
-          train.select(col("vec_id"), expr(s"slice(rvec, ${b * sub + 1}, $sub)").as("vec")),
-          PqCells, iters = 3)
+        val cb = lloyd(sample.map(_.slice(b * sub, (b + 1) * sub)), PqCells, iters = 3)
         // the ADC lookup below indexes a DENSE blocks x cells table
         // (slot = b*PqCells + code) — a short codebook (training sample
         // under PqCells rows) would silently shift every later block's
@@ -1064,8 +1113,7 @@ object SimilarityOps {
       val (cells, assigned) = ivfIndex(spark, dir, ivfCells(corpusSize(spark, dir)))
       // codes quantize the RESIDUAL re the vector's own coarse cell
       val base = residualized(assigned.filter(col("vec_id") < PlantedIdOffset), cells)
-      val dim = base.select(size(col("rvec"))).head().getInt(0)
-      subBlocks(base, "rvec", dim / PqBlocks)
+      subBlocks(base, "rvec", vecDim(spark, dir) / PqBlocks)
         .join(broadcast(pqCodebookDf(spark, dir)), "block")
         .withColumn("__d",
           col("cnorm") - GraftFunctions.dotProduct(col("bvec"), col("cvec")) * 2.0)

@@ -193,14 +193,14 @@ object AnnIndexStore {
     // dropped silently — the exact failure [[serve]]'s union exists to
     // prevent).
     val vDir = appendedDir(path, meta.gen)
-    val before = partFiles(vDir)
+    val before = StoreParts.list(vDir)
     val obs = org.apache.spark.sql.Observation()
     batch0.select(col("vec_id"), col("vec"))
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
       .write.mode("append").parquet(vDir)
     val appendedN = obs.get("n").asInstanceOf[Long]
-    val newFiles = (partFiles(vDir) -- before).toSeq.sorted.map(f => s"$vDir/$f")
+    val newFiles = StoreParts.added("AnnIndexStore", vDir, before, appendedN)
     // an empty batch writes no part files and has nothing to encode
     if (newFiles.nonEmpty) {
       val batch = spark.read.parquet(newFiles: _*)
@@ -209,14 +209,6 @@ object AnnIndexStore {
     }
     writeMeta(path, meta.copy(appended = meta.appended + appendedN))
   }
-
-  /** part-file names currently in a store directory — [[append]] uses a
-    * before/after listing diff to read back exactly the rows one append
-    * produced (single writer per index path by contract). */
-  private def partFiles(dir: String): Set[String] =
-    Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
 
   /** Publish generation gen+1 from the given frames (appended may be
     * None when the store has no appended set), then drop the old
@@ -286,10 +278,6 @@ object AnnIndexStore {
 
   /** Parquet fragment count of the live codes store — the maintenance
     * health metric [[compactIndexFiles]] exists to bound. */
-  def codesFragments(path: String): Int = {
-    val gen = readMeta(path).gen
-    Option(new java.io.File(codesDir(path, gen)).listFiles)
-      .getOrElse(Array.empty)
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-  }
+  def codesFragments(path: String): Int =
+    StoreParts.list(codesDir(path, readMeta(path).gen)).size
 }

@@ -101,15 +101,6 @@ object DedupIndexStore {
   private def signed(docs: DataFrame): DataFrame =
     shingled(docs).withColumn("sig", DedupOps.minhashSignature(col("sh"), SigK))
 
-  /** part-file names currently in a store directory — the write paths
-    * use a before/after listing diff to read back EXACTLY the rows one
-    * append produced (writers are single-per-index-path by contract, so
-    * the diff is precise). */
-  private def partFiles(dir: String): Set[String] =
-    Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
-
   private def checkFresh(dataDir: String, path: String, op: String): Unit = {
     val stored = readMeta(path).snapshot
     val live = graft.Tables.snapshot(s"$dataDir/documents.parquet")
@@ -160,12 +151,12 @@ object DedupIndexStore {
     // single writer by contract), and the appended-count bookkeeping
     // rides the write itself via observe() instead of a third job.
     val sDir = shinglesDir(path, meta.gen)
-    val before = partFiles(sDir)
+    val before = StoreParts.list(sDir)
     val obs = org.apache.spark.sql.Observation()
     shingled(batch).observe(obs, count(lit(1)).as("n"))
       .write.mode("append").parquet(sDir)
     val appendedN = obs.get("n").asInstanceOf[Long]
-    val newFiles = (partFiles(sDir) -- before).toSeq.sorted.map(f => s"$sDir/$f")
+    val newFiles = StoreParts.added("DedupIndexStore", sDir, before, appendedN)
     // an empty batch writes no part files and has no postings to band
     if (newFiles.nonEmpty) {
       val s = spark.read.parquet(newFiles: _*)
@@ -247,12 +238,8 @@ object DedupIndexStore {
 
   /** Parquet fragment count of the live generation's postings store —
     * the maintenance health metric [[compactIndex]] exists to bound. */
-  def postingsFragments(path: String): Int = {
-    val gen = readMeta(path).gen
-    Option(new java.io.File(postingsDir(path, gen)).listFiles)
-      .getOrElse(Array.empty)
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-  }
+  def postingsFragments(path: String): Int =
+    StoreParts.list(postingsDir(path, readMeta(path).gen)).size
 
   /** Probe a query batch (doc_id, text) against the stored corpus:
     * band-bucket join against the postings routes candidates (shuffle

@@ -14,6 +14,11 @@ class AnnIndexStoreSpec extends SparkSpec {
   private val store = java.nio.file.Files
     .createTempDirectory("graft_ann_index").toString
 
+  /** Spark jobs one fresh IVF+PQ build + store write may run at sf0.001:
+    * 30 measured, plus headroom. Training the quantizers as distributed
+    * Lloyd iterations again would run ~200. */
+  private val JobBudget = 40
+
   test("write/read round-trips the index and serves identical top-10") {
     AnnIndexStore.write(spark, SfDir, store)
     val loaded = AnnIndexStore.read(spark, SfDir, store)
@@ -80,6 +85,48 @@ class AnnIndexStoreSpec extends SparkSpec {
     val meta = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "meta.json"))
     assert(meta.contains("\"appended\":3"), meta)
+  }
+
+  test("an append whose rows are missing from the part-file listing fails loudly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_parts").toString + "/v"
+    spark.range(3).write.parquet(dir)
+    val files = graft.sources.StoreParts.list(dir)
+    assert(files.nonEmpty)
+    assert(graft.sources.StoreParts.added("AnnIndexStore", dir, Set.empty, 3) ==
+      files.toSeq.sorted.map(f => s"$dir/$f"))
+    // an empty batch may add no file
+    assert(graft.sources.StoreParts.added("AnnIndexStore", dir, files, 0).isEmpty)
+    // rows written but no new file listed: counting them would leave
+    // them unrouteable, so the append must refuse
+    val e = intercept[IllegalStateException] {
+      graft.sources.StoreParts.added("AnnIndexStore", dir, files, 3)
+    }
+    assert(e.getMessage.contains("wrote 3 rows"), e.getMessage)
+  }
+
+  test("building the IVF+PQ index on a fresh corpus stays within its Spark job budget") {
+    // a corpus dir no session cache has seen: the build trains, assigns
+    // and encodes from scratch
+    val data = java.nio.file.Files.createTempDirectory("graft_ann_jobs")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(SfDir, "embeddings.parquet"),
+      data.resolve("embeddings.parquet"))
+    val group = "ann-build-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "IVF+PQ build")
+      try AnnIndexStore.write(spark, data.toString, s"$data/ann")
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    graft.sources.LakeTable.deleteRecursively(data.toFile)
+    assert(jobs.get() > 0 && jobs.get() <= JobBudget,
+      s"IVF+PQ build ran ${jobs.get()} Spark jobs (budget $JobBudget)")
   }
 
   test("a corrupt meta.json names the missing field") {

@@ -48,4 +48,16 @@ class GraftSessionSpec extends SparkSpec {
       LakeTable.deleteRecursively(new java.io.File(root))
     }
   }
+
+  test("the generated-class cache holds more than Spark's default 100 plans") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    // each literal makes a distinct generated class
+    def plan(i: Int) = spark.range(4).selectExpr(s"id * ${1000 + i} + $i AS x").collect()
+    (0 until 150).foreach(plan)
+    val before = compiles.getCount
+    plan(0)
+    assert(compiles.getCount == before, "the first of 150 plans was evicted and recompiled")
+  }
 }

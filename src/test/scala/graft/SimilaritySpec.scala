@@ -548,6 +548,55 @@ class SimilaritySpec extends SparkSpec {
       "degenerate clustering — all vectors in one cell")
   }
 
+  /** `ids` in kmeansLite's seed order, (xxhash64(vec_id), vec_id), as
+    * Spark itself sorts them. */
+  private def seedOrder(ids: Seq[Long]): Seq[Long] =
+    ids.toDF("vec_id").orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .collect().map(_.getLong(0)).toSeq
+
+  /** kmeansLite over `points` given FIRST-SEED-FIRST: the i-th point gets
+    * the i-th id in seed order, so the hand computations below can name
+    * the seeds by position. */
+  private def kmeansLiteOf(points: Seq[Seq[Double]], k: Int, iters: Int): Seq[Seq[Double]] = {
+    val ids = seedOrder(points.indices.map(i => 1000L + 37L * i))
+    SimilarityOps.kmeansLite(ids.zip(points).toDF("vec_id", "vec"), k, iters)
+      .map(_.toSeq).toSeq
+  }
+
+  test("kmeansLite replays a hand-computed Lloyd round bit-for-bit") {
+    // seeds = the first two points, one in each cluster; every sum and
+    // mean below is exact in binary floating point
+    val points = Seq(Seq(0.0, 0.0), Seq(10.0, 10.0), Seq(1.0, 0.5),
+      Seq(11.0, 9.5), Seq(2.0, 1.0), Seq(12.0, 9.0))
+    val out = kmeansLiteOf(points, k = 2, iters = 1)
+    assert(out == Seq(Seq(1.0, 0.5), Seq(11.0, 9.5)))
+    // a second round is a fixed point: the assignment does not change
+    assert(kmeansLiteOf(points, k = 2, iters = 2) == out)
+  }
+
+  test("kmeansLite breaks distance ties to the lowest cell") {
+    // seeds 0 and 100; 50 is equidistant and must join cell 0
+    assert(kmeansLiteOf(Seq(Seq(0.0), Seq(100.0), Seq(50.0)), k = 2, iters = 1) ==
+      Seq(Seq(25.0), Seq(100.0)))
+  }
+
+  test("kmeansLite: a cell that captures no point keeps its centroid") {
+    // two identical seeds: every point ties and joins cell 0, so cell 1
+    // is empty after the round and keeps its seed
+    assert(kmeansLiteOf(Seq(Seq(5.0, 5.0), Seq(5.0, 5.0), Seq(1.0, 1.0), Seq(3.0, 3.0)),
+      k = 2, iters = 1) == Seq(Seq(3.5, 3.5), Seq(5.0, 5.0)))
+  }
+
+  test("kmeansLite seeds are the first k rows in (xxhash64(vec_id), vec_id) order") {
+    // offset, sparse ids: the seeds must not follow id order
+    val ids = (0L until 40L).map(i => 500000L + 7919L * i)
+    val byHash = seedOrder(ids)
+    assert(byHash.take(5) != ids.take(5), "precondition: hash order differs from id order")
+    val seeds = SimilarityOps.kmeansLite(
+      ids.map(id => (id, Seq(id.toDouble))).toDF("vec_id", "vec"), k = 5, iters = 0)
+    assert(seeds.map(_.toSeq).toSeq == byHash.take(5).map(id => Seq(id.toDouble)))
+  }
+
   test("pca power iteration: driver replay bit-exact, renorm pinned, deterministic") {
     val got = SimilarityOps.qEmbedPcaPower(spark, SfDir).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
