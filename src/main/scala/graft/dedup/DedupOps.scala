@@ -571,7 +571,7 @@ object DedupOps {
     * without re-mining the base), then PROBE the next batch (class ≡ 3
     * mod 7) against the stored postings + shingle sets. Emits the
     * ingest-gate frame per probe doc: near-dup count against the whole
-    * grown corpus, how many of those live in the APPENDED generation
+    * grown corpus, how many of those live in the APPENDED batch
     * (non-vacuous — proving the append is actually probed), and the
     * novelty verdict. The oracle replays the decisions from scratch
     * with exact Jaccard over base ∪ appended, so the gate certifies
@@ -604,8 +604,8 @@ object DedupOps {
     * passes a long-lived ingest-gate index needs that
     * [[qDedupIndexServe]]'s build/append/probe does not exercise):
     * build the base index, APPEND the ≡ 5 mod 7 class (fragmenting the
-    * postings store, one parquet fragment per batch), COMPACT the live
-    * generation (the entry REQUIRES the fragment count actually
+    * postings table, one parquet fragment per batch), COMPACT the
+    * store (the entry REQUIRES the fragment count actually
     * shrank), then RETRACT the odd half of the appended class
     * (doc_id ≡ 5 mod 14) — the GDPR path: a filtered O(index) rewrite
     * under the frozen banding, not the O(corpus) re-mine a
@@ -616,7 +616,7 @@ object DedupOps {
     * survivor's (lost near-dup) shifts a count and breaks the hash;
     * compaction must be row-invisible for the same reason.
     * DedupIndexSpec pins retract ≡ rebuild-over-survivors row identity
-    * and the generation-flip atomicity. */
+    * and that maintenance leaves only live files on disk. */
   def qDedupIndexMaintain(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.DedupIndexStore
     val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),

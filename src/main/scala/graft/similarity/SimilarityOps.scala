@@ -1331,8 +1331,8 @@ object SimilarityOps {
   /** Driver-contract entry for the PERSISTED index lifecycle (VERDICT
     * r10 ask #2) — the real deployment shape a serving fleet runs, end
     * to end in one entry: build + persist the IVF+PQ index
-    * ([[graft.sources.AnnIndexStore.write]] — parquet tables + meta
-    * snapshot), APPEND a batch with the frozen quantizer (FAISS `add()`
+    * ([[graft.sources.AnnIndexStore.write]] — lake tables + the
+    * snapshot property), APPEND a batch with the frozen quantizer (FAISS `add()`
     * semantics — no retrain), then reload from disk and serve top-k from
     * the STORE (codes/cells/codebook all read back from parquet, never
     * from session state; reference analogue: the incremental re-import
@@ -1397,7 +1397,7 @@ object SimilarityOps {
     * compliance hole where a GDPR erasure of documents strands their
     * EMBEDDINGS rankable in the index): build + persist, APPEND the
     * planted batch in TWO halves (fragmenting the codes store one
-    * parquet file per batch), COMPACT the live generation (the entry
+    * parquet file per batch), COMPACT the store (the entry
     * REQUIRES the fragment count shrank; row-invisible), then RETRACT
     * the odd half (source ids ≡ 25 mod 50) — a filtered O(index)
     * rewrite under the frozen quantizer, no k-means / PQ re-encode —

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.similarity.SimilarityOps
 import graft.similarity.SimilarityOps.IvfPqIndex
@@ -13,124 +14,105 @@ import graft.similarity.SimilarityOps.IvfPqIndex
   * output OUTLIVES the JVM, and serving sessions load it instead of
   * rebuilding (FAISS writes .index files; a lakehouse writes index
   * TABLES — this store does the latter, so the index is itself
-  * queryable, partition-prunable parquet).
+  * queryable, versioned parquet).
   *
-  * Layout under `path` (generational where maintenance mutates —
-  * the [[DedupIndexStore]] convention):
+  * Layout under `path`:
   *   - `cells.parquet`    (cell, cvec, cnorm)     — probe-able quantizer
-  *   - `codes-g<gen>.parquet` (vec_id, cell, codes) — the 8-byte/vector corpus
-  *   - `appended_vectors-g<gen>.parquet` (vec_id, vec) — full vectors of
-  *     appended batches (the exact-rerank side for ids the live corpus
-  *     doesn't hold)
   *   - `codebook.parquet` (block, code, cvec)     — residual PQ codebook
-  *   - `meta.json`        snapshot + capacity constants + live generation
+  *   - `codes` — [[LakeTable]] (vec_id, cell, codes) keyed on vec_id,
+  *     the 8-byte/vector corpus; its table properties record the corpus
+  *     snapshot and the quantizer sizes (nCells, blocks, codes)
+  *   - `appended_vectors` — [[LakeTable]] (vec_id, vec) keyed on
+  *     vec_id: full vectors of appended batches (the exact-rerank side
+  *     for ids the live corpus doesn't hold)
   *
-  * `meta.json` is the store's manifest: it names the generation readers
-  * resolve and publishes every maintenance pass via temp-file +
-  * ATOMIC_MOVE — a crash mid-[[compactIndexFiles]]/mid-[[retract]]
-  * leaves the old meta pointing at the old intact generation plus
-  * orphan new-generation files, never a meta disagreeing with its
-  * stores. cells/codebook are immutable after [[write]] (the frozen
-  * quantizer) and stay flat files.
+  * cells/codebook are the frozen quantizer: write-once files, written
+  * BEFORE the codes table exists. Every later mutation is a lake commit,
+  * so the lake log is the store's only metadata: data files land first,
+  * the commit publishes them atomically, and a crash before the commit
+  * leaves unreferenced files no read sees and the next
+  * [[compactIndexFiles]]/[[retract]] vacuums away. [[write]] publishes
+  * with the codes table's first append (version 2): a crash anywhere
+  * before it leaves no readable store.
   *
-  * Staleness: `meta.json` records [[graft.Tables.snapshot]] of the
-  * embeddings table at WRITE time; [[read]] recomputes it and fails
-  * loudly on mismatch — serving from an index built over a different
-  * corpus returns silently-wrong neighbors, the worst failure mode an
-  * ANN store can have. Pass `allowStale = true` only for forensics.
+  * Staleness: the `snapshot` property records [[graft.Tables.snapshot]]
+  * of the embeddings table at WRITE time; [[read]] recomputes it and
+  * fails loudly on mismatch — serving from an index built over a
+  * different corpus returns silently-wrong neighbors, the worst failure
+  * mode an ANN store can have. Pass `allowStale = true` only for
+  * forensics.
   */
 object AnnIndexStore {
 
-  private def metaPath(path: String) = java.nio.file.Paths.get(path, "meta.json")
-  private def codesDir(path: String, gen: Int) = s"$path/codes-g$gen.parquet"
-  private def appendedDir(path: String, gen: Int) = s"$path/appended_vectors-g$gen.parquet"
+  private def codesTable(path: String) = s"$path/codes"
+  private def appendedTable(path: String) = s"$path/appended_vectors"
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    if (f.exists) {
-      if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-      if (!f.delete())
-        throw new IllegalStateException(s"AnnIndexStore: cannot delete ${f.getPath}")
-    }
+  private val VectorSchema = StructType.fromDDL("vec_id BIGINT, vec ARRAY<DOUBLE>")
 
-  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private final case class Meta(snapshot: String, nCells: Int, blocks: Int,
-      codes: Int, gen: Int, appended: Long)
-
-  private def readMeta(path: String): Meta = {
-    val n = jsonMapper.readTree(java.nio.file.Files.readString(metaPath(path)))
-    def miss(k: String) = throw new IllegalStateException(
-      s"AnnIndexStore: meta.json at $path missing field $k")
-    def req(k: String) = { val v = n.get(k); if (v == null) miss(k) else v }
-    Meta(req("snapshot").asText(), req("nCells").asInt(), req("blocks").asInt(),
-      req("codes").asInt(), n.path("gen").asInt(0), n.path("appended").asLong(0))
+  /** The codes table's live manifest — the store's publish point. */
+  private def published(path: String): LakeTable.Manifest = {
+    val v = LakeTable.latestVersion(codesTable(path))
+    if (v < 2) throw new IllegalStateException(
+      s"AnnIndexStore: no committed index at $path — rebuild with write()")
+    LakeTable.manifest(codesTable(path), v)
   }
 
-  /** Atomic meta publish — the crash-safety half of every maintenance
-    * pass (same discipline as [[DedupIndexStore]]; single writer per
-    * index path by contract). */
-  private def writeMeta(path: String, m: Meta): Unit = {
-    val json = jsonMapper.createObjectNode()
-    json.put("snapshot", m.snapshot)
-    json.put("nCells", m.nCells); json.put("blocks", m.blocks)
-    json.put("codes", m.codes)
-    json.put("gen", m.gen); json.put("appended", m.appended)
-    val tmp = java.nio.file.Paths.get(path,
-      s".tmp-meta-${java.util.UUID.randomUUID()}.json")
-    java.nio.file.Files.writeString(tmp, jsonMapper.writeValueAsString(json))
-    java.nio.file.Files.move(tmp, metaPath(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def live(table: String): LakeTable.Manifest =
+    LakeTable.manifest(table, LakeTable.latestVersion(table))
 
   /** Build (via the session cache — free if already built) and persist
-    * the serving index for the corpus at `dataDir`. A REBUILD starts a
-    * fresh generation 0 with a clean appended set (left behind, serve()
-    * would silently union stale vectors into the rerank base). */
+    * the serving index for the corpus at `dataDir`. A REBUILD starts
+    * clean, with an empty appended set (left behind, serve() would
+    * silently union stale vectors into the rerank base). */
   def write(spark: SparkSession, dataDir: String, path: String): Unit = {
-    deleteRecursively(new java.io.File(path))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    LakeTable.deleteRecursively(path)
     val idx = SimilarityOps.buildIvfPqIndex(spark, dataDir)
     // cells are quantizer-sized (~sqrt(corpus) rows): one file, so every
     // later read()/serve()/append() lists and scans one task instead of
     // one per build partition (§6 small files)
     idx.cells.coalesce(1).write.mode("overwrite").parquet(s"$path/cells.parquet")
-    idx.withCodes.write.mode("overwrite").parquet(codesDir(path, 0))
     val spark2 = spark
     import spark2.implicits._
     idx.codebook.zipWithIndex.flatMap { case (cells, b) =>
       cells.zipWithIndex.map { case (c, k) => (b, k, c.toSeq) }
     }.toSeq.toDF("block", "code", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook.parquet")
-    writeMeta(path, Meta(graft.Tables.snapshot(s"$dataDir/embeddings.parquet"),
-      idx.nCells, idx.codebook.length, idx.codebook.head.length, 0, 0))
+    LakeTable.createEmpty(appendedTable(path), VectorSchema, Seq("vec_id"))
+    LakeTable.createEmpty(codesTable(path), idx.withCodes.schema, Seq("vec_id"),
+      props = Map("snapshot" -> graft.Tables.snapshot(s"$dataDir/embeddings.parquet"),
+        "nCells" -> idx.nCells.toString, "blocks" -> idx.codebook.length.toString,
+        "codes" -> idx.codebook.head.length.toString))
+    LakeTable.append(spark, codesTable(path), idx.withCodes)
   }
 
   /** Load a persisted index for serving against `dataDir`. */
   def read(spark: SparkSession, dataDir: String, path: String,
       allowStale: Boolean = false): IvfPqIndex = {
-    val meta = readMeta(path)
+    val m = published(path)
+    def prop(k: String): String = m.props.getOrElse(k, throw new IllegalStateException(
+      s"AnnIndexStore: index at $path has no `$k` table property — rebuild with write()"))
+    val snapshot = prop("snapshot")
     val liveSnap = graft.Tables.snapshot(s"$dataDir/embeddings.parquet")
-    if (meta.snapshot != liveSnap && !allowStale)
+    if (snapshot != liveSnap && !allowStale)
       throw new IllegalStateException(
         s"AnnIndexStore: index at $path was built over a DIFFERENT corpus " +
-          s"(stored snapshot ${meta.snapshot}, live $liveSnap) — serving it would " +
+          s"(stored snapshot $snapshot, live $liveSnap) — serving it would " +
           "return wrong neighbors; rebuild with write(), or pass " +
           "allowStale=true for forensics only")
+    val (nCells, blocks, codes) = (prop("nCells").toInt, prop("blocks").toInt, prop("codes").toInt)
     val cbRows = spark.read.parquet(s"$path/codebook.parquet")
       .select("block", "code", "cvec").collect()
-    require(cbRows.length == meta.blocks * meta.codes,
-      s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${meta.blocks * meta.codes}")
-    val codebook = Array.ofDim[Array[Double]](meta.blocks, meta.codes)
+    require(cbRows.length == blocks * codes,
+      s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${blocks * codes}")
+    val codebook = Array.ofDim[Array[Double]](blocks, codes)
     cbRows.foreach { r =>
       codebook(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
     }
     IvfPqIndex(
       spark.read.parquet(s"$path/cells.parquet"),
-      spark.read.parquet(codesDir(path, meta.gen)),
+      LakeTable.readEntries(spark, m, m.files),
       codebook,
-      meta.nCells)
+      nCells)
   }
 
   /** Serve top-k from a LOADED index (queries + exact-rerank vectors
@@ -140,13 +122,12 @@ object AnnIndexStore {
     * rerank cannot resolve would otherwise be dropped silently). */
   def serve(spark: SparkSession, dataDir: String, path: String,
       queryStride: Long = 1L): DataFrame = {
-    val gen = readMeta(path).gen
-    val appended = new java.io.File(appendedDir(path, gen))
+    val idx = read(spark, dataDir, path)
+    val appended = live(appendedTable(path))
     val extra =
-      if (appended.exists) Some(spark.read.parquet(appended.getPath))
-      else None
-    SimilarityOps.ivfPqServe(spark, dataDir, queryStride,
-      read(spark, dataDir, path), extra)
+      if (appended.files.isEmpty) None
+      else Some(LakeTable.readEntries(spark, appended, appended.files))
+    SimilarityOps.ivfPqServe(spark, dataDir, queryStride, idx, extra)
   }
 
   /** Incrementally index a batch of new vectors — the FAISS `add()`
@@ -154,13 +135,13 @@ object AnnIndexStore {
     * cell and PQ-encode its residual with the STORED codebook (no
     * retrain — the quantizer is frozen at build time, which is what
     * makes the operation an append instead of a rebuild), then append
-    * the (vec_id, cell, codes) rows to the live codes generation. One
-    * broadcast join pass over the batch; the base corpus is never
-    * touched. The quantizer drifts from the data distribution as
-    * appends accumulate — production systems rebuild when recall sags;
-    * [[read]]'s snapshot gate is deliberately left on the BUILD corpus
-    * so a rebuild-vs-append decision stays visible in `meta.json`
-    * (`appended` count). */
+    * the (vec_id, cell, codes) rows to the codes table. One broadcast
+    * join pass over the batch; the base corpus is never touched. The
+    * quantizer drifts from the data distribution as appends accumulate —
+    * production systems rebuild when recall sags; [[read]]'s snapshot
+    * gate is deliberately left on the BUILD corpus so a
+    * rebuild-vs-append decision stays visible in the codes table's
+    * history (one `append` commit per batch, rows per file). */
   def append(spark: SparkSession, dataDir: String, path: String,
       batch0: DataFrame): Unit =
     append(spark, dataDir, path, batch0, None)
@@ -175,109 +156,63 @@ object AnnIndexStore {
   private[graft] def append(spark: SparkSession, dataDir: String,
       path: String, batch0: DataFrame, preloaded: Option[IvfPqIndex]): Unit = {
     val idx = preloaded.getOrElse(read(spark, dataDir, path))
-    val meta = readMeta(path)
-    // Evaluate the batch ONCE, with the appended-vectors STORE as the
-    // materialization: the vectors write lands (vec_id, vec), the encode
-    // pass reads back exactly the part files this append produced
-    // (before/after listing diff — single writer by contract), and the
-    // appended-count bookkeeping rides the write via observe() instead
-    // of a third job. Two jobs total, no localCheckpoint — the r18
-    // checkpoint shape pinned a lineage-free block set in the block
-    // manager (VERDICT r18 #4/ADVICE r18); the durable parquet the store
-    // must write anyway is the better barrier.
-    // Write order is a crash-safety invariant: the FULL vectors land
+    // Evaluate the batch ONCE, with the appended-vectors table as the
+    // materialization: its append lands (vec_id, vec) and the encode
+    // pass reads exactly the files that commit added. Two jobs total, no
+    // localCheckpoint — the durable parquet the store must write anyway
+    // is the barrier (VERDICT r18 #4/ADVICE r18).
+    // Commit order is a crash-safety invariant: the FULL vectors commit
     // FIRST, the ADC-rankable codes second. Codes serve the ranking, but
-    // the exact rerank needs the vector — a crash between the two writes
-    // must leave orphan VECTORS (harmless: nothing ranks them), never
-    // orphan CODES (an ADC-ranked candidate the rerank cannot resolve is
-    // dropped silently — the exact failure [[serve]]'s union exists to
-    // prevent).
-    val vDir = appendedDir(path, meta.gen)
-    val before = StoreParts.list(vDir)
-    val obs = org.apache.spark.sql.Observation()
-    batch0.select(col("vec_id"), col("vec"))
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode("append").parquet(vDir)
-    val appendedN = obs.get("n").asInstanceOf[Long]
-    val newFiles = StoreParts.added("AnnIndexStore", vDir, before, appendedN)
-    // an empty batch writes no part files and has nothing to encode
-    if (newFiles.nonEmpty) {
-      val batch = spark.read.parquet(newFiles: _*)
-      SimilarityOps.encodeWithIndex(spark, batch, idx)
-        .write.mode("append").parquet(codesDir(path, meta.gen))
-    }
-    writeMeta(path, meta.copy(appended = meta.appended + appendedN))
+    // the exact rerank needs the vector — a crash between the two
+    // commits must leave orphan VECTORS (harmless: nothing ranks them),
+    // never orphan CODES (an ADC-ranked candidate the rerank cannot
+    // resolve is dropped silently — the exact failure [[serve]]'s union
+    // exists to prevent).
+    val t = appendedTable(path)
+    val added = LakeTable.append(spark, t, batch0.select(col("vec_id"), col("vec")))
+    LakeTable.append(spark, codesTable(path), SimilarityOps.encodeWithIndex(spark,
+      LakeTable.readEntries(spark, live(t), added), idx))
   }
 
-  /** Publish generation gen+1 from the given frames (appended may be
-    * None when the store has no appended set), then drop the old
-    * generation's directories — crash on either side of the meta move
-    * leaves one intact generation live plus harmless orphans. */
-  private def publishGeneration(path: String, meta: Meta,
-      codes: DataFrame, appended: Option[DataFrame], targetFiles: Int): Unit = {
-    val next = meta.gen + 1
-    codes.coalesce(targetFiles).write.mode("overwrite")
-      .parquet(codesDir(path, next))
-    appended.foreach(_.coalesce(targetFiles).write.mode("overwrite")
-      .parquet(appendedDir(path, next)))
-    writeMeta(path, meta.copy(gen = next))
-    deleteRecursively(new java.io.File(codesDir(path, meta.gen)))
-    deleteRecursively(new java.io.File(appendedDir(path, meta.gen)))
-  }
-
-  private def liveAppended(spark: SparkSession, path: String,
-      gen: Int): Option[DataFrame] = {
-    val d = new java.io.File(appendedDir(path, gen))
-    if (d.exists) Some(spark.read.parquet(d.getPath)) else None
-  }
-
-  /** OPTIMIZE for the index: rewrite the live codes (and appended
-    * vectors) generation as `targetFiles` files each — heals the
-    * one-fragment-per-append accumulation so serving scan tasks track
-    * index size, not append count. Row-identical by construction. */
+  /** OPTIMIZE for the index: rewrite the codes and appended-vector
+    * tables as `targetFiles` files each, then vacuum to the live version
+    * — heals the one-fragment-per-append accumulation so serving scan
+    * tasks track index size, not append count. Row-identical by
+    * construction. */
   def compactIndexFiles(spark: SparkSession, dataDir: String, path: String,
       targetFiles: Int = 4): Unit = {
-    val meta = readMeta(path)
-    publishGeneration(path, meta,
-      spark.read.parquet(codesDir(path, meta.gen)),
-      liveAppended(spark, path, meta.gen), targetFiles)
+    published(path)
+    Seq(codesTable(path), appendedTable(path)).foreach { t =>
+      LakeTable.compact(spark, t, targetFiles)
+      LakeTable.vacuum(t, keepLast = 1, force = true)
+    }
   }
 
   /** GDPR retraction: drop `vecIds` (a one-column vec_id frame) from
-    * the codes AND the appended-vector store — after this, no ADC scan
-    * ranks a retracted vector and no rerank can return it, without the
+    * the codes AND the appended-vector table — a copy-on-write
+    * [[LakeTable.delete]] per table, vacuumed to the live version so the
+    * erased rows leave the disk too. After this, no ADC scan ranks a
+    * retracted vector and no rerank can return it, without the
     * O(corpus) k-means + PQ re-encode a rebuild pays (the quantizer is
     * frozen; removing rows does not perturb other rows' codes, so the
     * maintained index is row-identical to one built WITHOUT the
     * retracted ids under the same quantizer — AnnIndexSpec pins the
-    * serve-level consequence). Retracting a LIVE-corpus id also works
-    * (its codes row goes away; the corpus row stays until the corpus
-    * itself is erased — at which point the snapshot gate forces the
-    * rebuild decision). */
+    * serve-level consequence). Codes go first: a crash between the two
+    * leaves rerank vectors nothing ranks, never a rankable code without
+    * its vector. Retracting a LIVE-corpus id also works (its codes row
+    * goes away; the corpus row stays until the corpus itself is erased —
+    * at which point the snapshot gate forces the rebuild decision). */
   def retract(spark: SparkSession, dataDir: String, path: String,
       vecIds: DataFrame): Unit = {
-    val meta = readMeta(path)
+    published(path)
     val ids = vecIds.select("vec_id")
-    publishGeneration(path, meta,
-      spark.read.parquet(codesDir(path, meta.gen))
-        .join(broadcast(ids), Seq("vec_id"), "left_anti")
-        .select("vec_id", "cell", "codes"),
-      liveAppended(spark, path, meta.gen).map(
-        _.join(broadcast(ids), Seq("vec_id"), "left_anti")
-          .select("vec_id", "vec")),
-      targetFiles = 4)
+    Seq(codesTable(path), appendedTable(path)).foreach { t =>
+      LakeTable.delete(spark, t, ids, Seq("vec_id"))
+      LakeTable.vacuum(t, keepLast = 1, force = true)
+    }
   }
 
-  /** Live-generation store directories — spec hooks (readers go through
-    * [[read]]/[[serve]]). */
-  private[graft] def liveCodes(path: String): String =
-    codesDir(path, readMeta(path).gen)
-  private[graft] def liveAppendedVectors(path: String): String =
-    appendedDir(path, readMeta(path).gen)
-
-  /** Parquet fragment count of the live codes store — the maintenance
-    * health metric [[compactIndexFiles]] exists to bound. */
-  def codesFragments(path: String): Int =
-    StoreParts.list(codesDir(path, readMeta(path).gen)).size
+  /** Live data-file count of the codes table — the maintenance health
+    * metric [[compactIndexFiles]] exists to bound. */
+  def codesFragments(path: String): Int = published(path).files.size
 }

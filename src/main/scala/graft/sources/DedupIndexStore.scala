@@ -12,42 +12,44 @@ import graft.dedup.DedupOps
   * `dedup_incremental` does by necessity of being a single query) is a
   * full-corpus pass a 100 TB ingest cannot afford per batch.
   *
-  * Layout under `path` (generational — the store's own OPTIMIZE story):
-  *   - `shingles-g<gen>.parquet` (doc_id, sh)   — hashed shingle sets,
-  *     the exact-verification side (an LSH-routed candidate the
-  *     verifier cannot resolve would be dropped silently)
-  *   - `postings-g<gen>.parquet` (band, bucket, doc_id) — the banded-LSH
-  *     posting lists candidates are routed through
-  *   - `meta.json` — corpus snapshot + frozen banding constants + the
-  *     LIVE generation pointer
+  * Layout under `path` — two [[LakeTable]]s keyed on `doc_id`:
+  *   - `shingles` (doc_id, sh) — hashed shingle sets, the
+  *     exact-verification side (an LSH-routed candidate the verifier
+  *     cannot resolve would be dropped silently)
+  *   - `postings` (band, bucket, doc_id) — the banded-LSH posting lists
+  *     candidates are routed through; its table properties record the
+  *     corpus snapshot and the frozen banding constants
   *
-  * `meta.json` is the store's manifest: it names the generation readers
-  * resolve, and every rewrite publishes via temp-file + ATOMIC_MOVE
-  * (the LakeTable discipline — a crash mid-maintenance leaves the old
-  * meta pointing at the old intact generation plus orphan new-gen
-  * files, never a meta that disagrees with its stores). Maintenance:
-  *   - [[append]] accretes parquet fragments per batch (cheap, O(batch));
-  *   - [[compactIndex]] rewrites the live generation as few files
-  *     (heals the small-file accumulation, postings' `lake_compact_read`);
+  * Every store mutation is a lake commit, so the lake log is the
+  * store's only metadata and its durability story is the lake's: data
+  * files land first, the commit record publishes them atomically, and a
+  * crash before the commit leaves unreferenced files that no read sees
+  * and the next [[compactIndex]]/[[retract]] vacuums away. [[write]]
+  * publishes with the postings table's first append (version 2); a path
+  * without one is not a store. Maintenance:
+  *   - [[append]] adds one fragment per table per batch (cheap, O(batch));
+  *   - [[compactIndex]] rewrites both tables as few files (heals the
+  *     small-file accumulation, postings' `lake_compact_read`);
   *   - [[retract]] drops named doc_ids from postings AND shingles under
-  *     the frozen banding — the GDPR path: O(index) parquet filter, not
+  *     the frozen banding — the GDPR path: O(index) copy-on-write, not
   *     the O(corpus) re-tokenize+minhash a full rebuild pays.
+  * Both maintenance passes vacuum to the single live version, so
+  * replaced files — retracted rows included — leave the disk at once.
   *
   * The banding configuration (shingle width, signature k, rows per
-  * band) is frozen at build time and recorded in `meta.json`; append,
-  * retract, and probe banding always read from there — the MinHash
-  * analog of FAISS's frozen quantizer, except nothing retrains:
-  * signatures are deterministic in the text, so an append-built (or
-  * retracted) index is ROW-IDENTICAL to a from-scratch rebuild over the
-  * same doc set (DedupIndexSpec pins both identities; for ANN the same
-  * claim is only approximate, which is why [[AnnIndexStore]] documents
-  * quantizer drift instead).
+  * band) is frozen at build time; append, retract, and probe banding
+  * always use it — the MinHash analog of FAISS's frozen quantizer,
+  * except nothing retrains: signatures are deterministic in the text,
+  * so an append-built (or retracted) index is ROW-IDENTICAL to a
+  * from-scratch rebuild over the same doc set (DedupIndexSpec pins both
+  * identities; for ANN the same claim is only approximate, which is why
+  * [[AnnIndexStore]] documents quantizer drift instead).
   *
-  * Staleness: `meta.json` records [[graft.Tables.snapshot]] of the
-  * documents table at WRITE time; [[probe]] and [[append]] recompute
-  * and fail loudly on mismatch — probing an index built over a
-  * different corpus silently under-reports duplicates, the failure mode
-  * an ingest gate exists to prevent.
+  * Staleness: the `snapshot` property records [[graft.Tables.snapshot]]
+  * of the documents table at WRITE time; [[probe]] and [[append]]
+  * recompute and fail loudly on mismatch — probing an index built over
+  * a different corpus silently under-reports duplicates, the failure
+  * mode an ingest gate exists to prevent.
   */
 object DedupIndexStore {
 
@@ -57,38 +59,15 @@ object DedupIndexStore {
   val SigK = 64
   val RowsPerBand = 4
 
-  private def metaPath(path: String) = java.nio.file.Paths.get(path, "meta.json")
-  private def shinglesDir(path: String, gen: Int) = s"$path/shingles-g$gen.parquet"
-  private def postingsDir(path: String, gen: Int) = s"$path/postings-g$gen.parquet"
+  private def shinglesTable(path: String) = s"$path/shingles"
+  private def postingsTable(path: String) = s"$path/postings"
 
-  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private final case class Meta(snapshot: String, gen: Int, appended: Long)
-
-  private def readMeta(path: String): Meta = {
-    val n = jsonMapper.readTree(java.nio.file.Files.readString(metaPath(path)))
-    Meta(n.path("snapshot").asText(), n.path("gen").asInt(0), n.path("appended").asLong(0))
-  }
-
-  /** Atomic meta publish: temp file + ATOMIC_MOVE, so a crash anywhere
-    * in a maintenance pass leaves the PREVIOUS meta intact and pointing
-    * at its intact generation (ADVICE r13: the old in-place
-    * read-modify-write could strand a half-updated count). Writers are
-    * single-per-index-path by contract (an ingest gate owns its index);
-    * the atomicity here is crash-safety, not multi-writer arbitration. */
-  private def writeMeta(path: String, m: Meta): Unit = {
-    val json = jsonMapper.createObjectNode()
-    json.put("snapshot", m.snapshot)
-    json.put("shingleN", ShingleN); json.put("sigK", SigK)
-    json.put("rowsPerBand", RowsPerBand)
-    json.put("gen", m.gen); json.put("appended", m.appended)
-    val tmp = java.nio.file.Paths.get(path,
-      s".tmp-meta-${java.util.UUID.randomUUID()}.json")
-    java.nio.file.Files.writeString(tmp, jsonMapper.writeValueAsString(json))
-    java.nio.file.Files.move(tmp, metaPath(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+  /** The postings table's live manifest — the store's publish point. */
+  private def published(path: String): LakeTable.Manifest = {
+    val v = LakeTable.latestVersion(postingsTable(path))
+    if (v < 2) throw new IllegalStateException(
+      s"DedupIndexStore: no committed index at $path — rebuild with write()")
+    LakeTable.manifest(postingsTable(path), v)
   }
 
   /** (doc_id, sh) shingle projection under the FIXED banding config —
@@ -101,145 +80,111 @@ object DedupIndexStore {
   private def signed(docs: DataFrame): DataFrame =
     shingled(docs).withColumn("sig", DedupOps.minhashSignature(col("sh"), SigK))
 
-  private def checkFresh(dataDir: String, path: String, op: String): Unit = {
-    val stored = readMeta(path).snapshot
+  /** Postings of the shingle rows one commit added, read back from their
+    * files: signatures are a pure function of `sh`, so the durable
+    * shingles write is the materialization the postings pass reads. */
+  private def postingsOf(spark: SparkSession, path: String,
+      added: Seq[LakeTable.FileEntry]): DataFrame = {
+    val t = shinglesTable(path)
+    val s = LakeTable.readEntries(spark, LakeTable.manifest(t, LakeTable.latestVersion(t)), added)
+      .withColumn("sig", DedupOps.minhashSignature(col("sh"), SigK))
+    DedupOps.bandedBuckets(s, "doc_id", "sig", RowsPerBand)
+      .select("band", "bucket", "doc_id")
+  }
+
+  private def checkFresh(dataDir: String, path: String, op: String): LakeTable.Manifest = {
+    val m = published(path)
+    val stored = m.props.getOrElse("snapshot", throw new IllegalStateException(
+      s"DedupIndexStore: index at $path has no `snapshot` table property — " +
+        "rebuild with write()"))
     val live = graft.Tables.snapshot(s"$dataDir/documents.parquet")
     if (stored != live)
       throw new IllegalStateException(
         s"DedupIndexStore: $op against an index built over a DIFFERENT corpus " +
           s"(stored snapshot $stored, live $live) — duplicates would be " +
           "silently under-reported; rebuild with write()")
+    m
   }
 
   /** Build and persist the index over `docs` (doc_id, text). Starts
-    * clean: a rebuild drops any prior generation's appends. */
+    * clean: a rebuild drops any prior appends. */
   def write(spark: SparkSession, dataDir: String, path: String,
       docs: DataFrame): Unit = {
-    LakeTable.deleteRecursively(new java.io.File(path))
-    // Tokenize+shingle ONCE, with the shingles STORE as the
-    // materialization: the shingles write lands the (doc_id, sh) rows,
-    // and the postings pass reads them BACK from parquet to derive the
-    // minhash signatures (signatures are a pure function of sh). Two
-    // jobs total, no localCheckpoint — the r18 checkpoint shape pinned
-    // a corpus-sized lineage-free block set in the block manager
-    // (VERDICT r18 #4: one lost executor kills the query at cluster
-    // scale; ADVICE r18: blocks lingered until dataset GC); the durable
-    // parquet the store must write anyway is the better barrier.
-    shingled(docs).write.mode("overwrite").parquet(shinglesDir(path, 0))
-    val s = spark.read.parquet(shinglesDir(path, 0))
-      .withColumn("sig", DedupOps.minhashSignature(col("sh"), SigK))
-    DedupOps.bandedBuckets(s, "doc_id", "sig", RowsPerBand)
-      .select("band", "bucket", "doc_id")
-      .write.mode("overwrite").parquet(postingsDir(path, 0))
-    writeMeta(path, Meta(graft.Tables.snapshot(s"$dataDir/documents.parquet"), 0, 0))
+    LakeTable.deleteRecursively(path)
+    // Tokenize+shingle ONCE, with the shingles table as the
+    // materialization: its append lands the (doc_id, sh) rows and the
+    // postings pass reads exactly those files back. Two jobs total, no
+    // localCheckpoint — the durable parquet the store must write anyway
+    // is the barrier, not a lineage-free block set pinned in the block
+    // manager (VERDICT r18 #4, ADVICE r18).
+    val sh = shingled(docs)
+    LakeTable.createEmpty(shinglesTable(path), sh.schema, Seq("doc_id"))
+    val postings = postingsOf(spark, path, LakeTable.append(spark, shinglesTable(path), sh))
+    LakeTable.createEmpty(postingsTable(path), postings.schema, Seq("doc_id"),
+      props = Map("snapshot" -> graft.Tables.snapshot(s"$dataDir/documents.parquet"),
+        "shingleN" -> ShingleN.toString, "sigK" -> SigK.toString,
+        "rowsPerBand" -> RowsPerBand.toString))
+    LakeTable.append(spark, postingsTable(path), postings)
   }
 
   /** Incrementally index a batch (doc_id, text) — signatures and
     * postings computed under the FROZEN banding config and appended; the
-    * base corpus is never re-mined. Write order is the crash-safety
+    * base corpus is never re-mined. Commit order is the crash-safety
     * invariant shared with [[AnnIndexStore.append]]: verification
-    * shingles land FIRST, routable postings second — a crash between
-    * the two leaves orphan shingles (harmless: nothing routes to them),
-    * never postings a probe can route to but not verify. */
+    * shingles commit FIRST, routable postings second — a crash between
+    * the two leaves shingles nothing routes to (harmless), never
+    * postings a probe can route to but not verify. Two jobs: the
+    * shingles write, and the postings pass over exactly the files that
+    * commit added. */
   def append(spark: SparkSession, dataDir: String, path: String,
       batch: DataFrame): Unit = {
     checkFresh(dataDir, path, "append")
-    val meta = readMeta(path)
-    // Tokenize+shingle ONCE (the write-path shape): the shingles write
-    // materializes the batch, the postings pass reads back exactly the
-    // part files this append produced (before/after listing diff —
-    // single writer by contract), and the appended-count bookkeeping
-    // rides the write itself via observe() instead of a third job.
-    val sDir = shinglesDir(path, meta.gen)
-    val before = StoreParts.list(sDir)
-    val obs = org.apache.spark.sql.Observation()
-    shingled(batch).observe(obs, count(lit(1)).as("n"))
-      .write.mode("append").parquet(sDir)
-    val appendedN = obs.get("n").asInstanceOf[Long]
-    val newFiles = StoreParts.added("DedupIndexStore", sDir, before, appendedN)
-    // an empty batch writes no part files and has no postings to band
-    if (newFiles.nonEmpty) {
-      val s = spark.read.parquet(newFiles: _*)
-        .withColumn("sig", DedupOps.minhashSignature(col("sh"), SigK))
-      DedupOps.bandedBuckets(s, "doc_id", "sig", RowsPerBand)
-        .select("band", "bucket", "doc_id")
-        .write.mode("append").parquet(postingsDir(path, meta.gen))
-    }
-    writeMeta(path, meta.copy(appended = meta.appended + appendedN))
+    val added = LakeTable.append(spark, shinglesTable(path), shingled(batch))
+    LakeTable.append(spark, postingsTable(path), postingsOf(spark, path, added))
   }
 
-  /** Publish generation `gen+1` from the given frames, then drop the
-    * old generation's directories (crash before the meta move keeps the
-    * old generation live and leaves new-gen orphans; crash after keeps
-    * the new generation live and leaves old-gen orphans — both read
-    * consistently, neither loses data). */
-  private def publishGeneration(path: String, meta: Meta,
-      shingles: DataFrame, postings: DataFrame, targetFiles: Int): Unit = {
-    val next = meta.gen + 1
-    shingles.coalesce(targetFiles).write.mode("overwrite")
-      .parquet(shinglesDir(path, next))
-    postings.coalesce(targetFiles).write.mode("overwrite")
-      .parquet(postingsDir(path, next))
-    writeMeta(path, meta.copy(gen = next))
-    LakeTable.deleteRecursively(new java.io.File(shinglesDir(path, meta.gen)))
-    LakeTable.deleteRecursively(new java.io.File(postingsDir(path, meta.gen)))
-  }
-
-  /** OPTIMIZE for the index: rewrite the live generation's postings and
-    * shingles as `targetFiles` files each — heals the one-fragment-per-
-    * append accumulation (probe scan task count otherwise tracks append
-    * count instead of index size, the small-file story
-    * `lake_compact_read` fixes for the lake). Row-identical by
-    * construction; the generation flip is the atomic publish. */
+  /** OPTIMIZE for the index: rewrite postings and shingles as
+    * `targetFiles` files each — heals the one-fragment-per-append
+    * accumulation (probe scan task count otherwise tracks append count
+    * instead of index size, the small-file story `lake_compact_read`
+    * fixes for the lake). Row-identical by construction. */
   def compactIndex(spark: SparkSession, dataDir: String, path: String,
       targetFiles: Int = 4): Unit = {
     checkFresh(dataDir, path, "compact")
-    val meta = readMeta(path)
-    publishGeneration(path, meta,
-      spark.read.parquet(shinglesDir(path, meta.gen)),
-      spark.read.parquet(postingsDir(path, meta.gen)), targetFiles)
+    Seq(shinglesTable(path), postingsTable(path)).foreach { t =>
+      LakeTable.compact(spark, t, targetFiles)
+      LakeTable.vacuum(t, keepLast = 1, force = true)
+    }
   }
 
   /** GDPR retraction: drop `docIds` (a one-column doc_id frame) from
     * postings AND shingles under the frozen banding — after this, no
     * probe can route to or verify against a retracted doc, and the
     * index equals a from-scratch rebuild over the survivors
-    * (DedupIndexSpec pins the row identity). Cost: one filtered rewrite
-    * of the index stores — O(index), NOT the O(corpus)
+    * (DedupIndexSpec pins the row identity). Cost: a copy-on-write
+    * [[LakeTable.delete]] per table — O(index), NOT the O(corpus)
     * re-tokenize+minhash a staleness-forced rebuild pays; the retracted
-    * keys broadcast (erasure batches are bounded by contract). The
-    * BUILD snapshot is preserved (symmetric with AnnIndexStore.retract):
-    * a retract after an unrelated corpus rewrite must NOT silently
-    * re-freshen the staleness gate probe/append depend on — the index
-    * was built over a different corpus and only a rebuild can honestly
-    * re-stamp it (ADVICE r14 #3). */
+    * keys broadcast (erasure batches are bounded by contract). Postings
+    * go first: a crash between the two leaves unroutable shingles, never
+    * a routable doc without its shingles. The BUILD snapshot is
+    * preserved (symmetric with AnnIndexStore.retract): a retract after
+    * an unrelated corpus rewrite must NOT silently re-freshen the
+    * staleness gate probe/append depend on — the index was built over a
+    * different corpus and only a rebuild can honestly re-stamp it
+    * (ADVICE r14 #3). */
   def retract(spark: SparkSession, dataDir: String, path: String,
       docIds: DataFrame): Unit = {
-    val meta = readMeta(path)
+    published(path)
     val ids = docIds.select("doc_id")
-    publishGeneration(path,
-      meta,
-      spark.read.parquet(shinglesDir(path, meta.gen))
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .select("doc_id", "sh"), // the anti-join key-fronts columns; keep the store layout canonical
-      spark.read.parquet(postingsDir(path, meta.gen))
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .select("band", "bucket", "doc_id"),
-      targetFiles = 4)
+    Seq(postingsTable(path), shinglesTable(path)).foreach { t =>
+      LakeTable.delete(spark, t, ids, Seq("doc_id"))
+      LakeTable.vacuum(t, keepLast = 1, force = true)
+    }
   }
 
-  /** Live-generation store directories — spec hooks (readers go through
-    * [[probe]]; these exist so DedupIndexSpec can compare raw postings
-    * across maintenance passes). */
-  private[graft] def livePostings(path: String): String =
-    postingsDir(path, readMeta(path).gen)
-  private[graft] def liveShingles(path: String): String =
-    shinglesDir(path, readMeta(path).gen)
-
-  /** Parquet fragment count of the live generation's postings store —
-    * the maintenance health metric [[compactIndex]] exists to bound. */
-  def postingsFragments(path: String): Int =
-    StoreParts.list(postingsDir(path, readMeta(path).gen)).size
+  /** Live data-file count of the postings table — the maintenance
+    * health metric [[compactIndex]] exists to bound. */
+  def postingsFragments(path: String): Int = published(path).files.size
 
   /** Probe a query batch (doc_id, text) against the stored corpus:
     * band-bucket join against the postings routes candidates (shuffle
@@ -250,10 +195,9 @@ object DedupIndexStore {
     * (that admit is [[append]]). */
   def probe(spark: SparkSession, dataDir: String, path: String,
       queries: DataFrame): DataFrame = {
-    checkFresh(dataDir, path, "probe")
-    val gen = readMeta(path).gen
+    val postingsM = checkFresh(dataDir, path, "probe")
     val q = signed(queries)
-    val postings = spark.read.parquet(postingsDir(path, gen))
+    val postings = LakeTable.readEntries(spark, postingsM, postingsM.files)
       .withColumnRenamed("doc_id", "base_id")
     // every batch-derived side is broadcast BY CONTRACT (an ingest
     // batch is bounded; the index is the corpus): the band probe
@@ -265,7 +209,7 @@ object DedupIndexStore {
       .hint("broadcast")
       .join(postings, Seq("band", "bucket"))
       .select("doc_id", "base_id").distinct()
-    val baseSh = spark.read.parquet(shinglesDir(path, gen))
+    val baseSh = LakeTable.read(spark, shinglesTable(path))
       .select(col("doc_id").as("base_id"), col("sh").as("sh_b"))
     val (inter, union) = DedupOps.jaccardCounts(col("sh_a"), col("sh_b"))
     cands

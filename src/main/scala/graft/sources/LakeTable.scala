@@ -162,7 +162,11 @@ object LakeTable {
       // collect per-file bloom bits for them; compact backfills the
       // whole table. Declared at create or via [[setIndexColumns]]
       // (surfaced as TBLPROPERTIES 'index_columns').
-      indexCols: Seq[String] = Seq.empty) {
+      indexCols: Seq[String] = Seq.empty,
+      // free-form TABLE PROPERTIES, declared at [[createEmpty]] and
+      // carried by every later commit (the index stores record their
+      // build snapshot and frozen constants here)
+      props: Map[String, String] = Map.empty) {
     def schema: StructType = StructType.fromDDL(schemaDdl)
     def filePaths: Seq[String] = files.map(_.path)
     def dvPaths: Seq[String] = files.flatMap(_.dvs).distinct
@@ -215,14 +219,15 @@ object LakeTable {
       keys: Seq[String], schemaDdl: String, parts: Seq[String],
       removedPaths: Seq[String], addedEntries: Seq[FileEntry],
       clusterBuckets: Int = 0, colMap: Map[String, String] = Map.empty,
-      retired: Seq[String] = Seq.empty, indexCols: Seq[String] = Seq.empty)
+      retired: Seq[String] = Seq.empty, indexCols: Seq[String] = Seq.empty,
+      props: Map[String, String] = Map.empty)
 
   /** Apply a churn record to its predecessor's reconstructed state. */
   private def applyDelta(prev: Manifest, d: DeltaRecord): Manifest = {
     val removed = d.removedPaths.toSet
     Manifest(d.version, d.op, d.keys, d.schemaDdl,
       prev.files.filterNot(e => removed(e.path)) ++ d.addedEntries, d.parts,
-      d.clusterBuckets, d.colMap, d.retired, d.indexCols)
+      d.clusterBuckets, d.colMap, d.retired, d.indexCols, d.props)
   }
 
   // ---- commit-record JSON (Jackson — a real writer, so paths containing
@@ -302,7 +307,7 @@ object LakeTable {
       schemaDdl: String, parts: Seq[String],
       kind: String, clusterBuckets: Int,
       colMap: Map[String, String], retired: Seq[String],
-      indexCols: Seq[String])
+      indexCols: Seq[String], props: Map[String, String])
       : com.fasterxml.jackson.databind.node.ObjectNode = {
     val root = jsonMapper.createObjectNode()
     root.put("format", 3)
@@ -320,20 +325,24 @@ object LakeTable {
     }
     if (retired.nonEmpty) { val ra = root.putArray("retired"); retired.foreach(ra.add) }
     if (indexCols.nonEmpty) { val ia = root.putArray("index"); indexCols.foreach(ia.add) }
+    if (props.nonEmpty) {
+      val pn = root.putObject("props")
+      props.toSeq.sortBy(_._1).foreach { case (k, v) => pn.put(k, v) }
+    }
     root.put("schema", schemaDdl)
     root
   }
 
   private def manifestJson(m: Manifest): String = {
     val root = headerJson(m.version, m.op, m.keys, m.schemaDdl, m.parts, "full",
-      m.clusterBuckets, m.colMap, m.retired, m.indexCols)
+      m.clusterBuckets, m.colMap, m.retired, m.indexCols, m.props)
     writeEntriesJson(root.putArray("files"), m.files)
     jsonMapper.writeValueAsString(root)
   }
 
   private def deltaJson(d: DeltaRecord): String = {
     val root = headerJson(d.version, d.op, d.keys, d.schemaDdl, d.parts, "delta",
-      d.clusterBuckets, d.colMap, d.retired, d.indexCols)
+      d.clusterBuckets, d.colMap, d.retired, d.indexCols, d.props)
     val rm = root.putArray("remove")
     d.removedPaths.foreach(rm.add)
     writeEntriesJson(root.putArray("add"), d.addedEntries)
@@ -358,14 +367,17 @@ object LakeTable {
       .map(e => e.getKey -> e.getValue.asText()).toMap
     val retired = root.path("retired").elements().asScala.map(_.asText()).toSeq
     val indexCols = root.path("index").elements().asScala.map(_.asText()).toSeq
+    val props = root.path("props").properties().asScala
+      .map(e => e.getKey -> e.getValue.asText()).toMap
     if (root.path("kind").asText() == "delta")
       Left(DeltaRecord(version, op, keys, schemaDdl, parts,
         root.path("remove").elements().asScala.map(_.asText()).toSeq,
-        parseEntriesJson(root.path("add")), cluster, colMap, retired, indexCols))
+        parseEntriesJson(root.path("add")), cluster, colMap, retired, indexCols,
+        props))
     else
       Right(Manifest(version, op, keys, schemaDdl,
         parseEntriesJson(root.path("files")), parts, cluster, colMap, retired,
-        indexCols))
+        indexCols, props))
   }
 
   /** Commit a STATE-REPLACING version (create/overwrite/compact/restore/
@@ -383,7 +395,7 @@ object LakeTable {
     publish(path, m, deltaJson(
       DeltaRecord(m.version, m.op, m.keys, m.schemaDdl, m.parts,
         removedPaths, addedEntries, m.clusterBuckets, m.colMap, m.retired,
-        m.indexCols)))
+        m.indexCols, m.props)))
     // periodic full-state checkpoint: bounds reconstruction to at most
     // ChkInterval record reads (every interval-th version is an anchor —
     // this checkpoint when the record there is a delta; a full record is
@@ -1022,8 +1034,7 @@ object LakeTable {
     cols.foreach(c => require(!m.parts.contains(c),
       s"LakeTable: index column $c is a partition column — directory " +
         "pruning already serves it"))
-    commitDelta(path, Manifest(current + 1, "set-index", m.keys, m.schemaDdl,
-      m.files, m.parts, m.clusterBuckets, m.colMap, m.retired, cols),
+    commitDelta(path, m.copy(version = current + 1, op = "set-index", indexCols = cols),
       Seq.empty, Seq.empty)
     current + 1
   }
@@ -1034,7 +1045,8 @@ object LakeTable {
     * authority from the start, exactly as for a data-bearing create. */
   def createEmpty(path: String, schema: StructType, keyCols: Seq[String],
       partitionBy: Seq[String] = Seq.empty, clusterBuckets: Int = 0,
-      indexCols: Seq[String] = Seq.empty): Int = {
+      indexCols: Seq[String] = Seq.empty,
+      props: Map[String, String] = Map.empty): Int = {
     require(latestVersion(path) == 0,
       s"LakeTable: table at $path already exists (version ${latestVersion(path)})")
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
@@ -1047,7 +1059,7 @@ object LakeTable {
       !partitionBy.contains(c),
       s"LakeTable: index column $c must be a non-partition schema column"))
     commit(path, Manifest(1, "create", keyCols, schema.toDDL, Seq.empty,
-      partitionBy, clusterBuckets, indexCols = indexCols))
+      partitionBy, clusterBuckets, indexCols = indexCols, props = props))
     1
   }
 
@@ -1215,10 +1227,12 @@ object LakeTable {
     // the index declaration survives an overwrite for the columns that
     // still exist (an overwrite heals the column mapping, so the
     // physical axis is the logical name again)
-    val keptIndex = manifest(path, current).indexCols
-      .filter(df.schema.fieldNames.contains).filterNot(partitionBy.contains)
-    val mNew = Manifest(current + 1, "overwrite", keyCols, df.schema.toDDL,
-      Seq.empty, partitionBy, cluster, indexCols = keptIndex)
+    val prev = manifest(path, current)
+    val mNew = prev.copy(version = current + 1, op = "overwrite", keys = keyCols,
+      schemaDdl = df.schema.toDDL, parts = partitionBy,
+      clusterBuckets = cluster, colMap = Map.empty, retired = Seq.empty,
+      indexCols = prev.indexCols
+        .filter(df.schema.fieldNames.contains).filterNot(partitionBy.contains))
     commit(path, mNew.copy(files =
       entriesFor(spark, dir, keyCols, df.schema, partitionBy, cluster > 0,
         bloomColsOf(mNew, df.schema))))
@@ -1335,9 +1349,9 @@ object LakeTable {
       m.clusterBuckets > 0, bloomColsOf(m, newSchema))
     // churn record: removed = the touched files, added = the rewrite —
     // O(batch-touched files) metadata, never the carried 99.99%
-    commitDelta(path, Manifest(readVersion + 1, "merge", m.keys, newSchema.toDDL,
-      carried ++ added, m.parts, m.clusterBuckets, newColMap, m.retired,
-      m.indexCols), touchedEntries.map(_.path), added)
+    commitDelta(path, m.copy(version = readVersion + 1, op = "merge",
+      schemaDdl = newSchema.toDDL, files = carried ++ added, colMap = newColMap),
+      touchedEntries.map(_.path), added)
     readVersion + 1
   }
 
@@ -1434,6 +1448,31 @@ object LakeTable {
     -1 // unreachable
   }
 
+  /** Insert-only APPEND: `df` lands as one fresh batch directory and
+    * commits as a churn record that adds its files and removes none — no
+    * touched-file discovery and no key check, so key uniqueness across
+    * appends is the caller's contract (the index stores append disjoint
+    * id batches). `df` must carry every table column with the table's
+    * type. Returns the added entries: [[readEntries]] over them reads
+    * back exactly the rows this commit added. */
+  def append(spark: SparkSession, path: String, df: DataFrame): Seq[FileEntry] = {
+    val current = latestVersion(path)
+    require(current > 0, s"LakeTable: cannot append to missing table at $path")
+    val m = manifest(path, current)
+    val types = df.schema.map(f => f.name -> f.dataType.catalogString).toMap
+    m.schema.foreach(f => require(types.get(f.name).contains(f.dataType.catalogString),
+      s"LakeTable: append batch column ${f.name} is ${types.getOrElse(f.name, "missing")}, " +
+        s"the table has ${f.dataType.catalogString}"))
+    val dir = s"$path/data/append-v${current + 1}-${java.util.UUID.randomUUID()}"
+    writeData(df.select(m.schema.fieldNames.toIndexedSeq.map(col): _*), dir, m.parts,
+      m.colMap, m.clusterBuckets, m.keys)
+    val added = entriesFor(spark, dir, m.keys, m.schema, m.parts,
+      m.clusterBuckets > 0, bloomColsOf(m, m.schema))
+    commitDelta(path, m.copy(version = current + 1, op = "append",
+      files = m.files ++ added), Seq.empty, added)
+    added
+  }
+
   /** Copy-on-write DELETE: snapshot rows whose keys appear in `keys`
     * vanish from the NEW version; only files containing a matched key
     * are rewritten. Note the time-travel/erasure distinction a real
@@ -1475,9 +1514,8 @@ object LakeTable {
           m.clusterBuckets > 0, bloomColsOf(m, m.schema))
       }
     // a no-op delete still commits — an EMPTY churn record (idempotent replays)
-    commitDelta(path, Manifest(current + 1, "delete", m.keys, m.schemaDdl,
-      carried ++ added, m.parts, m.clusterBuckets, m.colMap, m.retired,
-      m.indexCols), touchedEntries.map(_.path), added)
+    commitDelta(path, m.copy(version = current + 1, op = "delete",
+      files = carried ++ added), touchedEntries.map(_.path), added)
     current + 1
   }
 
@@ -1518,9 +1556,8 @@ object LakeTable {
           .map(e => e.copy(dvs = e.dvs :+ dvDir))
       }
     val carried = m.files.filterNot(e => flipped.exists(_.path == e.path))
-    commitDelta(path, Manifest(current + 1, "delete-dv", m.keys, m.schemaDdl,
-      carried ++ flipped, m.parts, m.clusterBuckets, m.colMap, m.retired,
-      m.indexCols), flipped.map(_.path), flipped)
+    commitDelta(path, m.copy(version = current + 1, op = "delete-dv",
+      files = carried ++ flipped), flipped.map(_.path), flipped)
     current + 1
   }
 
@@ -1612,9 +1649,8 @@ object LakeTable {
           }
       }
     val carried = m.files.filterNot(e => flipped.exists(_.path == e.path))
-    commitDelta(path, Manifest(m.version + 1, "delete-pos", m.keys, m.schemaDdl,
-      carried ++ flipped, m.parts, m.clusterBuckets, m.colMap, m.retired,
-      m.indexCols), flipped.map(_.path), flipped)
+    commitDelta(path, m.copy(version = m.version + 1, op = "delete-pos",
+      files = carried ++ flipped), flipped.map(_.path), flipped)
     m.version + 1
   }
 
@@ -1648,9 +1684,8 @@ object LakeTable {
         "pruning would supersede the bloom index but the declaration " +
         "would go stale; drop the index first (setIndexColumns), then " +
         "evolve the partitioning"))
-    commitDelta(path, Manifest(current + 1, "evolve-partitioning",
-      m.keys, m.schemaDdl, m.files, newParts, 0, m.colMap, m.retired,
-      m.indexCols), Seq.empty, Seq.empty)
+    commitDelta(path, m.copy(version = current + 1, op = "evolve-partitioning",
+      parts = newParts), Seq.empty, Seq.empty)
     current + 1
   }
 
@@ -1675,9 +1710,8 @@ object LakeTable {
     // re-adding a DROPPED name allocates a fresh physical — the retired
     // files' stale data must never resurrect under the new column
     val newColMap = m.colMap ++ allocPhysical(m, newCols.map(_.name), current + 1)
-    commitDelta(path, Manifest(current + 1, "add-columns", m.keys,
-      evolved.toDDL, m.files, m.parts, m.clusterBuckets, newColMap, m.retired,
-      m.indexCols), Seq.empty, Seq.empty)
+    commitDelta(path, m.copy(version = current + 1, op = "add-columns",
+      schemaDdl = evolved.toDDL, colMap = newColMap), Seq.empty, Seq.empty)
     current + 1
   }
 
@@ -1714,9 +1748,8 @@ object LakeTable {
     // renaming BACK to the physical name heals that entry to identity
     val newColMap = (m.colMap - from) ++
       (if (physName == to) Map.empty[String, String] else Map(to -> physName))
-    commitDelta(path, Manifest(current + 1, s"rename-column:$from->$to",
-      m.keys, newSchema.toDDL, m.files, m.parts, m.clusterBuckets,
-      newColMap, m.retired, m.indexCols), Seq.empty, Seq.empty)
+    commitDelta(path, m.copy(version = current + 1, op = s"rename-column:$from->$to",
+      schemaDdl = newSchema.toDDL, colMap = newColMap), Seq.empty, Seq.empty)
     current + 1
   }
 
@@ -1740,10 +1773,10 @@ object LakeTable {
       s"LakeTable: cannot drop partition column $name")
     require(m.schema.length > 1, "LakeTable: cannot drop the last column")
     val newSchema = StructType(m.schema.filterNot(_.name == name))
-    commitDelta(path, Manifest(current + 1, s"drop-column:$name", m.keys,
-      newSchema.toDDL, m.files, m.parts, m.clusterBuckets,
-      m.colMap - name, (m.retired :+ m.phys(name)).distinct,
-      m.indexCols.filterNot(_ == name)), Seq.empty, Seq.empty)
+    commitDelta(path, m.copy(version = current + 1, op = s"drop-column:$name",
+      schemaDdl = newSchema.toDDL, colMap = m.colMap - name,
+      retired = (m.retired :+ m.phys(name)).distinct,
+      indexCols = m.indexCols.filterNot(_ == name)), Seq.empty, Seq.empty)
     current + 1
   }
 
@@ -1774,10 +1807,10 @@ object LakeTable {
     val dir = s"$path/data/zorder-v${current + 1}"
     writeLayout(read(spark, path, Some(current)), zCols, targetFiles, "zorder",
       dir, m.parts)
-    commit(path, Manifest(current + 1, "zorder", m.keys, m.schemaDdl,
-      entriesFor(spark, dir, (m.keys ++ zCols).distinct, m.schema, m.parts,
+    commit(path, m.copy(version = current + 1, op = "zorder",
+      files = entriesFor(spark, dir, (m.keys ++ zCols).distinct, m.schema, m.parts,
         clustered = false, bloomColsOf(m.copy(colMap = Map.empty), m.schema)),
-      m.parts, 0, Map.empty, Seq.empty, m.indexCols))
+      colMap = Map.empty, retired = Seq.empty))
     current + 1
   }
 
@@ -1798,10 +1831,10 @@ object LakeTable {
     writeData(read(spark, path, Some(current))
       .repartition(n, m.keys.map(col): _*), dir, m.parts,
       clusterBuckets = n, clusterKeys = m.keys)
-    commit(path, Manifest(current + 1, "recluster", m.keys, m.schemaDdl,
-      entriesFor(spark, dir, m.keys, m.schema, m.parts, clustered = true,
+    commit(path, m.copy(version = current + 1, op = "recluster",
+      files = entriesFor(spark, dir, m.keys, m.schema, m.parts, clustered = true,
         bloomCols = bloomColsOf(m.copy(colMap = Map.empty), m.schema)),
-      m.parts, n, Map.empty, Seq.empty, m.indexCols))
+      clusterBuckets = n, colMap = Map.empty, retired = Seq.empty))
     current + 1
   }
 
@@ -1828,10 +1861,10 @@ object LakeTable {
         read(spark, path, Some(current)).repartition(m.clusterBuckets, m.keys.map(col): _*)
       else read(spark, path, Some(current)).repartition(targetFiles),
       dir, m.parts, Map.empty, m.clusterBuckets, m.keys)
-    commit(path, Manifest(current + 1, "compact", m.keys, m.schemaDdl,
-      entriesFor(spark, dir, m.keys, m.schema, m.parts, m.clusterBuckets > 0,
+    commit(path, m.copy(version = current + 1, op = "compact",
+      files = entriesFor(spark, dir, m.keys, m.schema, m.parts, m.clusterBuckets > 0,
         bloomColsOf(m.copy(colMap = Map.empty), m.schema)),
-      m.parts, m.clusterBuckets, Map.empty, Seq.empty, m.indexCols))
+      colMap = Map.empty, retired = Seq.empty))
     current + 1
   }
 
@@ -1878,9 +1911,8 @@ object LakeTable {
     val rewritten = entriesFor(spark, dir, m.keys, m.schema, m.parts,
       clustered = false, bloomColsOf(m, m.schema))
     val carried = m.files.filterNot(e => scoped.exists(_.path == e.path))
-    commitDelta(path, Manifest(current + 1, "compact-where", m.keys,
-      m.schemaDdl, carried ++ rewritten, m.parts, 0, m.colMap, m.retired,
-      m.indexCols), scoped.map(_.path), rewritten)
+    commitDelta(path, m.copy(version = current + 1, op = "compact-where",
+      files = carried ++ rewritten), scoped.map(_.path), rewritten)
     current + 1
   }
 

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.similarity.SimilarityOps
-import graft.sources.AnnIndexStore
+import graft.sources.{AnnIndexStore, LakeTable}
 
 /** Cross-session index persistence: the parquet round-trip must serve
-  * IDENTICAL results to the session-built index, and a corpus/index
+  * IDENTICAL results to the session-built index, a corpus/index
   * mismatch must fail loudly (silently-wrong neighbors are the worst
-  * ANN-store failure mode). */
+  * ANN-store failure mode), and every store mutation is a lake commit. */
 class AnnIndexStoreSpec extends SparkSpec {
 
   private val store = java.nio.file.Files
@@ -18,6 +18,29 @@ class AnnIndexStoreSpec extends SparkSpec {
     * 30 measured, plus headroom. Training the quantizers as distributed
     * Lloyd iterations again would run ~200. */
   private val JobBudget = 40
+
+  private def tables(dir: String) = Seq(s"$dir/codes", s"$dir/appended_vectors")
+
+  private def codes(dir: String) = LakeTable.read(spark, s"$dir/codes")
+    .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).mkString(","))).toSet
+
+  private def served(dir: String) = AnnIndexStore.serve(spark, SfDir, dir)
+    .select("query_id", "rank", "vec_id").collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+
+  private def idsOnDisk(dir: String): Set[Long] = longsOnDisk(tables(dir), "vec_id")
+
+  /** An exact twin, under `twinId`, of a vector served at rank <= 9:
+    * identical cell+codes and cosine put it right after its source. */
+  private def twinOfServed(dir: String, twinId: Long) = {
+    import spark.implicits._
+    val (qid, srcRank, srcId) = served(dir).filter(_._2 <= 9).head
+    val srcVec = Tables.embeddings(spark, SfDir)
+      .filter(col("vec_id") === srcId)
+      .select(expr("transform(embedding, x -> cast(x as double))"))
+      .head().getSeq[Double](0)
+    (qid, srcRank, Seq((twinId, srcVec)).toDF("vec_id", "vec"))
+  }
 
   test("write/read round-trips the index and serves identical top-10") {
     AnnIndexStore.write(spark, SfDir, store)
@@ -74,34 +97,26 @@ class AnnIndexStoreSpec extends SparkSpec {
     val batch = Seq(
       (5000001L, knownVec),
       (5000002L, knownVec.map(v => 1.0 - v))).toDF("vec_id", "vec")
-    AnnIndexStore.append(spark, SfDir, dir, batch)
+    // the client shape, appending against a loaded index: one job writes
+    // the vectors, and the encode pass over exactly the files it added
+    // runs five (two broadcast builds, two shuffle stages, the write) —
+    // no listing, counting or schema-inference job
+    val jobs = sparkJobs(AnnIndexStore.append(spark, SfDir, dir, batch, Some(before)))
+    assert(jobs == 6, s"append ran $jobs Spark jobs")
     val after = AnnIndexStore.read(spark, SfDir, dir)
     assert(after.withCodes.count() == nBefore + 2)
     val dup = after.withCodes.filter(col("vec_id") === 5000001L).collect().head
     assert(dup.getInt(1) == knownCell, "identical vector must land in the same cell")
     assert(dup.getSeq[Int](2) == knownCodes, "identical vector must get identical codes")
-    // a second append accumulates the count in meta.json
+    // a second append: the codes table's log holds one append commit per
+    // batch, and the files those commits added hold the 3 appended rows
     AnnIndexStore.append(spark, SfDir, dir, batch.filter(col("vec_id") === 5000002L))
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dir, "meta.json"))
-    assert(meta.contains("\"appended\":3"), meta)
-  }
-
-  test("an append whose rows are missing from the part-file listing fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_parts").toString + "/v"
-    spark.range(3).write.parquet(dir)
-    val files = graft.sources.StoreParts.list(dir)
-    assert(files.nonEmpty)
-    assert(graft.sources.StoreParts.added("AnnIndexStore", dir, Set.empty, 3) ==
-      files.toSeq.sorted.map(f => s"$dir/$f"))
-    // an empty batch may add no file
-    assert(graft.sources.StoreParts.added("AnnIndexStore", dir, files, 0).isEmpty)
-    // rows written but no new file listed: counting them would leave
-    // them unrouteable, so the append must refuse
-    val e = intercept[IllegalStateException] {
-      graft.sources.StoreParts.added("AnnIndexStore", dir, files, 3)
-    }
-    assert(e.getMessage.contains("wrote 3 rows"), e.getMessage)
+    val codes = s"$dir/codes"
+    assert(LakeTable.history(codes).map(_._2) == Seq("create", "append", "append", "append"))
+    val built = LakeTable.manifest(codes, 2).filePaths.toSet
+    val appended = LakeTable.manifest(codes, LakeTable.latestVersion(codes)).files
+      .filterNot(f => built(f.path))
+    assert(appended.map(_.rows).sum == 3L, appended)
   }
 
   test("building the IVF+PQ index on a fresh corpus stays within its Spark job budget") {
@@ -110,33 +125,31 @@ class AnnIndexStoreSpec extends SparkSpec {
     val data = java.nio.file.Files.createTempDirectory("graft_ann_jobs")
     java.nio.file.Files.copy(java.nio.file.Paths.get(SfDir, "embeddings.parquet"),
       data.resolve("embeddings.parquet"))
-    val group = "ann-build-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "IVF+PQ build")
-      try AnnIndexStore.write(spark, data.toString, s"$data/ann")
-      finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    graft.sources.LakeTable.deleteRecursively(data.toFile)
-    assert(jobs.get() > 0 && jobs.get() <= JobBudget,
-      s"IVF+PQ build ran ${jobs.get()} Spark jobs (budget $JobBudget)")
+    val jobs = sparkJobs(AnnIndexStore.write(spark, data.toString, s"$data/ann"))
+    LakeTable.deleteRecursively(data.toString)
+    assert(jobs > 0 && jobs <= JobBudget,
+      s"IVF+PQ build ran $jobs Spark jobs (budget $JobBudget)")
   }
 
-  test("a corrupt meta.json names the missing field") {
+  test("a store log without the snapshot property fails and names it") {
     AnnIndexStore.write(spark, SfDir, store)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(store, "meta.json"), """{"nCells":16}""")
+    // a commit that drops the property
+    val codes = s"$store/codes"
+    val m = LakeTable.manifest(codes, LakeTable.latestVersion(codes))
+    LakeTable.commitDelta(codes, m.copy(version = m.version + 1, op = "drop-snapshot",
+      props = m.props - "snapshot"), Seq.empty, Seq.empty)
     val e = intercept[IllegalStateException] {
       AnnIndexStore.read(spark, SfDir, store)
     }
-    assert(e.getMessage.contains("snapshot"))
+    assert(e.getMessage.contains("snapshot"), e.getMessage)
+    // a path with no committed store, and one whose write() stopped
+    // before the codes table's first append
+    val none = java.nio.file.Files.createTempDirectory("graft_ann_none").toString
+    val e2 = intercept[IllegalStateException] { AnnIndexStore.serve(spark, SfDir, none) }
+    assert(e2.getMessage.contains("rebuild with write()"), e2.getMessage)
+    LakeTable.createEmpty(s"$none/codes", m.schema, Seq("vec_id"), props = m.props)
+    val e3 = intercept[IllegalStateException] { AnnIndexStore.read(spark, SfDir, none) }
+    assert(e3.getMessage.contains("rebuild with write()"), e3.getMessage)
   }
 
   test("serve returns appended vectors: the twin ranks adjacent to its source") {
@@ -163,12 +176,11 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(served1.exists(r => r._3 == 7000001L && r._2 == srcRank + 1),
       s"appended twin of $srcId (rank $srcRank for query $qid) not served: " +
         served1.sortBy(_._2).mkString(", "))
-    // a REBUILD starts a fresh generation: the appended vectors are gone
-    // and serving returns to the pre-append results
+    // a REBUILD starts clean: the appended vectors are gone and serving
+    // returns to the pre-append results
     AnnIndexStore.write(spark, SfDir, dir)
-    assert(Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-      .forall(f => !f.getName.startsWith("appended_vectors")),
-      "rebuild left a stale appended-vectors generation behind")
+    assert(LakeTable.read(spark, s"$dir/appended_vectors").isEmpty,
+      "rebuild left stale appended vectors behind")
     val served2 = AnnIndexStore.serve(spark, SfDir, dir)
       .select("query_id", "rank", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -179,13 +191,11 @@ class AnnIndexStoreSpec extends SparkSpec {
   test("maintenance: compaction is row-invisible, retract drops codes AND rerank vectors") {
     val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_ann_store_spec_maint").toString
-    graft.sources.LakeTable.deleteRecursively(new java.io.File(dir))
+    LakeTable.deleteRecursively(dir)
     AnnIndexStore.write(spark, SfDir, dir)
     val batch = SimilarityOps.appendBatch(spark, SfDir)
     AnnIndexStore.append(spark, SfDir, dir, batch.filter((col("vec_id") - 2000000L) % 50 === 0))
     AnnIndexStore.append(spark, SfDir, dir, batch.filter((col("vec_id") - 2000000L) % 50 === 25))
-    def codes(p: String) = spark.read.parquet(AnnIndexStore.liveCodes(p))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).mkString(","))).toSet
     // compaction: fragments shrink, the codes SET does not
     val pre = codes(dir)
     val fragsBefore = AnnIndexStore.codesFragments(dir)
@@ -193,6 +203,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     AnnIndexStore.compactIndexFiles(spark, SfDir, dir, targetFiles = 1)
     assert(AnnIndexStore.codesFragments(dir) == 1)
     assert(codes(dir) == pre, "compaction changed the codes set")
+    tables(dir).foreach(assertOnlyLiveFiles)
     // retract: the odd twins vanish from codes AND the rerank store,
     // surviving rows are untouched (frozen quantizer: no re-encode)
     val retractedIds = batch.filter((col("vec_id") - 2000000L) % 50 === 25)
@@ -203,18 +214,16 @@ class AnnIndexStoreSpec extends SparkSpec {
     val post = codes(dir)
     assert(post == pre.filterNot(c => retractedIds(c._1)),
       "retract did not leave exactly the survivor codes")
-    val rerankIds = spark.read.parquet(AnnIndexStore.liveAppendedVectors(dir))
+    val rerankIds = LakeTable.read(spark, s"$dir/appended_vectors")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(rerankIds.intersect(retractedIds).isEmpty, "retracted rerank vectors stranded")
-    // no retracted id is ever served; hygiene: one live generation, no meta temps
+    // no retracted id is ever served, and erasure is physical: every file
+    // on disk is live, and none — read past the manifest — holds one
     val served = AnnIndexStore.serve(spark, SfDir, dir)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(served.intersect(retractedIds).isEmpty, "a retracted vector was served")
-    val left = Option(new java.io.File(dir).listFiles).getOrElse(Array.empty).map(_.getName)
-    assert(!left.exists(_.startsWith(".tmp-meta")), s"stray meta temp: ${left.mkString(",")}")
-    assert(left.count(_.startsWith("codes-g")) == 1 &&
-      left.count(_.startsWith("appended_vectors-g")) == 1,
-      s"old generations survived: ${left.mkString(",")}")
+    tables(dir).foreach(assertOnlyLiveFiles)
+    assert(idsOnDisk(dir).intersect(retractedIds).isEmpty, "a retracted vec_id is still on disk")
   }
 
   test("ann_index_serve entry: full lifecycle booleans hold for every gated query") {
@@ -229,5 +238,49 @@ class AnnIndexStoreSpec extends SparkSpec {
       assert(top1Ok, s"query $q: source not served at rank 1 from the store")
       assert(appendOk, s"query $q: appended exact-copy twin not served at rank 2")
     }
+  }
+
+  test("a crashed, uncommitted append is invisible and compaction clears it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_crash").toString
+    AnnIndexStore.write(spark, SfDir, dir)
+    val served0 = served(dir)
+    // the crashed append: the twin's vector and codes files land under
+    // each table's data/, and neither commit happens
+    val (qid, srcRank, twin) = twinOfServed(dir, 7000002L)
+    twin.write.parquet(s"$dir/appended_vectors/data/append-v9-crashed")
+    SimilarityOps.encodeWithIndex(spark, twin, AnnIndexStore.read(spark, SfDir, dir))
+      .write.parquet(s"$dir/codes/data/append-v9-crashed")
+    assert(idsOnDisk(dir).contains(7000002L), "no orphan file landed")
+    assert(served(dir) == served0, "uncommitted append files changed what serve returns")
+    // the next append and compaction run over the orphans; the appended
+    // twin is served, and the compaction's vacuum removes the orphans
+    AnnIndexStore.append(spark, SfDir, dir, twin)
+    assert(served(dir).exists(r => r._1 == qid && r._3 == 7000002L && r._2 == srcRank + 1))
+    AnnIndexStore.compactIndexFiles(spark, SfDir, dir, targetFiles = 1)
+    tables(dir).foreach(assertOnlyLiveFiles)
+    assert(LakeTable.read(spark, s"$dir/appended_vectors").count() == 1L)
+  }
+
+  test("the store round trip runs on a file: URI path") {
+    val plain = java.nio.file.Files.createTempDirectory("graft_ann_fileuri").toString
+    val dir = "file:" + plain
+    AnnIndexStore.write(spark, SfDir, dir)
+    val served0 = served(dir)
+    val (qid, srcRank, twin) = twinOfServed(dir, 7000003L)
+    AnnIndexStore.append(spark, SfDir, dir, twin)
+    // the appended row is indexed and served
+    assert(served(dir).exists(r => r._1 == qid && r._3 == 7000003L && r._2 == srcRank + 1))
+    val pre = codes(dir)
+    assert(pre.exists(_._1 == 7000003L))
+    AnnIndexStore.compactIndexFiles(spark, SfDir, dir, targetFiles = 1)
+    assert(AnnIndexStore.codesFragments(dir) == 1)
+    assert(codes(dir) == pre)
+    AnnIndexStore.retract(spark, SfDir, dir, twin.select("vec_id"))
+    assert(codes(dir) == pre.filterNot(_._1 == 7000003L))
+    assert(served(dir) == served0)
+    tables(dir).foreach(assertOnlyLiveFiles)
+    assert(!idsOnDisk(dir).contains(7000003L))
+    LakeTable.deleteRecursively(dir)
+    assert(!new java.io.File(plain).exists)
   }
 }

@@ -2375,4 +2375,37 @@ class LakeTableSpec extends SparkSpec {
     // same key count plus inserts
     assert(v2.length == v1.length + v2.count(_._2 >= graft.operators.MergeOps.LakeInsertOffset))
   }
+
+  test("table properties survive every commit kind and checkpoint reconstruction") {
+    import spark.implicits._
+    val p = freshPath("props")
+    val props = Map("snapshot" -> "5f3a9c01", "nCells" -> "16")
+    LakeTable.createEmpty(p, org.apache.spark.sql.types.StructType.fromDDL(
+      "k BIGINT, s STRING, v BIGINT"), Seq("k"), props = props)
+    def df(ks: Range, s: String) = ks.map(k => (k.toLong, s, k.toLong)).toDF("k", "s", "v")
+    def latestProps = LakeTable.manifest(p, LakeTable.latestVersion(p)).props
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "merge" -> (() => LakeTable.merge(spark, p, df(1 to 40, "a"), Seq("k"))),
+      "append" -> (() => LakeTable.append(spark, p, df(41 to 50, "b"))),
+      "delete-dv" -> (() => LakeTable.deleteDV(spark, p, Seq(3L).toDF("k"), Seq("k"))),
+      "compact" -> (() => LakeTable.compact(spark, p, 2)),
+      "rename-column:s->t" -> (() => LakeTable.renameColumn(p, "s", "t")),
+      "delete" -> (() => LakeTable.delete(spark, p, Seq(4L).toDF("k"), Seq("k"))),
+      "merge" -> (() => LakeTable.merge(spark, p,
+        df(5 to 6, "c").withColumnRenamed("s", "t"), Seq("k"))),
+      "merge" -> (() => LakeTable.merge(spark, p,
+        df(7 to 8, "d").withColumnRenamed("s", "t"), Seq("k"))))
+    steps.foreach { case (op, run) =>
+      run()
+      assert(LakeTable.manifest(p, LakeTable.latestVersion(p)).op == op)
+      assert(latestProps == props, s"$op dropped the table properties")
+    }
+    // version 9 reconstructs from the version-8 checkpoint plus one delta
+    assert(LakeTable.latestVersion(p) == LakeTable.ChkInterval + 1)
+    assert(local(f"$p/_log/chk-v${LakeTable.ChkInterval}%05d.json").exists)
+    (1 to LakeTable.latestVersion(p)).foreach(v =>
+      assert(LakeTable.manifest(p, v).props == props, s"version $v"))
+    assert(LakeTable.read(spark, p).count() == 48L)
+  }
 }
+

@@ -20,4 +20,55 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * correctness gate without verifying anything. */
   def assertNonEmpty(df: org.apache.spark.sql.DataFrame, what: String): Unit =
     assert(!df.isEmpty, s"$what returned zero rows — a vacuous oracle match")
+
+  /** Spark jobs `body` launches, counted through its job group (jobs
+    * that run on helper threads, like broadcast builds, inherit it). */
+  def sparkJobs(body: => Unit): Int = {
+    val group = s"spec-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** Parquet part files under a lake table's directory, found by walking
+    * the disk rather than by reading the table's log. */
+  def partFilesOnDisk(table: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(
+      java.nio.file.Paths.get(graft.sources.LakeIo.normKey(table)))
+    try walk.iterator().asScala.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && f.split('/').last.startsWith("part-")).toSet
+    finally walk.close()
+  }
+
+  /** Values of the long column `c` in every part file under `tables`,
+    * read straight from disk — past the manifest, so a file a commit
+    * dropped but left on disk still counts. */
+  def longsOnDisk(tables: Seq[String], c: String): Set[Long] =
+    tables.flatMap { t =>
+      val files = partFilesOnDisk(t).toSeq
+      if (files.isEmpty) Seq.empty
+      else spark.read.parquet(files: _*).select(c).collect().map(_.getLong(0)).toSeq
+    }.toSet
+
+  /** Every part file on disk under `table` is one its live manifest
+    * references: no orphan and no replaced file survived. */
+  def assertOnlyLiveFiles(table: String): Unit = {
+    import graft.sources.{LakeIo, LakeTable}
+    val live = LakeTable.manifest(table, LakeTable.latestVersion(table))
+      .filePaths.map(LakeIo.normKey).toSet
+    val disk = partFilesOnDisk(table)
+    assert(disk == live, s"$table: on disk but unreferenced ${(disk -- live).mkString(", ")}; " +
+      s"referenced but missing ${(live -- disk).mkString(", ")}")
+  }
 }
