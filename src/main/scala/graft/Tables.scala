@@ -2,17 +2,43 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Single place that knows how to load the star-schema parquet tables.
   *
-  * All loads are plain `spark.read.parquet` so Catalyst gets full
+  * All loads are plain parquet scans so Catalyst gets full
   * pushdown/pruning; callers project and filter declaratively and the
   * parquet scan only materializes what survives (`PushedFilters` /
-  * `ReadSchema` in explain output).
+  * `ReadSchema` in explain output). The footer schema is inferred once
+  * per table file state ([[load]]), not by a Spark job on every load.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Footer schema per (path, [[snapshot]], nanosAsLong) — the
+    * [[tableCount]] idiom. Parquet schema inference runs a Spark job on
+    * every schemaless read; a query touching six tables paid six per
+    * invocation. The reader conf is part of the key because it changes
+    * the inferred type of a nanos `ts` column ([[events]]), and a
+    * rewritten table file state re-infers. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // snapshot() walks java.io.File: a URI-schemed or missing path reads
+    // uncached (and a missing one fails with the reader's own error)
+    if (!new java.io.File(path).exists) return spark.read.parquet(path)
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val key = s"$path@${snapshot(path)}@nanosAsLong=$nanos"
+    // the inference job runs OUTSIDE the map (a job inside
+    // computeIfAbsent would block every thread hashing to the same bin);
+    // a racing duplicate inference is idempotent
+    val schema = Option(schemaMemo.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemaMemo.putIfAbsent(key, inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -518,9 +518,8 @@ object MergeOps {
       "SELECT o_orderkey, o_orderstatus FROM graft_ddl_src")
     spark.sql(s"INSERT INTO $cat.orders_t " +
       "SELECT o_orderkey, 'U' FROM graft_ddl_src WHERE o_orderkey % 41 = 6")
-    // a source-filter-expressible DELETE rides the metadata-only
-    // SupportsDelete path; non-pushable predicates lower through the
-    // row-level DeleteFromTable strategy onto the same DV commit (r16)
+    // every SQL DELETE, source-filter-expressible or not, lowers
+    // through the row-level DeleteFromTable strategy onto a DV commit
     spark.sql(s"DELETE FROM $cat.orders_t " +
       "WHERE o_orderstatus = 'F' AND o_orderkey < 1000")
     spark.sql(s"SELECT o_orderkey, o_orderstatus FROM $cat.orders_t " +

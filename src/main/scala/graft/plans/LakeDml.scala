@@ -8,10 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.{coalesce, col, lit, max, min}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, lit, max, when}
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeTable}
+import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
 
 /** SQL `MERGE INTO` / `UPDATE` for graftlake catalog tables.
   *
@@ -67,6 +67,35 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeTable}
   * statement reads the table's LATEST version, computes the batch, and
   * commits through the optimistic-concurrency merge (losing a publish
   * race rebases exactly like the programmatic API).
+  *
+  * ONE classification pass per statement. Every target row the
+  * classification reads carries its source file ([[FileCol]]) into the
+  * materialized batch, and the pass that materializes the batch also
+  * counts it and collects those files ([[LakeTable.observe]]) — the
+  * statement's touched-file set. The commit reuses that set while it
+  * reads the version the statement classified against, so it runs no
+  * second envelope aggregate and no discovery scan; a rebase onto a
+  * newer version rediscovers. The job chain of a source-only MERGE
+  * over an exchange-free source (the keyed refresh upsert), and which
+  * pass answers what:
+  *
+  *   1. envelope (1 job): the source keys' min/max box, observed in one
+  *      pass — prunes the files the classification opens;
+  *   1. classification + batch (2 jobs): ONE left-outer join of the
+  *      source with the pruned target keys (matched iff a target file
+  *      came back), materialized by localCheckpoint — the target-keys
+  *      broadcast, then the pass that also yields the row count and the
+  *      touched files;
+  *   1. cardinality guard (2 jobs): a grouped pass over the claimed
+  *      keys, skipped when the statement claims at most one row;
+  *   1. commit (2 jobs): the touched files' survivors plus the batch
+  *      written as one version — the batch-keys broadcast, the write.
+  *
+  * Each equality-delete sidecar group on the target adds one broadcast
+  * job to the classification read. UPDATE is the same chain without
+  * the envelope. A row-level DELETE is two jobs: the doomed read's
+  * materializing pass (count and touched files included) and the
+  * sidecar write.
   */
 object LakeDml extends PredicateHelper {
   /** Largest doomed-key set a row-level DELETE commits as an
@@ -85,25 +114,16 @@ object LakeDml extends PredicateHelper {
     * pruned-out file cannot hold a matched key, and the anti-join only
     * needs target keys that COULD equal a source key. Records its
     * (kept, total) decision under `<path>@classify` for the pruning
-    * observability hook. Cost: one small agg job over the source keys +
-    * an O(#files) driver-side stats pass. */
+    * observability hook. Cost: one observed pass over the source keys
+    * ([[LakeTable.keyEnvelope]]) + an O(#files) driver-side stats pass. */
   private[graft] def prunedTargetRead(spark: SparkSession, path: String,
-      srcKeys: DataFrame, keys: Seq[String]): DataFrame = {
-    val v = LakeTable.latestVersion(path)
-    val m = LakeTable.manifest(path, v)
-    if (m.files.isEmpty) return LakeTable.readEntries(spark, m, m.files)
-    val aggs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-    val row = srcKeys.agg(aggs.head, aggs.tail: _*).head()
-    val preds = keys.zipWithIndex.flatMap { case (k, i) =>
-      (Option(row.get(2 * i)), Option(row.get(2 * i + 1))) match {
-        case (Some(lo), Some(hi)) =>
-          Some((k, Some(lo): Option[Any], Some(hi): Option[Any]))
-        case _ => None // empty source / all-null key: no honest bound
-      }
-    }
+      srcKeys: DataFrame, keys: Seq[String]): Classified = {
+    val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
+    if (m.files.isEmpty) return classified(spark, m, m.files)
+    val preds = LakeTable.keyEnvelope(srcKeys, keys)
     val kept = m.files.filter(LakeTable.entryMatches(_, preds))
     GraftLakeSource.recordPrune(s"$path@classify", kept.size, m.files.size)
-    LakeTable.readEntries(spark, m, kept)
+    classified(spark, m, kept)
   }
 
   /** Predicate-pruned target read for UPDATE / row-level DELETE: the
@@ -117,16 +137,93 @@ object LakeDml extends PredicateHelper {
     * re-applies on the survivors) — a selective keyed UPDATE reads
     * O(matching files), not O(table). */
   private[graft] def prunedByPredicate(spark: SparkSession, path: String,
-      cond: Option[Expression]): DataFrame = {
-    val v = LakeTable.latestVersion(path)
-    val m = LakeTable.manifest(path, v)
+      cond: Option[Expression]): Classified = {
+    val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
     val preds = cond.toSeq.flatMap(splitConjunctivePredicates)
       .flatMap(e => ColumnBridge.translateFilter(e))
       .flatMap(f => GraftLakeSource.toIntervals(f))
     val kept = m.files.filter(LakeTable.entryMatches(_, preds))
     GraftLakeSource.recordPrune(s"$path@dml", kept.size, m.files.size)
-    LakeTable.readEntries(spark, m, kept)
+    classified(spark, m, kept)
   }
+
+  /** Row-level DELETE (SQL `DELETE FROM … WHERE cond`, and TRUNCATE
+    * with `cond` true): predicate-pruned read → filter → merge-on-read
+    * DV commit over the matching keys — one version, zero data files
+    * rewritten; a statement matching nothing commits nothing. Jobs:
+    * the doomed read's materializing pass, which also counts the rows
+    * and collects their files (the sidecar's touched set, so
+    * [[LakeTable.deleteDV]] runs no envelope or discovery pass), then
+    * the sidecar write. `condExpr` is `cond` as an expression, for file
+    * pruning (None prunes nothing). */
+  private[graft] def deleteRows(spark: SparkSession, path: String, keys: Seq[String],
+      condExpr: Option[Expression], cond: Column): Unit = {
+    // Materialized ONCE (review r17 #4): the cap decision and the
+    // committed sidecar must reflect the SAME snapshot — a def would
+    // re-resolve latestVersion on each use, and a concurrent commit
+    // between the count and deleteDV could make them diverge.
+    // The materializing pass also counts the doomed rows and collects
+    // their files ([[LakeTable.observe]]): the sidecar's touched set.
+    val snap = prunedByPredicate(spark, path, condExpr)
+    val (stats, doomedRows) = LakeTable.observe(
+      snap.rows.filter(cond).select(keys.map(col) :+ col(FileCol): _*),
+      Seq(count(lit(1)), collect_set(col(FileCol))), checkpoint = true)
+    val n = stats.getLong(0)
+    if (n == 0) {
+      // a statement touching nothing commits nothing (the commitBatches
+      // contract; review r16-2 #4) — no spurious empty versions for CDC
+      // consumers or the vacuum horizon
+      ()
+    } else if (n <= DvDeleteCap) {
+      LakeTable.deleteDV(spark, path, doomedRows.drop(FileCol), keys,
+        Some(touched(snap.version, stats.getSeq[String](1))))
+      ()
+    } else {
+      // UNSELECTIVE delete: the O(keys) sidecar contract no longer
+      // holds — the doomed set is a sizable fraction of the table, and a
+      // sidecar that big would ride every reader's broadcast (review
+      // r16-2 #3). Rewrite the SURVIVORS as one forward commit instead
+      // (layout and clustering preserved; history and pinned readers
+      // survive as for any overwrite).
+      val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
+      // SQL three-valued logic: a row where cond is NULL is NOT deleted
+      // (DELETE removes rows where cond IS TRUE), so it must SURVIVE —
+      // !cond alone would yield NULL and drop it. coalesce(cond, false)
+      // makes the survivor filter match the DV path's filter(cond)
+      // complement exactly.
+      val survivors = LakeTable.read(spark, path).filter(!coalesce(cond, lit(false)))
+      LakeTable.overwrite(spark, path, survivors, m.keys,
+        nBuckets = if (m.clusterBuckets > 0) m.clusterBuckets else math.max(8, m.files.size),
+        layout = if (m.clusterBuckets > 0) "cluster" else "hash",
+        partitionBy = m.parts)
+      ()
+    }
+  }
+
+  /** Every classification read carries each target row's source file
+    * in this column, through the statement's materialized batch. */
+  private[graft] val FileCol = LakeTable.PosFileCol
+
+  /** A statement's classification read: the target rows of manifest
+    * `version` (sidecars applied), each with its source file in
+    * [[FileCol]]. */
+  private[graft] final case class Classified(version: Int, rows: DataFrame)
+
+  /** The unpruned classification read: a NOT MATCHED BY SOURCE
+    * statement classifies every target row. */
+  private[graft] def fullTargetRead(spark: SparkSession, path: String): Classified = {
+    val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
+    classified(spark, m, m.files)
+  }
+
+  /** The touched-file set of a statement classified against `version`,
+    * from the [[FileCol]] values its batch carried. */
+  private[graft] def touched(version: Int, files: Seq[String]): LakeTable.TouchedFiles =
+    LakeTable.TouchedFiles(version, files.map(LakeIo.normUri).toSet)
+
+  private def classified(spark: SparkSession, m: LakeTable.Manifest,
+      entries: Seq[LakeTable.FileEntry]): Classified =
+    Classified(m.version, LakeTable.readEntries(spark, m, entries, withFile = true))
 }
 
 object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
@@ -218,74 +315,26 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
             // READ is predicate-pruned from the manifest stats — a
             // selective keyed UPDATE opens O(matching files)
             val snap = LakeDml.prunedByPredicate(spark, t.tablePath, condExpr)
-            val updates = snap.filter(condCol)
+            val updates = snap.rows.filter(condCol)
               .select(schema.fieldNames.toIndexedSeq.map(c =>
-                setCols.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-            LakeTable.merge(spark, t.tablePath, updates, keys)
-            ()
+                setCols.get(c).map(_.as(c)).getOrElse(col(c))) :+ col(LakeDml.FileCol): _*)
+            commitBatches(spark, t.tablePath, keys, snap.version, Some(updates), None)
           })
       }
 
-    // DELETE FROM with a predicate Spark could NOT translate to source
-    // filters: the translatable shapes never reach the planner as
-    // DeleteFromTable (the metadata-only rewrite routes them through
-    // SupportsDelete.deleteWhere first), so what lands here is exactly
-    // the formerly-refused row-level remainder — `WHERE v % 7 = 3`,
-    // function predicates, any expression over the row. Lowered as
-    // read → filter → merge-on-read DV commit over the matching keys:
-    // one version, zero data files rewritten, the same kernel as the
-    // translatable path. Subqueries stay refused (byName).
+    // Every SQL DELETE FROM on a graftlake table, translatable or not
+    // (`WHERE id IN (…)` and `WHERE v % 7 = 3` alike — this strategy
+    // plans before DataSourceV2Strategy). Subqueries stay refused
+    // (byName).
     case d: DeleteFromTable =>
       lakeTarget(d.table) match {
         case None => Nil
         case Some((t, _)) =>
           val cond = byName(d.condition)
           val condExpr = d.condition
-          val keys = t.m.keys
           exec(s"graftlake DELETE FROM ${t.name()} (row-level)", { () =>
-            val spark = SparkSession.active
-            val path = t.tablePath
-            // the doomed-key read is predicate-pruned like UPDATE's.
-            // Materialized ONCE (review r17 #4): the cap decision and
-            // the committed sidecar must reflect the SAME snapshot — a
-            // def would re-resolve latestVersion on each use, and a
-            // concurrent commit between count() and deleteDV could make
-            // them diverge.
-            val doomed = LakeDml.prunedByPredicate(spark, path,
-              Some(condExpr)).filter(cond).select(keys.map(col): _*)
-              .localCheckpoint()
-            val n = doomed.count()
-            if (n == 0) {
-              // a statement touching nothing commits nothing (the
-              // commitBatches contract; review r16-2 #4) — no spurious
-              // empty versions for CDC consumers or the vacuum horizon
-              ()
-            } else if (n <= LakeDml.DvDeleteCap) {
-              LakeTable.deleteDV(spark, path, doomed, keys); ()
-            } else {
-              // UNSELECTIVE delete: the O(keys) sidecar contract no
-              // longer holds — the doomed set is a sizable fraction of
-              // the table, and a sidecar that big would ride every
-              // reader's broadcast (review r16-2 #3). Rewrite the
-              // SURVIVORS as one forward commit instead (layout and
-              // clustering preserved; history and pinned readers
-              // survive as for any overwrite).
-              val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
-              // SQL three-valued logic: a row where cond is NULL is NOT
-              // deleted (DELETE removes rows where cond IS TRUE), so it
-              // must SURVIVE — !cond alone would yield NULL and drop it.
-              // coalesce(cond, false) makes the survivor filter match
-              // the DV path's filter(cond) complement exactly.
-              val survivors = LakeTable.read(spark, path)
-                .filter(!coalesce(cond, lit(false)))
-              LakeTable.overwrite(spark, path, survivors, m.keys,
-                nBuckets =
-                  if (m.clusterBuckets > 0) m.clusterBuckets
-                  else math.max(8, m.files.size),
-                layout = if (m.clusterBuckets > 0) "cluster" else "hash",
-                partitionBy = m.parts)
-              ()
-            }
+            LakeDml.deleteRows(SparkSession.active, t.tablePath, t.m.keys,
+              Some(condExpr), cond)
           })
       }
 
@@ -363,16 +412,17 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
                 case _ => false
               }
 
-          val keyExprCols = keyPairs.map { case (n, e) => byName(e).as(n) }
           val srcPlan = m.sourceTable
 
           if (fastEligible) {
             // ---- SOURCE-ONLY path: batch from the source frame + a
             // key-only pruned classification scan ----
+            // one value per table column, in schema order (unaliased:
+            // the batch picks the matched or the unmatched value per row)
             def projection(assigns: Seq[Assignment]): Seq[Column] = {
               val byCol = checkAssigns(assigns, "projection")
               schema.fieldNames.toIndexedSeq.map(c =>
-                byName(byCol(c)).cast(schema(c).dataType).as(c))
+                byName(byCol(c)).cast(schema(c).dataType))
             }
             val upd = m.matchedActions.collectFirst { case ua: UpdateAction =>
               (ua.condition.map(byName).getOrElse(lit(true)), projection(ua.assignments))
@@ -386,25 +436,52 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
             exec(s"graftlake MERGE INTO ${t.name()}", { () =>
               val spark = SparkSession.active
               val src = ColumnBridge.ofRows(spark, srcPlan)
-              val tgtKeys = LakeDml.prunedTargetRead(spark, t.tablePath,
-                src.select(keyExprCols: _*), keys).select(keys.map(col): _*)
-              // each action's batch is keyed, filtered, and scoped to
-              // its match class; update ∪ insert ∪ matched-delete commit
-              // as ONE atomic version (ADVICE r15: the delete is scoped
-              // to PRE-STATEMENT matched keys — an unmatched source row
-              // that satisfies both the delete and insert conditions
-              // inserts and SURVIVES, per MERGE semantics)
-              val updBatch = upd.map { case (c, proj) =>
-                src.filter(c).select(proj: _*).join(tgtKeys, keys, "left_semi")
+              // computed ON keys ride as __k_<key>, cast to the target
+              // key types: the envelope and the match join see exactly
+              // the key values the batch commits
+              val srcK = src.select(col("*") +: keyPairs.map { case (n, e) =>
+                byName(e).cast(schema(n).dataType).as(s"__k_$n") }: _*)
+              val tgt = LakeDml.prunedTargetRead(spark, t.tablePath,
+                srcK.select(keys.map(k => col(s"__k_$k").as(k)): _*), keys)
+              // ONE classification join: every source row picks up the
+              // file of the target row its ON key matched, or null when
+              // no target row holds the key (the NOT MATCHED class). One
+              // live row per key, so the outer join never fans out.
+              val tFile = s"__t_${LakeDml.FileCol}"
+              val tgtKeys = tgt.rows.select(
+                keys.map(k => col(k).as(s"__t_$k")) :+ col(LakeDml.FileCol).as(tFile): _*)
+              val joined = srcK.join(tgtKeys,
+                keys.map(k => col(s"__k_$k") === col(s"__t_$k")).reduce(_ && _), "left_outer")
+              val isMatched = col(tFile).isNotNull
+              // update ∪ insert is ONE projection of the join (a union
+              // of two filtered copies would let the optimizer plan the
+              // matched copy as an inner join with its own broadcast):
+              // a matched row takes the update's values, an unmatched
+              // row the insert's, each kept iff its class's action
+              // condition holds
+              val taken = upd.map(u => isMatched && coalesce(u._1, lit(false))).toSeq ++
+                ins.map(i => !isMatched && coalesce(i._1, lit(false)))
+              val updBatch = taken.reduceOption(_ || _).map { keep =>
+                val values = schema.fieldNames.indices.map { i =>
+                  (upd.map(_._2(i)), ins.map(_._2(i))) match {
+                    case (Some(u), Some(n)) => when(isMatched, u).otherwise(n)
+                    case (Some(u), None) => u
+                    case (None, n) => n.get
+                  }
+                }
+                joined.filter(keep).select(schema.fieldNames.toIndexedSeq.zip(values)
+                  .map { case (c, v) => v.as(c) } :+ col(tFile).as(LakeDml.FileCol): _*)
               }
-              val insBatch = ins.map { case (c, proj) =>
-                src.filter(c).select(proj: _*).join(tgtKeys, keys, "left_anti")
-              }
+              // the delete is scoped to PRE-STATEMENT matched keys (ADVICE
+              // r15): an unmatched source row that satisfies both the
+              // delete and insert conditions inserts and SURVIVES, per
+              // MERGE semantics. update ∪ insert ∪ matched-delete commit
+              // as ONE atomic version.
               val delBatch = del.map { c =>
-                src.filter(c).select(keyExprCols: _*).join(tgtKeys, keys, "left_semi")
+                joined.filter(isMatched && coalesce(c, lit(false))).select(
+                  keys.map(k => col(s"__k_$k").as(k)) :+ col(tFile).as(LakeDml.FileCol): _*)
               }
-              commitBatches(spark, t.tablePath, keys,
-                (updBatch ++ insBatch).reduceOption(_ unionByName _), delBatch)
+              commitBatches(spark, t.tablePath, keys, tgt.version, updBatch, delBatch)
             })
           } else {
             // ---- ROW-LEVEL path: src ⋈ tgt with provenance-renamed
@@ -487,12 +564,14 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
               // target row — full read; otherwise the envelope-pruned
               // classification scan suffices (matched keys cannot live
               // in pruned files)
-              val tgtBase =
-                if (nmbsReps.nonEmpty) LakeTable.read(spark, t.tablePath)
+              val tgt =
+                if (nmbsReps.nonEmpty) LakeDml.fullTargetRead(spark, t.tablePath)
                 else LakeDml.prunedTargetRead(spark, t.tablePath,
                   srcK.select(keys.map(k => col(s"__k_$k").as(k)): _*), keys)
-              val tgtR = tgtBase.select(schema.fieldNames.toIndexedSeq.map(c =>
-                col(c).as(s"__t_$c")): _*)
+              // the target row's file rides as __t_<FileCol>
+              val tgtR = tgt.rows.select((schema.fieldNames.toIndexedSeq :+ LakeDml.FileCol)
+                .map(c => col(c).as(s"__t_$c")): _*)
+              val tgtFile = col(s"__t_${LakeDml.FileCol}")
               val joinCond = keys.map(k => col(s"__k_$k") === col(s"__t_$k"))
                 .reduce(_ && _)
               val matched = srcK.join(tgtR, joinCond, "inner")
@@ -500,20 +579,25 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
                 tgtR.select(keys.map(k => col(s"__t_$k")): _*), joinCond, "left_anti")
               val upserts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
               val deletes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+              // matched and NOT MATCHED BY SOURCE rows carry their target
+              // row's file; unmatched (inserted) rows have none
+              def file(frame: DataFrame): Column =
+                (if (frame.columns.contains(s"__t_${LakeDml.FileCol}")) tgtFile
+                 else lit(null).cast("string")).as(LakeDml.FileCol)
               def emit(frame: DataFrame, reps: Seq[Rep],
                   fallback: String => Column): Unit =
                 reps.zip(effConds(reps.map(_.cond))).foreach {
                   case (UpdRep(_, sets), eff) =>
                     upserts += frame.filter(eff).select(
                       schema.fieldNames.toIndexedSeq.map(c =>
-                        sets.getOrElse(c, fallback(c)).as(c)): _*)
+                        sets.getOrElse(c, fallback(c)).as(c)) :+ file(frame): _*)
                   case (DelRep(_), eff) =>
                     deletes += frame.filter(eff).select(
-                      keys.map(k => col(s"__t_$k").as(k)): _*)
+                      keys.map(k => col(s"__t_$k").as(k)) :+ file(frame): _*)
                   case (InsRep(_, sets), eff) =>
                     upserts += frame.filter(eff).select(
                       schema.fieldNames.toIndexedSeq.map(c =>
-                        sets.getOrElse(c, fallback(c)).as(c)): _*)
+                        sets.getOrElse(c, fallback(c)).as(c)) :+ file(frame): _*)
                 }
               emit(matched, matchedReps, c => col(s"__t_$c"))
               emit(unmatched, insertReps, c => lit(null).cast(schema(c).dataType))
@@ -522,7 +606,7 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
                   srcK.select(keys.map(k => col(s"__k_$k")): _*), joinCond, "left_anti")
                 emit(nmbs, nmbsReps, c => col(s"__t_$c"))
               }
-              commitBatches(spark, t.tablePath, keys,
+              commitBatches(spark, t.tablePath, keys, tgt.version,
                 upserts.reduceOption(_ unionByName _),
                 deletes.reduceOption(_ unionByName _))
             })
@@ -535,75 +619,71 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
   /** Commit a statement's upsert batch and delete keys as ONE version
     * ([[LakeTable.mergeDelete]]); a delete-only statement rides the
     * single-commit [[LakeTable.delete]]; an empty statement commits
-    * nothing.
+    * nothing. Both batches carry [[LakeDml.FileCol]], the file of the
+    * target row each claimed key matched at `version` (null for an
+    * insert), and are committed without it.
     *
     * CARDINALITY GUARD (the SQL MERGE_CARDINALITY_VIOLATION contract,
     * extended to inserts because the table is KEYED): a duplicate key
     * across the statement's claimed rows means either one target row
     * was matched by several source rows or two source rows insert the
     * same identity — committing would silently break the one-row-per-
-    * key invariant every later merge/delete relies on. One small agg
+    * key invariant every later merge/delete relies on. One grouped pass
     * over the batch keys, refused loudly, never approximated. */
   private def commitBatches(spark: SparkSession, path: String,
-      keys: Seq[String], batch: Option[DataFrame],
+      keys: Seq[String], version: Int, batch: Option[DataFrame],
       delKeys: Option[DataFrame]): Unit = {
-    // ONE evaluation serves both the guard and the commit (review r16-2
-    // #1): localCheckpoint materializes the statement's batches, so the
-    // cardinality check cannot diverge from the committed rows under a
-    // non-deterministic source, and the merge kernel's discovery /
-    // survivor passes re-read blocks instead of re-running the source
-    // joins. Blocks are statement-sized and reclaimed on GC.
-    // Empty-statement contract (review r17 #3): a statement whose
-    // materialized batches carry ZERO rows commits NOTHING — same as
-    // the delete-only n == 0 path above. Without this, an empty MERGE
-    // would mint a spurious version for CDC consumers and the vacuum
-    // horizon. The batches are already checkpointed, so the counts are
-    // reads of materialized blocks, not re-runs of the source joins.
-    val bcp = batch.map(_.localCheckpoint())
-    val dcp = delKeys.map(_.localCheckpoint())
-    // the tag/agg aliases below would silently SHADOW a key column of the
-    // same name (withColumn replaces; the groupBy output would then fold
-    // the key into the tag), corrupting both the cardinality check and
-    // the empty-batch counts — refuse loudly instead (ADVICE r18)
-    for (reserved <- Seq("__src", "__n", "__nb", "__nd"))
+    // the guard's alias would silently SHADOW a key column of the same
+    // name — refuse loudly instead (ADVICE r18)
+    for (reserved <- Seq("__n", LakeDml.FileCol))
       require(!keys.contains(reserved),
         s"graftlake MERGE: key column name $reserved collides with an " +
           "internal statement-guard alias; rename the key column")
-    // ONE aggregate job answers all three questions the three separate
-    // actions used to ask (batch empty? delete batch empty? any
-    // duplicated key across the union?): group the tagged key union,
-    // then fold to (per-source row counts, max group size). Empty
-    // batches contribute no rows, so the duplicate test over the full
-    // tagged union is identical to the old test over the non-empty
-    // subset. The checkpoints above stay the single evaluation point.
-    val tagged = (bcp.map(_.select(keys.map(col): _*)
-        .withColumn("__src", lit(1))).toSeq ++
-      dcp.map(_.select(keys.map(col): _*)
-        .withColumn("__src", lit(2))).toSeq)
-      .reduceOption(_ unionByName _)
-    val (nBatch, nDel) = tagged match {
-      case None => (0L, 0L)
-      case Some(t) =>
-        import org.apache.spark.sql.functions.{count => fcount, max => fmax, sum => fsum, when}
-        val row = t.groupBy(keys.map(col): _*)
-          .agg(fcount(lit(1)).as("__n"),
-            fsum(when(col("__src") === 1, 1L).otherwise(0L)).as("__nb"),
-            fsum(when(col("__src") === 2, 1L).otherwise(0L)).as("__nd"))
-          .agg(coalesce(fmax(col("__n")), lit(0L)),
-            coalesce(fsum(col("__nb")), lit(0L)),
-            coalesce(fsum(col("__nd")), lit(0L))).head()
-        if (row.getLong(0) > 1) throw new IllegalStateException(
-          "graftlake MERGE: cardinality violation — more than one source row " +
-            "claimed the same target key (matched several times, or duplicate " +
-            "insert identities); the keyed table admits one row per key, so " +
-            "collapse the source per key first")
-        (row.getLong(1), row.getLong(2))
+    // ONE evaluation serves the guard and the commit (review r16-2 #1):
+    // localCheckpoint materializes each batch, so the cardinality check
+    // cannot diverge from the committed rows under a non-deterministic
+    // source, and the merge kernel's survivor pass re-reads blocks
+    // instead of re-running the source joins. Blocks are statement-sized
+    // and reclaimed on GC. The materializing pass also counts the rows
+    // and collects the files their claimed keys matched — no separate
+    // count, and no discovery scan in the commit.
+    def materialize(df: DataFrame): (Long, Seq[String], DataFrame) = {
+      val (row, cp) = LakeTable.observe(df,
+        Seq(count(lit(1)), collect_set(col(LakeDml.FileCol))), checkpoint = true)
+      (row.getLong(0), row.getSeq[String](1), cp.drop(LakeDml.FileCol))
     }
-    val bc = bcp.filter(_ => nBatch > 0)
-    val dc = dcp.filter(_ => nDel > 0)
+    val b = batch.map(materialize)
+    val d = delKeys.map(materialize)
+    val nBatch = b.map(_._1).getOrElse(0L)
+    val nDel = d.map(_._1).getOrElse(0L)
+    // a key can repeat only among two or more claimed rows: the grouped
+    // pass (its shuffle's map stage, then the observed largest group)
+    // runs only then. Empty batches contribute no rows, so the test over
+    // the union equals the test over the non-empty subset.
+    if (nBatch + nDel > 1) {
+      val claimed = (b.toSeq ++ d.toSeq).map(_._3.select(keys.map(col): _*))
+        .reduce(_ unionByName _)
+      val (row, _) = LakeTable.observe(
+        claimed.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n")),
+        Seq(max(col("__n"))), checkpoint = false)
+      if (Option(row.get(0)).exists(_.asInstanceOf[Long] > 1)) throw new IllegalStateException(
+        "graftlake MERGE: cardinality violation — more than one source row " +
+          "claimed the same target key (matched several times, or duplicate " +
+          "insert identities); the keyed table admits one row per key, so " +
+          "collapse the source per key first")
+    }
+    // Empty-statement contract (review r17 #3): a statement whose
+    // batches carry ZERO rows commits NOTHING — same as the n == 0 path
+    // of LakeDml.deleteRows; an empty MERGE must not mint a spurious
+    // version for CDC consumers and the vacuum horizon. The classified
+    // files replace the commit's discovery scan while it reads
+    // `version`; an OCC rebase onto a newer version rediscovers.
+    val known = Some(LakeDml.touched(version, (b.toSeq ++ d.toSeq).flatMap(_._2)))
+    val bc = b.filter(_._1 > 0).map(_._3)
+    val dc = d.filter(_._1 > 0).map(_._3)
     (bc, dc) match {
-      case (Some(b), d) => LakeTable.mergeDelete(spark, path, b, d, keys); ()
-      case (None, Some(d)) => LakeTable.delete(spark, path, d, keys); ()
+      case (Some(b), d) => LakeTable.mergeDelete(spark, path, b, d, keys, known = known); ()
+      case (None, Some(d)) => LakeTable.delete(spark, path, d, keys, known); ()
       case (None, None) => ()
     }
   }

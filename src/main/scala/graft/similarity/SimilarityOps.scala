@@ -31,10 +31,17 @@ object SimilarityOps {
   private val idSpaceGuardMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
-  /** Fails loudly (once per dir+file-snapshot) if corpus ids collide with
-    * the planted id space. Max over one column — cheap, memoized. */
+  /** Memo key of a fact about the embeddings table at `dir`: the path
+    * plus the table's own file-state snapshot ([[Tables.tableCount]]'s
+    * key), NOT the whole dir's — an index store or lake table committing
+    * under the data dir must not invalidate what the embeddings say. */
+  private def embeddingsKey(dir: String): String =
+    s"$dir/embeddings@${Tables.snapshot(s"$dir/embeddings.parquet")}"
+
+  /** Fails loudly (once per embeddings snapshot) if corpus ids collide
+    * with the planted id space. Max over one column — cheap, memoized. */
   private def assertIdSpace(spark: SparkSession, dir: String): Unit =
-    idSpaceGuardMemo.computeIfAbsent(graft.SessionCache.dirKey(dir), _ => {
+    idSpaceGuardMemo.computeIfAbsent(embeddingsKey(dir), _ => {
       val mx = Tables.embeddings(spark, dir)
         .agg(max(col("vec_id"))).head().getLong(0)
       require(mx < PlantedIdOffset,
@@ -165,7 +172,7 @@ object SimilarityOps {
   private def corpusSize(spark: SparkSession, dir: String): Long =
     Tables.tableCount(spark, dir, "embeddings")
 
-  /** Embedding dimensionality, memoized per (dir, file-state snapshot):
+  /** Embedding dimensionality, memoized per embeddings snapshot:
     * every vector frame in this file (queries, residuals, batch encodes)
     * derives from the embeddings table by dimension-preserving maps, so
     * the serve paths' per-invocation `select(size(vec)).head()` probe
@@ -177,7 +184,7 @@ object SimilarityOps {
     // computeIfAbsent blocks every thread hashing to the same bin for the
     // job's duration) — double-checked put, the idSpaceGuardMemo pattern;
     // a racing duplicate probe is idempotent
-    val key = graft.SessionCache.dirKey(dir)
+    val key = embeddingsKey(dir)
     val hit = dimMemo.get(key)
     if (hit != null) hit.intValue()
     else {

@@ -48,6 +48,10 @@ object AnnIndexStore {
   private def appendedTable(path: String) = s"$path/appended_vectors"
 
   private val VectorSchema = StructType.fromDDL("vec_id BIGINT, vec ARRAY<DOUBLE>")
+  // the frozen quantizer files' schemas, as write() lays them out: read
+  // with them, a load opens no footer to infer one
+  private val CellsSchema = StructType.fromDDL("cell INT, cvec ARRAY<DOUBLE>, cnorm DOUBLE")
+  private val CodebookSchema = StructType.fromDDL("block INT, code INT, cvec ARRAY<DOUBLE>")
 
   /** The codes table's live manifest — the store's publish point. */
   private def published(path: String): LakeTable.Manifest = {
@@ -100,8 +104,8 @@ object AnnIndexStore {
           "return wrong neighbors; rebuild with write(), or pass " +
           "allowStale=true for forensics only")
     val (nCells, blocks, codes) = (prop("nCells").toInt, prop("blocks").toInt, prop("codes").toInt)
-    val cbRows = spark.read.parquet(s"$path/codebook.parquet")
-      .select("block", "code", "cvec").collect()
+    val cbRows = spark.read.schema(CodebookSchema).parquet(s"$path/codebook.parquet")
+      .collect()
     require(cbRows.length == blocks * codes,
       s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${blocks * codes}")
     val codebook = Array.ofDim[Array[Double]](blocks, codes)
@@ -109,7 +113,7 @@ object AnnIndexStore {
       codebook(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
     }
     IvfPqIndex(
-      spark.read.parquet(s"$path/cells.parquet"),
+      spark.read.schema(CellsSchema).parquet(s"$path/cells.parquet"),
       LakeTable.readEntries(spark, m, m.files),
       codebook,
       nCells)

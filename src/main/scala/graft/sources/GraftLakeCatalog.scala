@@ -2,11 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDelete, Table, TableCapability, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCapability, TableCatalog, TableChange, TruncatableTable}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit, not}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.sources.{AlwaysTrue, Filter, InsertableRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -271,11 +271,13 @@ class GraftLakeCatalog extends TableCatalog
 
 /** The catalog's Table: the V2 read path of [[GraftLakeTable]] plus the
   * SQL write surface — INSERT (V1 write fallback onto the lake's keyed
-  * MERGE), INSERT OVERWRITE (forward-commit replace), DELETE FROM /
-  * TRUNCATE (merge-on-read DV commit over the matching keys). */
+  * MERGE), INSERT OVERWRITE (forward-commit replace), TRUNCATE
+  * (merge-on-read DV commit over every key). DELETE FROM, MERGE INTO
+  * and UPDATE never reach the table: [[graft.plans.LakeDmlStrategy]]
+  * plans them first. */
 private[graft] class GraftLakeCatalogTable(spark: SparkSession, path: String, version: Int)
     extends GraftLakeTable(spark, path, version)
-    with org.apache.spark.sql.connector.catalog.SupportsWrite with SupportsDelete {
+    with org.apache.spark.sql.connector.catalog.SupportsWrite with TruncatableTable {
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
@@ -314,17 +316,14 @@ private[graft] class GraftLakeCatalogTable(spark: SparkSession, path: String, ve
       }
     }
 
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val cond = filters.map(GraftLakeCatalogTable.filterToColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val doomed = LakeTable.read(spark, path).filter(cond)
-      .select(m.keys.map(col): _*)
-    LakeTable.deleteDV(spark, path, doomed, m.keys)
-    ()
+  /** TRUNCATE TABLE: the row-level DELETE lowering with an always-true
+    * predicate ([[graft.plans.LakeDml.deleteRows]]) — every SQL DELETE
+    * FROM plans through [[graft.plans.LakeDmlStrategy]], and TRUNCATE
+    * commits the same way: one version, or none on an empty table. */
+  override def truncateTable(): Boolean = {
+    graft.plans.LakeDml.deleteRows(spark, path, m.keys, None, lit(true))
+    true
   }
-
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(GraftLakeCatalogTable.translatable)
 }
 
 /** The clustered layout's hash function, `bucket(n, cols...)` =
@@ -410,37 +409,4 @@ private[graft] class GraftBucketReducer(n: Int)
     with Serializable {
   override def reduce(bucket: Integer): Integer =
     Integer.valueOf(bucket.intValue() % n)
-}
-
-private[graft] object GraftLakeCatalogTable {
-  /** Source filter → Column, for DELETE WHERE predicates. Spark only
-    * hands over predicates it could translate to source filters; any
-    * shape this map misses is refused UP FRONT via [[translatable]]
-    * (canDeleteWhere = false → loud analysis error), never silently
-    * under- or over-deleted. */
-  private[graft] def filterToColumn(f: Filter): org.apache.spark.sql.Column = f match {
-    case EqualTo(c, v) => col(c) === lit(v)
-    case EqualNullSafe(c, v) => col(c) <=> lit(v)
-    case GreaterThan(c, v) => col(c) > lit(v)
-    case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
-    case LessThan(c, v) => col(c) < lit(v)
-    case LessThanOrEqual(c, v) => col(c) <= lit(v)
-    case In(c, vs) => col(c).isin(vs.toIndexedSeq: _*)
-    case IsNull(c) => col(c).isNull
-    case IsNotNull(c) => col(c).isNotNull
-    case StringStartsWith(c, v) => col(c).startsWith(v)
-    case StringEndsWith(c, v) => col(c).endsWith(v)
-    case StringContains(c, v) => col(c).contains(v)
-    case And(l, r) => filterToColumn(l) && filterToColumn(r)
-    case Or(l, r) => filterToColumn(l) || filterToColumn(r)
-    case Not(child) => not(filterToColumn(child))
-    case _: AlwaysTrue => lit(true)
-    case _: AlwaysFalse => lit(false)
-    case other => throw new UnsupportedOperationException(
-      s"graftlake catalog: cannot translate DELETE predicate $other")
-  }
-
-  private def translatable(f: Filter): Boolean =
-    try { filterToColumn(f); true }
-    catch { case _: UnsupportedOperationException => false }
 }

@@ -962,7 +962,7 @@ private[graft] class GraftLakeScanBuilder(spark: SparkSession, path: String, m: 
         if (anyDv) m.keys.map(k => m.schema(m.schema.fieldIndex(k)).dataType)
         else Seq.empty[org.apache.spark.sql.types.DataType]
       val keyOrdinals = if (anyDv) m.keys.map(k => wanted.fieldIndex(k)) else Seq.empty[Int]
-      val keySchema = StructType(m.keys.map(k => m.schema(m.schema.fieldIndex(k))))
+      val keySchema = m.dvKeySchema
       // sidecar keys apply EXECUTOR-side (each executor loads each
       // distinct sidecar set once — see DvKeyReader): accumulated
       // erasure batches never ride the driver heap or task closures.
@@ -976,7 +976,7 @@ private[graft] class GraftLakeScanBuilder(spark: SparkSession, path: String, m: 
       // sidecars, not of which files survive pruning)
       val fallbacks = groups.map { case ((dvs, _, _), _) =>
         if (dvs.isEmpty || execSide) Set.empty[Seq[Any]]
-        else spark.read.parquet(dvs: _*).select(m.keys.map(col): _*)
+        else spark.read.schema(m.dvKeySchema).parquet(dvs: _*)
           .collect().map(r => Seq.range(0, m.keys.size).map(r.get)).toSet
       }
       val conf = new org.apache.spark.util.SerializableConfiguration(

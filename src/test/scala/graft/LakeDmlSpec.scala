@@ -370,4 +370,128 @@ class LakeDmlSpec extends SparkSpec {
       "an empty row-level MERGE minted a spurious version")
     assert(stateOf("dml_emptym") == (1L to 20L).map(k => (k, "base", k)).toSet)
   }
+
+  /** A keyed catalog table of `n` rows over four data files, every file
+    * spanning the whole key range (no envelope prunes one). */
+  private def multiFileTable(tag: String, n: Long): String = {
+    import spark.implicits._
+    val root = setupCatalog(tag)
+    spark.sql(s"CREATE TABLE dml_$tag.t (k BIGINT, s STRING, v BIGINT) " +
+      "TBLPROPERTIES ('keys'='k')")
+    (1L to n).map(k => (k, "base", k)).toDF("k", "s", "v").repartition(4)
+      .createOrReplaceTempView(s"dml_${tag}_base")
+    spark.sql(s"INSERT INTO dml_$tag.t SELECT * FROM dml_${tag}_base")
+    assert(LakeTable.manifestFiles(s"$root/t",
+      LakeTable.latestVersion(s"$root/t")).size == 4)
+    root
+  }
+
+  test("one classification pass: job budgets for SQL MERGE and row-level DELETE") {
+    import spark.implicits._
+    val root = multiFileTable("jobs", 400)
+    // warm-up statements: the counted ones must not pay first-use costs
+    ((1L to 400L by 50).map(k => (k, "W", k)) :+ ((900L, "W", 9L)))
+      .toDF("k", "s", "v").createOrReplaceTempView("dml_jobs_warm")
+    spark.sql("""MERGE INTO dml_jobs.t AS tg USING dml_jobs_warm AS src
+      ON tg.k = src.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    spark.sql("DELETE FROM dml_jobs.t WHERE k IN (900)")
+    // the card_refresh shape: scattered updates (every file touched)
+    // plus inserts in one statement, then a keyed retraction
+    ((3L to 400L by 37).map(k => (k, "M", k * 2)) ++
+      (1001L to 1005L).map(k => (k, "N", k))).toDF("k", "s", "v")
+      .createOrReplaceTempView("dml_jobs_src")
+    val v0 = LakeTable.latestVersion(s"$root/t")
+    val mergeJobs = sparkJobSites(spark.sql("""MERGE INTO dml_jobs.t AS tg
+      USING dml_jobs_src AS src ON tg.k = src.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"""))
+    assert(mergeJobs.size <= 9,
+      s"SQL MERGE ran ${mergeJobs.size} Spark jobs (budget 9):\n${mergeJobs.mkString("\n")}")
+    val deleteJobs = sparkJobSites(spark.sql("DELETE FROM dml_jobs.t WHERE k IN (40, 41, 1003)"))
+    assert(deleteJobs.size <= 4,
+      s"row-level DELETE ran ${deleteJobs.size} Spark jobs (budget 4):\n${deleteJobs.mkString("\n")}")
+    assert(LakeTable.latestVersion(s"$root/t") == v0 + 2)
+    val expect = ((1L to 400L).map(k =>
+      if (k % 37 == 3) (k, "M", k * 2) else if (k % 50 == 1) (k, "W", k) else (k, "base", k)) ++
+      (1001L to 1005L).map(k => (k, "N", k)))
+      .filterNot { case (k, _, _) => Set(40L, 41L, 1003L)(k) }.toSet
+    assert(stateOf("dml_jobs") == expect)
+  }
+
+  test("a commit landing after classification forces rediscovery, never the stale touched set") {
+    import spark.implicits._
+    val root = setupCatalog("occ")
+    spark.sql("CREATE TABLE dml_occ.t (k BIGINT, s STRING, v BIGINT) " +
+      "TBLPROPERTIES ('keys'='k')")
+    // ONE data file: every key lives in it, so a competing update of
+    // any key rewrites the file this statement classified
+    (1L to 50L).map(k => (k, "base", k)).toDF("k", "s", "v").coalesce(1)
+      .createOrReplaceTempView("dml_occ_base")
+    spark.sql("INSERT INTO dml_occ.t SELECT * FROM dml_occ_base")
+    val p = s"$root/t"
+    Seq((7L, "M", 70L)).toDF("k", "s", "v").createOrReplaceTempView("dml_occ_src")
+    // the competitor updates a DISJOINT key between this statement's
+    // classification and its publish: OCC rebases, and the file the
+    // classification found is gone from the rebased manifest
+    var fired = false
+    LakeTable.testInterleave = () => if (!fired) {
+      fired = true
+      LakeTable.merge(spark, p, Seq((8L, "B", 80L)).toDF("k", "s", "v"), Seq("k"))
+      ()
+    }
+    try spark.sql("""MERGE INTO dml_occ.t AS tg USING dml_occ_src AS src
+      ON tg.k = src.k WHEN MATCHED THEN UPDATE SET *""")
+    finally LakeTable.testInterleave = () => ()
+    val expect = (1L to 50L).map(k =>
+      if (k == 7L) (k, "M", 70L) else if (k == 8L) (k, "B", 80L) else (k, "base", k)).toSet
+    // a reused stale set would carry the rewritten file untouched and
+    // leave key 7 twice
+    assert(spark.sql("SELECT k, s, v FROM dml_occ.t").count() == 50)
+    assert(stateOf("dml_occ") == expect)
+    // the kernel seam: a touched set classified at an older version is
+    // ignored, for the DV delete as for the merge
+    val stale = LakeTable.TouchedFiles(1, Set("no-such-file"))
+    LakeTable.deleteDV(spark, p, Seq(9L).toDF("k"), Seq("k"), Some(stale))
+    LakeTable.mergeDelete(spark, p, Seq((10L, "C", 100L)).toDF("k", "s", "v"), None,
+      Seq("k"), known = Some(stale))
+    assert(stateOf("dml_occ") ==
+      (expect.filterNot(_._1 == 9L).filterNot(_._1 == 10L) + ((10L, "C", 100L))))
+  }
+
+  test("classified touched files match the manifest under encoded paths and escaped partition values") {
+    import spark.implicits._
+    // `_metadata.file_path` renders percent-ENCODED URIs (a Hive-escaped
+    // partition value double-encoded) while manifests store raw paths: a
+    // classified set that missed its files would carry the old rows AND
+    // add the new ones (silent key duplication), and turn the DELETE
+    // into a no-op
+    val root = freshRoot("enc odd+chars")
+    spark.conf.set("spark.sql.catalog.dml_enc", classOf[graft.sources.GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.dml_enc.warehouse", root)
+    spark.sql("CREATE TABLE dml_enc.t (k BIGINT, c STRING, v BIGINT) " +
+      "PARTITIONED BY (c) TBLPROPERTIES ('keys'='k')")
+    (1L to 60L).map(k => (k, if (k % 2 == 0) "10:30" else "50%", k)).toDF("k", "c", "v")
+      .repartition(4).createOrReplaceTempView("dml_enc_base")
+    spark.sql("INSERT INTO dml_enc.t SELECT * FROM dml_enc_base")
+    val p = s"$root/t"
+    val v0 = LakeTable.latestVersion(p)
+    assert(LakeTable.manifest(p, v0).files.exists(_.path.contains("%3A")),
+      "fixture must produce a Hive-escaped ':' partition directory")
+    Seq((4L, "10:30", 444L), (5L, "50%", 555L), (99L, "50%", 9L)).toDF("k", "c", "v")
+      .createOrReplaceTempView("dml_enc_src")
+    spark.sql("""MERGE INTO dml_enc.t AS tg USING dml_enc_src AS src ON tg.k = src.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    spark.sql("DELETE FROM dml_enc.t WHERE k IN (6, 7)")
+    val got = spark.sql("SELECT k, c, v FROM dml_enc.t").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    val expect = (1L to 60L).filterNot(Set(4L, 5L, 6L, 7L)).map(k =>
+      (k, if (k % 2 == 0) "10:30" else "50%", k)).toSet ++
+      Set((4L, "10:30", 444L), (5L, "50%", 555L), (99L, "50%", 9L))
+    assert(got.size == expect.size && got.toSet == expect,
+      "SQL MERGE/DELETE duplicated or lost keys under an encoded path")
+    // the DELETE rewrote nothing: its sidecar attached to the files the
+    // doomed read found
+    val m = LakeTable.manifest(p, LakeTable.latestVersion(p))
+    assert(m.files.count(_.dvs.nonEmpty) >= 1)
+  }
 }

@@ -387,6 +387,23 @@ class LakeTableSpec extends SparkSpec {
     assert(got == expect)
   }
 
+  test("deleteDV on a table whose key is not its first column reads back in manifest order") {
+    import spark.implicits._
+    val p = freshPath("dv_order")
+    // the merge identity is the LAST column: an equality sidecar's USING
+    // anti-join would move it first
+    LakeTable.create(spark, p,
+      (1L to 40L).map(k => ("base", k * 10, k)).toDF("s", "v", "k"), Seq("k"), nBuckets = 4)
+    LakeTable.deleteDV(spark, p, Seq(3L, 17L).toDF("k"), Seq("k"))
+    val m = LakeTable.manifest(p, LakeTable.latestVersion(p))
+    assert(m.dvPaths.nonEmpty)
+    val df = LakeTable.read(spark, p)
+    assert(df.columns.toSeq == m.schema.fieldNames.toSeq,
+      s"read columns ${df.columns.mkString(", ")} != manifest ${m.schema.fieldNames.mkString(", ")}")
+    val got = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == (1L to 40L).filterNot(Set(3L, 17L)).map(k => ("base", k * 10, k)).toSet)
+  }
+
   test("deleteDV: scattered erasure rewrites NO data file; compact materializes; vacuum reclaims") {
     import spark.implicits._
     val p = freshPath("dv")
@@ -1994,10 +2011,9 @@ class LakeTableSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM graft_cm.t WHERE b IS NOT NULL")
       .head().getLong(0) == 0,
       "healed-file column data resurrected after drop + re-add")
-    // the WHOLE DML surface works over the mapped names: UPDATE and
-    // row-level DELETE (LakeDml), predicate DELETE (SupportsDelete),
-    // and MERGE INTO all classify/rewrite under the logical schema
-    // while files stay physical
+    // the WHOLE DML surface works over the mapped names: UPDATE,
+    // DELETE and MERGE INTO (all lowered by LakeDml) classify/rewrite
+    // under the logical schema while files stay physical
     spark.sql("UPDATE graft_cm.t SET alpha = 'U9' WHERE k = 9")
     assert(spark.sql("SELECT alpha FROM graft_cm.t WHERE k = 9")
       .head().getString(0) == "U9")

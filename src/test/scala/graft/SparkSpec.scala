@@ -23,21 +23,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Spark jobs `body` launches, counted through its job group (jobs
     * that run on helper threads, like broadcast builds, inherit it). */
-  def sparkJobs(body: => Unit): Int = {
+  def sparkJobs(body: => Unit): Int = sparkJobSites(body).size
+
+  /** The call site of each Spark job `body` launches, in submission
+    * order ([[graft.Profile.JobChain]]'s attribution). */
+  def sparkJobSites(body: => Unit): Seq[String] = {
     val group = s"spec-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val chain = new graft.Profile.JobChain
+    spark.sparkContext.addSparkListener(chain)
     try {
       spark.sparkContext.setJobGroup(group, group)
       try body finally spark.sparkContext.clearJobGroup()
       org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
+    } finally spark.sparkContext.removeSparkListener(chain)
+    chain.chain(Some(group)).map(_.site)
   }
 
   /** Parquet part files under a lake table's directory, found by walking
