@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, lit, max, when}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, input_file_name, lit, max, when}
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
@@ -91,18 +91,18 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
   *   1. commit (2 jobs): the touched files' survivors plus the batch
   *      written as one version — the batch-keys broadcast, the write.
   *
-  * Each equality-delete sidecar group on the target adds one broadcast
-  * job to the classification read. UPDATE is the same chain without
-  * the envelope. A row-level DELETE is two jobs: the doomed read's
+  * Deletion sidecars on the target add no job: the classification read
+  * is the lake's V2 scan, which applies them in its reader. UPDATE is
+  * the same chain without the envelope. A row-level DELETE is two jobs: the doomed read's
   * materializing pass (count and touched files included) and the
   * sidecar write.
   */
 object LakeDml extends PredicateHelper {
   /** Largest doomed-key set a row-level DELETE commits as an
     * equality-delete sidecar; beyond it the statement rewrites the
-    * survivors instead (the sidecar would otherwise ride every reader's
-    * broadcast anti-join — the 'bounded by contract' assumption the DV
-    * kernel documents). `var` so specs can drive the fallback
+    * survivors instead (every executor reading the table would otherwise
+    * hold the whole doomed key set in memory — the 'bounded by contract'
+    * assumption the DV kernel documents). `var` so specs can drive the fallback
     * deterministically at test scale. */
   private[graft] var DvDeleteCap: Long = 2000000L
 
@@ -119,11 +119,11 @@ object LakeDml extends PredicateHelper {
   private[graft] def prunedTargetRead(spark: SparkSession, path: String,
       srcKeys: DataFrame, keys: Seq[String]): Classified = {
     val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
-    if (m.files.isEmpty) return classified(spark, m, m.files)
+    if (m.files.isEmpty) return classified(spark, path, m, m.files)
     val preds = LakeTable.keyEnvelope(srcKeys, keys)
     val kept = m.files.filter(LakeTable.entryMatches(_, preds))
     GraftLakeSource.recordPrune(s"$path@classify", kept.size, m.files.size)
-    classified(spark, m, kept)
+    classified(spark, path, m, kept)
   }
 
   /** Predicate-pruned target read for UPDATE / row-level DELETE: the
@@ -135,16 +135,19 @@ object LakeDml extends PredicateHelper {
     * statement would touch, and copy-on-write carries it by reference.
     * Untranslatable conjuncts simply prune nothing (the full filter
     * re-applies on the survivors) — a selective keyed UPDATE reads
-    * O(matching files), not O(table). */
+    * O(matching files), not O(table). `rows` is the same WHERE as a
+    * column: the batch holds only the rows it matches, filtered on the
+    * scan itself (below the file column) so the scan's pushdown tiers
+    * see it. */
   private[graft] def prunedByPredicate(spark: SparkSession, path: String,
-      cond: Option[Expression]): Classified = {
+      cond: Option[Expression], rows: Column): Classified = {
     val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
     val preds = cond.toSeq.flatMap(splitConjunctivePredicates)
       .flatMap(e => ColumnBridge.translateFilter(e))
       .flatMap(f => GraftLakeSource.toIntervals(f))
     val kept = m.files.filter(LakeTable.entryMatches(_, preds))
     GraftLakeSource.recordPrune(s"$path@dml", kept.size, m.files.size)
-    classified(spark, m, kept)
+    classified(spark, path, m, kept, Some(rows))
   }
 
   /** Row-level DELETE (SQL `DELETE FROM … WHERE cond`, and TRUNCATE
@@ -164,9 +167,9 @@ object LakeDml extends PredicateHelper {
     // between the count and deleteDV could make them diverge.
     // The materializing pass also counts the doomed rows and collects
     // their files ([[LakeTable.observe]]): the sidecar's touched set.
-    val snap = prunedByPredicate(spark, path, condExpr)
+    val snap = prunedByPredicate(spark, path, condExpr, cond)
     val (stats, doomedRows) = LakeTable.observe(
-      snap.rows.filter(cond).select(keys.map(col) :+ col(FileCol): _*),
+      snap.rows.select(keys.map(col) :+ col(FileCol): _*),
       Seq(count(lit(1)), collect_set(col(FileCol))), checkpoint = true)
     val n = stats.getLong(0)
     if (n == 0) {
@@ -180,9 +183,9 @@ object LakeDml extends PredicateHelper {
       ()
     } else {
       // UNSELECTIVE delete: the O(keys) sidecar contract no longer
-      // holds — the doomed set is a sizable fraction of the table, and a
-      // sidecar that big would ride every reader's broadcast (review
-      // r16-2 #3). Rewrite the SURVIVORS as one forward commit instead
+      // holds — the doomed set is a sizable fraction of the table, and
+      // every executor reading it would hold that whole key set
+      // ([[DvDeleteCap]]). Rewrite the SURVIVORS as one forward commit instead
       // (layout and clustering preserved; history and pinned readers
       // survive as for any overwrite).
       val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
@@ -201,11 +204,14 @@ object LakeDml extends PredicateHelper {
   }
 
   /** Every classification read carries each target row's source file
-    * in this column, through the statement's materialized batch. */
+    * in this column, through the statement's materialized batch:
+    * `input_file_name()` over the scan, a percent-encoded URI that
+    * [[touched]] decodes. */
   private[graft] val FileCol = LakeTable.PosFileCol
 
   /** A statement's classification read: the target rows of manifest
-    * `version` (sidecars applied), each with its source file in
+    * `version` (sidecars applied; for UPDATE / DELETE only the rows the
+    * statement's WHERE matches), each with its source file in
     * [[FileCol]]. */
   private[graft] final case class Classified(version: Int, rows: DataFrame)
 
@@ -213,7 +219,7 @@ object LakeDml extends PredicateHelper {
     * statement classifies every target row. */
   private[graft] def fullTargetRead(spark: SparkSession, path: String): Classified = {
     val m = LakeTable.manifest(path, LakeTable.latestVersion(path))
-    classified(spark, m, m.files)
+    classified(spark, path, m, m.files)
   }
 
   /** The touched-file set of a statement classified against `version`,
@@ -221,9 +227,15 @@ object LakeDml extends PredicateHelper {
   private[graft] def touched(version: Int, files: Seq[String]): LakeTable.TouchedFiles =
     LakeTable.TouchedFiles(version, files.map(LakeIo.normUri).toSet)
 
-  private def classified(spark: SparkSession, m: LakeTable.Manifest,
-      entries: Seq[LakeTable.FileEntry]): Classified =
-    Classified(m.version, LakeTable.readEntries(spark, m, entries, withFile = true))
+  /** `filter` applies on the scan BEFORE the file column:
+    * `input_file_name()` is nondeterministic, and no filter pushes
+    * through a projection that computes one. */
+  private def classified(spark: SparkSession, path: String, m: LakeTable.Manifest,
+      entries: Seq[LakeTable.FileEntry], filter: Option[Column] = None): Classified = {
+    val snap = LakeTable.readSnapshot(spark, path, m, entries)
+    Classified(m.version,
+      filter.fold(snap)(c => snap.filter(c)).withColumn(FileCol, input_file_name()))
+  }
 }
 
 object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
@@ -314,8 +326,8 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
             // copy-on-write keeps the rewrite O(touched files), and the
             // READ is predicate-pruned from the manifest stats — a
             // selective keyed UPDATE opens O(matching files)
-            val snap = LakeDml.prunedByPredicate(spark, t.tablePath, condExpr)
-            val updates = snap.rows.filter(condCol)
+            val snap = LakeDml.prunedByPredicate(spark, t.tablePath, condExpr, condCol)
+            val updates = snap.rows
               .select(schema.fieldNames.toIndexedSeq.map(c =>
                 setCols.get(c).map(_.as(c)).getOrElse(col(c))) :+ col(LakeDml.FileCol): _*)
             commitBatches(spark, t.tablePath, keys, snap.version, Some(updates), None)

@@ -114,7 +114,7 @@ object AnnIndexStore {
     }
     IvfPqIndex(
       spark.read.schema(CellsSchema).parquet(s"$path/cells.parquet"),
-      LakeTable.readEntries(spark, m, m.files),
+      LakeTable.readSnapshot(spark, codesTable(path), m, m.files),
       codebook,
       nCells)
   }
@@ -130,7 +130,7 @@ object AnnIndexStore {
     val appended = live(appendedTable(path))
     val extra =
       if (appended.files.isEmpty) None
-      else Some(LakeTable.readEntries(spark, appended, appended.files))
+      else Some(LakeTable.readSnapshot(spark, appendedTable(path), appended, appended.files))
     SimilarityOps.ivfPqServe(spark, dataDir, queryStride, idx, extra)
   }
 
@@ -175,7 +175,7 @@ object AnnIndexStore {
     val t = appendedTable(path)
     val added = LakeTable.append(spark, t, batch0.select(col("vec_id"), col("vec")))
     LakeTable.append(spark, codesTable(path), SimilarityOps.encodeWithIndex(spark,
-      LakeTable.readEntries(spark, live(t), added), idx))
+      LakeTable.readSnapshot(spark, t, live(t), added), idx))
   }
 
   /** OPTIMIZE for the index: rewrite the codes and appended-vector

@@ -86,7 +86,7 @@ object DedupIndexStore {
   private def postingsOf(spark: SparkSession, path: String,
       added: Seq[LakeTable.FileEntry]): DataFrame = {
     val t = shinglesTable(path)
-    val s = LakeTable.readEntries(spark, LakeTable.manifest(t, LakeTable.latestVersion(t)), added)
+    val s = LakeTable.readSnapshot(spark, t, LakeTable.manifest(t, LakeTable.latestVersion(t)), added)
       .withColumn("sig", DedupOps.minhashSignature(col("sh"), SigK))
     DedupOps.bandedBuckets(s, "doc_id", "sig", RowsPerBand)
       .select("band", "bucket", "doc_id")
@@ -197,7 +197,7 @@ object DedupIndexStore {
       queries: DataFrame): DataFrame = {
     val postingsM = checkFresh(dataDir, path, "probe")
     val q = signed(queries)
-    val postings = LakeTable.readEntries(spark, postingsM, postingsM.files)
+    val postings = LakeTable.readSnapshot(spark, postingsTable(path), postingsM, postingsM.files)
       .withColumnRenamed("doc_id", "base_id")
     // every batch-derived side is broadcast BY CONTRACT (an ingest
     // batch is bounded; the index is the corpus): the band probe

@@ -276,7 +276,7 @@ class GraftLakeCatalog extends TableCatalog
   * and UPDATE never reach the table: [[graft.plans.LakeDmlStrategy]]
   * plans them first. */
 private[graft] class GraftLakeCatalogTable(spark: SparkSession, path: String, version: Int)
-    extends GraftLakeTable(spark, path, version)
+    extends GraftLakeTable(spark, path, LakeTable.manifest(path, version))
     with org.apache.spark.sql.connector.catalog.SupportsWrite with TruncatableTable {
 
   override def capabilities(): java.util.Set[TableCapability] =

@@ -368,23 +368,23 @@ private[graft] object LakeIo {
 
   /** Leaf parquet part-files under a just-written batch directory. */
   def leafParquet(dir: String): Seq[String] =
-    leafParquetWith(dir, conf)
+    leafParquetWith(dir, conf).map(_.getPath.toString)
 
-  /** [[leafParquet]] with an explicit Configuration — the executor-side
-    * form (no active session to derive a conf from). */
+  /** [[leafParquet]]'s file statuses, with an explicit Configuration —
+    * the executor-side form (no active session to derive a conf from). */
   def leafParquetWith(dir: String,
-      hadoopConf: Configuration): Seq[String] = {
+      hadoopConf: Configuration): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(hadoopConf)
     if (!fs.exists(p)) return Seq.empty
     val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
     while (it.hasNext) {
       val s = it.next()
       if (s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet")) buf += s.getPath.toString
+        s.getPath.getName.endsWith(".parquet")) buf += s
     }
-    buf.sorted.toSeq
+    buf.sortBy(_.getPath.toString).toSeq
   }
 
   def deleteFile(path: String): Boolean = {

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
@@ -45,8 +47,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, Flo
   *   - `files[*].dvs` — equality-delete sidecars attached to the file
   *     (merge-on-read DELETE, the Iceberg v2 equality-delete shape):
   *     [[deleteDV]] commits a scattered erasure as one O(keys) sidecar
-  *     write + a manifest flip — no data file is rewritten; readers
-  *     anti-join the sidecar keys; [[compact]] materializes them away.
+  *     write + a manifest flip — no data file is rewritten; the scan's
+  *     reader drops rows whose key a sidecar erased ([[readSnapshot]]);
+  *     [[compact]] materializes them away.
   *
   * Invariants:
   *   - Data files are never mutated or deleted by a commit; a new
@@ -66,8 +69,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, Flo
   *     loudly ([[java.util.ConcurrentModificationException]]).
   *   - Keys are unique per snapshot (merge is a latest-wins upsert by
   *     key; create's input is the caller's contract). This is what lets
-  *     equality-delete sidecars apply as ONE broadcast anti-join
-  *     instead of per-file application.
+  *     an equality-delete sidecar apply as a key-set probe over every
+  *     file it is attached to.
   *
   * MERGE is file-granular copy-on-write (the Delta CoW shape): the
   * update batch's keys are broadcast against the snapshot scan tagged
@@ -139,8 +142,8 @@ object LakeTable {
       // [[deletePos]]/[[deletePosWhere]] commit from the doomed frame
       // the sidecar was written from, so COUNT(*) stays metadata-only
       // BETWEEN compactions on a DV-active table (count = rows -
-      // posDel). Ordinals are doomed from a snapshot that already
-      // applies prior sidecars, so pairs never double-count. -1 with a
+      // posDel). Each commit drops the ordinals a prior positional
+      // sidecar already holds, so pairs never double-count. -1 with a
       // non-empty `pos` = unknown (pre-cardinality manifest) — refuses
       // the pushdown, never mis-counts. Equality sidecars carry no
       // cardinality (their doomed set is key-valued, applied per read)
@@ -768,31 +771,28 @@ object LakeTable {
 
   // ---- reads ----
 
-  /** Raw per-group file read with the MANIFEST's schema — no footer/
-    * mergeSchema pass (files written before a schema-evolving commit
-    * read their missing columns as null). Partition-layout tables store
-    * their partition columns in the DIRECTORY, not the parquet: entries
-    * group by their (manifest-recorded) partition values, each group
-    * reads its data-only schema, and the partition columns come back as
-    * typed literals — the manifest is the single source of truth, no
-    * re-inference from paths at read time.
-    *
-    * Each entry reads under ITS OWN layout (`entry.part.keys`), not the
-    * manifest header's: after a no-rewrite [[evolvePartitioning]], files
-    * written under the old layout still store the new partition column
-    * in their DATA (and vice versa), and reading them with the header's
-    * layout would null a column they physically carry. NO deletion
-    * sidecars here. */
-  /** Helper-column names for positional-delete application: each row's
-    * source file (as `_metadata.file_path` renders it — the SAME
-    * renderer on the write side and the read side, so the anti-join is
-    * raw string equality) and its ROW ORDINAL within that file (the
-    * parquet row index — correct under row-group/page skipping, split
-    * reads, and vectorized batches, because it is computed from footer
-    * offsets, not counted by the consumer). */
+  /** Helper-column names for positional deletes: each row's source file
+    * (as `_metadata.file_path` renders it) and its ROW ORDINAL within
+    * that file (the parquet row index — correct under row-group/page
+    * skipping, split reads, and vectorized batches, because it is
+    * computed from footer offsets, not counted by the consumer). */
   private[graft] val PosFileCol = "_gl_dv_file"
   private[graft] val PosIdxCol = "_gl_dv_pos"
 
+  /** Raw file read with the MANIFEST's schema — no footer/mergeSchema
+    * pass (files written before a schema-evolving commit read their
+    * missing columns as null) and NO deletion sidecars: what the writes
+    * that locate rows in files read — [[deletePos]]'s (file, row
+    * ordinal) pairs and touched-file discovery. Every other read is
+    * [[readSnapshot]].
+    * Partition-layout tables store their partition columns in the
+    * DIRECTORY, not the parquet: entries group by their
+    * (manifest-recorded) partition values, each group reads its
+    * data-only schema, and the partition columns come back as typed
+    * literals. Each entry reads under ITS OWN layout (`entry.part.keys`),
+    * not the manifest header's: after a no-rewrite [[evolvePartitioning]],
+    * files written under the old layout still store the new partition
+    * column in their DATA (and vice versa). */
   private def readRaw(spark: SparkSession, m: Manifest,
       entries: Seq[FileEntry], withPos: Boolean = false): DataFrame = {
     // position helpers ride the FILE SCAN itself (`_metadata` resolves
@@ -829,57 +829,20 @@ object LakeTable {
     }.reduce(_ unionByName _)
   }
 
-  /** [[readRaw]] plus the version's deletion sidecars applied — the
-    * committed row state. Equality sidecars anti-join on the merge
-    * keys; POSITIONAL sidecars anti-join on (source file, row ordinal)
-    * — no key comparison at all, so wide/composite identities cost
-    * nothing (VERDICT r17 ask #1). `entries` defaults to the whole
-    * manifest; [[scan]] passes the pruned subset. Columns come back in
-    * the manifest's order; `withFile` appends each row's source file as
-    * [[PosFileCol]] (the `_metadata.file_path` rendering — the DML
-    * classification reads carry it so a statement knows its touched
-    * files without a discovery scan). Sidecars are read with their
-    * known schemas, so no footer is opened to infer one. */
-  private[graft] def readEntries(spark: SparkSession, m: Manifest,
-      entries: Seq[FileEntry], withFile: Boolean = false): DataFrame = {
-    val outCols = m.schema.fieldNames.toSeq ++ (if (withFile) Seq(PosFileCol) else Nil)
-    if (entries.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](),
-        if (withFile) m.schema.add(PosFileCol, StringType) else m.schema)
-    // Sidecars apply PER FILE GROUP, not globally: a merge after a DV
-    // delete can re-insert a deleted key into a NEW file, and that row
-    // must not be anti-joined away by the sidecar still attached to the
-    // old file. Entries sharing a sidecar set read as one scan with one
-    // broadcast anti-join (sidecar keys are erasure/update batches —
-    // bounded by contract); the distinct sidecar sets are bounded by DV
-    // commits since the last compaction, so the union stays narrow.
-    val groups = entries.groupBy(e => (e.dvs, e.pos)).toSeq
-    groups.map { case ((dvs, pos), es) =>
-      val base = readRaw(spark, m, es, withPos = pos.nonEmpty || withFile)
-      val eqApplied =
-        if (dvs.isEmpty) base
-        else {
-          val dvKeys = spark.read.schema(m.dvKeySchema).parquet(dvs: _*)
-          base.join(broadcast(dvKeys), m.keys, "left_anti")
-        }
-      val applied =
-        if (pos.isEmpty) eqApplied
-        else {
-          // positional apply: both __file sides came from the SAME
-          // `_metadata.file_path` renderer (write side recorded it, read
-          // side re-derives it), so the anti-join is raw string equality
-          // — no normalization, no decode ambiguity
-          val dels = spark.read.schema(PosSidecarSchema).parquet(pos: _*)
-          eqApplied.join(broadcast(dels),
-            eqApplied(PosFileCol) === dels("__file") &&
-              eqApplied(PosIdxCol) === dels("__pos"),
-            "left_anti")
-        }
-      // the USING anti-join puts the key columns first: re-select the
-      // manifest order (and drop the ordinal helper)
-      applied.select(outCols.map(col): _*)
-    }.reduce(_ unionByName _)
-  }
+  /** The committed rows of `entries` (files of manifest `m` at `path`):
+    * the lake's V2 scan ([[GraftLakeTable]]) pinned to that manifest and
+    * entry subset — the one read path, shared with SQL and
+    * `format("graftlake")`. Deletion sidecars apply inside the scan's
+    * reader ([[SidecarReader]]), per file group, so a key re-inserted
+    * into a new file is never erased by the old file's sidecar. Filters
+    * on the returned frame reach the scan's pruning tiers (manifest
+    * stats, bloom bits, bucket pin). Columns come back in the manifest's
+    * order, and `input_file_name()` over the frame names each row's
+    * file. */
+  private[graft] def readSnapshot(spark: SparkSession, path: String, m: Manifest,
+      entries: Seq[FileEntry]): DataFrame =
+    ColumnBridge.ofRows(spark, DataSourceV2Relation.create(
+      new GraftLakeTable(spark, path, m, Some(entries)), None, None))
 
   /** Snapshot read. `asOf = None` resolves the latest version AT CALL
     * TIME and pins it: the returned frame keeps reading that version's
@@ -888,9 +851,9 @@ object LakeTable {
   def read(spark: SparkSession, path: String, asOf: Option[Int] = None): DataFrame = {
     val m = manifest(path, asOf.getOrElse(latestVersion(path)))
     // a zero-file manifest is a legitimate state (CREATE TABLE via the
-    // SQL catalog commits schema-only; the first INSERT adds files):
-    // readEntries returns the typed empty frame
-    readEntries(spark, m, m.files)
+    // SQL catalog commits schema-only; the first INSERT adds files): the
+    // scan over no files is the typed empty frame
+    readSnapshot(spark, path, m, m.files)
   }
 
   /** Manifest entries of version `v` whose [min,max] stats ranges
@@ -988,16 +951,16 @@ object LakeTable {
       lo: Any, hi: Any, asOf: Option[Int] = None): DataFrame =
     scanBox(spark, path, Seq((colName, lo, hi)), asOf)
 
-  /** Multi-column box scan: every `(col, lo, hi)` side prunes files
-    * from the manifest, then the conjunction applies as the residual
-    * filter — the query shape the Z-order layout clusters for. */
+  /** Multi-column box scan: the conjunction of every `(col, lo, hi)`
+    * side, filtered over the snapshot read — the scan's pushdown prunes
+    * files from the manifest with the [[prunedEntriesBox]] kernel (and
+    * records the decision, [[GraftLakeSource.lastPrune]]), and the
+    * filter applies as the residual. The query shape the Z-order layout
+    * clusters for. */
   def scanBox(spark: SparkSession, path: String,
       preds: Seq[(String, Any, Any)], asOf: Option[Int] = None): DataFrame = {
     require(preds.nonEmpty, "LakeTable.scanBox: need at least one predicate")
-    val v = asOf.getOrElse(latestVersion(path))
-    val m = manifest(path, v)
-    val (kept, _) = prunedEntriesBox(path, v, preds)
-    readEntries(spark, m, kept)
+    read(spark, path, asOf)
       .filter(preds.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
         .reduce(_ && _))
   }
@@ -1393,7 +1356,7 @@ object LakeTable {
     val rewriteDir = s"$path/data/merge-v${readVersion + 1}-${java.util.UUID.randomUUID()}"
     val survivors =
       if (touchedEntries.isEmpty) updates
-      else readEntries(spark, m, touchedEntries)
+      else readSnapshot(spark, path, m, touchedEntries)
         .join(broadcast(keys), keyCols, "left_anti")
         .unionByName(updates, allowMissingColumns = true)
     // schema evolution first: a batch-added column needs its physical
@@ -1523,7 +1486,7 @@ object LakeTable {
     * touched-file discovery and no key check, so key uniqueness across
     * appends is the caller's contract (the index stores append disjoint
     * id batches). `df` must carry every table column with the table's
-    * type. Returns the added entries: [[readEntries]] over them reads
+    * type. Returns the added entries: [[readSnapshot]] over them reads
     * back exactly the rows this commit added. */
   def append(spark: SparkSession, path: String, df: DataFrame): Seq[FileEntry] = {
     val current = latestVersion(path)
@@ -1567,7 +1530,7 @@ object LakeTable {
         // merge leaves heterogeneous files; footer-inferred reads would
         // nondeterministically drop the evolved column — ADVICE r13),
         // minus the files' sidecars, minus the erased keys
-        val survivors = readEntries(spark, m, touchedEntries)
+        val survivors = readSnapshot(spark, path, m, touchedEntries)
           .join(broadcast(keyRows), keyCols, "left_anti")
         writeData(
           if (m.clusterBuckets > 0)
@@ -1587,7 +1550,7 @@ object LakeTable {
     * deletion-vector shape): the erased keys are written ONCE as a
     * sidecar parquet — O(keys), no data file rewritten — and attached
     * in the manifest to every file that physically holds one of them.
-    * Readers anti-join the sidecar ([[readEntries]]); [[compact]]
+    * Readers apply the sidecar in the scan ([[SidecarReader]]); [[compact]]
     * materializes sidecars away. The discovery semi-join scan still
     * runs (to know WHICH entries to attach the sidecar to — what keeps
     * [[changes]] O(delta) for DV commits), but the write path is a few
@@ -1651,10 +1614,10 @@ object LakeTable {
     val keyRows = keys.select(keyCols.map(col): _*)
     // doomed positions: ONE envelope-pruned scan carrying the parquet
     // row index + source file, semi-joined on the (broadcast) keys
-    val doomed = readRaw(spark, m, envelopeCandidates(m, keyRows, keyCols),
-        withPos = true)
+    val candidates = envelopeCandidates(m, keyRows, keyCols)
+    val doomed = readRaw(spark, m, candidates, withPos = true)
       .join(broadcast(keyRows), keyCols, "left_semi")
-    commitPosSidecar(path, m, doomed)
+    commitPosSidecar(spark, path, m, candidates, doomed)
   }
 
   /** [[deletePos]] with an arbitrary row PREDICATE instead of a key
@@ -1671,25 +1634,34 @@ object LakeTable {
     // rows where cond is definitively true are doomed
     val doomed = readRaw(spark, m, m.files, withPos = true)
       .filter(coalesce(cond, lit(false)))
-    commitPosSidecar(path, m, doomed)
+    commitPosSidecar(spark, path, m, m.files, doomed)
   }
 
   /** Shared positional-delete commit (review r18 #7): write the doomed
     * (file, ordinal) rows as ONE sidecar parquet, flip the touched
     * entries, publish one `delete-pos` version. `doomed` must still
-    * carry [[PosFileCol]]/[[PosIdxCol]]; localCheckpoint pins ONE
-    * materialization — the touched-file set and the sidecar bytes must
-    * describe the same rows. */
-  private def commitPosSidecar(path: String, m: Manifest,
-      doomedRows: DataFrame): Int = {
-    val doomed = doomedRows
+    * carry [[PosFileCol]]/[[PosIdxCol]] and come from a [[readRaw]] of
+    * `read`; localCheckpoint pins ONE materialization — the
+    * touched-file set and the sidecar bytes must describe the same
+    * rows. */
+  private def commitPosSidecar(spark: SparkSession, path: String, m: Manifest,
+      read: Seq[FileEntry], doomedRows: DataFrame): Int = {
+    val fresh = doomedRows
       .select(col(PosFileCol).as("__file"), col(PosIdxCol).as("__pos"))
+    // readRaw applies no sidecar, so `fresh` still holds ordinals that
+    // an earlier positional sidecar of the read files deletes: drop
+    // them, so each (file, ordinal) is recorded — and counted in
+    // posDel — once (both sides render the file as `_metadata.file_path`)
+    val priorDirs = read.flatMap(_.pos).distinct
+    val doomed = (if (priorDirs.isEmpty) fresh
+      else fresh.join(spark.read.schema(PosSidecarSchema).parquet(priorDirs: _*),
+        Seq("__file", "__pos"), "left_anti"))
       .localCheckpoint()
     // one bounded collect serves both the touched set and the per-file
-    // DOOMED CARDINALITY (the Delta DV-cardinality design): ordinals
-    // are doomed from a snapshot that already applies prior sidecars,
-    // so the counts accumulate without double-counting and COUNT(*)
-    // stays metadata-only on a DV-active table
+    // DOOMED CARDINALITY (the Delta DV-cardinality design): the doomed
+    // ordinals are new to every prior sidecar, so the counts accumulate
+    // without double-counting and COUNT(*) stays metadata-only on a
+    // DV-active table
     val perFile = doomed.groupBy("__file").agg(count(lit(1)).as("n"))
       .collect().map(r => LakeIo.normUri(r.getString(0)) -> r.getLong(1)).toMap
     val touched = perFile.keySet
@@ -1964,9 +1936,9 @@ object LakeTable {
       partEquals.forall { case (c, v) => e.part.get(c).contains(v) })
     if (scoped.isEmpty) return current // no matching partition: no commit
     val dir = s"$path/data/compactw-v${current + 1}"
-    // read ONLY the scoped entries — sidecars apply inside readEntries,
-    // so the rewrite materializes them away for exactly this scope
-    writeData(readEntries(spark, m, scoped)
+    // read ONLY the scoped entries — sidecars apply inside the scan, so
+    // the rewrite materializes them away for exactly this scope
+    writeData(readSnapshot(spark, path, m, scoped)
         .repartition(targetFiles), dir, m.parts, m.colMap)
     val rewritten = entriesFor(spark, dir, m.keys, m.schema, m.parts,
       clustered = false, bloomColsOf(m, m.schema))
@@ -2052,8 +2024,8 @@ object LakeTable {
       toByPath.get(e.path).exists(t => t.dvs == e.dvs && t.pos == e.pos))
     val afterEntries = mt.files.filterNot(e =>
       fromByPath.get(e.path).exists(f => f.dvs == e.dvs && f.pos == e.pos))
-    val before = readEntries(spark, mfAtTarget, beforeEntries)
-    val after = readEntries(spark, mt, afterEntries)
+    val before = readSnapshot(spark, path, mfAtTarget, beforeEntries)
+    val after = readSnapshot(spark, path, mt, afterEntries)
     val rest = before.columns.filterNot(keyCols.contains).toSeq
     def tag(df: DataFrame, t: String) = df.select(
       keyCols.map(col) ++ rest.map(c => col(c).as(s"${t}_$c")) :+ lit(true).as(s"__in_$t"): _*)

@@ -512,6 +512,27 @@ class LakeTableSpec extends SparkSpec {
       .collect().toSet == got)
   }
 
+  test("positional deletes of already-deleted rows count once: repeated deletePos, overlapping deletePosWhere") {
+    import spark.implicits._
+    val p = freshPath("dvposagain")
+    LakeTable.create(spark, p, (1L to 100L).map(k => (k, k)).toDF("k", "v"), Seq("k"),
+      nBuckets = 4)
+    // the API count, the rows it collects and the graftlake source's
+    // count (metadata-only: rows - posDel) must agree
+    def counts(): Seq[Long] = Seq(LakeTable.read(spark, p).count(),
+      LakeTable.read(spark, p).collect().length.toLong,
+      spark.read.format("graftlake").load(p).count())
+    LakeTable.deletePos(spark, p, Seq(5L).toDF("k"), Seq("k"))
+    LakeTable.deletePos(spark, p, Seq(5L).toDF("k"), Seq("k"))
+    assert(counts() == Seq(99L, 99L, 99L))
+    LakeTable.deletePosWhere(spark, p, col("v") <= 20L)
+    LakeTable.deletePosWhere(spark, p, col("v") <= 30L)
+    assert(counts() == Seq(70L, 70L, 70L))
+    val m = LakeTable.manifest(p, LakeTable.latestVersion(p))
+    assert(m.files.map(_.posDel).sum == 30L)
+    assert(LakeTable.read(spark, p).select("k").as[Long].collect().toSet == (31L to 100L).toSet)
+  }
+
   test("bloom index: no false negative on any value; lifecycle declare->write->backfill; rename refusal") {
     import spark.implicits._
     val p = freshPath("bloomidx")
@@ -1395,6 +1416,10 @@ class LakeTableSpec extends SparkSpec {
 
   test("V2 scan applies a >=100k-key accumulated sidecar set EXECUTOR-side") {
     import spark.implicits._
+    // every case reads through BOTH the API and the SQL source: the two
+    // are one scan, so they must agree row for row
+    def reads(p: String): Seq[org.apache.spark.sql.DataFrame] =
+      Seq(LakeTable.read(spark, p), spark.read.format("graftlake").load(p))
     val p = freshPath("dvexec")
     val n = 400000L
     LakeTable.create(spark, p,
@@ -1405,47 +1430,57 @@ class LakeTableSpec extends SparkSpec {
       (1L to 60000L).map(k => Tuple1(k * 3)).toDF("k"), Seq("k"))
     LakeTable.deleteDV(spark, p,
       (1L to 60000L).map(k => Tuple1(k * 5)).toDF("k"), Seq("k"))
-    val got = spark.read.format("graftlake").load(p)
     val expect = (1L to n).filterNot(k =>
       (k % 3 == 0 && k <= 180000) || (k % 5 == 0 && k <= 300000))
-    assert(got.count() == expect.size.toLong)
-    assert(got.agg(sum("k")).head().getLong(0) == expect.sum)
-    assert(graft.sources.GraftLakeSource.lastDvMode(p) == "executor",
-      "a long-key DV table must apply sidecars executor-side, not via driver collect")
+    reads(p).foreach { got =>
+      assert(got.count() == expect.size.toLong)
+      assert(got.agg(sum("k")).head().getLong(0) == expect.sum)
+    }
     // string keys ride the executor path too (UTF8String byte layout)
     val ps = freshPath("dvexecstr")
     LakeTable.create(spark, ps,
       (1L to 5000L).map(k => (f"key$k%06d", k)).toDF("k", "v"), Seq("k"), nBuckets = 4)
     LakeTable.deleteDV(spark, ps,
       (1L to 1000L).map(k => Tuple1(f"key${k * 3}%06d")).toDF("k"), Seq("k"))
-    assert(spark.read.format("graftlake").load(ps).count() == 4000)
-    assert(graft.sources.GraftLakeSource.lastDvMode(ps) == "executor")
-    // a key type the executor loader does not speak (timestamp) stays
-    // CORRECT through the bounded driver fallback — and says so
-    val pt = freshPath("dvfall")
+    reads(ps).foreach(df => assert(df.count() == 4000))
+    // timestamp and decimal keys decode through Spark's own parquet
+    // reader like every other key type
+    val pt = freshPath("dvts")
     LakeTable.create(spark, pt,
       (1L to 300L).map(k => (new java.sql.Timestamp(k * 60000L), k))
         .toDF("k", "v"), Seq("k"), nBuckets = 2)
     LakeTable.deleteDV(spark, pt,
       (1L to 100L).map(k => Tuple1(new java.sql.Timestamp(k * 3 * 60000L)))
         .toDF("k"), Seq("k"))
-    assert(spark.read.format("graftlake").load(pt).count() == 200)
-    assert(graft.sources.GraftLakeSource.lastDvMode(pt) == "driver")
-    // +-0.0 double keys: the executor probe must agree with the V1
-    // anti-join's NormalizeNaNAndZero semantics (review r16 #8 — a
-    // byte-wise probe would resurrect a DV-deleted -0.0 on V2 only)
+    reads(pt).foreach { df =>
+      assert(df.count() == 200)
+      assert(df.agg(sum("v")).head().getLong(0) ==
+        (1L to 300L).filterNot(_ % 3 == 0).sum)
+    }
+    val pd = freshPath("dvdec")
+    LakeTable.create(spark, pd,
+      (1L to 300L).map(k => (BigDecimal(k) / 100, k)).toDF("k", "v")
+        .select(col("k").cast("decimal(12,2)").as("k"), col("v")), Seq("k"), nBuckets = 2)
+    LakeTable.deleteDV(spark, pd,
+      (1L to 100L).map(k => Tuple1(BigDecimal(k * 3) / 100)).toDF("k"), Seq("k"))
+    reads(pd).foreach { df =>
+      assert(df.count() == 200)
+      assert(df.agg(sum("v")).head().getLong(0) ==
+        (1L to 300L).filterNot(_ % 3 == 0).sum)
+    }
+    // +-0.0 double keys: the executor probe must agree with Spark's
+    // join-key NormalizeNaNAndZero semantics (review r16 #8 — a
+    // byte-wise probe would resurrect a DV-deleted -0.0)
     val pz = freshPath("dvzero")
     LakeTable.create(spark, pz,
       Seq((-0.0d, 1L), (1.5d, 2L), (2.5d, 3L)).toDF("k", "v"),
       Seq("k"), nBuckets = 1)
     LakeTable.deleteDV(spark, pz, Seq(Tuple1(0.0d)).toDF("k"), Seq("k"))
-    assert(LakeTable.read(spark, pz).count() == 2)
-    assert(spark.read.format("graftlake").load(pz).count() == 2,
-      "the V2 executor probe must erase a -0.0 key when 0.0 was DV-deleted")
-    assert(graft.sources.GraftLakeSource.lastDvMode(pz) == "executor")
+    reads(pz).foreach(df => assert(df.count() == 2,
+      "the executor probe must erase a -0.0 key when 0.0 was DV-deleted"))
     // NULL key semantics (review r17 #2): NULL never equi-joins, so a
     // NULL-bearing sidecar key can never claim a NULL-key target row —
-    // the V2 byte-wise probe must KEEP it, matching the V1 anti-join
+    // the byte-wise probe must KEEP it
     val pn = freshPath("dvnull")
     LakeTable.create(spark, pn,
       Seq((java.lang.Long.valueOf(1L), 10L), (java.lang.Long.valueOf(2L), 20L),
@@ -1454,12 +1489,55 @@ class LakeTableSpec extends SparkSpec {
     LakeTable.deleteDV(spark, pn,
       Seq(java.lang.Long.valueOf(2L), null.asInstanceOf[java.lang.Long])
         .map(Tuple1(_)).toDF("k"), Seq("k"))
-    assert(LakeTable.read(spark, pn).count() == 2,
-      "V1 anti-join must keep the NULL-key row (NULL never equi-joins)")
-    val v2n = spark.read.format("graftlake").load(pn)
-    assert(v2n.count() == 2,
-      "V2 probe must keep the NULL-key row when the sidecar carries a NULL key")
-    assert(v2n.agg(sum("v")).head().getLong(0) == 40L)
+    reads(pn).foreach { df =>
+      assert(df.count() == 2,
+        "the probe must keep the NULL-key row when the sidecar carries a NULL key")
+      assert(df.agg(sum("v")).head().getLong(0) == 40L)
+    }
+  }
+
+  test("reading a path with no committed version through the SQL source fails loudly") {
+    val p = freshPath("uncreated")
+    val e = intercept[Exception](spark.read.format("graftlake").load(p).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains("no committed version")),
+      s"expected the no-committed-version error, got $e")
+  }
+
+  test("sidecar groups cost a read no Spark job: the read runs no more jobs than after compact") {
+    import spark.implicits._
+    val p = freshPath("dvjobs")
+    LakeTable.create(spark, p,
+      (1L to 2000L).map(k => (k, k % 11)).toDF("k", "v"), Seq("k"), nBuckets = 4)
+    // one equality-sidecar group and one positional-sidecar group
+    LakeTable.deleteDV(spark, p, (1L to 50L).map(k => Tuple1(k * 7)).toDF("k"), Seq("k"))
+    LakeTable.deletePos(spark, p, (1L to 50L).map(k => Tuple1(k * 13)).toDF("k"), Seq("k"))
+    val m = LakeTable.manifest(p, LakeTable.latestVersion(p))
+    assert(m.files.exists(_.dvs.nonEmpty) && m.files.exists(_.pos.nonEmpty))
+    val expect = (1L to 2000L).filterNot(k => k % 7 == 0 && k <= 350 || k % 13 == 0 && k <= 650)
+    LakeTable.read(spark, p).collect() // warm-up
+    var got = Array.empty[org.apache.spark.sql.Row]
+    val withSidecars = sparkJobs { got = LakeTable.read(spark, p).collect() }
+    assert(got.map(_.getLong(0)).sorted.toSeq == expect)
+    LakeTable.compact(spark, p, 4)
+    LakeTable.read(spark, p).collect()
+    val compacted = sparkJobs { got = LakeTable.read(spark, p).collect() }
+    assert(got.map(_.getLong(0)).sorted.toSeq == expect)
+    assert(withSidecars <= compacted,
+      s"a read with two sidecar groups ran $withSidecars jobs, the compacted read $compacted")
+  }
+
+  test("LakeTable.scan records the pruning decision prunedEntries computes") {
+    import spark.implicits._
+    val p = freshPath("scanprune")
+    LakeTable.create(spark, p,
+      (1L to 10000L).map(k => (k, k % 13)).toDF("k", "v"), Seq("k"),
+      nBuckets = 10, layout = "range")
+    val v = LakeTable.latestVersion(p)
+    val (kept, total) = LakeTable.prunedEntries(p, v, "k", 2500L, 3400L)
+    assert(total == 10 && kept.size < total, s"fixture must prune (kept ${kept.size}/$total)")
+    assert(LakeTable.scan(spark, p, "k", 2500L, 3400L).count() == 901L)
+    assert(graft.sources.GraftLakeSource.lastPrune(p) == ((kept.size, total)))
   }
 
   test("runtime filtering: a dimension filter prunes lake manifest entries at execution time") {
