@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, Expression, PlanExpression, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, ExprId, Expression, PlanExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
@@ -26,32 +26,31 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
   * claims the RESOLVED `MergeIntoTable`/`UpdateTable` whose target is a
   * [[GraftLakeCatalogTable]] and lowers it onto the lake's native
   * transactional ops — the keyed copy-on-write [[LakeTable.mergeDelete]]
-  * and [[LakeTable.delete]] — so SQL MERGE rides the same O(batch +
-  * touched files) kernel as every other write path, ONE atomic version
-  * per statement. Non-graftlake targets fall through untouched.
+  * and the merge-on-read [[LakeTable.deleteDV]] — so SQL MERGE rides the
+  * same O(batch + touched files) kernel as every other write path, ONE
+  * atomic version per statement. Non-graftlake targets fall through
+  * untouched.
   *
-  * Two lowerings, picked per statement:
+  * One MERGE lowering: the source's columns are renamed `__s_<i>` by
+  * position and the target's `__t_<c>` (exprIds decide which side a
+  * reference means, so shared names cannot collide), and ONE outer join
+  * of the two classifies every row — matched when a target file came
+  * back, NOT MATCHED when none did, NOT MATCHED BY SOURCE when no source
+  * row did (a full outer join, for statements with such clauses only).
+  * Each row takes the first clause of its class whose condition holds
+  * (the SQL precedence); the update ∪ insert batch is one filtered
+  * projection of the join and the delete batch another. Conditions and
+  * values may reference either side, and `UPDATE SET` may be partial.
+  * Column pruning cuts the target read to the columns the actions
+  * reference: the key columns alone when they reference only the source.
   *
-  *   - SOURCE-ONLY (the cheap path): every action condition and
-  *     assignment value references source columns alone, projections
-  *     cover the full row, one action per match class, no NOT MATCHED
-  *     BY SOURCE. The batch is computed from the source frame plus a
-  *     KEY-ONLY scan of the target (matched/unmatched classification) —
-  *     the target's non-key columns never move.
-  *   - ROW-LEVEL (the general path): conditions/values referencing
-  *     TARGET columns, partial `UPDATE SET`, multiple WHEN clauses
-  *     (first-match-wins, the SQL precedence), and `WHEN NOT MATCHED BY
-  *     SOURCE` lower through a real src ⋈ tgt join with provenance-
-  *     renamed columns (`__s_*` / `__t_*` — exprIds decide which side a
-  *     reference means, so shared names cannot collide).
-  *
-  * Both classification scans are ENVELOPE-PRUNED (VERDICT r15 ask #4):
-  * the statement's source keys bound a min/max box per key column and
-  * manifest stats prune target files before any opens — sound, because
-  * a target row that matches a source key lies inside the envelope, so
-  * its file always survives the prune. A statement with NOT MATCHED BY
-  * SOURCE actions reads the full target instead (it is semantically an
-  * O(table) statement — every target row must be classified).
+  * The classification read is ENVELOPE-PRUNED: the statement's source
+  * keys bound a min/max box per key column and manifest stats prune
+  * target files before any opens — sound, because a target row that
+  * matches a source key lies inside the envelope, so its file always
+  * survives the prune. A statement with NOT MATCHED BY SOURCE actions
+  * reads the full target instead (it is semantically an O(table)
+  * statement — every target row must be classified).
   *
   * Still refused, loudly and with the reason (never approximated):
   * subqueries in any clause; an ON that is not a conjunction of
@@ -59,9 +58,7 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
   * identity; reassigning a merge-identity column to anything but the ON
   * clause's own source expression (rows are CLASSIFIED by the ON key —
   * landing them under a different identity would silently corrupt the
-  * upsert); MERGE WITH SCHEMA EVOLUTION; a source whose output carries
-  * duplicate column names (the row-level rename has no unambiguous
-  * by-name form).
+  * upsert); MERGE WITH SCHEMA EVOLUTION.
   *
   * Execution is read-modify-merge with snapshot isolation: the
   * statement reads the table's LATEST version, computes the batch, and
@@ -75,9 +72,9 @@ import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
   * statement's touched-file set. The commit reuses that set while it
   * reads the version the statement classified against, so it runs no
   * second envelope aggregate and no discovery scan; a rebase onto a
-  * newer version rediscovers. The job chain of a source-only MERGE
-  * over an exchange-free source (the keyed refresh upsert), and which
-  * pass answers what:
+  * newer version rediscovers. The job chain of the keyed refresh
+  * upsert (`UPDATE SET *` / `INSERT *` over an exchange-free source),
+  * and which pass answers what:
   *
   *   1. envelope (1 job): the source keys' min/max box, observed in one
   *      pass — prunes the files the classification opens;
@@ -108,11 +105,11 @@ object LakeDml extends PredicateHelper {
 
   /** Envelope-pruned target read for merge classification: `srcKeys`
     * (key-named columns) bound a per-column min/max box; manifest stats
-    * prune entries before any file opens. Sound for BOTH classification
-    * joins: every target row whose key equals a source key lies inside
-    * the envelope, so its file intersects the box and is kept — a
-    * pruned-out file cannot hold a matched key, and the anti-join only
-    * needs target keys that COULD equal a source key. Records its
+    * prune entries before any file opens. Sound: every target row whose
+    * key equals a source key lies inside the envelope, so its file
+    * intersects the box and is kept — a pruned-out file cannot hold a
+    * matched key, and a statement with no NOT MATCHED BY SOURCE clause
+    * reads no unmatched target row. Records its
     * (kept, total) decision under `<path>@classify` for the pruning
     * observability hook. Cost: one observed pass over the source keys
     * ([[LakeTable.keyEnvelope]]) + an O(#files) driver-side stats pass. */
@@ -259,7 +256,7 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
   /** Rebind a resolved expression's attributes BY NAME so it can
     * re-resolve against the runtime frame the executor builds (the
     * original exprIds belong to the command's plan, not ours). Used by
-    * the source-only path, where the runtime frame IS the source. */
+    * UPDATE and DELETE, whose runtime frame IS the target snapshot. */
   private def byName(e: Expression): Column = {
     noSubqueries(e)
     ColumnBridge.column(e.transform {
@@ -267,18 +264,18 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
     })
   }
 
-  /** Row-level rebinding: provenance (exprId membership) decides which
+  /** MERGE rebinding: provenance (exprId membership) decides which
     * side a reference means, and the name carries it — `__t_<c>` for
-    * target columns, `__s_<c>` for source — so a condition like
-    * `tg.v < src.v` survives the shared name. */
+    * target columns, `__s_<i>` for the source's `i`-th output column —
+    * so a condition like `tg.v < src.v` survives the shared name. */
   private def byProvenance(e: Expression, tgtSet: AttributeSet,
-      srcSet: AttributeSet): Column = {
+      srcOrdinal: Map[ExprId, Int]): Column = {
     noSubqueries(e)
     ColumnBridge.column(e.transform {
       case a: AttributeReference if tgtSet.contains(a) =>
         UnresolvedAttribute.quoted(s"__t_${a.name}")
-      case a: AttributeReference if srcSet.contains(a) =>
-        UnresolvedAttribute.quoted(s"__s_${a.name}")
+      case a: AttributeReference if srcOrdinal.contains(a.exprId) =>
+        UnresolvedAttribute.quoted(s"__s_${srcOrdinal(a.exprId)}")
       case a: AttributeReference =>
         refuse(s"reference $a resolves to neither the target nor the source")
     })
@@ -401,237 +398,139 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
 
           def srcOnly(e: Expression): Boolean = e.references.subsetOf(srcSet)
           def tgtOnly(e: Expression): Boolean = e.references.subsetOf(tgtSet)
-          def fullAssign(byCol: Map[String, Expression]): Boolean =
-            schema.fieldNames.forall(byCol.contains)
+          // the runtime source renames its columns BY POSITION (__s_<i>),
+          // so a source whose output repeats a name still rebinds exactly
+          val srcOrdinal = m.sourceTable.output.map(_.exprId).zipWithIndex.toMap
+          def rebind(e: Expression): Column = byProvenance(e, tgtSet, srcOrdinal)
+          def cond(a: MergeAction): Column = a.condition.map(rebind).getOrElse(lit(true))
 
-          // ---- eligibility for the cheap source-only lowering ----
-          def actionSourceOnly(a: MergeAction): Boolean = a match {
-            case ua: UpdateAction =>
-              ua.condition.forall(srcOnly) && ua.assignments.forall(x => srcOnly(x.value)) &&
-                fullAssign(ua.assignments.map(x => assignedName(x) -> x.value).toMap)
-            case da: DeleteAction => da.condition.forall(srcOnly)
+          // every action either writes one full table row or deletes the
+          // target row it classified
+          sealed trait Act { def cond: Column }
+          case class Upsert(cond: Column, row: Seq[Column]) extends Act
+          case class Delete(cond: Column) extends Act
+
+          // the full row an action writes: a key column holds the row's
+          // identity — the ON value (__k_<key>: a matched target key equals
+          // it, and an INSERT must assign it), or the target key for a NOT
+          // MATCHED BY SOURCE row, which has no source row; any other
+          // column its assigned value, or `unset` when the action does not
+          // assign it
+          def rowOf(byCol: Map[String, Expression], unset: String => Column): Seq[Column] =
+            schema.fieldNames.toIndexedSeq.map(c =>
+              if (keys.contains(c)) coalesce(col(s"__k_$c"), col(s"__t_$c"))
+              else byCol.get(c).fold(unset(c))(v => rebind(v).cast(schema(c).dataType)))
+
+          // an UPDATE keeps the target row's value in every column it does
+          // not SET
+          def update(ua: UpdateAction, what: String, ok: Expression => Boolean): Upsert = {
+            val byCol = checkAssigns(ua.assignments, what)
+            ua.condition.foreach(c => if (!ok(c)) refuse(
+              s"$what condition may not cross match classes, got $c"))
+            byCol.values.foreach(v => if (!ok(v)) refuse(
+              s"$what values may not cross match classes, got $v"))
+            Upsert(cond(ua), rowOf(byCol, c => col(s"__t_$c")))
+          }
+
+          val matched: Seq[Act] = m.matchedActions.map {
+            case ua: UpdateAction => update(ua, "WHEN MATCHED UPDATE", _ => true)
+            case da: DeleteAction => Delete(cond(da))
+            case other => refuse(s"unsupported WHEN MATCHED action $other")
+          }
+          val inserts: Seq[Act] = m.notMatchedActions.map {
             case ia: InsertAction =>
-              ia.condition.forall(srcOnly) && ia.assignments.forall(x => srcOnly(x.value)) &&
-                fullAssign(ia.assignments.map(x => assignedName(x) -> x.value).toMap)
-            case _ => false
+              ia.condition.foreach(c => if (!srcOnly(c)) refuse(
+                s"WHEN NOT MATCHED condition may reference SOURCE columns only " +
+                  s"(the target row does not exist), got $c"))
+              val byCol = checkAssigns(ia.assignments, "INSERT")
+              byCol.values.foreach(v => if (!srcOnly(v)) refuse(
+                s"INSERT values may reference SOURCE columns only, got $v"))
+              keys.foreach(k => if (!byCol.contains(k)) refuse(
+                s"INSERT must assign merge-identity column $k"))
+              Upsert(cond(ia), rowOf(byCol, c => lit(null).cast(schema(c).dataType)))
+            case other => refuse(s"unsupported WHEN NOT MATCHED action $other")
           }
-          val fastEligible =
-            m.notMatchedBySourceActions.isEmpty &&
-              m.matchedActions.size <= 1 && m.notMatchedActions.size <= 1 &&
-              m.matchedActions.forall(actionSourceOnly) &&
-              m.notMatchedActions.forall {
-                case ia: InsertAction => actionSourceOnly(ia)
-                case _ => false
+          val bySource: Seq[Act] = m.notMatchedBySourceActions.map {
+            case ua: UpdateAction =>
+              update(ua, "WHEN NOT MATCHED BY SOURCE UPDATE", tgtOnly)
+            case da: DeleteAction =>
+              da.condition.foreach { c =>
+                noSubqueries(c)
+                if (!tgtOnly(c)) refuse(
+                  "WHEN NOT MATCHED BY SOURCE condition may reference TARGET " +
+                    s"columns only (the source row does not exist), got $c")
               }
+              Delete(cond(da))
+            case other => refuse(s"unsupported WHEN NOT MATCHED BY SOURCE action $other")
+          }
 
-          val srcPlan = m.sourceTable
-
-          if (fastEligible) {
-            // ---- SOURCE-ONLY path: batch from the source frame + a
-            // key-only pruned classification scan ----
-            // one value per table column, in schema order (unaliased:
-            // the batch picks the matched or the unmatched value per row)
-            def projection(assigns: Seq[Assignment]): Seq[Column] = {
-              val byCol = checkAssigns(assigns, "projection")
-              schema.fieldNames.toIndexedSeq.map(c =>
-                byName(byCol(c)).cast(schema(c).dataType))
-            }
-            val upd = m.matchedActions.collectFirst { case ua: UpdateAction =>
-              (ua.condition.map(byName).getOrElse(lit(true)), projection(ua.assignments))
-            }
-            val del = m.matchedActions.collectFirst { case da: DeleteAction =>
-              da.condition.map(byName).getOrElse(lit(true))
-            }
-            val ins = m.notMatchedActions.collectFirst { case ia: InsertAction =>
-              (ia.condition.map(byName).getOrElse(lit(true)), projection(ia.assignments))
-            }
-            exec(s"graftlake MERGE INTO ${t.name()}", { () =>
-              val spark = SparkSession.active
-              val src = ColumnBridge.ofRows(spark, srcPlan)
-              // computed ON keys ride as __k_<key>, cast to the target
-              // key types: the envelope and the match join see exactly
-              // the key values the batch commits
-              val srcK = src.select(col("*") +: keyPairs.map { case (n, e) =>
-                byName(e).cast(schema(n).dataType).as(s"__k_$n") }: _*)
-              val tgt = LakeDml.prunedTargetRead(spark, t.tablePath,
+          exec(s"graftlake MERGE INTO ${t.name()}", { () =>
+            val spark = SparkSession.active
+            val src = ColumnBridge.ofRows(spark, m.sourceTable)
+            // computed ON keys ride as __k_<key>, cast to the target key
+            // types: the envelope and the join see exactly the key values
+            // the batch commits; __s_row is non-null on every source row
+            val srcK = src.toDF(src.columns.indices.map(i => s"__s_$i"): _*)
+              .select(col("*") +: lit(true).as("__s_row") +: keyPairs.map { case (n, e) =>
+                rebind(e).cast(schema(n).dataType).as(s"__k_$n") }: _*)
+            // a NOT MATCHED BY SOURCE statement classifies EVERY target
+            // row — full read; otherwise the envelope-pruned read suffices
+            // (matched keys cannot live in pruned files)
+            val tgt =
+              if (bySource.nonEmpty) LakeDml.fullTargetRead(spark, t.tablePath)
+              else LakeDml.prunedTargetRead(spark, t.tablePath,
                 srcK.select(keys.map(k => col(s"__k_$k").as(k)): _*), keys)
-              // ONE classification join: every source row picks up the
-              // file of the target row its ON key matched, or null when
-              // no target row holds the key (the NOT MATCHED class). One
-              // live row per key, so the outer join never fans out.
-              val tFile = s"__t_${LakeDml.FileCol}"
-              val tgtKeys = tgt.rows.select(
-                keys.map(k => col(k).as(s"__t_$k")) :+ col(LakeDml.FileCol).as(tFile): _*)
-              val joined = srcK.join(tgtKeys,
-                keys.map(k => col(s"__k_$k") === col(s"__t_$k")).reduce(_ && _), "left_outer")
-              val isMatched = col(tFile).isNotNull
-              // update ∪ insert is ONE projection of the join (a union
-              // of two filtered copies would let the optimizer plan the
-              // matched copy as an inner join with its own broadcast):
-              // a matched row takes the update's values, an unmatched
-              // row the insert's, each kept iff its class's action
-              // condition holds
-              val taken = upd.map(u => isMatched && coalesce(u._1, lit(false))).toSeq ++
-                ins.map(i => !isMatched && coalesce(i._1, lit(false)))
-              val updBatch = taken.reduceOption(_ || _).map { keep =>
-                val values = schema.fieldNames.indices.map { i =>
-                  (upd.map(_._2(i)), ins.map(_._2(i))) match {
-                    case (Some(u), Some(n)) => when(isMatched, u).otherwise(n)
-                    case (Some(u), None) => u
-                    case (None, n) => n.get
-                  }
-                }
-                joined.filter(keep).select(schema.fieldNames.toIndexedSeq.zip(values)
-                  .map { case (c, v) => v.as(c) } :+ col(tFile).as(LakeDml.FileCol): _*)
+            // the target row's file rides as __t_<FileCol>. Column pruning
+            // cuts the read to the target columns some action references:
+            // the key columns alone for a statement whose actions read
+            // only the source (the keyed refresh upsert)
+            val tgtR = tgt.rows.select((schema.fieldNames.toIndexedSeq :+ LakeDml.FileCol)
+              .map(c => col(c).as(s"__t_$c")): _*)
+            // ONE join classifies every row; one live target row per key,
+            // so it never fans out. Only a NOT MATCHED BY SOURCE statement
+            // needs the target rows no source row matched: full outer.
+            val joined = srcK.join(tgtR,
+              keys.map(k => col(s"__k_$k") === col(s"__t_$k")).reduce(_ && _),
+              if (bySource.isEmpty) "left_outer" else "full_outer")
+            val tFile = col(s"__t_${LakeDml.FileCol}")
+            val fromSource = col("__s_row").isNotNull
+            // each row takes the first action of its class whose
+            // condition holds
+            val taken = Seq((tFile.isNotNull && fromSource, matched),
+                (tFile.isNull, inserts), (!fromSource, bySource))
+              .flatMap { case (cls, acts) =>
+                acts.zip(effConds(acts.map(_.cond))).map { case (a, eff) => (a, cls && eff) }
               }
-              // the delete is scoped to PRE-STATEMENT matched keys (ADVICE
-              // r15): an unmatched source row that satisfies both the
-              // delete and insert conditions inserts and SURVIVES, per
-              // MERGE semantics. update ∪ insert ∪ matched-delete commit
-              // as ONE atomic version.
-              val delBatch = del.map { c =>
-                joined.filter(isMatched && coalesce(c, lit(false))).select(
-                  keys.map(k => col(s"__k_$k").as(k)) :+ col(tFile).as(LakeDml.FileCol): _*)
-              }
-              commitBatches(spark, t.tablePath, keys, tgt.version, updBatch, delBatch)
-            })
-          } else {
-            // ---- ROW-LEVEL path: src ⋈ tgt with provenance-renamed
-            // columns; partial SET, target references, multiple clauses
-            // (first-match-wins), NOT MATCHED BY SOURCE ----
-            val srcNames = m.sourceTable.output.map(_.name)
-            if (srcNames.distinct.size != srcNames.size)
-              refuse(s"source output carries duplicate column names " +
-                s"(${srcNames.mkString(", ")}) — alias them apart first")
-
-            def rebind(e: Expression): Column = byProvenance(e, tgtSet, srcSet)
-
-            sealed trait Rep { def cond: Column }
-            case class UpdRep(cond: Column, sets: Map[String, Column]) extends Rep
-            case class DelRep(cond: Column) extends Rep
-            case class InsRep(cond: Column, sets: Map[String, Column]) extends Rep
-
-            def updRep(ua: UpdateAction, what: String,
-                restrict: Option[Expression => Boolean]): UpdRep = {
-              val byCol = checkAssigns(ua.assignments, what)
-              restrict.foreach { ok =>
-                ua.condition.foreach(c => if (!ok(c)) refuse(
-                  s"$what condition may not cross match classes, got $c"))
-                byCol.values.foreach(v => if (!ok(v)) refuse(
-                  s"$what values may not cross match classes, got $v"))
-              }
-              UpdRep(ua.condition.map(rebind).getOrElse(lit(true)),
-                // identity-preserving key assignment is a no-op on
-                // matched rows (__t_key already equals the ON value)
-                byCol.filterNot { case (c, _) => keys.contains(c) }
-                  .map { case (c, v) => c -> rebind(v).cast(schema(c).dataType) })
+            val upserts = taken.collect { case (Upsert(_, row), c) => (c, row) }
+            // update ∪ insert is ONE filtered projection of the join, and
+            // the delete batch another: update ∪ insert ∪ delete commit as
+            // ONE atomic version. A delete is scoped to the rows of its own
+            // class: an unmatched source row that satisfies a MATCHED
+            // delete's condition inserts and SURVIVES, per MERGE semantics.
+            // A column every action writes alike (UPDATE SET * beside
+            // INSERT *) needs no per-action choice.
+            val upsertBatch = upserts.map(_._1).reduceOption(_ || _).map { keep =>
+              joined.filter(keep).select(schema.fieldNames.toIndexedSeq.zipWithIndex.map {
+                case (c, i) =>
+                  val values = upserts.map(_._2(i))
+                  (if (values.distinct.size == 1) values.head
+                   else upserts.tail.foldLeft(when(upserts.head._1, values.head))(
+                     (w, u) => w.when(u._1, u._2(i)))).as(c)
+              } :+ tFile.as(LakeDml.FileCol): _*)
             }
-
-            val matchedReps: Seq[Rep] = m.matchedActions.map {
-              case ua: UpdateAction => updRep(ua, "WHEN MATCHED UPDATE", None)
-              case da: DeleteAction =>
-                da.condition.foreach(noSubqueries)
-                DelRep(da.condition.map(rebind).getOrElse(lit(true)))
-              case other => refuse(s"unsupported WHEN MATCHED action $other")
-            }
-            val insertReps: Seq[InsRep] = m.notMatchedActions.map {
-              case ia: InsertAction =>
-                ia.condition.foreach(c => if (!srcOnly(c)) refuse(
-                  s"WHEN NOT MATCHED condition may reference SOURCE columns only " +
-                    s"(the target row does not exist), got $c"))
-                val byCol = checkAssigns(ia.assignments, "INSERT")
-                byCol.values.foreach(v => if (!srcOnly(v)) refuse(
-                  s"INSERT values may reference SOURCE columns only, got $v"))
-                keys.foreach(k => if (!byCol.contains(k)) refuse(
-                  s"INSERT must assign merge-identity column $k"))
-                InsRep(ia.condition.map(rebind).getOrElse(lit(true)),
-                  byCol.map { case (c, v) => c -> rebind(v).cast(schema(c).dataType) })
-              case other => refuse(s"unsupported WHEN NOT MATCHED action $other")
-            }
-            val nmbsReps: Seq[Rep] = m.notMatchedBySourceActions.map {
-              case ua: UpdateAction =>
-                updRep(ua, "WHEN NOT MATCHED BY SOURCE UPDATE", Some(tgtOnly))
-              case da: DeleteAction =>
-                da.condition.foreach { c =>
-                  noSubqueries(c)
-                  if (!tgtOnly(c)) refuse(
-                    "WHEN NOT MATCHED BY SOURCE condition may reference TARGET " +
-                      s"columns only (the source row does not exist), got $c")
-                }
-                DelRep(da.condition.map(rebind).getOrElse(lit(true)))
-              case other => refuse(s"unsupported WHEN NOT MATCHED BY SOURCE action $other")
-            }
-
-            exec(s"graftlake MERGE INTO ${t.name()} (row-level)", { () =>
-              val spark = SparkSession.active
-              val src = ColumnBridge.ofRows(spark, srcPlan)
-              val srcR = src.select(src.columns.toIndexedSeq.map(c =>
-                col(c).as(s"__s_$c")): _*)
-              // computed ON keys ride as __k_<key>, cast to the target
-              // key types so the join compares on one axis
-              val srcK = srcR.select(srcR.columns.toIndexedSeq.map(col) ++
-                keyPairs.map { case (n, e) =>
-                  rebind(e).cast(schema(n).dataType).as(s"__k_$n") }: _*)
-              // a NOT MATCHED BY SOURCE statement classifies EVERY
-              // target row — full read; otherwise the envelope-pruned
-              // classification scan suffices (matched keys cannot live
-              // in pruned files)
-              val tgt =
-                if (nmbsReps.nonEmpty) LakeDml.fullTargetRead(spark, t.tablePath)
-                else LakeDml.prunedTargetRead(spark, t.tablePath,
-                  srcK.select(keys.map(k => col(s"__k_$k").as(k)): _*), keys)
-              // the target row's file rides as __t_<FileCol>
-              val tgtR = tgt.rows.select((schema.fieldNames.toIndexedSeq :+ LakeDml.FileCol)
-                .map(c => col(c).as(s"__t_$c")): _*)
-              val tgtFile = col(s"__t_${LakeDml.FileCol}")
-              val joinCond = keys.map(k => col(s"__k_$k") === col(s"__t_$k"))
-                .reduce(_ && _)
-              val matched = srcK.join(tgtR, joinCond, "inner")
-              val unmatched = srcK.join(
-                tgtR.select(keys.map(k => col(s"__t_$k")): _*), joinCond, "left_anti")
-              val upserts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-              val deletes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-              // matched and NOT MATCHED BY SOURCE rows carry their target
-              // row's file; unmatched (inserted) rows have none
-              def file(frame: DataFrame): Column =
-                (if (frame.columns.contains(s"__t_${LakeDml.FileCol}")) tgtFile
-                 else lit(null).cast("string")).as(LakeDml.FileCol)
-              def emit(frame: DataFrame, reps: Seq[Rep],
-                  fallback: String => Column): Unit =
-                reps.zip(effConds(reps.map(_.cond))).foreach {
-                  case (UpdRep(_, sets), eff) =>
-                    upserts += frame.filter(eff).select(
-                      schema.fieldNames.toIndexedSeq.map(c =>
-                        sets.getOrElse(c, fallback(c)).as(c)) :+ file(frame): _*)
-                  case (DelRep(_), eff) =>
-                    deletes += frame.filter(eff).select(
-                      keys.map(k => col(s"__t_$k").as(k)) :+ file(frame): _*)
-                  case (InsRep(_, sets), eff) =>
-                    upserts += frame.filter(eff).select(
-                      schema.fieldNames.toIndexedSeq.map(c =>
-                        sets.getOrElse(c, fallback(c)).as(c)) :+ file(frame): _*)
-                }
-              emit(matched, matchedReps, c => col(s"__t_$c"))
-              emit(unmatched, insertReps, c => lit(null).cast(schema(c).dataType))
-              if (nmbsReps.nonEmpty) {
-                val nmbs = tgtR.join(
-                  srcK.select(keys.map(k => col(s"__k_$k")): _*), joinCond, "left_anti")
-                emit(nmbs, nmbsReps, c => col(s"__t_$c"))
-              }
-              commitBatches(spark, t.tablePath, keys, tgt.version,
-                upserts.reduceOption(_ unionByName _),
-                deletes.reduceOption(_ unionByName _))
-            })
-          }
+            val deleteBatch = taken.collect { case (Delete(_), c) => c }.reduceOption(_ || _)
+              .map(keep => joined.filter(keep).select(
+                keys.map(k => col(s"__t_$k").as(k)) :+ tFile.as(LakeDml.FileCol): _*))
+            commitBatches(spark, t.tablePath, keys, tgt.version, upsertBatch, deleteBatch)
+          })
       }
 
     case _ => Nil
   }
 
   /** Commit a statement's upsert batch and delete keys as ONE version
-    * ([[LakeTable.mergeDelete]]); a delete-only statement rides the
-    * single-commit [[LakeTable.delete]]; an empty statement commits
-    * nothing. Both batches carry [[LakeDml.FileCol]], the file of the
+    * through one [[LakeTable.mergeDelete]] call; an empty statement
+    * commits nothing. Both batches carry [[LakeDml.FileCol]], the file of the
     * target row each claimed key matched at `version` (null for an
     * insert), and are committed without it.
     *
@@ -693,11 +592,8 @@ object LakeDmlStrategy extends SparkStrategy with PredicateHelper {
     val known = Some(LakeDml.touched(version, (b.toSeq ++ d.toSeq).flatMap(_._2)))
     val bc = b.filter(_._1 > 0).map(_._3)
     val dc = d.filter(_._1 > 0).map(_._3)
-    (bc, dc) match {
-      case (Some(b), d) => LakeTable.mergeDelete(spark, path, b, d, keys, known = known); ()
-      case (None, Some(d)) => LakeTable.delete(spark, path, d, keys, known); ()
-      case (None, None) => ()
-    }
+    if (bc.nonEmpty || dc.nonEmpty)
+      LakeTable.mergeDelete(spark, path, bc, dc, keys, known = known)
   }
 
   private def exec(label: String, run: () => Unit): Seq[SparkPlan] =

@@ -615,6 +615,13 @@ object LakeTable {
     }.seq.toMap
   }
 
+  /** A fresh batch directory for a write committing `version`: every
+    * writer lands in its own, so two writers of one op at one read
+    * version never overwrite each other's files, and [[entriesFor]]
+    * lists only the files its own write produced. */
+  private def batchDir(path: String, op: String, version: Int): String =
+    s"$path/data/$op-v$version-${java.util.UUID.randomUUID()}"
+
   /** Build the FileEntries for a freshly written batch dir: leaf files
     * + footer stats on the stat-worthy key columns + (for partition
     * layouts) the partition values lifted ONCE from each file's
@@ -1203,7 +1210,7 @@ object LakeTable {
     require(layout != "cluster" || partitionBy.isEmpty,
       "LakeTable: clustered layout and a partition-directory layout are exclusive")
     val cluster = if (layout == "cluster") nBuckets else 0
-    val dir = s"$path/data/overwrite-v${current + 1}-${java.util.UUID.randomUUID()}"
+    val dir = batchDir(path, "overwrite", current + 1)
     writeLayout(df, keyCols, nBuckets, layout, dir, partitionBy)
     // the index declaration survives an overwrite for the columns that
     // still exist (an overwrite heals the column mapping, so the
@@ -1329,57 +1336,61 @@ object LakeTable {
     * racing threads. No-op in production. */
   private[graft] var testInterleave: () => Unit = () => ()
 
-  /** One optimistic merge attempt against the snapshot read as
-    * `readVersion`; commits `readVersion + 1` or throws the loud
-    * conflict if another writer got there first. `known` is the
-    * statement's classified touched-file set ([[touchedFiles]]). */
+  /** One optimistic copy-on-write attempt against the snapshot read as
+    * `readVersion`: the touched files' rows minus every `claimed` key,
+    * plus `updates`, rewritten as one fresh batch directory and
+    * committed as `readVersion + 1` — a `merge` version, or a `delete`
+    * one when there is no upsert batch — or the loud conflict if another
+    * writer got there first. `known` is the statement's classified
+    * touched-file set ([[touchedFiles]]). */
   private[graft] def attemptMerge(spark: SparkSession, path: String,
-      updates: DataFrame, keyCols: Seq[String], readVersion: Int,
-      deleteKeys: Option[DataFrame] = None, known: Option[TouchedFiles] = None): Int = {
+      updates: Option[DataFrame], claimed: DataFrame, keyCols: Seq[String],
+      readVersion: Int, known: Option[TouchedFiles]): Int = {
     val m = manifest(path, readVersion)
+    val op = if (updates.isEmpty) "delete" else "merge"
     // a partition-layout table's rows must land in their directories —
     // the batch has to SAY where (nulling them into the default
     // partition would silently strand rows outside every prune)
-    m.parts.foreach(c => require(updates.schema.fieldNames.contains(c),
-      s"LakeTable: merge batch is missing partition column $c"))
+    for (u <- updates; c <- m.parts) require(u.schema.fieldNames.contains(c),
+      s"LakeTable: merge batch is missing partition column $c")
     // claimed keys = the upsert batch's ∪ the delete batch's: ONE
     // touched-file discovery, ONE rewrite, ONE commit for a statement
     // that carries both (a key in both sets resolves update-wins — the
     // delete removes the snapshot row, the update batch re-adds it)
-    val keys = deleteKeys.foldLeft(updates.select(keyCols.map(col): _*))(
-      (u, d) => u.unionByName(d.select(keyCols.map(col): _*)))
-    val touched = touchedFiles(spark, m, keys, keyCols, known)
+    val touched = touchedFiles(spark, m, claimed, keyCols, known)
     val (touchedEntries, carried) = m.files.partition(e => touched(LakeIo.normKey(e.path)))
-    // rewrite = surviving rows of touched files (minus their equality-
-    // delete sidecars — a deleted row must not resurrect into the
-    // rewrite) + the whole batch
-    val rewriteDir = s"$path/data/merge-v${readVersion + 1}-${java.util.UUID.randomUUID()}"
-    val survivors =
-      if (touchedEntries.isEmpty) updates
-      else readSnapshot(spark, path, m, touchedEntries)
-        .join(broadcast(keys), keyCols, "left_anti")
-        .unionByName(updates, allowMissingColumns = true)
+    // rewrite = surviving rows of touched files (read with the MANIFEST
+    // schema and minus their sidecars — a deleted row must not resurrect
+    // into the rewrite) + the whole batch
+    val survivors = if (touchedEntries.isEmpty) None
+      else Some(readSnapshot(spark, path, m, touchedEntries)
+        .join(broadcast(claimed), keyCols, "left_anti"))
     // schema evolution first: a batch-added column needs its physical
     // name allocated BEFORE the write (fresh if its name is retired)
-    val newSchema = evolveSchema(m.schema, updates.schema)
+    val newSchema = updates.fold(m.schema)(u => evolveSchema(m.schema, u.schema))
     val newColMap = m.colMap ++ allocPhysical(m,
       newSchema.fieldNames.filterNot(m.schema.fieldNames.contains).toSeq,
       readVersion + 1)
-    // a CLUSTERED table's rewrite re-routes every row to its hash
-    // bucket, so the part-number→bucket mapping (and the exchange-free
-    // join it serves) SURVIVES the merge; only touched buckets produce
-    // files — still O(batch + touched)
-    writeData(
-      if (m.clusterBuckets > 0)
-        survivors.repartition(m.clusterBuckets, m.keys.map(col): _*)
-      else survivors,
-      rewriteDir, m.parts, newColMap, m.clusterBuckets, m.keys)
+    val added = (survivors ++ updates).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .fold(Seq.empty[FileEntry]) { rows =>
+        val rewriteDir = batchDir(path, op, readVersion + 1)
+        // a CLUSTERED table's rewrite re-routes every row to its hash
+        // bucket, so the part-number→bucket mapping (and the exchange-free
+        // join it serves) SURVIVES the merge; only touched buckets produce
+        // files — still O(batch + touched)
+        writeData(
+          if (m.clusterBuckets > 0) rows.repartition(m.clusterBuckets, m.keys.map(col): _*)
+          else rows,
+          rewriteDir, m.parts, newColMap, m.clusterBuckets, m.keys)
+        entriesFor(spark, rewriteDir, m.keys, newSchema, m.parts,
+          m.clusterBuckets > 0, bloomColsOf(m, newSchema))
+      }
     testInterleave()
-    val added = entriesFor(spark, rewriteDir, m.keys, newSchema, m.parts,
-      m.clusterBuckets > 0, bloomColsOf(m, newSchema))
     // churn record: removed = the touched files, added = the rewrite —
-    // O(batch-touched files) metadata, never the carried 99.99%
-    commitDelta(path, m.copy(version = readVersion + 1, op = "merge",
+    // O(batch-touched files) metadata, never the carried 99.99%. A
+    // delete that touched nothing still commits its EMPTY record
+    // (idempotent replays)
+    commitDelta(path, m.copy(version = readVersion + 1, op = op,
       schemaDdl = newSchema.toDDL, files = carried ++ added, colMap = newColMap),
       touchedEntries.map(_.path), added)
     readVersion + 1
@@ -1408,31 +1419,35 @@ object LakeTable {
     * latest-by-key election — see `stream_lake_sink`). */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], maxRetries: Int = 3): Int =
-    mergeDelete(spark, path, updates, None, keyCols, maxRetries)
+    mergeDelete(spark, path, Some(updates), None, keyCols, maxRetries)
 
-  /** [[merge]] and [[delete]] as ONE atomic version — the SQL MERGE
-    * statement shape, where `WHEN MATCHED THEN DELETE` can ride
-    * alongside an insert/update batch and must not publish two versions
-    * (a crash between them would leave a half-applied statement, and
-    * concurrent readers would observe the intermediate state; ADVICE
-    * r15). `deleteKeys` rows vanish from the snapshot unless the same
-    * key also appears in `updates` (update wins; the SQL lowering keeps
-    * the two disjoint by construction — a MERGE row takes exactly one
-    * action). Same OCC rebase/conflict protocol as [[merge]], with the
-    * conflict classification claiming BOTH key sets. `known` (the SQL
-    * lowering's classified touched files) replaces the discovery scan
-    * while the attempt reads the version it was classified against; a
-    * rebased attempt rediscovers. */
-  def mergeDelete(spark: SparkSession, path: String, updates: DataFrame,
+  /** [[merge]] and [[delete]] as ONE atomic version — the one
+    * copy-on-write kernel behind both, and the SQL MERGE statement shape,
+    * where `WHEN MATCHED THEN DELETE` can ride alongside an insert/update
+    * batch and must not publish two versions (a crash between them would
+    * leave a half-applied statement, and concurrent readers would
+    * observe the intermediate state; ADVICE r15). `deleteKeys` rows
+    * vanish from the snapshot unless the same key also appears in
+    * `updates` (update wins; the SQL lowering keeps the two disjoint by
+    * construction — a MERGE row takes exactly one action). At least one
+    * of the two is given; without `updates` the version is a `delete`.
+    * Same OCC rebase/conflict protocol as [[merge]], with the conflict
+    * classification claiming BOTH key sets. `known` (the SQL lowering's
+    * classified touched files) replaces the discovery scan while the
+    * attempt reads the version it was classified against; a rebased
+    * attempt rediscovers. */
+  def mergeDelete(spark: SparkSession, path: String, updates: Option[DataFrame],
       deleteKeys: Option[DataFrame], keyCols: Seq[String],
       maxRetries: Int = 3, known: Option[TouchedFiles] = None): Int = {
-    require(latestVersion(path) > 0, s"LakeTable: cannot merge into missing table at $path")
-    val claimed = deleteKeys.foldLeft(updates.select(keyCols.map(col): _*))(
-      (u, d) => u.unionByName(d.select(keyCols.map(col): _*)))
+    require(latestVersion(path) > 0,
+      s"LakeTable: cannot merge into or delete from missing table at $path")
+    require(updates.nonEmpty || deleteKeys.nonEmpty, "LakeTable: nothing to merge or delete")
+    val claimed = (updates ++ deleteKeys).map(_.select(keyCols.map(col): _*))
+      .reduce(_ unionByName _)
     var attempt = 0
     while (true) {
       val readV = latestVersion(path)
-      try return attemptMerge(spark, path, updates, keyCols, readV, deleteKeys, known)
+      try return attemptMerge(spark, path, updates, claimed, keyCols, readV, known)
       catch {
         case e: IllegalStateException if e.getMessage.contains("conflict") =>
           attempt += 1
@@ -1468,11 +1483,11 @@ object LakeTable {
             case Right(false) => // disjoint: rebase and retry
             case conflicted =>
               val cme = new java.util.ConcurrentModificationException(
-                s"LakeTable: concurrent merge at $path touched overlapping keys " +
+                s"LakeTable: concurrent commit at $path touched overlapping keys " +
                   (if (conflicted.isLeft) "(or evolved the schema underneath us) " else "") +
                   s"(our read version $readV, theirs landed through $nowV) — " +
                   "latest-wins order between racing same-key writers is arbitrary; " +
-                  "re-invoke merge against the new snapshot to decide")
+                  "re-invoke against the new snapshot to decide")
               conflicted.left.foreach(cme.initCause)
               throw cme
           }
@@ -1496,7 +1511,7 @@ object LakeTable {
     m.schema.foreach(f => require(types.get(f.name).contains(f.dataType.catalogString),
       s"LakeTable: append batch column ${f.name} is ${types.getOrElse(f.name, "missing")}, " +
         s"the table has ${f.dataType.catalogString}"))
-    val dir = s"$path/data/append-v${current + 1}-${java.util.UUID.randomUUID()}"
+    val dir = batchDir(path, "append", current + 1)
     writeData(df.select(m.schema.fieldNames.toIndexedSeq.map(col): _*), dir, m.parts,
       m.colMap, m.clusterBuckets, m.keys)
     val added = entriesFor(spark, dir, m.keys, m.schema, m.parts,
@@ -1508,43 +1523,19 @@ object LakeTable {
 
   /** Copy-on-write DELETE: snapshot rows whose keys appear in `keys`
     * vanish from the NEW version; only files containing a matched key
-    * are rewritten. Note the time-travel/erasure distinction a real
-    * lake must manage: older versions still reference the untouched
-    * pre-delete files, so the rows remain READABLE via as-of until
-    * [[vacuum]] expires those versions — the Delta GDPR recipe is
-    * exactly DELETE + VACUUM, and LakeTableSpec pins both halves.
-    * `known` as for [[mergeDelete]]. */
+    * are rewritten. It is [[mergeDelete]] with no upsert batch, so it
+    * takes the same OCC rebase/conflict protocol: losing the publish race
+    * to a writer of disjoint keys rebases and lands, an overlapping key
+    * throws [[java.util.ConcurrentModificationException]]. A delete that
+    * matches nothing still commits an empty version. Note the
+    * time-travel/erasure distinction a real lake must manage: older
+    * versions still reference the untouched pre-delete files, so the
+    * rows remain READABLE via as-of until [[vacuum]] expires those
+    * versions — the Delta GDPR recipe is exactly DELETE + VACUUM, and
+    * LakeTableSpec pins both halves. `known` as for [[mergeDelete]]. */
   def delete(spark: SparkSession, path: String, keys: DataFrame,
-      keyCols: Seq[String], known: Option[TouchedFiles] = None): Int = {
-    val current = latestVersion(path)
-    require(current > 0, s"LakeTable: cannot delete from missing table at $path")
-    val m = manifest(path, current)
-    val keyRows = keys.select(keyCols.map(col): _*)
-    val touched = touchedFiles(spark, m, keyRows, keyCols, known)
-    val (touchedEntries, carried) = m.files.partition(e => touched(LakeIo.normKey(e.path)))
-    val added =
-      if (touchedEntries.isEmpty) Seq.empty[FileEntry]
-      else {
-        val rewriteDir = s"$path/data/delete-v${current + 1}"
-        // survivors read with the MANIFEST schema (a schema-evolving
-        // merge leaves heterogeneous files; footer-inferred reads would
-        // nondeterministically drop the evolved column — ADVICE r13),
-        // minus the files' sidecars, minus the erased keys
-        val survivors = readSnapshot(spark, path, m, touchedEntries)
-          .join(broadcast(keyRows), keyCols, "left_anti")
-        writeData(
-          if (m.clusterBuckets > 0)
-            survivors.repartition(m.clusterBuckets, m.keys.map(col): _*)
-          else survivors,
-          rewriteDir, m.parts, m.colMap, m.clusterBuckets, m.keys)
-        entriesFor(spark, rewriteDir, m.keys, m.schema, m.parts,
-          m.clusterBuckets > 0, bloomColsOf(m, m.schema))
-      }
-    // a no-op delete still commits — an EMPTY churn record (idempotent replays)
-    commitDelta(path, m.copy(version = current + 1, op = "delete",
-      files = carried ++ added), touchedEntries.map(_.path), added)
-    current + 1
-  }
+      keyCols: Seq[String], known: Option[TouchedFiles] = None): Int =
+    mergeDelete(spark, path, None, Some(keys), keyCols, known = known)
 
   /** Merge-on-read DELETE (the Iceberg v2 equality-delete / Delta
     * deletion-vector shape): the erased keys are written ONCE as a
@@ -1573,7 +1564,7 @@ object LakeTable {
     val flipped =
       if (touched.isEmpty) Seq.empty[FileEntry]
       else {
-        val dvDir = s"$path/data/dv-v${current + 1}-${java.util.UUID.randomUUID()}"
+        val dvDir = batchDir(path, "dv", current + 1)
         keyRows.coalesce(1).write.mode("overwrite").parquet(dvDir)
         m.files.filter(e => touched(LakeIo.normKey(e.path)))
           .map(e => e.copy(dvs = e.dvs :+ dvDir))
@@ -1668,7 +1659,7 @@ object LakeTable {
     val flipped =
       if (touched.isEmpty) Seq.empty[FileEntry]
       else {
-        val dvDir = s"$path/data/dvpos-v${m.version + 1}-${java.util.UUID.randomUUID()}"
+        val dvDir = batchDir(path, "dvpos", m.version + 1)
         doomed.coalesce(1).write.mode("overwrite").parquet(dvDir)
         m.files.filter(e => touched(LakeIo.normKey(e.path)))
           .map { e =>
@@ -1836,7 +1827,7 @@ object LakeTable {
         "or keep it and CALL recluster instead")
     zCols.foreach(c => require(m.schema.fieldNames.contains(c),
       s"LakeTable: zorder column $c is not in the schema"))
-    val dir = s"$path/data/zorder-v${current + 1}"
+    val dir = batchDir(path, "zorder", current + 1)
     writeLayout(read(spark, path, Some(current)), zCols, targetFiles, "zorder",
       dir, m.parts)
     commit(path, m.copy(version = current + 1, op = "zorder",
@@ -1859,7 +1850,7 @@ object LakeTable {
     val m = manifest(path, current)
     require(m.parts.isEmpty,
       "LakeTable: clustered layout and a partition-directory layout are exclusive")
-    val dir = s"$path/data/recluster-v${current + 1}"
+    val dir = batchDir(path, "recluster", current + 1)
     writeData(read(spark, path, Some(current))
       .repartition(n, m.keys.map(col): _*), dir, m.parts,
       clusterBuckets = n, clusterKeys = m.keys)
@@ -1883,7 +1874,7 @@ object LakeTable {
     val current = latestVersion(path)
     require(current > 0, s"LakeTable: cannot compact missing table at $path")
     val m = manifest(path, current)
-    val dir = s"$path/data/compact-v${current + 1}"
+    val dir = batchDir(path, "compact", current + 1)
     // a CLUSTERED table compacts back to its declared bucket count —
     // hash-routed so the bucket mapping (and the exchange-free join it
     // serves) survives the rewrite; targetFiles only applies to
@@ -1935,7 +1926,7 @@ object LakeTable {
     val scoped = m.files.filter(e =>
       partEquals.forall { case (c, v) => e.part.get(c).contains(v) })
     if (scoped.isEmpty) return current // no matching partition: no commit
-    val dir = s"$path/data/compactw-v${current + 1}"
+    val dir = batchDir(path, "compactw", current + 1)
     // read ONLY the scoped entries — sidecars apply inside the scan, so
     // the rewrite materializes them away for exactly this scope
     writeData(readSnapshot(spark, path, m, scoped)

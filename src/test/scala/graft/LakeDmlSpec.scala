@@ -438,6 +438,78 @@ class LakeDmlSpec extends SparkSpec {
     assert(stateOf("dml_jobs") == expect)
   }
 
+  /** The optimized plan of every SQL execution `body` runs. */
+  private def executedPlans(body: => Unit): Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  test("the keyed refresh MERGE classifies against the target's key column alone") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val root = multiFileTable("keyscan", 200)
+    ((3L to 200L by 37).map(k => (k, "M", k * 2)) :+ ((1001L, "N", 1L))).toDF("k", "s", "v")
+      .createOrReplaceTempView("dml_keyscan_src")
+    val v0 = LakeTable.latestVersion(s"$root/t")
+    val plans = executedPlans(spark.sql("""MERGE INTO dml_keyscan.t AS tg
+      USING dml_keyscan_src AS src ON tg.k = src.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"""))
+    // the pass that materializes the batch observes its count and files;
+    // the source is a local relation, so every lake scan in it is the
+    // target's classification read
+    val batches = plans.filter(_.exists(_.isInstanceOf[CollectMetrics]))
+    val scans = batches.flatMap(_.collect { case s: DataSourceV2ScanRelation => s })
+    assert(scans.nonEmpty, plans.map(_.treeString).mkString("\n"))
+    scans.foreach(s => assert(s.output.map(_.name) == Seq("k"),
+      s"classification read ${s.output.map(_.name).mkString(", ")}, not the key alone"))
+    // UPDATE SET * and INSERT * write every column alike: no per-row
+    // choice between the two actions' values
+    assert(!batches.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.CaseWhen]))),
+      batches.map(_.treeString).mkString("\n"))
+    assert(stateOf("dml_keyscan") == ((1L to 200L).map(k =>
+      if (k % 37 == 3) (k, "M", k * 2) else (k, "base", k)) :+ ((1001L, "N", 1L))).toSet)
+    assert(LakeTable.latestVersion(s"$root/t") == v0 + 1)
+  }
+
+  test("job budget for a MERGE whose condition reads the target row") {
+    import spark.implicits._
+    val root = multiFileTable("tgtjobs", 400)
+    def merge(src: String): Unit = spark.sql(s"""MERGE INTO dml_tgtjobs.t AS tg
+      USING $src AS src ON tg.k = src.k
+      WHEN MATCHED AND tg.v < src.v THEN UPDATE SET s = src.s""")
+    // warm-up statement: the counted one must not pay first-use costs
+    (1L to 400L by 50).map(k => (k, "W", k + 1)).toDF("k", "s", "v")
+      .createOrReplaceTempView("dml_tgtjobs_warm")
+    merge("dml_tgtjobs_warm")
+    // scattered keys (every file touched); odd ones fail the condition
+    (3L to 400L by 37).map(k => (k, "M", if (k % 2 == 0) k + 1 else k - 1)).toDF("k", "s", "v")
+      .createOrReplaceTempView("dml_tgtjobs_src")
+    val v0 = LakeTable.latestVersion(s"$root/t")
+    val jobs = sparkJobSites(merge("dml_tgtjobs_src"))
+    assert(jobs.size <= 7,
+      s"target-referencing MERGE ran ${jobs.size} Spark jobs (budget 7):\n${jobs.mkString("\n")}")
+    assert(LakeTable.latestVersion(s"$root/t") == v0 + 1)
+    assert(stateOf("dml_tgtjobs") == (1L to 400L).map(k =>
+      if (k % 37 == 3 && k % 2 == 0) (k, "M", k)
+      else if (k % 50 == 1) (k, "W", k) else (k, "base", k)).toSet)
+  }
+
   test("a commit landing after classification forces rediscovery, never the stale touched set") {
     import spark.implicits._
     val root = setupCatalog("occ")
@@ -472,7 +544,7 @@ class LakeDmlSpec extends SparkSpec {
     // ignored, for the DV delete as for the merge
     val stale = LakeTable.TouchedFiles(1, Set("no-such-file"))
     LakeTable.deleteDV(spark, p, Seq(9L).toDF("k"), Seq("k"), Some(stale))
-    LakeTable.mergeDelete(spark, p, Seq((10L, "C", 100L)).toDF("k", "s", "v"), None,
+    LakeTable.mergeDelete(spark, p, Some(Seq((10L, "C", 100L)).toDF("k", "s", "v")), None,
       Seq("k"), known = Some(stale))
     assert(stateOf("dml_occ") ==
       (expect.filterNot(_._1 == 9L).filterNot(_._1 == 10L) + ((10L, "C", 100L))))

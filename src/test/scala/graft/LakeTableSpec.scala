@@ -668,6 +668,65 @@ class LakeTableSpec extends SparkSpec {
     assert(rows(LakeTable.read(spark, p).select("k", "s", "v")).contains((70L, "C", 1L)))
   }
 
+  test("delete rides the merge kernel's OCC: a disjoint competitor rebases, an overlapping one throws") {
+    import spark.implicits._
+    val p = freshPath("occ_delete")
+    LakeTable.create(spark, p,
+      (1L to 100L).map(k => (k, "base", k)).toDF("k", "s", "v"), Seq("k"))
+    // a competing merge lands inside the delete's read-to-commit window
+    def racing(competitor: org.apache.spark.sql.DataFrame)(body: => Unit): Unit = {
+      var fired = false
+      LakeTable.testInterleave = () => if (!fired) {
+        fired = true
+        LakeTable.merge(spark, p, competitor, Seq("k"))
+        ()
+      }
+      try body finally LakeTable.testInterleave = () => ()
+      assert(fired, "the competing commit never landed inside the delete")
+    }
+    racing(Seq((200L, "B", 200L)).toDF("k", "s", "v")) {
+      assert(LakeTable.delete(spark, p, Seq(5L).toDF("k"), Seq("k")) == 3,
+        "the rebased delete should land as v3")
+    }
+    val afterDisjoint = (1L to 100L).filterNot(_ == 5L).map(k => (k, "base", k)).toSet +
+      ((200L, "B", 200L))
+    assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == afterDisjoint)
+    racing(Seq((70L, "C", 1L)).toDF("k", "s", "v")) {
+      intercept[java.util.ConcurrentModificationException] {
+        LakeTable.delete(spark, p, Seq(70L).toDF("k"), Seq("k"))
+      }
+    }
+    // the winner's commit stands; the refused delete committed nothing
+    assert(LakeTable.latestVersion(p) == 4)
+    assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) ==
+      afterDisjoint - ((70L, "base", 70L)) + ((70L, "C", 1L)))
+  }
+
+  test("table services write a fresh directory: a file under data/<op>-v<next> is left alone") {
+    import spark.implicits._
+    val base = (1L to 60L).map(k => (k, if (k % 2 == 0) "a" else "b", k * 10)).toDF("k", "seg", "v")
+    val services: Seq[(String, Seq[String], String => Int)] = Seq(
+      ("zorder", Nil, p => LakeTable.rezorder(spark, p, Seq("k", "v"), targetFiles = 2)),
+      ("recluster", Nil, p => LakeTable.recluster(spark, p, 2)),
+      ("compact", Nil, p => LakeTable.compact(spark, p, 2)),
+      ("compactw", Seq("seg"), p => LakeTable.compactWhere(spark, p, Map("seg" -> "a"), 2)))
+    services.foreach { case (op, parts, run) =>
+      val p = freshPath(s"fresh_dir_$op")
+      LakeTable.create(spark, p, base, Seq("k"), nBuckets = 4, partitionBy = parts)
+      // another writer's batch for the same next version, never committed
+      val planted = new java.io.File(s"$p/data/$op-v${LakeTable.latestVersion(p) + 1}")
+      Seq((999L, "a", 9L)).toDF("k", "seg", "v").write.parquet(planted.getPath)
+      val plantedFiles = planted.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+      assert(plantedFiles.nonEmpty)
+      run(p)
+      plantedFiles.foreach(f => assert(f.exists, s"$op deleted another writer's file $f"))
+      val got = LakeTable.read(spark, p).select("k", "seg", "v").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+      assert(got == base.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet,
+        s"$op changed the table's rows")
+    }
+  }
+
   test("delete after a schema-evolving merge keeps the evolved column (ADVICE r13)") {
     import spark.implicits._
     val p = freshPath("del_evolve")
@@ -1403,7 +1462,7 @@ class LakeTableSpec extends SparkSpec {
     LakeTable.create(spark, p,
       (1L to 30L).map(k => (k, "base", k)).toDF("k", "s", "v"), Seq("k"))
     val v = LakeTable.mergeDelete(spark, p,
-      Seq((2L, "upd", 22L), (31L, "ins", 310L), (5L, "tie", 50L)).toDF("k", "s", "v"),
+      Some(Seq((2L, "upd", 22L), (31L, "ins", 310L), (5L, "tie", 50L)).toDF("k", "s", "v")),
       Some(Seq(Tuple1(3L), Tuple1(4L), Tuple1(5L)).toDF("k")), Seq("k"))
     assert(v == 2, "one statement, one version")
     assert(LakeTable.latestVersion(p) == 2)
