@@ -558,7 +558,7 @@ object SimilarityOps {
     val spark2 = spark
     import spark2.implicits._
     centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }.toSeq
+      .map { case (c, i) => (i, c.toSeq, sqNorm(c)) }.toSeq
       .toDF("cell", "cvec", "cnorm")
   }
 
@@ -1099,9 +1099,12 @@ object SimilarityOps {
     val spark2 = spark
     import spark2.implicits._
     arr.zipWithIndex.flatMap { case (cells, b) =>
-      cells.zipWithIndex.map { case (c, i) => (b, i, c.toSeq, c.map(x => x * x).sum) }
+      cells.zipWithIndex.map { case (c, i) => (b, i, c.toSeq, sqNorm(c)) }
     }.toSeq.toDF("block", "cell", "cvec", "cnorm")
   }
+
+  /** ‖c‖² as every quantizer frame stores it (`cnorm`). */
+  private def sqNorm(c: Array[Double]): Double = c.map(x => x * x).sum
 
   /** Explode a vector column into its PQ sub-blocks. */
   private def subBlocks(df: DataFrame, vecCol: String, sub: Int): DataFrame =
@@ -1131,30 +1134,49 @@ object SimilarityOps {
           " s -> s.code)").as("codes"))
     }
 
-  /** IVF+PQ ANN top-k — the canonical large-corpus serving shape (FAISS
-    * IVFPQ, RESIDUAL-encoded since r9): IVF probes bound the candidate
-    * set sublinearly, codes quantize each vector's residual re its
-    * coarse centroid, and the asymmetric-distance tables use the FAISS
-    * precomputed-tables decomposition — a query-independent per-cell
-    * table plus a cell-independent per-query table, each packed as ONE
-    * broadcastable array of blocks·cells slots — so candidates are
-    * ranked from their 8-code representation ALONE via two fused lookup
-    * walks per candidate inside whole-stage codegen (no per-block row
-    * explosion, no per-(query,cell) table build), and only the bounded
-    * shortlist pays an exact-cosine re-rank against real vectors. At 100 TB the full-precision corpus
-    * stays on disk; the serving working set is the code table at a ~32x
-    * compression. Output contract matches the other ann entries;
-    * SimilaritySpec gates planted-recall and shortlist behavior. */
+  /** The frozen IVF+PQ quantizer as driver arrays, each indexed by id:
+    * the coarse centroids with their squared norms as the cell table
+    * stores them (`cnorm`, never recomputed), and the residual PQ
+    * codebook, (block, code) → sub-vector. Quantizer-sized (≤ 4096 cells
+    * × dim, 8 × 16 codes), so the append encode and the serve plan use
+    * it on the driver and in task closures instead of joining frames of
+    * it. */
+  final case class Quantizer(
+      centroids: Array[Array[Double]],
+      cnorms: Array[Double],
+      codebook: Array[Array[Array[Double]]]) {
+    def nCells: Int = centroids.length
+    private[graft] lazy val codeNorms: Array[Array[Double]] = codebook.map(_.map(sqNorm))
+  }
+
+  /** A (cell, cvec, cnorm) cell table collected into [[Quantizer]]
+    * order: row i is cell i. */
+  private[graft] def cellArrays(cells: DataFrame): (Array[Array[Double]], Array[Double]) = {
+    val rows = cells.select(col("cell"), col("cvec"), col("cnorm")).collect()
+      .sortBy(_.getInt(0))
+    require(rows.map(_.getInt(0)).toSeq == rows.indices,
+      s"IVF: cell ids are not 0..${rows.length - 1}")
+    (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
+  }
+
   /** The persistable IVF+PQ serving index: the probe-able cell table,
-    * the codes-joined corpus assignment, and the (tiny) residual PQ
-    * codebook — exactly the state a build-once/serve-many deployment
-    * writes at index time and every serving session loads
+    * the codes-joined corpus assignment, and the quantizer on the driver
+    * — exactly the state a build-once/serve-many deployment writes at
+    * index time and every serving session loads
     * ([[graft.sources.AnnIndexStore]] is the parquet round-trip). */
   final case class IvfPqIndex(
       cells: DataFrame,
       withCodes: DataFrame,
-      codebook: Array[Array[Array[Double]]],
-      nCells: Int)
+      quantizer: Quantizer) {
+    def nCells: Int = quantizer.nCells
+    def codebook: Array[Array[Array[Double]]] = quantizer.codebook
+  }
+
+  /** The session-built coarse quantizer's cells as driver arrays, one
+    * collect of [[ivfIndex]]'s cached cell table per corpus snapshot
+    * ([[pqMemo]]'s key). */
+  private val cellArraysMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Double]], Array[Double])]()
 
   /** Session-built index from the corpus at `dir` (every piece served
     * from [[SessionCache]] / per-dir memos, so repeated calls are free). */
@@ -1171,38 +1193,130 @@ object SimilarityOps {
       spark, "graft_pq_index", dir)(
       assigned.filter(col("vec_id") < PlantedIdOffset).select("vec_id", "cell")
         .join(pqCodes(spark, dir), "vec_id"))
-    IvfPqIndex(cells, withCodes, pqCodebook(spark, dir), kCells)
+    // the collect runs outside the map ([[vecDim]]'s double-checked put)
+    val key = graft.SessionCache.dirKey(dir)
+    val arrays = Option(cellArraysMemo.get(key)).getOrElse {
+      val a = cellArrays(cells)
+      Option(cellArraysMemo.putIfAbsent(key, a)).getOrElse(a)
+    }
+    IvfPqIndex(cells, withCodes, Quantizer(arrays._1, arrays._2, pqCodebook(spark, dir)))
   }
 
+  /** IVF+PQ ANN top-k — the canonical large-corpus serving shape (FAISS
+    * IVFPQ, RESIDUAL-encoded since r9): IVF probes bound the candidate
+    * set sublinearly, codes quantize each vector's residual re its
+    * coarse centroid, and the asymmetric-distance tables use the FAISS
+    * precomputed-tables decomposition — a query-independent per-cell
+    * table plus a cell-independent per-query table, each packed as ONE
+    * broadcastable array of blocks·cells slots — so candidates are
+    * ranked from their 8-code representation ALONE via two fused lookup
+    * walks per candidate inside whole-stage codegen (no per-block row
+    * explosion, no per-(query,cell) table build), and only the bounded
+    * shortlist pays an exact-cosine re-rank against real vectors. At 100 TB the full-precision corpus
+    * stays on disk; the serving working set is the code table at a ~32x
+    * compression. Output contract matches the other ann entries;
+    * SimilaritySpec gates planted-recall and shortlist behavior. */
   def annTopkIvfPqRanked(spark: SparkSession, dir: String,
       queryStride: Long = 1L): DataFrame =
     ivfPqServe(spark, dir, queryStride, buildIvfPqIndex(spark, dir))
+
+  // ---- the quantizer on the driver: the append encode and the serve's
+  // probe plan. Each rule is the distributed algebra's, term for term,
+  // so cells, codes and scores stay bit-identical to an in-plan
+  // evaluation: every dot product sums left to right (the `dot_product`
+  // kernel's order), doubles compare as Spark orders them, and ties go
+  // to the lowest id (SimilaritySpec replays the frame algebra).
+
+  /** Spark's double ordering: 0.0 equals -0.0, NaN sorts above all. */
+  private def cmpDouble(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** Left-to-right dot product of a[off, off + b.length) and b — the
+    * `dot_product` kernel over `slice(a, off + 1, b.length)`. */
+  private def dotAt(a: Array[Double], off: Int, b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < b.length) { s += a(off + i) * b(i); i += 1 }
+    s
+  }
+
+  /** (cell, codes) of one vector under a frozen quantizer: the nearest
+    * cell by ‖v‖² − 2⟨v,C⟩ + cnorm ([[assignCells]]' distance), ties to
+    * the lowest cell; the residual r = v − C; per block b the code k
+    * minimizing ‖cb_k‖² − 2⟨r_b, cb_k⟩, ties to the lowest code. */
+  private[graft] def encodeVector(v: Array[Double], q: Quantizer): (Int, Array[Int]) = {
+    val vn = dot(v, v)
+    var cell = 0
+    var best = 0.0
+    var c = 0
+    while (c < q.nCells) {
+      val d = vn - dot(v, q.centroids(c)) * 2.0 + q.cnorms(c)
+      if (c == 0 || cmpDouble(d, best) < 0) { best = d; cell = c }
+      c += 1
+    }
+    val cv = q.centroids(cell)
+    val r = Array.tabulate(v.length)(i => v(i) - cv(i))
+    val codes = Array.tabulate(q.codebook.length) { b =>
+      val (cb, norms) = (q.codebook(b), q.codeNorms(b))
+      val off = b * cb(0).length
+      var code = 0
+      var bestD = 0.0
+      var k = 0
+      while (k < cb.length) {
+        val d = norms(k) - dotAt(r, off, cb(k)) * 2.0
+        if (k == 0 || cmpDouble(d, bestD) < 0) { bestD = d; code = k }
+        k += 1
+      }
+      code
+    }
+    (cell, codes)
+  }
+
+  /** The `nProbe` cells a query probes, ranked by
+    * (‖q‖² − 2⟨q,C⟩ + cnorm, cell), each with __qc = −2⟨q,C⟩, the one
+    * query × cell term of the residual-ADC decomposition. */
+  private[graft] def probeCells(qv: Array[Double], q: Quantizer,
+      nProbe: Int): Array[(Int, Double)] = {
+    val qq = dot(qv, qv)
+    Array.tabulate(q.nCells) { c =>
+      val qc = dot(qv, q.centroids(c))
+      (c, qq - qc * 2.0 + q.cnorms(c), qc * -2.0)
+    }.sortWith { (a, b) =>
+      val k = cmpDouble(a._2, b._2)
+      if (k != 0) k < 0 else a._1 < b._1
+    }.take(nProbe).map(p => (p._1, p._3))
+  }
+
+  /** A query's packed T3 table: slot b·[[PqCells]] + k holds −2⟨q_b, cb_k⟩
+    * (the cell-independent half of the residual-ADC decomposition). */
+  private[graft] def pqT3(qv: Array[Double], codebook: Array[Array[Array[Double]]]): Array[Double] =
+    Array.tabulate(codebook.length * PqCells) { slot =>
+      val cb = codebook(slot / PqCells)(slot % PqCells)
+      dotAt(qv, (slot / PqCells) * cb.length, cb) * -2.0
+    }
 
   /** Encode a batch of (vec_id, vec) against a FROZEN index — nearest
     * stored cell, residual PQ codes from the stored codebook — returning
     * (vec_id, cell, codes) rows shaped exactly like `idx.withCodes`
     * (the [[graft.sources.AnnIndexStore.append]] ingestion kernel). One
-    * broadcast-join pass; no retraining, no base-corpus touch. */
+    * map over the batch with the quantizer in the task closure
+    * ([[encodeVector]]): no join, no shuffle, for any batch size; no
+    * retraining, no base-corpus touch. */
   private[graft] def encodeWithIndex(spark: SparkSession, batch: DataFrame,
       idx: IvfPqIndex): DataFrame = {
-    val sub = idx.codebook.head.head.length
-    val assigned = assignCells(batch.select(col("vec_id"), col("vec")), idx.cells)
-    val resid = assigned
-      .join(broadcast(idx.cells.select(col("cell"), col("cvec"))), "cell")
-      // the carried IVF cell must not collide with the codebook frame's
-      // own `cell` (= code id) column through the join below
-      .select(col("vec_id"), col("cell").as("ivf_cell"),
-        expr("zip_with(vec, cvec, (a, b) -> a - b)").as("rvec"))
-    subBlocks(resid, "rvec", sub)
-      .join(broadcast(codebookDf(spark, idx.codebook)), "block")
-      .withColumn("__d",
-        col("cnorm") - GraftFunctions.dotProduct(col("bvec"), col("cvec")) * 2.0)
-      .groupBy("vec_id", "ivf_cell", "block")
-      .agg(min(struct(col("__d"), col("cell"))).getField("cell").as("code"))
-      .groupBy("vec_id", "ivf_cell")
-      .agg(expr("transform(array_sort(collect_list(struct(block, code)))," +
-        " s -> s.code)").as("codes"))
-      .select(col("vec_id"), col("ivf_cell").as("cell"), col("codes"))
+    val spark2 = spark
+    import spark2.implicits._
+    val q = idx.quantizer
+    val dim = q.centroids.head.length
+    batch.select(col("vec_id"), col("vec")).as[(Long, Array[Double])]
+      .map { case (id, v) =>
+        require(v != null && v.length == dim,
+          s"IVF+PQ encode: vector $id is ${Option(v).map(_.length + "-dim").getOrElse("null")}, " +
+            s"the index is $dim-dim")
+        val (cell, codes) = encodeVector(v, q)
+        (id, cell, codes)
+      }
+      .toDF("vec_id", "cell", "codes")
   }
 
   /** Serve IVF+PQ top-k from an INDEX VALUE — session-built or loaded
@@ -1213,76 +1327,59 @@ object SimilarityOps {
     * ranking only to be silently dropped by the rerank's corpus join —
     * the exact "silently-wrong neighbors" failure the store exists to
     * prevent. Appended ids must not collide with the corpus or the
-    * planted-query (+1e6) id space. */
+    * planted-query (+1e6) id space.
+    *
+    * The query slice is collected ONCE and the probe plan is made on the
+    * driver ([[probeCells]], [[pqT3]], [[pqT2Rows]]), so no window, no
+    * cross join and no T3 aggregation runs in the plan. The plan gets
+    * small local relations: per probed cell its T2 and the
+    * (query_id, __qc) probes that reach it, T3 per query, and the
+    * queries for the rerank. The distributed part is the codes scan,
+    * the ADC scoring, the per-query shortlist and the exact rerank. */
   private[graft] def ivfPqServe(spark: SparkSession, dir: String,
       queryStride: Long, idx: IvfPqIndex,
       extraVectors: Option[DataFrame] = None): DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
     val nProbe = ivfProbes(idx.nCells)
-    val cells = idx.cells
-    val queries = withPlanted(vectors(spark, dir))
+    val qs = withPlanted(vectors(spark, dir))
       .filter(col("vec_id") >= PlantedIdOffset)
       .filter(inGateSample(col("vec_id"), queryStride))
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val l2 = GraftFunctions.dotProduct(col("qvec"), col("qvec")) -
-      GraftFunctions.dotProduct(col("qvec"), col("cvec")) * 2.0 + col("cnorm")
-    // carry −2⟨q, C_cell⟩ out of the probe scoring: it is the one
-    // query×cell term of the residual-ADC decomposition below, and it is
-    // already computed here for the probe ranking itself. The ranking
-    // key __l2 is materialized BEFORE the window: as a bare orderBy
-    // expression it would pin qvec/cvec into the window exchange (~512
-    // dead bytes per (query, cell) row on the serving hot path); as a
-    // column, pruning drops the vectors below the sort.
-    val probes = queries.join(broadcast(cells), lit(true))
-      .withColumn("__qc", GraftFunctions.dotProduct(col("qvec"), col("cvec")) * -2.0)
-      .withColumn("__l2", l2)
-      .select("query_id", "cell", "__qc", "__l2")
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__l2"), col("cell"))))
-      .filter(col("__pr") <= nProbe)
-      .select("query_id", "cell", "__qc")
-    // candidates carry (query_id, cell, vec_id, codes, −2⟨q,C⟩) — no
-    // vectors move
-    val cands = probes.join(idx.withCodes, "cell")
-      .select("query_id", "cell", "vec_id", "codes", "__qc")
+      .select(col("vec_id"), col("vec")).as[(Long, Array[Double])].collect()
+    val queries = qs.toSeq.toDF("query_id", "qvec")
     // Residual ADC via the FAISS precomputed-tables decomposition: a
     // naive residual lookup table is per (query, probed cell) — a
     // queries×nProbe×(blocks·cells) build (measured 2.6x the serving
     // cost at x10). Decompose instead:
     //   ‖q − C − r‖² = ‖q‖² + (−2⟨q,C⟩) + Σ_b ‖C_b + r_b‖² + Σ_b −2⟨q_b, r_b⟩
-    // ‖q‖² is rank-constant per query (dropped); −2⟨q,C⟩ falls out of
-    // probe scoring (`__qc`); T2[cell] = packed ‖C_b + cb‖² slots is
-    // QUERY-independent (built once per index from quantizer metadata,
-    // cells×128 doubles, broadcast); T3[query] = packed −2⟨q_b, cb⟩
-    // slots is CELL-independent (blocks·cells rows per query — the same
-    // bounded build as non-residual ADC). Per candidate the score is two
-    // fused AdcLookup walks + one scalar add, all inside codegen.
-    val dim = vecDim(spark, dir)
-    val sub = dim / PqBlocks
-    // T2 from driver-side quantizer metadata (bounded: ≤4096 cells × dim)
-    val spark2 = spark
-    import spark2.implicits._
-    val t2 = broadcast(
-      pqT2Rows(
-        cells.select(col("cell"), col("cvec")).as[(Int, Seq[Double])].collect().toSeq,
-        idx.codebook, sub)
-        .toDF("cell", "t2"))
-    val cb = codebookDf(spark, idx.codebook).select(col("block"),
-      col("cell").as("code"), col("cvec").as("codevec"))
-    val t3 = subBlocks(queries, "qvec", sub)
-      .join(broadcast(cb), "block")
-      .select(col("query_id"), (col("block") * PqCells + col("code")).as("slot"),
-        (GraftFunctions.dotProduct(col("bvec"), col("codevec")) * -2.0).as("d"))
-      .groupBy("query_id")
-      .agg(expr("transform(array_sort(collect_list(struct(slot, d))), s -> s.d)").as("t3"))
+    // ‖q‖² is rank-constant per query (dropped); −2⟨q,C⟩ rides the probe
+    // (`__qc`); T2[cell] = packed ‖C_b + cb‖² slots is QUERY-independent;
+    // T3[query] = packed −2⟨q_b, cb⟩ slots is CELL-independent. Per
+    // candidate the score is two fused AdcLookup walks + one scalar add,
+    // all inside codegen.
+    // One row per probed cell: its T2 and the (query_id, __qc) probes
+    // that reach it, so the probe join and the T2 join are one broadcast
+    // (cells × 128 doubles + queries × nProbe pairs).
+    val probed = qs.toSeq.flatMap { case (id, qv) =>
+      probeCells(qv, idx.quantizer, nProbe).map { case (cell, qc) => (cell, (id, qc)) }
+    }.groupBy(_._1)
+    val cellSide = pqT2Rows(probed.keys.toSeq.sorted.map(c => (c, idx.quantizer.centroids(c).toSeq)),
+        idx.codebook, idx.codebook.head.head.length)
+      .map { case (cell, t2) => (cell, t2, probed(cell).map(_._2)) }
+      .toDF("cell", "t2", "probes")
+    val t3 = qs.toSeq.map { case (id, qv) => (id, pqT3(qv, idx.codebook).toSeq) }
+      .toDF("query_id", "t3")
     // one row per candidate: ADC = __qc + T2-walk + T3-walk via the
     // native codegen'd [[graft.functions.AdcLookup]] kernel — the
     // earlier `aggregate()` HOF form ran interpreted per candidate (HOFs
     // sit outside whole-stage codegen), and this stream is the plan's
     // only O(queries x probed-corpus) volume (differential-tested
-    // against the HOF algebra in SimilaritySpec)
-    val approx = cands
+    // against the HOF algebra in SimilaritySpec); candidates carry
+    // (query_id, vec_id, codes, −2⟨q,C⟩, T2) — no vectors move
+    val approx = idx.withCodes.join(broadcast(cellSide), "cell")
+      .select(col("vec_id"), col("codes"), col("t2"), inline(col("probes")))
+      .withColumnsRenamed(Map("_1" -> "query_id", "_2" -> "__qc"))
       .join(broadcast(t3), "query_id")
-      .join(t2, "cell")
       .select(col("query_id"), col("vec_id"),
         (col("__qc")
           + GraftFunctions.adcLookup(col("codes"), col("t2"), PqCells)
@@ -1370,10 +1467,10 @@ object SimilarityOps {
     // separate plans, each re-running the corpus scan + filter.
     val batch = appendBatch(spark, dir).localCheckpoint()
     graft.sources.AnnIndexStore.write(spark, dir, path)
-    // the ingest client holds the loaded index across appends (cells +
-    // codebook are frozen at write) instead of re-collecting the
-    // codebook per batch; serve below still reloads from the STORE —
-    // that reload is the entry's point
+    // the ingest client holds the loaded index across appends; this read
+    // loads cells + codebook from parquet (once per build — they are
+    // frozen at write), and serve below reloads the codes from the
+    // STORE — that reload is the entry's point
     val loaded = graft.sources.AnnIndexStore.read(spark, dir, path)
     graft.sources.AnnIndexStore.append(spark, dir, path, batch, Some(loaded))
     val ranked = graft.sources.AnnIndexStore.serve(spark, dir, path, st)
@@ -1512,8 +1609,7 @@ object SimilarityOps {
     * plus the planted twins encoded through the FROZEN index via
     * [[encodeWithIndex]] — the store-append kernel reused, so the twins
     * arrive exactly as late-indexed vectors would in production. Cached
-    * per (dir, snapshot): the encode is one broadcast pass over n/25
-    * rows. */
+    * per (dir, snapshot): the encode is one map over n/25 rows. */
   private def knnGraphCodes(spark: SparkSession, dir: String,
       idx: IvfPqIndex): DataFrame =
     graft.SessionCache.cachedDirView(spark, "graft_knn_codes", dir) {
@@ -1584,8 +1680,7 @@ object SimilarityOps {
     val spark2 = spark
     import spark2.implicits._
     val t2 = broadcast(
-      pqT2Rows(
-        cells.select(col("cell"), col("cvec")).as[(Int, Seq[Double])].collect().toSeq,
+      pqT2Rows(idx.quantizer.centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) },
         idx.codebook, sub)
         .toDF("cell", "t2"))
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.similarity.SimilarityOps
-import graft.similarity.SimilarityOps.IvfPqIndex
+import graft.similarity.SimilarityOps.{IvfPqIndex, Quantizer}
 
 /** Cross-SESSION persistence for the IVF+PQ serving index — the piece
   * that turns the per-JVM [[graft.SessionCache]] build-once/serve-many
@@ -21,7 +21,8 @@ import graft.similarity.SimilarityOps.IvfPqIndex
   *   - `codebook.parquet` (block, code, cvec)     — residual PQ codebook
   *   - `codes` — [[LakeTable]] (vec_id, cell, codes) keyed on vec_id,
   *     the 8-byte/vector corpus; its table properties record the corpus
-  *     snapshot and the quantizer sizes (nCells, blocks, codes)
+  *     snapshot, the build id and the quantizer sizes (nCells, blocks,
+  *     codes)
   *   - `appended_vectors` — [[LakeTable]] (vec_id, vec) keyed on
   *     vec_id: full vectors of appended batches (the exact-rerank side
   *     for ids the live corpus doesn't hold)
@@ -33,7 +34,10 @@ import graft.similarity.SimilarityOps.IvfPqIndex
   * leaves unreferenced files no read sees and the next
   * [[compactIndexFiles]]/[[retract]] vacuums away. [[write]] publishes
   * with the codes table's first append (version 2): a crash anywhere
-  * before it leaves no readable store.
+  * before it leaves no readable store. Because cells/codebook never
+  * change within a build, [[read]] loads them once per (path, build id)
+  * as driver arrays ([[SimilarityOps.Quantizer]]); later reads, appends
+  * and serves of that build run no job for them.
   *
   * Staleness: the `snapshot` property records [[graft.Tables.snapshot]]
   * of the embeddings table at WRITE time; [[read]] recomputes it and
@@ -81,12 +85,47 @@ object AnnIndexStore {
       cells.zipWithIndex.map { case (c, k) => (b, k, c.toSeq) }
     }.toSeq.toDF("block", "code", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook.parquet")
+    val build = java.util.UUID.randomUUID().toString
     LakeTable.createEmpty(appendedTable(path), VectorSchema, Seq("vec_id"))
     LakeTable.createEmpty(codesTable(path), idx.withCodes.schema, Seq("vec_id"),
       props = Map("snapshot" -> graft.Tables.snapshot(s"$dataDir/embeddings.parquet"),
+        "build" -> build,
         "nCells" -> idx.nCells.toString, "blocks" -> idx.codebook.length.toString,
         "codes" -> idx.codebook.head.length.toString))
     LakeTable.append(spark, codesTable(path), idx.withCodes)
+  }
+
+  /** The frozen quantizer last loaded per store path, with the build id
+    * its codes table was stamped with: cells and codebook are write-once
+    * per build, so one load from parquet serves every later read, append
+    * and serve of that build. A rebuild stamps a new id, which misses and
+    * replaces the entry; one entry per path bounds the memo. */
+  private val quantizers =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Quantizer)]()
+
+  private def quantizer(spark: SparkSession, path: String, build: String,
+      nCells: Int, blocks: Int, codes: Int): Quantizer = {
+    val hit = quantizers.get(path)
+    if (hit != null && hit._1 == build) hit._2
+    else {
+      // the loads run outside the map (a Spark job inside
+      // computeIfAbsent blocks every thread hashing to the same bin)
+      val (centroids, cnorms) = SimilarityOps.cellArrays(
+        spark.read.schema(CellsSchema).parquet(s"$path/cells.parquet"))
+      require(centroids.length == nCells,
+        s"AnnIndexStore: cells has ${centroids.length} rows, expected $nCells")
+      val cbRows = spark.read.schema(CodebookSchema).parquet(s"$path/codebook.parquet")
+        .collect()
+      require(cbRows.length == blocks * codes,
+        s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${blocks * codes}")
+      val codebook = Array.ofDim[Array[Double]](blocks, codes)
+      cbRows.foreach { r =>
+        codebook(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
+      }
+      val q = Quantizer(centroids, cnorms, codebook)
+      quantizers.put(path, (build, q))
+      q
+    }
   }
 
   /** Load a persisted index for serving against `dataDir`. */
@@ -103,20 +142,11 @@ object AnnIndexStore {
           s"(stored snapshot $snapshot, live $liveSnap) — serving it would " +
           "return wrong neighbors; rebuild with write(), or pass " +
           "allowStale=true for forensics only")
-    val (nCells, blocks, codes) = (prop("nCells").toInt, prop("blocks").toInt, prop("codes").toInt)
-    val cbRows = spark.read.schema(CodebookSchema).parquet(s"$path/codebook.parquet")
-      .collect()
-    require(cbRows.length == blocks * codes,
-      s"AnnIndexStore: codebook has ${cbRows.length} rows, expected ${blocks * codes}")
-    val codebook = Array.ofDim[Array[Double]](blocks, codes)
-    cbRows.foreach { r =>
-      codebook(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-    }
     IvfPqIndex(
       spark.read.schema(CellsSchema).parquet(s"$path/cells.parquet"),
       LakeTable.readSnapshot(spark, codesTable(path), m, m.files),
-      codebook,
-      nCells)
+      quantizer(spark, path, prop("build"),
+        prop("nCells").toInt, prop("blocks").toInt, prop("codes").toInt))
   }
 
   /** Serve top-k from a LOADED index (queries + exact-rerank vectors
@@ -139,8 +169,10 @@ object AnnIndexStore {
     * cell and PQ-encode its residual with the STORED codebook (no
     * retrain — the quantizer is frozen at build time, which is what
     * makes the operation an append instead of a rebuild), then append
-    * the (vec_id, cell, codes) rows to the codes table. One broadcast
-    * join pass over the batch; the base corpus is never touched. The
+    * the (vec_id, cell, codes) rows to the codes table. One map over
+    * the batch with the driver's copy of the quantizer
+    * ([[SimilarityOps.encodeWithIndex]]): no join and no shuffle, and
+    * the base corpus is never touched. The
     * quantizer drifts from the data distribution as appends accumulate —
     * production systems rebuild when recall sags; [[read]]'s snapshot
     * gate is deliberately left on the BUILD corpus so a
@@ -151,20 +183,19 @@ object AnnIndexStore {
     append(spark, dataDir, path, batch0, None)
 
   /** [[append]] with an optionally pre-LOADED index — the real client
-    * shape: a serving/ingest process holds the loaded quantizer
-    * (cells + codebook are immutable after write()) and appends many
-    * batches against it, instead of re-collecting the codebook from
-    * parquet per batch. The caller is responsible for having loaded it
-    * via [[read]] against the same store (which runs the staleness
-    * gate). */
+    * shape: a serving/ingest process holds the loaded index (cells +
+    * codebook are immutable after write()) and appends many batches
+    * against it, without re-reading the store's log and re-running the
+    * staleness gate per batch. The caller is responsible for having
+    * loaded it via [[read]] against the same store. */
   private[graft] def append(spark: SparkSession, dataDir: String,
       path: String, batch0: DataFrame, preloaded: Option[IvfPqIndex]): Unit = {
     val idx = preloaded.getOrElse(read(spark, dataDir, path))
     // Evaluate the batch ONCE, with the appended-vectors table as the
-    // materialization: its append lands (vec_id, vec) and the encode
-    // pass reads exactly the files that commit added. Two jobs total, no
-    // localCheckpoint — the durable parquet the store must write anyway
-    // is the barrier (VERDICT r18 #4/ADVICE r18).
+    // materialization: its append lands (vec_id, vec) and the map-only
+    // encode reads exactly the files that commit added. Two jobs total,
+    // one write per table, no localCheckpoint — the durable parquet the
+    // store must write anyway is the barrier (VERDICT r18 #4/ADVICE r18).
     // Commit order is a crash-safety invariant: the FULL vectors commit
     // FIRST, the ADC-rankable codes second. Codes serve the ranking, but
     // the exact rerank needs the vector — a crash between the two

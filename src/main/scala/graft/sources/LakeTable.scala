@@ -1132,9 +1132,6 @@ object LakeTable {
       clusterKeys = keyCols)
   }
 
-  /** One write shape for every data-landing path: partition layouts
-    * split into Hive-style `col=value` directories, plain tables write
-    * flat part files. */
   /** The clustered write's directory column: every CLUSTERED write
     * lands its rows under `__gl_bucket=<b>` directories, with `b`
     * computed IN THE PLAN as `pmod(hash(keys), n)` — the exact
@@ -1151,6 +1148,10 @@ object LakeTable {
     * case and broke SPJ row alignment. */
   private[graft] val BucketDirCol = "__gl_bucket"
 
+  /** One write shape for every data-landing path: partition layouts
+    * split into Hive-style `col=value` directories, clustered tables
+    * into [[BucketDirCol]] directories, plain tables write flat part
+    * files. */
   private def writeData(df: DataFrame, dir: String, parts: Seq[String],
       colMap: Map[String, String] = Map.empty,
       clusterBuckets: Int = 0, clusterKeys: Seq[String] = Seq.empty): Unit = {

@@ -98,11 +98,11 @@ class AnnIndexStoreSpec extends SparkSpec {
       (5000001L, knownVec),
       (5000002L, knownVec.map(v => 1.0 - v))).toDF("vec_id", "vec")
     // the client shape, appending against a loaded index: one job writes
-    // the vectors, and the encode pass over exactly the files it added
-    // runs five (two broadcast builds, two shuffle stages, the write) —
-    // no listing, counting or schema-inference job
+    // the vectors, and one map-only job encodes exactly the files it
+    // added and writes the codes — no join, shuffle, listing, counting
+    // or schema-inference job
     val jobs = sparkJobs(AnnIndexStore.append(spark, SfDir, dir, batch, Some(before)))
-    assert(jobs == 6, s"append ran $jobs Spark jobs")
+    assert(jobs == 2, s"append ran $jobs Spark jobs")
     val after = AnnIndexStore.read(spark, SfDir, dir)
     assert(after.withCodes.count() == nBefore + 2)
     val dup = after.withCodes.filter(col("vec_id") === 5000001L).collect().head
@@ -117,6 +117,40 @@ class AnnIndexStoreSpec extends SparkSpec {
     val appended = LakeTable.manifest(codes, LakeTable.latestVersion(codes)).files
       .filterNot(f => built(f.path))
     assert(appended.map(_.rows).sum == 3L, appended)
+  }
+
+  test("serve runs within its Spark job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_serve_jobs").toString
+    AnnIndexStore.write(spark, SfDir, dir)
+    AnnIndexStore.read(spark, SfDir, dir) // loads the quantizer, once per build
+    // the query-slice collect, then the plan's jobs: three local-relation
+    // broadcasts (per-cell probes + T2, T3, the rerank queries), the
+    // rerank vectors' broadcast, the shortlist shuffle and the final
+    // ordering's sample and shuffle, and the result stage — no probe
+    // window, no T3 aggregation, no quantizer load
+    val jobs = sparkJobs(AnnIndexStore.serve(spark, SfDir, dir).collect())
+    assert(jobs <= 9, s"serve ran $jobs Spark jobs")
+  }
+
+  test("the quantizer loads once per build: memoized reads, a rebuild reloads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_memo").toString
+    AnnIndexStore.write(spark, SfDir, dir)
+    // the first read loads cells and codebook from parquet, one job each,
+    // bit-identical to the session-built quantizer; later reads run none
+    var loaded: SimilarityOps.Quantizer = null
+    assert(sparkJobs { loaded = AnnIndexStore.read(spark, SfDir, dir).quantizer } == 2)
+    val live = SimilarityOps.buildIvfPqIndex(spark, SfDir).quantizer
+    assert(loaded.centroids.map(_.toSeq).toSeq == live.centroids.map(_.toSeq).toSeq)
+    assert(loaded.cnorms.toSeq == live.cnorms.toSeq)
+    assert(loaded.codebook.map(_.map(_.toSeq).toSeq).toSeq ==
+      live.codebook.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(sparkJobs(AnnIndexStore.read(spark, SfDir, dir)) == 0,
+      "a read of an unchanged build loaded the quantizer again")
+    // a rebuild stamps a new build id, so the next read loads again
+    val build = LakeTable.manifest(s"$dir/codes", 2).props("build")
+    AnnIndexStore.write(spark, SfDir, dir)
+    assert(LakeTable.manifest(s"$dir/codes", 2).props("build") != build)
+    assert(sparkJobs(AnnIndexStore.read(spark, SfDir, dir)) == 2)
   }
 
   test("building the IVF+PQ index on a fresh corpus stays within its Spark job budget") {
@@ -189,9 +223,7 @@ class AnnIndexStoreSpec extends SparkSpec {
   }
 
   test("maintenance: compaction is row-invisible, retract drops codes AND rerank vectors") {
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_ann_store_spec_maint").toString
-    LakeTable.deleteRecursively(dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_maint").toString
     AnnIndexStore.write(spark, SfDir, dir)
     val batch = SimilarityOps.appendBatch(spark, SfDir)
     AnnIndexStore.append(spark, SfDir, dir, batch.filter((col("vec_id") - 2000000L) % 50 === 0))

@@ -10,9 +10,12 @@ import graft.sources.{DedupIndexStore, LakeTable}
   * durability of every store mutation. */
 class DedupIndexSpec extends SparkSpec {
 
+  /** This spec's fixture root, one per JVM: two test runs on one
+    * machine never share (and delete) each other's stores. */
+  private lazy val fixtures = java.nio.file.Files.createTempDirectory("graft_dedup_idx_spec")
+
   private def freshPath(tag: String): String = {
-    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_dedup_idx_spec_$tag").toString
+    val p = fixtures.resolve(tag).toString
     LakeTable.deleteRecursively(p)
     p
   }

@@ -10,9 +10,12 @@ import graft.sources.LakeTable
   * untouched. */
 class LakeDmlSpec extends SparkSpec {
 
+  /** This spec's fixture root, one per JVM: two test runs on one
+    * machine never share (and delete) each other's tables. */
+  private lazy val fixtures = java.nio.file.Files.createTempDirectory("graft_lakedml")
+
   private def freshRoot(tag: String): String = {
-    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakedml_$tag").toString
+    val p = fixtures.resolve(tag).toString
     LakeTable.deleteRecursively(new java.io.File(p))
     p
   }
@@ -133,15 +136,13 @@ class LakeDmlSpec extends SparkSpec {
     (1L to 10L).map(k => (k, "keep", k)).toDF("k", "s", "v")
       .createOrReplaceTempView("dml_nmbs_src")
     val v0 = LakeTable.latestVersion(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_lakedml_nmbs", "t").toString)
+      fixtures.resolve("nmbs").resolve("t").toString)
     spark.sql("""MERGE INTO dml_nmbs.t AS tg USING dml_nmbs_src AS src
       ON tg.k = src.k
       WHEN MATCHED THEN UPDATE SET s = src.s
       WHEN NOT MATCHED BY SOURCE AND tg.v > 25 THEN DELETE
       WHEN NOT MATCHED BY SOURCE AND tg.k % 2 = 0 THEN UPDATE SET s = 'orphan'""")
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_lakedml_nmbs", "t").toString
+    val root = fixtures.resolve("nmbs").resolve("t").toString
     assert(LakeTable.latestVersion(root) == v0 + 1,
       "matched-update + NMBS update + NMBS delete must commit as ONE version")
     assert(stateOf("dml_nmbs") == (1L to 30L).flatMap { k =>

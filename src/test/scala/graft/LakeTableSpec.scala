@@ -10,9 +10,12 @@ import graft.sources.LakeTable
   * conflict detection, and as-of resolution. */
 class LakeTableSpec extends SparkSpec {
 
+  /** This spec's fixture root, one per JVM: two test runs on one
+    * machine never share (and delete) each other's tables. */
+  private lazy val fixtures = java.nio.file.Files.createTempDirectory("graft_lake_spec")
+
   private def freshPath(tag: String): String = {
-    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lake_spec_$tag").toString
+    val p = fixtures.resolve(tag).toString
     LakeTable.deleteRecursively(new java.io.File(p))
     p
   }

@@ -720,4 +720,146 @@ class SimilaritySpec extends SparkSpec {
     assert(meanPct >= SimilarityOps.MipsMinMeanRecallPct,
       s"measured mean recall $meanPct below the pinned floor")
   }
+
+  // ---- the frozen quantizer on the driver vs the distributed algebra it
+  // replaced: the append encode (cross-join argmin, residual, per-block
+  // argmin), the serve's probe window and its T3 aggregation, kept here
+  // as the reference the driver paths must equal bit for bit
+
+  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    GraftFunctions.dotProduct(a, b)
+
+  /** (block, cell, cvec, cnorm) frame of a codebook. */
+  private def codebookFrame(cb: Array[Array[Array[Double]]]) =
+    cb.zipWithIndex.flatMap { case (codes, b) =>
+      codes.zipWithIndex.map { case (c, k) => (b, k, c.toSeq, c.map(x => x * x).sum) }
+    }.toSeq.toDF("block", "cell", "cvec", "cnorm")
+
+  private def subBlocksOf(df: org.apache.spark.sql.DataFrame, vecCol: String, sub: Int) =
+    df.select(df.columns.filter(_ != vecCol).map(col).toIndexedSeq :+
+      posexplode(expr(s"transform(sequence(0, 7), b -> slice($vecCol, b * $sub + 1, $sub))"))
+        .as(Seq("block", "bvec")): _*)
+
+  private def referenceEncode(batch: org.apache.spark.sql.DataFrame,
+      cells: org.apache.spark.sql.DataFrame, cb: Array[Array[Array[Double]]]) = {
+    val sub = cb.head.head.length
+    val assigned = batch.withColumn("__vn", dot(col("vec"), col("vec")))
+      .join(broadcast(cells), lit(true))
+      .withColumn("__d", col("__vn") - dot(col("vec"), col("cvec")) * 2.0 + col("cnorm"))
+      .groupBy("vec_id")
+      .agg(first(col("vec")).as("vec"),
+        min(struct(col("__d"), col("cell"))).getField("cell").as("cell"))
+    val resid = assigned.join(broadcast(cells.select(col("cell"), col("cvec"))), "cell")
+      .select(col("vec_id"), col("cell").as("ivf_cell"),
+        expr("zip_with(vec, cvec, (a, b) -> a - b)").as("rvec"))
+    subBlocksOf(resid, "rvec", sub)
+      .join(broadcast(codebookFrame(cb)), "block")
+      .withColumn("__d", col("cnorm") - dot(col("bvec"), col("cvec")) * 2.0)
+      .groupBy("vec_id", "ivf_cell", "block")
+      .agg(min(struct(col("__d"), col("cell"))).getField("cell").as("code"))
+      .groupBy("vec_id", "ivf_cell")
+      .agg(expr("transform(array_sort(collect_list(struct(block, code))), s -> s.code)").as("codes"))
+      .select(col("vec_id"), col("ivf_cell").as("cell"), col("codes"))
+  }
+
+  private def referenceProbes(queries: org.apache.spark.sql.DataFrame,
+      cells: org.apache.spark.sql.DataFrame, nProbe: Int) =
+    queries.join(broadcast(cells), lit(true))
+      .withColumn("__qc", dot(col("qvec"), col("cvec")) * -2.0)
+      .withColumn("__l2",
+        dot(col("qvec"), col("qvec")) - dot(col("qvec"), col("cvec")) * 2.0 + col("cnorm"))
+      .select("query_id", "cell", "__qc", "__l2")
+      .withColumn("__pr", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+          .orderBy(col("__l2"), col("cell"))))
+      .filter(col("__pr") <= nProbe)
+      .select("query_id", "__pr", "cell", "__qc")
+
+  private def referenceT3(queries: org.apache.spark.sql.DataFrame,
+      cb: Array[Array[Array[Double]]]) =
+    subBlocksOf(queries, "qvec", cb.head.head.length)
+      .join(broadcast(codebookFrame(cb).select(col("block"),
+        col("cell").as("code"), col("cvec").as("codevec"))), "block")
+      .select(col("query_id"), (col("block") * 16 + col("code")).as("slot"),
+        (dot(col("bvec"), col("codevec")) * -2.0).as("d"))
+      .groupBy("query_id")
+      .agg(expr("transform(array_sort(collect_list(struct(slot, d))), s -> s.d)").as("t3"))
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** Asserts the driver encode, probe ranking and T3 of `idx` equal the
+    * reference algebra over `vecs` (vec_id, vec) bit for bit. */
+  private def assertDriverMatchesAlgebra(idx: SimilarityOps.IvfPqIndex,
+      vecs: org.apache.spark.sql.DataFrame, nProbe: Int): Unit = {
+    val encoded = SimilarityOps.encodeWithIndex(spark, vecs, idx)
+      .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
+    val reference = referenceEncode(vecs, idx.cells, idx.codebook)
+      .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
+    assert(encoded.nonEmpty && encoded == reference)
+    val queries = vecs.select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+    val qs = vecs.as[(Long, Array[Double])].collect()
+    val probes = qs.toSeq.flatMap { case (id, qv) =>
+      SimilarityOps.probeCells(qv, idx.quantizer, nProbe).zipWithIndex
+        .map { case ((cell, qc), r) => (id, r + 1, cell, bits(qc)) }
+    }.sorted
+    val refProbes = referenceProbes(queries, idx.cells, nProbe)
+      .as[(Long, Int, Int, Double)].collect().map(r => (r._1, r._2, r._3, bits(r._4))).toSeq.sorted
+    assert(probes == refProbes)
+    val t3 = qs.map { case (id, qv) => (id, SimilarityOps.pqT3(qv, idx.codebook).map(bits).toSeq) }
+      .toSeq.sortBy(_._1)
+    val refT3 = referenceT3(queries, idx.codebook).as[(Long, Seq[Double])].collect()
+      .map(r => (r._1, r._2.map(bits))).toSeq.sortBy(_._1)
+    assert(t3 == refT3)
+  }
+
+  test("driver encode, probe ranking and T3 equal the distributed algebra bit for bit") {
+    val idx = SimilarityOps.buildIvfPqIndex(spark, SfDir)
+    // every corpus vector, its planted-query scaling and a perturbed copy
+    val base = Tables.embeddings(spark, SfDir)
+      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
+    val vecs = base
+      .unionByName(base.select((col("vec_id") + 1000000L).as("vec_id"),
+        transform(col("vec"), x => x * 1.01).as("vec")))
+      .unionByName(base.select((col("vec_id") + 2000000L).as("vec_id"),
+        transform(col("vec"), x => x - 0.003).as("vec")))
+    assertDriverMatchesAlgebra(idx, vecs, nProbe = 6)
+    assertDriverMatchesAlgebra(idx, vecs.filter(col("vec_id") % 7 === 0), nProbe = idx.nCells)
+  }
+
+  test("driver encode and probe ranking break planted ties to the lower id, like the algebra") {
+    // 8 blocks x 2 dims; cells 1 and 2 are mirror images about 0 and
+    // cell 0 sits far off, so the zero vector is equidistant from 1 and 2
+    val dim = 16
+    val centroids = Array(Array.fill(dim)(5.0),
+      Array.tabulate(dim)(i => if (i == 0) 1.0 else 0.0),
+      Array.tabulate(dim)(i => if (i == 0) -1.0 else 0.0))
+    val cnorms = centroids.map(c => c.map(x => x * x).sum)
+    // every block: codes 0/1 mirror images on the first axis, 2..15 far
+    // away, and code 9 a duplicate of code 4
+    val codebook = Array.tabulate(8, 16) { (_, k) =>
+      if (k == 0) Array(1.0, 0.0) else if (k == 1) Array(-1.0, 0.0)
+      else if (k == 9) Array(4.0 + 10.0, 3.0) else Array(k + 10.0, 3.0)
+    }
+    val q = SimilarityOps.Quantizer(centroids, cnorms, codebook)
+    val cells = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq, cnorms(i)) }
+      .toSeq.toDF("cell", "cvec", "cnorm")
+    val idx = SimilarityOps.IvfPqIndex(cells, spark.emptyDataFrame, q)
+    val vecs = Seq(
+      // equidistant from cells 1 and 2; residual (-1, 0) in block 0
+      // (code 1), (0, 0) in blocks 1-7: equidistant from codes 0 and 1
+      (1L, Array.fill(dim)(0.0)),
+      // the same ties off-axis: residual (-1, .5), then (0, .5)
+      (2L, Array.tabulate(dim)(i => if (i % 2 == 1) 0.5 else 0.0)),
+      // cell 0, residual (14, 3) in every block: codes 4 and 9 tie
+      (3L, Array.tabulate(dim)(i => if (i % 2 == 0) 19.0 else 8.0)),
+      (4L, Array.tabulate(dim)(i => i * 0.25 - 2.0))).toDF("vec_id", "vec")
+    val enc = SimilarityOps.encodeWithIndex(spark, vecs, idx)
+      .as[(Long, Int, Seq[Int])].collect().sortBy(_._1)
+    assert(enc(0) == ((1L, 1, 1 +: Seq.fill(7)(0))), enc(0))
+    assert(enc(1) == ((2L, 1, 1 +: Seq.fill(7)(0))), enc(1))
+    assert(enc(2) == ((3L, 0, Seq.fill(8)(4))), enc(2))
+    assert(SimilarityOps.probeCells(Array.fill(dim)(0.0), q, 2).map(_._1).toSeq == Seq(1, 2))
+    assertDriverMatchesAlgebra(idx, vecs, nProbe = 2)
+    assertDriverMatchesAlgebra(idx, vecs, nProbe = 3)
+  }
 }
