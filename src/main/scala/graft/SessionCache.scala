@@ -50,6 +50,25 @@ object SessionCache {
   def dirKey(dir: String): String =
     viewKey(dir) + "_" + Tables.snapshot(dir)
 
+  /** This JVM's scratch root: a fresh directory under `java.io.tmpdir`,
+    * created on first use and deleted when the JVM exits. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch")
+    sys.addShutdownHook {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
+    root
+  }
+
+  /** Local path `name` under this JVM's scratch root — where entries
+    * put their scratch tables and files, so two JVMs on one machine (two
+    * test runs, a benchmark and its oracle) never share, and never
+    * delete, each other's tables. */
+  def scratchPath(name: String): String = scratchRoot.resolve(name).toString
+
   /** Last registered view name per (session, prefix, dir), so a dir
     * REWRITE within one JVM can release the superseded snapshot's view. */
   private val lastDirView =

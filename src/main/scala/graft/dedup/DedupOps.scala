@@ -580,8 +580,7 @@ object DedupOps {
     * the corpus-snapshot staleness gate. */
   def qDedupIndexServe(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.DedupIndexStore
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_dedup_idx_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_dedup_idx_${graft.SessionCache.dirKey(dir)}")
     val docs = Tables.spread(spark, Tables.documents(spark, dir))
       .select(col("doc_id"), col("text"))
     val cls = col("doc_id") % 7
@@ -619,8 +618,7 @@ object DedupOps {
     * and that maintenance leaves only live files on disk. */
   def qDedupIndexMaintain(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.DedupIndexStore
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_dedup_idxm_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_dedup_idxm_${graft.SessionCache.dirKey(dir)}")
     val docs = Tables.spread(spark, Tables.documents(spark, dir))
       .select(col("doc_id"), col("text"))
     val cls = col("doc_id") % 7

@@ -566,9 +566,8 @@ object IngestOps {
   def rawCardsJsonDir(spark: SparkSession): String =
     rawDirMemo.computeIfAbsent(
       Integer.valueOf(System.identityHashCode(spark)), _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+        val dir = graft.SessionCache.scratchPath(
           s"graft_raw_cards_json_${System.identityHashCode(spark)}")
-          .getAbsolutePath
         val corrupt = spark.range(5).select(
           concat(lit("{\"id\": \"corrupt-"), col("id"), lit("\", \"name\":"))
             .as("raw"))
@@ -642,9 +641,8 @@ object IngestOps {
   def rawCardsCsvDir(spark: SparkSession): String =
     csvDirMemo.computeIfAbsent(
       Integer.valueOf(System.identityHashCode(spark)), _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+        val dir = graft.SessionCache.scratchPath(
           s"graft_raw_cards_csv_${System.identityHashCode(spark)}")
-          .getAbsolutePath
         val flat = parsedCardsRaw(spark).select(CardSchema.fields.map { f =>
           f.dataType match {
             case _: StructType | _: ArrayType | _: MapType => to_json(col(f.name)).as(f.name)
@@ -699,9 +697,8 @@ object IngestOps {
   def rawCardsOrcDir(spark: SparkSession): String =
     orcDirMemo.computeIfAbsent(
       Integer.valueOf(System.identityHashCode(spark)), _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+        val dir = graft.SessionCache.scratchPath(
           s"graft_raw_cards_orc_${System.identityHashCode(spark)}")
-          .getAbsolutePath
         parsedCardsRaw(spark).repartition(4).write.mode("overwrite").orc(dir)
         dir
       })
@@ -725,9 +722,8 @@ object IngestOps {
   def rawCardsAvroDir(spark: SparkSession): String =
     avroDirMemo.computeIfAbsent(
       Integer.valueOf(System.identityHashCode(spark)), _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+        val dir = graft.SessionCache.scratchPath(
           s"graft_raw_cards_avro_${System.identityHashCode(spark)}")
-          .getAbsolutePath
         graft.sources.AvroTable.write(
           parsedCardsRaw(spark).repartition(4), dir, "card")
         dir
@@ -753,8 +749,8 @@ object IngestOps {
     * Memoized per dir snapshot. */
   private def evolvedAvroPath(spark: SparkSession, dir: String): String =
     avroEvolveMemo.computeIfAbsent(graft.SessionCache.dirKey(dir), _ => {
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_avro_evolve_${graft.SessionCache.dirKey(dir)}").getAbsolutePath
+      val root = graft.SessionCache.scratchPath(
+        s"graft_avro_evolve_${graft.SessionCache.dirKey(dir)}")
       val li = graft.Tables.lineitem(spark, dir)
       graft.sources.AvroTable.write(
         li.filter(col("l_orderkey") % 2 === 0)
@@ -903,8 +899,8 @@ object IngestOps {
     // plan reads the export lazily, so it must outlive this call; one
     // copy per snapshot is the bound. A done-marker gates reuse so a
     // crashed half-export is wiped and rewritten, never served.
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_events_jsonl_" + graft.SessionCache.dirKey(dir)
+    val root = graft.SessionCache.scratchPath(
+      "graft_events_jsonl_" + graft.SessionCache.dirKey(dir))
     val tmp = s"$root/export"
     val done = java.nio.file.Paths.get(root, "_graft_done")
     val lock = jsonlLocks.computeIfAbsent(root, _ => new Object)

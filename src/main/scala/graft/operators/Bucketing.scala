@@ -112,8 +112,7 @@ object Bucketing {
     * instead of degenerating to the wider key's top bits. */
   private[graft] def zorderedLineitemPath(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions.{col, max}
-    val path = sys.props("java.io.tmpdir") +
-      "/graft_zorder_" + graft.SessionCache.dirKey(dir)
+    val path = graft.SessionCache.scratchPath("graft_zorder_" + graft.SessionCache.dirKey(dir))
     val lock = zorderLocks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) {
@@ -135,8 +134,7 @@ object Bucketing {
     * micro-batch shape [[compact]] exists to fix), then compacted to
     * ~1 MB targets. */
   private[graft] def compactedLineitemPath(spark: SparkSession, dir: String): String = {
-    val base = sys.props("java.io.tmpdir") +
-      "/graft_compact_" + graft.SessionCache.dirKey(dir)
+    val base = graft.SessionCache.scratchPath("graft_compact_" + graft.SessionCache.dirKey(dir))
     val lock = zorderLocks.computeIfAbsent(base, _ => new Object)
     lock.synchronized {
       if (!new java.io.File(s"$base/out", "_SUCCESS").exists()) {
@@ -171,8 +169,7 @@ object Bucketing {
     * maximum. */
   private[graft] def zordered3LineitemPath(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions.{col, max}
-    val path = sys.props("java.io.tmpdir") +
-      "/graft_zorder3_" + graft.SessionCache.dirKey(dir)
+    val path = graft.SessionCache.scratchPath("graft_zorder3_" + graft.SessionCache.dirKey(dir))
     val lock = zorderLocks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) {
@@ -230,8 +227,7 @@ object Bucketing {
     * owned by a driver-gated query. */
   private[graft] def partitionedOrdersPath(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions.{col, date_format}
-    val path = sys.props("java.io.tmpdir") +
-      "/graft_hivepart_" + graft.SessionCache.dirKey(dir)
+    val path = graft.SessionCache.scratchPath("graft_hivepart_" + graft.SessionCache.dirKey(dir))
     val lock = zorderLocks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
       if (!new java.io.File(path, "_SUCCESS").exists()) {
@@ -353,8 +349,7 @@ object Bucketing {
     * arithmetic. */
   private[graft] def evolvedLineitemPath(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions.col
-    val path = sys.props("java.io.tmpdir") +
-      "/graft_evolve_" + graft.SessionCache.dirKey(dir)
+    val path = graft.SessionCache.scratchPath("graft_evolve_" + graft.SessionCache.dirKey(dir))
     val lock = zorderLocks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
       if (!new java.io.File(path + "/gen=1", "_SUCCESS").exists()) {

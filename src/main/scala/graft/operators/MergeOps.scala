@@ -262,8 +262,7 @@ object MergeOps {
     * cost), and racing commits of the same version fail loudly. */
   def qLakeMergeAsof(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lake_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lake_${graft.SessionCache.dirKey(dir)}")
     // idempotent per invocation: the entry rebuilds both generations
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir)
@@ -313,8 +312,7 @@ object MergeOps {
     * life of the dir content and is never wiped mid-session. */
   private def lakeDelTable(spark: SparkSession, dir: String): String = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakedel_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakedel_${graft.SessionCache.dirKey(dir)}")
     val lock = lakeDelLocks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
       if (LakeTable.latestVersion(path) != 3) {
@@ -380,8 +378,7 @@ object MergeOps {
     * are FS semantics LakeTableSpec pins. */
   def qLakeCompactRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecmp_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakecmp_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"), nBuckets = 32)
@@ -407,8 +404,7 @@ object MergeOps {
     * schema and that untouched files carried by reference. */
   def qLakeSchemaEvolve(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakesev_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakesev_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"))
@@ -468,8 +464,7 @@ object MergeOps {
     * the hash. LakeTableSpec pins the quantitative file counts. */
   def qLakePruneRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeprune_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakeprune_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_orderdate")
@@ -498,8 +493,7 @@ object MergeOps {
     * breaks the hash. */
   def qLakeSqlDdl(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeddl_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakeddl_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     // catalog name keyed by the data dir: catalog instances cache their
     // init-time warehouse per NAME, so a second dir in the same JVM (the
@@ -541,8 +535,7 @@ object MergeOps {
     * breaks the hash. */
   def qLakeMergeInto(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakemi_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakemi_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     // dir-keyed catalog name (catalog instances cache their init-time
     // warehouse per name; a second dir in one JVM needs a fresh catalog)
@@ -592,8 +585,7 @@ object MergeOps {
     * value lost or mis-typed on reconstruction breaks the hash. */
   def qLakePartitionPrune(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakepart_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakepart_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_orderpriority")
@@ -625,8 +617,7 @@ object MergeOps {
     * rows breaks the hash. */
   def qLakeSqlCall(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecall_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakecall_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_svc_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -680,8 +671,7 @@ object MergeOps {
     * the partition column. */
   def qLakePartitionEvolve(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakepe_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakepe_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderstatus", "o_orderpriority")
@@ -718,8 +708,7 @@ object MergeOps {
     * sidecars away and vacuum reclaiming them are spec-pinned. */
   def qLakeDeleteDV(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakedv_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakedv_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"))
@@ -750,8 +739,7 @@ object MergeOps {
     * spec-pinned (LakeTableSpec "deletePos"). */
   def qLakeDeletePos(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakedvp_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakedvp_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -789,8 +777,7 @@ object MergeOps {
     * hash (the bloom no-false-negative contract, also spec-pinned). */
   def qLakeBloomSkip(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakebloom_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakebloom_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select(
       col("o_orderkey"),
@@ -839,8 +826,7 @@ object MergeOps {
     * partitions still apply their sidecars at read). */
   def qLakeCompactWhere(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecw_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakecw_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderpriority", "o_orderstatus")
@@ -891,8 +877,7 @@ object MergeOps {
     * BOUNDS, not as answers — see the builder doc). */
   def qLakeAggPush(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeagg_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakeagg_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"), nBuckets = 16)
@@ -945,8 +930,7 @@ object MergeOps {
     * survivors shifts rows and breaks the hash. */
   def qLakeEvolveFeed(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeevf_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakeevf_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"))
@@ -980,8 +964,7 @@ object MergeOps {
     * row churn, or drops the v2 batch's net effect breaks the hash. */
   def qLakeRenameFeed(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakernf_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakernf_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"))
@@ -1035,8 +1018,7 @@ object MergeOps {
     * single-dimension-layout contrast. */
   def qLakeZorderScan(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakez_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakez_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
@@ -1071,10 +1053,8 @@ object MergeOps {
     * cut the dependency) is spec-pinned. */
   def qLakeCloneMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val src = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecls_${graft.SessionCache.dirKey(dir)}").toString
-    val dst = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecld_${graft.SessionCache.dirKey(dir)}").toString
+    val src = graft.SessionCache.scratchPath(s"graft_lakecls_${graft.SessionCache.dirKey(dir)}")
+    val dst = graft.SessionCache.scratchPath(s"graft_lakecld_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(src))
     LakeTable.deleteRecursively(new java.io.File(dst))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
@@ -1104,8 +1084,7 @@ object MergeOps {
     * of the rolled-back interval breaks the hash. */
   def qLakeRestoreRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakerst_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakerst_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"))
@@ -1137,8 +1116,7 @@ object MergeOps {
     * The oracle replays the as-of state under the same predicate. */
   def qLakeSqlSource(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakesql_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakesql_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"),
@@ -1171,8 +1149,7 @@ object MergeOps {
     * window are LakeTableSpec's half. */
   def qLakeConcurrentMerge(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeocc_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_lakeocc_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(path))
     val base = Tables.orders(spark, dir).select("o_orderkey", "o_orderstatus")
     LakeTable.create(spark, path, base, Seq("o_orderkey"))
@@ -1213,8 +1190,7 @@ object MergeOps {
     * breaks the hash. */
   def qLakeSqlAlter(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakealt_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakealt_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_alt_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1251,8 +1227,7 @@ object MergeOps {
     * breaks the hash. */
   def qLakeMergeRow(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakemr_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakemr_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_mr_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1319,8 +1294,7 @@ object MergeOps {
     // newSession() shares the SparkContext but owns conf + temp views,
     // so the window is invisible outside this entry.
     val spark = outerSpark.newSession()
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeclj_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakeclj_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_clj_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1380,8 +1354,7 @@ object MergeOps {
     import graft.sources.LakeTable
     // isolated session — same rationale as [[qLakeClusterJoin]]
     val spark = outerSpark.newSession()
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakeclf_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakeclf_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_clf_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1447,8 +1420,7 @@ object MergeOps {
     * oracle breaks if CTAS produced a keyless blind table). */
   def qLakeSqlCtas(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakects_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakects_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_cts_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1478,8 +1450,7 @@ object MergeOps {
     * hash. */
   def qLakeZorderCall(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakezc_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakezc_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_zc_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1526,8 +1497,7 @@ object MergeOps {
     * hash. */
   def qLakeRuntimePrune(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakertp_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakertp_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val factPath = s"$root/fact"
     LakeTable.create(spark, factPath,
@@ -1575,8 +1545,7 @@ object MergeOps {
     * landed under the wrong physical breaks the hash. */
   def qLakeColumnMap(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecm_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakecm_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val cat = s"graft_lake_cm_${graft.SessionCache.dirKey(dir)}"
     spark.conf.set(s"spark.sql.catalog.$cat",
@@ -1629,8 +1598,7 @@ object MergeOps {
     * downtime, history from day one. */
   def qLakeConvert(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_lakecv_${graft.SessionCache.dirKey(dir)}").toString
+    val root = graft.SessionCache.scratchPath(s"graft_lakecv_${graft.SessionCache.dirKey(dir)}")
     LakeTable.deleteRecursively(new java.io.File(root))
     val p = s"$root/orders_t"
     val base = Tables.orders(spark, dir)

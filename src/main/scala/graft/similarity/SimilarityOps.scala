@@ -1455,9 +1455,7 @@ object SimilarityOps {
     * gate. */
   def qAnnIndexServe(spark: SparkSession, dir: String): DataFrame = {
     val st = gateStride(spark, dir)
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_ann_store_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_ann_store_${graft.SessionCache.dirKey(dir)}")
     // eager lifecycle: write() rebuilds (clearing any prior invocation's
     // appends — idempotent per invocation), append() encodes the batch
     // with the frozen quantizer; both complete before the lazy serve
@@ -1514,9 +1512,7 @@ object SimilarityOps {
     * boolean). */
   def qAnnIndexMaintain(spark: SparkSession, dir: String): DataFrame = {
     val st = gateStride(spark, dir)
-    val path = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_ann_maint_${graft.SessionCache.dirKey(dir)}").toString
+    val path = graft.SessionCache.scratchPath(s"graft_ann_maint_${graft.SessionCache.dirKey(dir)}")
     // materialize the batch ONCE (n/25 rows): its corpus scan + filter
     // otherwise re-runs for each consumer — two appends, the retraction
     // key set, and the truth side (4 scans per invocation)

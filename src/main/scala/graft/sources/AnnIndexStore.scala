@@ -209,10 +209,14 @@ object AnnIndexStore {
       LakeTable.readSnapshot(spark, t, live(t), added), idx))
   }
 
-  /** OPTIMIZE for the index: rewrite the codes and appended-vector
-    * tables as `targetFiles` files each, then vacuum to the live version
-    * — heals the one-fragment-per-append accumulation so serving scan
-    * tasks track index size, not append count. Row-identical by
+  /** OPTIMIZE for the index: compact the codes and appended-vector
+    * tables to at most `targetFiles` files each ([[LakeTable.compact]]),
+    * then vacuum to the live version — heals the one-fragment-per-append
+    * accumulation so serving scan tasks track index size, not append
+    * count. Both tables take no sidecar (a retraction rewrites
+    * copy-on-write) and land one physical schema, so each compacts by
+    * stitching row groups on the driver: no Spark job, no decode. A
+    * stitched file keeps its inputs' row groups. Row-identical by
     * construction. */
   def compactIndexFiles(spark: SparkSession, dataDir: String, path: String,
       targetFiles: Int = 4): Unit = {

@@ -143,11 +143,16 @@ object DedupIndexStore {
     LakeTable.append(spark, postingsTable(path), postingsOf(spark, path, added))
   }
 
-  /** OPTIMIZE for the index: rewrite postings and shingles as
-    * `targetFiles` files each — heals the one-fragment-per-append
-    * accumulation (probe scan task count otherwise tracks append count
-    * instead of index size, the small-file story `lake_compact_read`
-    * fixes for the lake). Row-identical by construction. */
+  /** OPTIMIZE for the index: compact postings and shingles to at most
+    * `targetFiles` files each ([[LakeTable.compact]]), then vacuum to the
+    * live version — heals the one-fragment-per-append accumulation
+    * (probe scan task count otherwise tracks append count instead of
+    * index size, the small-file story `lake_compact_read` fixes for the
+    * lake). Both tables take no sidecar (a retraction rewrites
+    * copy-on-write) and land one physical schema, so each compacts by
+    * stitching row groups on the driver: no Spark job, no decode. A
+    * stitched file keeps its inputs' row groups. Row-identical by
+    * construction. */
   def compactIndex(spark: SparkSession, dataDir: String, path: String,
       targetFiles: Int = 4): Unit = {
     checkFresh(dataDir, path, "compact")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** The lake's metadata-plane I/O seam (VERDICT r14 #1): every manifest /
   * version-file / hint byte the [[LakeTable]] log reads or writes flows
@@ -346,15 +346,20 @@ private[graft] object LakeIo {
 
   /** All files under `dir` (recursive), as the filesystem qualifies
     * them; empty when the dir is missing. */
-  def listRecursive(dir: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+  def listRecursive(dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Seq.empty
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) buf += it.next()
-    buf.toSeq
+    if (!fs.exists(p)) Seq.empty else filesUnder(fs, p)
   }
+
+  /** Every file under the directory `p`, walked with `listStatus`. Not
+    * `listFiles`: its LocatedFileStatus copies each file's owner and
+    * permissions, which Hadoop's local filesystem looks up with one
+    * forked `stat` per file when the native library is absent (~6.5 ms
+    * a file: a 24-file walk took 150–170 ms that way, 2–7 ms this way). */
+  private def filesUnder(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.flatMap(s =>
+      if (s.isDirectory) filesUnder(fs, s.getPath) else Seq(s))
 
   /** Immediate child DIRECTORIES of `dir` (no recursion); empty when
     * the dir is missing. One listStatus call — the namespace walk
@@ -372,19 +377,12 @@ private[graft] object LakeIo {
 
   /** [[leafParquet]]'s file statuses, with an explicit Configuration —
     * the executor-side form (no active session to derive a conf from). */
-  def leafParquetWith(dir: String,
-      hadoopConf: Configuration): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+  def leafParquetWith(dir: String, hadoopConf: Configuration): Seq[FileStatus] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(hadoopConf)
     if (!fs.exists(p)) return Seq.empty
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet")) buf += s
-    }
-    buf.sortBy(_.getPath.toString).toSeq
+    filesUnder(fs, p).filter(s => s.getPath.getName.startsWith("part-") &&
+      s.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.toString)
   }
 
   def deleteFile(path: String): Boolean = {

@@ -1151,16 +1151,25 @@ object LakeTable {
   /** One write shape for every data-landing path: partition layouts
     * split into Hive-style `col=value` directories, clustered tables
     * into [[BucketDirCol]] directories, plain tables write flat part
-    * files. */
+    * files.
+    *
+    * One physical schema per table: every column lands nullable at
+    * every level (column, array element, map value, struct field),
+    * whatever nullability the input plan derived. A table's create,
+    * append, merge and compact files therefore carry one parquet schema
+    * and one Spark row schema in their footers, which is what lets
+    * [[compact]] stitch them without a decode. (Without it, a build
+    * that derives `codes` as a required list of optional ints and an
+    * append that derives an optional list of required ints land two
+    * schemas in one table.) */
   private def writeData(df: DataFrame, dir: String, parts: Seq[String],
       colMap: Map[String, String] = Map.empty,
       clusterBuckets: Int = 0, clusterKeys: Seq[String] = Seq.empty): Unit = {
     // a mapped table's files store PHYSICAL names; partition columns are
     // never mapped (rename/drop refuse them), so partitionBy is safe
-    val out =
-      if (colMap.isEmpty) df
-      else df.select(df.columns.toIndexedSeq.map(c =>
-        col(c).as(colMap.getOrElse(c, c))): _*)
+    val out = df.select(df.columns.toIndexedSeq.map(c =>
+      ColumnBridge.asNullable(col(s"`${c.replace("`", "``")}`"))
+        .as(colMap.getOrElse(c, c))): _*)
     if (clusterBuckets > 0) {
       // keys are never column-mapped (rename refuses them), so the
       // bucket expression binds the same names before and after the
@@ -1332,9 +1341,10 @@ object LakeTable {
     }
 
   /** Test-only interleave point, invoked between touched-file discovery
-    * and manifest publish inside [[attemptMerge]] — lets LakeTableSpec
-    * land a competing commit in the window deterministically instead of
-    * racing threads. No-op in production. */
+    * and manifest publish inside [[attemptMerge]], and between the data
+    * write and the publish of [[compact]] — lets the specs land a
+    * competing commit (or a crash) in the window deterministically
+    * instead of racing threads. No-op in production. */
   private[graft] var testInterleave: () => Unit = () => ()
 
   /** One optimistic copy-on-write attempt against the snapshot read as
@@ -1863,33 +1873,120 @@ object LakeTable {
   }
 
   /** Compaction (the OPTIMIZE table service): rewrite the CURRENT
-    * snapshot's rows as `targetFiles` files and commit the result as a
-    * new version — the maintenance pass that heals the small-file
-    * accumulation CoW merges/deletes leave behind AND materializes
-    * equality-delete sidecars away (the new files carry none). State is
-    * row-identical by construction, and readers pinned to
-    * pre-compaction versions keep their file sets (nothing is deleted
-    * until [[vacuum]]). Returns the committed version. */
+    * snapshot's rows as at most `targetFiles` fresh files under the
+    * table's own `data/` and commit the result as a new version — the
+    * maintenance pass that heals the small-file accumulation CoW
+    * merges/deletes and appends leave behind. State is row-identical by
+    * construction, and readers pinned to pre-compaction versions keep
+    * their file sets (nothing is deleted until [[vacuum]]). Two paths
+    * produce the files:
+    *   - STITCH, on the driver, with no Spark job, when the snapshot
+    *     qualifies ([[stitchInputs]]): no live file carries an equality
+    *     or positional sidecar; the table is neither clustered nor
+    *     partitioned; it has no column mapping and no retired physical
+    *     names; and every live footer holds one parquet schema (the
+    *     manifest's columns) and one set of `org.apache.spark.*`
+    *     key-value metadata. The live files are binned by their manifest
+    *     row counts into `min(targetFiles, #files)` bins, and each bin's
+    *     column chunks are concatenated into one file
+    *     ([[stitchFiles]]): row groups are copied, never decoded, so a
+    *     stitched file holds its inputs' row groups.
+    *   - SCAN REWRITE otherwise: the snapshot is read through the V2
+    *     scan (which applies sidecars), shuffled into `targetFiles` files
+    *     — or, for a CLUSTERED table, hash-routed back to its declared
+    *     bucket count, so the bucket mapping (and the exchange-free join
+    *     it serves) survives — and written back. It is the only path
+    *     that materializes sidecars away, heals a column mapping,
+    *     migrates files to the current partition layout or re-buckets.
+    * Either way the new files' stats, row counts and (for declared index
+    * columns) bloom bits come from [[entriesFor]], so a compaction also
+    * backfills blooms. Returns the committed version. */
   def compact(spark: SparkSession, path: String, targetFiles: Int): Int = {
     require(targetFiles > 0, s"LakeTable: compact needs targetFiles > 0, got $targetFiles")
     val current = latestVersion(path)
     require(current > 0, s"LakeTable: cannot compact missing table at $path")
     val m = manifest(path, current)
     val dir = batchDir(path, "compact", current + 1)
-    // a CLUSTERED table compacts back to its declared bucket count —
-    // hash-routed so the bucket mapping (and the exchange-free join it
-    // serves) survives the rewrite; targetFiles only applies to
-    // unclustered tables
-    writeData(
-      if (m.clusterBuckets > 0)
-        read(spark, path, Some(current)).repartition(m.clusterBuckets, m.keys.map(col): _*)
-      else read(spark, path, Some(current)).repartition(targetFiles),
-      dir, m.parts, Map.empty, m.clusterBuckets, m.keys)
+    stitchInputs(spark, m) match {
+      case Some(files) => stitchFiles(spark, files, dir, targetFiles)
+      case None =>
+        writeData(
+          if (m.clusterBuckets > 0)
+            read(spark, path, Some(current)).repartition(m.clusterBuckets, m.keys.map(col): _*)
+          else read(spark, path, Some(current)).repartition(targetFiles),
+          dir, m.parts, Map.empty, m.clusterBuckets, m.keys)
+    }
+    testInterleave()
     commit(path, m.copy(version = current + 1, op = "compact",
       files = entriesFor(spark, dir, m.keys, m.schema, m.parts, m.clusterBuckets > 0,
         bloomColsOf(m.copy(colMap = Map.empty), m.schema)),
       colMap = Map.empty, retired = Seq.empty))
     current + 1
+  }
+
+  /** The live non-empty files of `m` with their manifest row counts when
+    * [[compact]] may stitch them, None when the snapshot needs the scan
+    * rewrite: a sidecar, a partition layout, a clustered layout, a
+    * column mapping or retired names, or footers that disagree on the
+    * parquet schema or the Spark metadata (files written before an
+    * `addColumns`, or before [[writeData]] gave a table one physical
+    * schema). The footer opens are driver-side metadata reads, run
+    * concurrently like [[footerStats]]. */
+  private def stitchInputs(spark: SparkSession,
+      m: Manifest): Option[Seq[(String, Long)]] = {
+    if (m.files.exists(e => e.dvs.nonEmpty || e.pos.nonEmpty) || m.clusterBuckets > 0 ||
+        m.parts.nonEmpty || m.colMap.nonEmpty || m.retired.nonEmpty) return None
+    val conf = spark.sessionState.newHadoopConf()
+    import scala.collection.parallel.CollectionConverters._
+    import scala.jdk.CollectionConverters._
+    val footers = m.files.par.map { e =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(e.path), conf))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema,
+          meta.getKeyValueMetaData.asScala.filter(_._1.startsWith("org.apache.spark.")).toMap)
+      } finally reader.close()
+    }.seq
+    val uniform = footers.headOption.forall { case (schema, _) =>
+      schema.getFields.asScala.map(_.getName) == m.schema.fieldNames.toSeq &&
+        footers.forall(_ == footers.head)
+    }
+    // a file the manifest records as empty holds no row to carry
+    if (uniform) Some(m.files.filter(_.rows != 0).map(e => e.path -> e.rows)) else None
+  }
+
+  /** [[compact]]'s stitch: bin `files` (path, row count) into
+    * `min(targetFiles, #files)` bins — largest first, each into the
+    * bin holding the fewest rows (then files; an unknown count weighs
+    * nothing) — and concatenate each bin's column chunks into one
+    * `part-*.parquet` file under `dir` with parquet's ParquetRewriter.
+    * One-file bins are rewritten too: the new version references only
+    * fresh files in the table's own `data/` (what cuts a shallow clone's
+    * dependency on its source and lets [[vacuum]] reclaim every
+    * pre-compaction fragment). */
+  private def stitchFiles(spark: SparkSession, files: Seq[(String, Long)],
+      dir: String, targetFiles: Int): Unit = {
+    val n = math.min(targetFiles, files.size)
+    val bins = Array.fill(n)(Vector.empty[String])
+    val load = Array.fill(n)(0L)
+    files.sortBy(-_._2).foreach { case (f, rows) =>
+      val b = (0 until n).minBy(i => (load(i), bins(i).size))
+      bins(b) :+= f
+      load(b) += math.max(rows, 0L)
+    }
+    val conf = spark.sessionState.newHadoopConf()
+    import scala.collection.parallel.CollectionConverters._
+    import scala.jdk.CollectionConverters._
+    bins.toSeq.zipWithIndex.par.foreach { case (in, i) =>
+      val out = new org.apache.hadoop.fs.Path(dir,
+        f"part-$i%05d-${java.util.UUID.randomUUID()}.parquet")
+      val rewriter = new org.apache.parquet.hadoop.rewrite.ParquetRewriter(
+        new org.apache.parquet.hadoop.rewrite.RewriteOptions.Builder(
+          conf, in.map(new org.apache.hadoop.fs.Path(_)).asJava, out).build())
+      try rewriter.processBlocks() finally rewriter.close()
+    }
   }
 
   /** PARTITION-SCOPED compaction (r18 — the Delta `OPTIMIZE ... WHERE`

@@ -530,8 +530,7 @@ object EventStreams {
     * returned plan reads it lazily). A `_graft_done` marker gates reuse
     * so a crashed half-build is wiped and rebuilt, never served. */
   def qStreamUpsertSink(spark: SparkSession, dir: String): DataFrame = {
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_upsink_" + graft.SessionCache.dirKey(dir)
+    val root = graft.SessionCache.scratchPath("graft_upsink_" + graft.SessionCache.dirKey(dir))
     val target = s"$root/table"
     val done = java.nio.file.Paths.get(root, "_graft_done")
     val lock = upsinkLocks.computeIfAbsent(root, _ => new Object)
@@ -616,8 +615,7 @@ object EventStreams {
     * checkpoint deleted after the stream completes. */
   def qStreamLakeSink(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_lakesink_" + graft.SessionCache.dirKey(dir)
+    val root = graft.SessionCache.scratchPath("graft_lakesink_" + graft.SessionCache.dirKey(dir))
     val table = s"$root/table"
     val done = java.nio.file.Paths.get(root, "_graft_done")
     val keys = Seq("user_id")
@@ -686,8 +684,7 @@ object EventStreams {
     * identical to the batch fold before returning. */
   def qStreamLakeCdf(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_lakecdf_" + graft.SessionCache.dirKey(dir)
+    val root = graft.SessionCache.scratchPath("graft_lakecdf_" + graft.SessionCache.dirKey(dir))
     deleteRecursively(root)
     val table = s"$root/table"
     val keys = Seq("o_orderkey")
@@ -785,8 +782,7 @@ object EventStreams {
     * with in-entry row identity. */
   def qStreamLakeSource(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.LakeTable
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_lakesrcq_" + graft.SessionCache.dirKey(dir)
+    val root = graft.SessionCache.scratchPath("graft_lakesrcq_" + graft.SessionCache.dirKey(dir))
     deleteRecursively(root)
     val table = s"$root/table"
     val keys = Seq("o_orderkey")

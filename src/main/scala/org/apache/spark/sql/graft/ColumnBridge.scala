@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.DataType
 
 /** Bridge into Spark's `private[sql]` Column factory so graft's native
   * Catalyst expressions compose as ordinary `Column`s without a
@@ -63,4 +66,24 @@ object ColumnBridge {
     * execution unevaluable. */
   def eagerExpression(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+
+  /** `c` typed nullable at every level — the column itself, array
+    * elements, map values and struct fields — with its values passed
+    * through untouched. A cast cannot do this: the optimizer drops an
+    * `array<t>`/`map<k, v>` cast that only widens `containsNull`, so the
+    * written schema would fall back to the input's nullability. */
+  def asNullable(c: Column): Column = column(AsNullable(expression(c)))
+}
+
+/** Pass-through whose type is `child`'s with every nullability flag set
+  * ([[ColumnBridge.asNullable]]). Nullability never changes a value's
+  * physical representation, so eval and codegen are the child's. */
+case class AsNullable(child: Expression) extends UnaryExpression {
+  override lazy val dataType: DataType = child.dataType.asNullable
+  override def nullable: Boolean = true
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.genCode(ctx)
+  override protected def withNewChildInternal(newChild: Expression): AsNullable =
+    copy(child = newChild)
 }

@@ -232,7 +232,10 @@ class AnnIndexStoreSpec extends SparkSpec {
     val pre = codes(dir)
     val fragsBefore = AnnIndexStore.codesFragments(dir)
     assert(fragsBefore > 1, s"fixture not fragmented ($fragsBefore)")
-    AnnIndexStore.compactIndexFiles(spark, SfDir, dir, targetFiles = 1)
+    // both tables land one physical schema and carry no sidecar: the
+    // compaction stitches row groups on the driver and runs no Spark job
+    val jobs = sparkJobSites(AnnIndexStore.compactIndexFiles(spark, SfDir, dir, targetFiles = 1))
+    assert(jobs.isEmpty, s"the store compaction ran Spark jobs:\n${jobs.mkString("\n")}")
     assert(AnnIndexStore.codesFragments(dir) == 1)
     assert(codes(dir) == pre, "compaction changed the codes set")
     tables(dir).foreach(assertOnlyLiveFiles)

@@ -71,7 +71,10 @@ class DedupIndexSpec extends SparkSpec {
     val pre = postings(p)
     val fragsBefore = DedupIndexStore.postingsFragments(p)
     assert(fragsBefore > 1, s"fixture not fragmented ($fragsBefore fragments)")
-    DedupIndexStore.compactIndex(spark, SfDir, p, targetFiles = 1)
+    // both tables land one physical schema and carry no sidecar: the
+    // compaction stitches row groups on the driver and runs no Spark job
+    val jobs = sparkJobSites(DedupIndexStore.compactIndex(spark, SfDir, p, targetFiles = 1))
+    assert(jobs.isEmpty, s"the store compaction ran Spark jobs:\n${jobs.mkString("\n")}")
     assert(DedupIndexStore.postingsFragments(p) == 1)
     assert(postings(p) == pre, "compaction changed the postings set")
     // the pass vacuums: only the compacted files stay on disk
@@ -114,8 +117,8 @@ class DedupIndexSpec extends SparkSpec {
     }
     // the staleness gate: an index built over THIS corpus must refuse
     // probes resolved against a different one
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_dedup_idx_${graft.SessionCache.dirKey(SfDir)}").toString
+    val path = graft.SessionCache.scratchPath(
+      s"graft_dedup_idx_${graft.SessionCache.dirKey(SfDir)}")
     val err = intercept[IllegalStateException] {
       DedupIndexStore.probe(spark, "/root/testdata/sf0.01", path,
         Tables.documents(spark, SfDir).select("doc_id", "text").limit(1))

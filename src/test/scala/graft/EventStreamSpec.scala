@@ -348,8 +348,8 @@ class EventStreamSpec extends SparkSpec {
     // the lake halves the oracle can't see: multiple committed versions
     // (one per micro-batch — 8 files / 2 per trigger), and a mid-stream
     // version still readable + internally consistent after later commits
-    val table = sys.props("java.io.tmpdir") +
-      "/graft_lakesink_" + graft.SessionCache.dirKey(SfDir) + "/table"
+    val table = graft.SessionCache.scratchPath(
+      "graft_lakesink_" + graft.SessionCache.dirKey(SfDir)) + "/table"
     val latest = LakeTable.latestVersion(table)
     assert(latest >= 3, s"expected one version per micro-batch, got $latest")
     val mid = LakeTable.read(spark, table, Some(2))

@@ -214,6 +214,199 @@ class LakeTableSpec extends SparkSpec {
     assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
   }
 
+  /** The parquet footer of a data file. */
+  private def footer(f: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf()))
+    try r.getFooter finally r.close()
+  }
+
+  private def liveFiles(p: String): Seq[String] =
+    LakeTable.manifestFiles(p, LakeTable.latestVersion(p))
+
+  /** Spark jobs one `compact` launches. */
+  private def compactJobs(p: String, targetFiles: Int): Int =
+    sparkJobs { LakeTable.compact(spark, p, targetFiles); () }
+
+  test("stitched compaction: every column type round-trips row-identically with no Spark job") {
+    val p = freshPath("stitch_types")
+    val df = spark.range(0, 300).selectExpr(
+      "id AS k",
+      "IF(id % 7 = 0, NULL, concat('s', id)) AS s",
+      "IF(id % 11 = 0, NULL, CAST(id / 7 AS DECIMAL(38, 18))) AS d",
+      "IF(id % 13 = 0, NULL, date_add(DATE'2024-01-01', CAST(id AS INT))) AS dt",
+      "IF(id % 17 = 0, NULL, timestamp_micros(1700000000000000 + id * 1000003)) AS ts",
+      "IF(id % 5 = 0, NULL, array(id, NULL, id * 2)) AS arr",
+      "IF(id % 6 = 0, NULL, map(concat('k', id), IF(id % 4 = 0, NULL, id))) AS m",
+      "IF(id % 9 = 0, NULL, named_struct('a', id, 'b', IF(id % 2 = 0, NULL, concat('b', id)))) AS st")
+    LakeTable.create(spark, p, df.filter("k < 200"), Seq("k"), nBuckets = 4)
+    LakeTable.append(spark, p, df.filter("k >= 200"))
+    val before = LakeTable.read(spark, p).collect().toSet
+    assert(before.size == 300 && liveFiles(p).size > 4)
+    assert(compactJobs(p, targetFiles = 2) == 0, "the stitch launched a Spark job")
+    val after = liveFiles(p)
+    assert(after.size == 2 && after.forall(f =>
+      f.contains("/data/compact-v3-") && f.split('/').last.startsWith("part-")), s"got $after")
+    assert(LakeTable.read(spark, p).collect().toSet == before)
+    assert(spark.read.format("graftlake").load(p).collect().toSet == before)
+    // the stitched footer keeps Spark's row schema (and with it the
+    // decimal, timestamp and nested typing a plain parquet reader needs)
+    after.foreach(f => assert(footer(f).getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.sql.parquet.row.metadata"), s"$f lost the row metadata"))
+    assert(spark.read.parquet(after: _*).collect().toSet == before)
+    // an empty file (an append of no rows) holds nothing to carry: the
+    // stitch drops it instead of landing a file without a row group
+    LakeTable.append(spark, p, df.filter("k < 0"))
+    assert(LakeTable.manifest(p, 4).files.map(_.rows).sorted.head == 0L)
+    assert(compactJobs(p, targetFiles = 3) == 0)
+    assert(liveFiles(p).size == 2 && LakeTable.read(spark, p).collect().toSet == before)
+  }
+
+  test("create, append and merge land one physical schema per table, so compact stitches") {
+    val p = freshPath("one_schema")
+    // one logical schema, derived with different nullability: create's
+    // columns, array elements and struct field are NOT NULL; the append
+    // batch is nullable at every level; the merge batch's columns are
+    // nullable (its nested types must equal the manifest's to merge)
+    LakeTable.create(spark, p, spark.range(0, 40).selectExpr(
+      "id AS k", "array(id, id + 1) AS arr", "named_struct('a', id) AS st"), Seq("k"), nBuckets = 4)
+    LakeTable.append(spark, p, spark.range(100, 110).selectExpr(
+      "IF(id < 0, NULL, id) AS k", "IF(id < 0, NULL, array(id, IF(id < 0, NULL, id))) AS arr",
+      "IF(id < 0, NULL, named_struct('a', IF(id < 0, NULL, id))) AS st"))
+    LakeTable.merge(spark, p, spark.range(5, 6).selectExpr(
+      "IF(id < 0, NULL, id) AS k", "IF(id < 0, NULL, array(id, IF(id < 0, NULL, id))) AS arr",
+      "IF(id < 0, NULL, named_struct('a', id)) AS st"), Seq("k"))
+    val files = liveFiles(p)
+    assert(files.exists(_.contains("/data/create/")) && files.exists(_.contains("/data/append-")) &&
+      files.exists(_.contains("/data/merge-")), s"fixture lacks a write kind: $files")
+    val schemas = files.map { f =>
+      val meta = footer(f).getFileMetaData
+      (meta.getSchema, meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    }.distinct
+    assert(schemas.size == 1, s"one table, ${schemas.size} physical schemas:\n${schemas.mkString("\n")}")
+    val before = LakeTable.read(spark, p).collect().toSet
+    assert(compactJobs(p, targetFiles = 1) == 0, "a uniform table must stitch")
+    assert(LakeTable.read(spark, p).collect().toSet == before)
+  }
+
+  test("row positions after a stitch: positional and equality deletes hit later row groups exactly") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val p = freshPath("stitch_pos")
+    LakeTable.create(spark, p, (1L to 400L).map(k => (k, "base", k)).toDF("k", "s", "v"),
+      Seq("k"), nBuckets = 4)
+    assert(compactJobs(p, targetFiles = 1) == 0)
+    val Seq(f) = liveFiles(p)
+    val groups = footer(f).getBlocks.asScala.map(_.getRowCount).toSeq
+    assert(groups.size == 4, s"a 4-file stitch should keep 4 row groups, got $groups")
+    // _metadata.row_index counts across row groups: 0 until the file's rows
+    val pos = spark.read.parquet(f).select(col("k"), col("_metadata.row_index")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(pos.map(_._2).sorted.toSeq == (0L until 400L))
+    val starts = groups.scanLeft(0L)(_ + _)
+    def group(i: Long): Int = starts.lastIndexWhere(_ <= i)
+    val posKeys = pos.collect { case (k, i) if group(i) >= 1 && i % 23 == 0 => k }.toSet
+    val dvKeys = pos.collect { case (k, i) if group(i) >= 1 && i % 29 == 1 => k }.toSet -- posKeys
+    Seq(posKeys, dvKeys).foreach(ks => assert(
+      ks.map(k => group(pos.find(_._1 == k).get._2)) == Set(1, 2, 3), "deletes must span groups 2-4"))
+    LakeTable.deletePos(spark, p, posKeys.toSeq.toDF("k"), Seq("k"))
+    LakeTable.deleteDV(spark, p, dvKeys.toSeq.toDF("k"), Seq("k"))
+    val expect = (1L to 400L).filterNot(k => posKeys(k) || dvKeys(k)).map(k => (k, "base", k)).toSet
+    assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
+    assert(rows(spark.read.format("graftlake").load(p).select("k", "s", "v")) == expect)
+    // the sidecar-carrying snapshot compacts through the scan rewrite
+    LakeTable.compact(spark, p, targetFiles = 2)
+    val mc = LakeTable.manifest(p, LakeTable.latestVersion(p))
+    assert(mc.dvPaths.isEmpty && mc.posDvPaths.isEmpty)
+    assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
+  }
+
+  test("compact keeps the scan rewrite for pre-addColumns files, sidecars and column mappings") {
+    import spark.implicits._
+    val base = (1L to 120L).map(k => (k, "base", k)).toDF("k", "s", "v")
+    def fixture(tag: String): String = {
+      val p = freshPath(tag)
+      LakeTable.create(spark, p, base, Seq("k"), nBuckets = 4)
+      p
+    }
+    def rowSet(p: String) = LakeTable.read(spark, p).collect().toSet
+    // a file written before addColumns next to one written after it
+    val pa = fixture("fallback_addcol")
+    LakeTable.addColumns(pa, Seq(org.apache.spark.sql.types.StructField(
+      "extra", org.apache.spark.sql.types.LongType)))
+    LakeTable.append(spark, pa, Seq((500L, "new", 5L, Option(7L))).toDF("k", "s", "v", "extra"))
+    val addBefore = rowSet(pa)
+    assert(compactJobs(pa, targetFiles = 2) > 0, "mixed footers must take the scan rewrite")
+    assert(rowSet(pa) == addBefore && addBefore.size == 121)
+    // the rewrite gave every file the current schema: the next compact stitches
+    assert(compactJobs(pa, targetFiles = 1) == 0)
+    assert(rowSet(pa) == addBefore)
+    // a live equality sidecar
+    val pd = fixture("fallback_dv")
+    LakeTable.deleteDV(spark, pd, Seq(Tuple1(7L)).toDF("k"), Seq("k"))
+    val dvBefore = rowSet(pd)
+    assert(compactJobs(pd, targetFiles = 2) > 0, "a sidecar must take the scan rewrite")
+    assert(rowSet(pd) == dvBefore && dvBefore.size == 119)
+    assert(LakeTable.manifest(pd, LakeTable.latestVersion(pd)).dvPaths.isEmpty)
+    // a column mapping
+    val pm = fixture("fallback_colmap")
+    LakeTable.renameColumn(pm, "s", "t")
+    val mapBefore = rowSet(pm)
+    assert(compactJobs(pm, targetFiles = 2) > 0, "a column mapping must take the scan rewrite")
+    assert(rowSet(pm) == mapBefore && mapBefore.size == 120)
+    val mm = LakeTable.manifest(pm, LakeTable.latestVersion(pm))
+    assert(mm.colMap.isEmpty && mm.schema.fieldNames.toSeq == Seq("k", "t", "v"))
+  }
+
+  test("a stitch of a table with index columns runs only the bloom backfill's jobs") {
+    import spark.implicits._
+    val p = freshPath("stitch_bloom")
+    LakeTable.create(spark, p, (1L to 200L).map(k => (k, s"u$k", k)).toDF("k", "uid", "v"),
+      Seq("k"), nBuckets = 4, indexCols = Seq("uid"))
+    LakeTable.append(spark, p, Seq((300L, "u300", 3L)).toDF("k", "uid", "v"))
+    val before = LakeTable.read(spark, p).collect().toSet
+    // the backfill aggregates per file: under AQE its map stage and its
+    // result are one job each
+    val sites = sparkJobSites { LakeTable.compact(spark, p, targetFiles = 2); () }
+    assert(sites.size <= 2 && sites.forall(_.contains("fileBloomBits")),
+      s"the stitch ran jobs besides the bloom backfill:\n${sites.mkString("\n")}")
+    val m = LakeTable.manifest(p, LakeTable.latestVersion(p))
+    assert(m.files.size == 2 && m.files.forall(_.blooms.contains("uid")))
+    assert(LakeTable.read(spark, p).collect().toSet == before)
+    assert(spark.read.format("graftlake").load(p).filter(col("uid") === "u300").count() == 1L)
+  }
+
+  test("a crash between the stitch and the publish: the table stays put, vacuum reclaims, a retry compacts") {
+    import spark.implicits._
+    val p = freshPath("stitch_crash")
+    LakeTable.create(spark, p, (1L to 200L).map(k => (k, "base", k)).toDF("k", "s", "v"),
+      Seq("k"), nBuckets = 4)
+    LakeTable.append(spark, p, (201L to 220L).map(k => (k, "app", k)).toDF("k", "s", "v"))
+    val published = LakeTable.latestVersion(p)
+    val expect = rows(LakeTable.read(spark, p).select("k", "s", "v"))
+    val onDisk = partFilesOnDisk(p)
+    LakeTable.testInterleave = () => throw new IllegalStateException("writer died before publish")
+    try intercept[IllegalStateException](LakeTable.compact(spark, p, targetFiles = 2))
+    finally LakeTable.testInterleave = () => ()
+    val orphans = partFilesOnDisk(p) -- onDisk
+    assert(orphans.size == 2 && orphans.forall(_.contains(s"/data/compact-v${published + 1}-")),
+      s"the stitched files should have landed: $orphans")
+    // the table still reads exactly its last published version
+    assert(LakeTable.latestVersion(p) == published)
+    assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
+    assert(rows(spark.read.format("graftlake").load(p).select("k", "s", "v")) == expect)
+    // vacuum deletes the stitched orphans, and nothing the table references
+    val (_, deleted) = LakeTable.vacuum(p, keepLast = 1, force = true)
+    assert(deleted == orphans.size)
+    orphans.foreach(f => assert(!new java.io.File(f).exists, s"orphan $f survived"))
+    assertOnlyLiveFiles(p)
+    // a retried compaction lands as the next version
+    assert(LakeTable.compact(spark, p, targetFiles = 2) == published + 1)
+    assert(liveFiles(p).size == 2)
+    assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
+  }
+
   test("schema evolution: new column unions in, old versions keep the original schema") {
     import spark.implicits._
     val p = freshPath("evolve")
@@ -270,8 +463,8 @@ class LakeTableSpec extends SparkSpec {
     val maintained = graft.operators.MergeOps.qLakeIncrementalMv(spark, SfDir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val direct = LakeTable.read(spark,
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_lakedel_${graft.SessionCache.dirKey(SfDir)}").toString, Some(3))
+      graft.SessionCache.scratchPath(
+        s"graft_lakedel_${graft.SessionCache.dirKey(SfDir)}"), Some(3))
       .groupBy("o_orderstatus").count()
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(maintained == direct)
