@@ -11,7 +11,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * Spark job chain — per job: wall, stage and task counts, SQL execution
   * id and callsite. Barrier-bound entries show here as long chains of
   * short jobs: the lever is the number of sequential jobs, not the
-  * per-task work.
+  * per-task work. After each entry, the session state it leaves behind:
+  * the temp views registered so far and the block-manager bytes pinned
+  * by cached and checkpointed RDDs.
   *
   * Usage: runMain graft.Profile <sfDir> <query[,query...]>
   */
@@ -103,6 +105,10 @@ object Profile {
           println(f"   job ${j.id}%3d  ${(j.t1 - j.t0) / 1000.0}%7.3f s  " +
             f"st=${j.nStages}%2d tk=${j.nTasks}%4d  ex=${j.exec}%-4s ${j.site.take(160)}")
         }
+        val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).sorted
+        val pinned = spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
+        println(f"== $name: session views=${views.length} [${views.mkString(", ")}], " +
+          f"pinned=${pinned / 1048576.0}%.2f MB")
       } catch {
         case e: Exception => println(s"== $name FAILED: ${e.getMessage}")
       }

@@ -172,34 +172,6 @@ object SimilarityOps {
   private def corpusSize(spark: SparkSession, dir: String): Long =
     Tables.tableCount(spark, dir, "embeddings")
 
-  /** Embedding dimensionality, memoized per embeddings snapshot:
-    * every vector frame in this file (queries, residuals, batch encodes)
-    * derives from the embeddings table by dimension-preserving maps, so
-    * the serve paths' per-invocation `select(size(vec)).head()` probe
-    * jobs all answer the same constant — read it once per corpus. */
-  private val dimMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-  private def vecDim(spark: SparkSession, dir: String): Int = {
-    // the probe job runs OUTSIDE the map (ADVICE r18: a Spark job inside
-    // computeIfAbsent blocks every thread hashing to the same bin for the
-    // job's duration) — double-checked put, the idSpaceGuardMemo pattern;
-    // a racing duplicate probe is idempotent
-    val key = embeddingsKey(dir)
-    val hit = dimMemo.get(key)
-    if (hit != null) hit.intValue()
-    else {
-      val row = Tables.embeddings(spark, dir)
-        .select(size(col("embedding"))).limit(1).collect()
-      if (row.isEmpty)
-        throw new IllegalStateException(
-          s"SimilarityOps: embeddings table at $dir is empty — no vector " +
-            "dimensionality to serve against")
-      val d = row(0).getInt(0)
-      dimMemo.putIfAbsent(key, java.lang.Integer.valueOf(d))
-      d
-    }
-  }
-
   /** Hyperplane bits per table, derived from corpus size so the expected
     * bucket occupancy stays ~32 vectors as the corpus grows (fixed bits
     * make candidate counts quadratic in n: bucket size grows linearly AND
@@ -550,37 +522,12 @@ object SimilarityOps {
     * sf0.001 before the widening). */
   private[graft] val MipsMinMeanRecallPct = 50
 
-  /** Centroids as a broadcastable frame (cell id, vector, ||c||^2).
-    * Embedding centroids as literal arrays costs seconds of codegen
-    * compile per plan at k=16 x 64 dims — quantizer state is data, not
-    * code. */
-  private def cellsDf(spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, sqNorm(c)) }.toSeq
-      .toDF("cell", "cvec", "cnorm")
-  }
-
-  /** Nearest-cell assignment: broadcast the K centroids, score every
-    * (vector, centroid) pair with the native dot product, keep the
-    * lexicographic min of (distance, cell) per vector — deterministic on
-    * ties. Returns (vec_id, vec, cell). */
-  private def assignCells(data: DataFrame, cells: DataFrame): DataFrame =
-    data.withColumn("__vn", GraftFunctions.dotProduct(col("vec"), col("vec")))
-      .join(broadcast(cells), lit(true))
-      .withColumn("__d",
-        col("__vn") - GraftFunctions.dotProduct(col("vec"), col("cvec")) * 2.0 + col("cnorm"))
-      .groupBy("vec_id")
-      .agg(
-        first(col("vec")).as("vec"),
-        min(struct(col("__d"), col("cell"))).getField("cell").as("cell"))
-
   /** Coarse k-means quantizer, trained on the driver: ONE collect of the
     * (already bounded) training sample, then Lloyd over driver arrays.
     *
-    * Deterministic spec — the same rules the distributed [[assignCells]]
-    * applies, so the trained quantizer routes exactly like the served one:
+    * Deterministic spec — the nearest-cell rule every encode and probe
+    * applies ([[nearestCell]]), so the trained quantizer routes exactly
+    * like the served one:
     *  - seeds = the first k rows in (xxhash64(vec_id), vec_id) order
     *    (spread uniformly over the corpus and robust to ANY id
     *    distribution — a modulo-stride pick silently under-seeds offset or
@@ -592,7 +539,7 @@ object SimilarityOps {
     *    a cell that captured no points keeps its previous centroid.
     *
     * Cost model: training is ~(64·k)·k·d per iteration (3 iterations)
-    * against n·k·d for the one distributed full-corpus assignment, so with
+    * against n·k·d for the one distributed full-corpus encode, so with
     * the n ≈ 8k² the [[ivfCells]] sizing implies, training is ~24/k of the
     * build — a bounded driver loop next to the part that has to scale,
     * at the price of one Spark job instead of several per iteration. */
@@ -691,69 +638,59 @@ object SimilarityOps {
     sys.props.get("graft.ivf.probe.denom").map(_.toInt).getOrElse(4)
   private def ivfProbes(k: Int): Int = math.max(6, (k + probeDenom - 1) / probeDenom)
 
-  /** Session-scoped IVF index over the corpus at `dir`: the k-means cell
-    * table (broadcastable quantizer metadata) and the one-shuffle cell
-    * assignment, built once per session and served from [[SessionCache]].
-    * This mirrors how IVF is actually deployed (FAISS lineage: TRAIN the
-    * quantizer and assign the corpus once at index time, serve many
-    * queries) — so the registered query prices the SEARCH, while
-    * SimilaritySpec exercises the training directly via [[kmeansLite]]. */
-  private def ivfIndex(spark: SparkSession, dir: String, k: Int): (DataFrame, DataFrame) = {
-    val base = withPlanted(vectors(spark, dir))
-    // FAISS-lineage split: TRAIN the quantizer on a bounded deterministic
-    // sample (~64 vectors per cell — Lloyd needs no more) on the driver,
-    // then assign the FULL corpus once, distributed. Training on
-    // everything would make the build superlinear for no recall gain.
-    val n = corpusSize(spark, dir)
-    val trainCap = 64L * k
-    val train =
-      if (n > trainCap) base.filter(pmod(xxhash64(col("vec_id")), lit(n / trainCap + 1)) === 0)
-      else base
-    val cells = graft.SessionCache.cachedDirView(spark, "graft_ivf_cells", dir) {
-      val centroids = kmeansLite(train, k, iters = 3)
-      // probe selection ranks exactly k cells; a short quantizer (corpus
-      // under k vectors) would make nProbe/k coverage claims wrong
-      require(centroids.length == k,
-        s"IVF: quantizer has ${centroids.length} cells, need $k " +
-          s"(training corpus too small)")
-      cellsDf(spark, centroids)
-    }
-    val assigned = graft.SessionCache.cachedDirView(spark, "graft_ivf_assigned", dir)(
-      assignCells(base, cells))
-    (cells, assigned)
+  /** The gated planted-query slice (vec_id, vec), collected once so its
+    * probes are planned on the driver ([[probeCells]]). */
+  private def querySlice(spark: SparkSession, dir: String,
+      queryStride: Long): Array[(Long, Array[Double])] = {
+    val spark2 = spark
+    import spark2.implicits._
+    withPlanted(vectors(spark, dir))
+      .filter(col("vec_id") >= PlantedIdOffset)
+      .filter(inGateSample(col("vec_id"), queryStride))
+      .select(col("vec_id"), col("vec")).as[(Long, Array[Double])].collect()
+  }
+
+  /** IVF-flat candidates (query_id, vec_id, __cos) of the gated query
+    * slice: each query's `nProbe` nearest cells, ranked on the driver
+    * ([[probeCells]]), and every base-corpus vector in them, scored by
+    * exact cosine. The corpus side is one typed map that assigns each
+    * vector its [[nearestCell]]; the plan gets two small local relations,
+    * per probed cell the queries that reach it and the query vectors, so
+    * nothing shuffles before the ranking. */
+  private def ivfScored(spark: SparkSession, dir: String, queryStride: Long): DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
+    val q = corpusQuantizer(spark, dir)
+    val nProbe = ivfProbes(q.nCells)
+    val qs = querySlice(spark, dir, queryStride)
+    val probed = qs.toSeq.flatMap { case (id, qv) =>
+      probeCells(qv, q, nProbe).map { case (cell, _) => (cell, id) }
+    }.groupBy(_._1).toSeq.map { case (cell, ps) => (cell, ps.map(_._2)) }
+      .toDF("cell", "query_ids")
+    vectors(spark, dir).as[(Long, Array[Double])]
+      .map { case (id, v) => (id, v, nearestCell(v, q.centroids, q.cnorms)) }
+      .toDF("vec_id", "vec", "cell")
+      .join(broadcast(probed), "cell")
+      .select(col("vec_id"), col("vec"), explode(col("query_ids")).as("query_id"))
+      .join(broadcast(qs.toSeq.toDF("query_id", "qvec")), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        GraftFunctions.cosineSim(col("qvec"), col("vec")).as("__cos"))
   }
 
   /** IVF-style ANN: partition the corpus into k-means cells, probe the
     * `nProbe` nearest cells per query, rank candidates by exact cosine.
     *
-    * Scale shape: the coarse quantizer (k centroids) is tiny and broadcast;
-    * the corpus shuffles ONCE on cell id at index time (cached per session
-    * via [[ivfIndex]] — the build-once/serve-many split real IVF systems
-    * make); a query touches only nProbe/k of the corpus. This is the
+    * Scale shape: the coarse quantizer (k centroids) is trained once per
+    * corpus snapshot on the driver ([[corpusQuantizer]] — the
+    * build-once/serve-many split real IVF systems make); the probe plan
+    * is made on the driver over the collected query slice, and a query
+    * touches only nProbe/k of the corpus ([[ivfScored]]). This is the
     * standard recall/throughput dial (IVF from the FAISS lineage) next to
     * qAnnTopkLsh's hash variant.
     * Planted-dup recall asserted in SimilaritySpec. */
   def annTopkIvfRanked(spark: SparkSession, dir: String,
-      queryStride: Long = 1L): DataFrame = {
-    val k = ivfCells(corpusSize(spark, dir))
-    val nProbe = ivfProbes(k)
-    val (cells, assigned) = ivfIndex(spark, dir, k)
-    // probe list: nProbe nearest centroids per query by L2
-    val queries = assigned.filter(col("vec_id") >= PlantedIdOffset)
-      .filter(inGateSample(col("vec_id"), queryStride))
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val l2 = GraftFunctions.dotProduct(col("qvec"), col("qvec")) -
-      GraftFunctions.dotProduct(col("qvec"), col("cvec")) * 2.0 + col("cnorm")
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(l2, col("cell"))
-    val probes = queries.join(broadcast(cells), lit(true))
-      .withColumn("__pr", row_number().over(wProbe))
-      .filter(col("__pr") <= nProbe)
-      .select("query_id", "qvec", "cell")
-    val cands = probes.join(assigned.filter(col("vec_id") < PlantedIdOffset), "cell")
-      .select("query_id", "qvec", "vec_id", "vec")
-    rankedTop10(cands.select(col("query_id"), col("vec_id"),
-      GraftFunctions.cosineSim(col("qvec"), col("vec")).as("__cos")))
-  }
+      queryStride: Long = 1L): DataFrame =
+    rankedTop10(ivfScored(spark, dir, queryStride))
 
   /** Driver-contract IVF entry: the ranked search through the
     * [[recallGate]]. */
@@ -772,33 +709,17 @@ object SimilarityOps {
   /** ALL probed-cell candidates above τ — the FAISS `range_search` shape
     * ([[annTopkIvfRanked]] returns the k best; range search returns
     * every neighbor within a radius — the dedup-at-threshold and
-    * graph-construction API). Same probe selection as the top-k serve;
-    * candidates carry their vectors out of the cell join and are
-    * EXACT-cosine verified, so precision is 1 by construction and the
+    * graph-construction API). The candidates of the top-k search
+    * ([[ivfScored]]), EXACT-cosine verified, so precision is 1 by
+    * construction and the
     * returned set is a SUBSET of the true range — which is what lets
     * the gate compute recall from bare counts, no membership join. */
   private[graft] def annRangeScored(spark: SparkSession, dir: String,
-      queryStride: Long): DataFrame = {
-    val k = ivfCells(corpusSize(spark, dir))
-    val nProbe = ivfProbes(k)
-    val (cells, assigned) = ivfIndex(spark, dir, k)
-    val queries = assigned.filter(col("vec_id") >= PlantedIdOffset)
-      .filter(inGateSample(col("vec_id"), queryStride))
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val l2 = GraftFunctions.dotProduct(col("qvec"), col("qvec")) -
-      GraftFunctions.dotProduct(col("qvec"), col("cvec")) * 2.0 + col("cnorm")
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(l2, col("cell"))
-    val probes = queries.join(broadcast(cells), lit(true))
-      .withColumn("__pr", row_number().over(wProbe))
-      .filter(col("__pr") <= nProbe)
-      .select("query_id", "qvec", "cell")
-    probes.join(assigned.filter(col("vec_id") < PlantedIdOffset), "cell")
-      .select(col("query_id"), col("vec_id"),
-        GraftFunctions.cosineSim(col("qvec"), col("vec")).as("__cos"))
+      queryStride: Long): DataFrame =
+    ivfScored(spark, dir, queryStride)
       .filter(col("__cos") >= RangeTauPpm / 1e6)
       .select(col("query_id"), col("vec_id"),
         round(col("__cos") * 1000000.0).cast("long").as("cos_ppm"))
-  }
 
   /** Exact range truth over the gated sample: every corpus vector with
     * cos ≥ τ per sampled query — O(sample · n), the bounded-brute
@@ -959,7 +880,7 @@ object SimilarityOps {
     * updates; returns the final assignment (vec_id, cell, dist). */
   private[graft] def kmeansExact(base: DataFrame, k: Int, rounds: Int): DataFrame = {
     // centroid state as a broadcastable frame (quantizer metadata, not
-    // literal code — the cellsDf codegen lesson applies here too)
+    // literal code: literal arrays cost seconds of codegen per plan)
     val spark2 = base.sparkSession
     import spark2.implicits._
     def cellsOf(c: Array[Array[Long]]): DataFrame =
@@ -1012,19 +933,6 @@ object SimilarityOps {
   private val PqBlocks = 8
   private val PqCells = 16
 
-  /** PQ codebooks, one 16-cell k-means per 8-dim sub-block, trained on
-    * RESIDUALS (vec − coarse-cell centroid) over a bounded
-    * deterministic sample (~64 vectors per code) collected ONCE and
-    * sliced into its 8 sub-blocks on the driver, memoized per
-    * (dir, file-snapshot): ~1k doubles of quantizer metadata — the
-    * train/serve split of the sanctioned-collect list. Residual encoding
-    * is the FAISS IVFPQ default (r9): the coarse quantizer removes the
-    * between-cell component, so the PQ budget quantizes only the
-    * within-cell displacement — tighter codes, better shortlist ordering
-    * at the same 8 bytes/vector. */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
   /** Query-independent half of the residual-ADC decomposition: per coarse
     * cell, the packed slot array T2[b·cells + c] = ‖C_b + cb_c‖² (C = the
     * cell centroid, cb = the PQ codebook entry). Pure driver-side
@@ -1051,96 +959,15 @@ object SimilarityOps {
       }.toSeq)
     }
 
-  /** (vec_id, rvec = vec − centroid(cell of vec)) over `assigned`. */
-  private def residualized(assigned: DataFrame, cells: DataFrame): DataFrame =
-    assigned
-      .join(broadcast(cells.select(col("cell"), col("cvec"))), "cell")
-      .select(col("vec_id"),
-        expr("zip_with(vec, cvec, (a, b) -> a - b)").as("rvec"))
-
-  private def pqCodebook(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    val key = graft.SessionCache.dirKey(dir)
-    pqMemo.computeIfAbsent(key, _ => {
-      val (cells, assigned) = ivfIndex(spark, dir, ivfCells(corpusSize(spark, dir)))
-      val dim = vecDim(spark, dir)
-      require(dim % PqBlocks == 0, s"PQ: dim $dim not divisible by $PqBlocks blocks")
-      val sub = dim / PqBlocks
-      val n = corpusSize(spark, dir)
-      val trainCap = 64L * PqCells
-      val resid = residualized(assigned, cells)
-      val train =
-        if (n > trainCap) resid.filter(pmod(xxhash64(col("vec_id")), lit(n / trainCap + 1)) === 0)
-        else resid
-      // one collect of the residual sample; each block trains on its
-      // driver-side slice (same seed order for every block)
-      val sample = seedOrdered(train.select(col("vec_id"), col("rvec").as("vec")))
-      Array.tabulate(PqBlocks) { b =>
-        val cb = lloyd(sample.map(_.slice(b * sub, (b + 1) * sub)), PqCells, iters = 3)
-        // the ADC lookup below indexes a DENSE blocks x cells table
-        // (slot = b*PqCells + code) — a short codebook (training sample
-        // under PqCells rows) would silently shift every later block's
-        // distances, so fail loudly instead
-        require(cb.length == PqCells,
-          s"PQ block $b: codebook has ${cb.length} cells, need $PqCells " +
-            s"(training corpus too small to train a PQ quantizer)")
-        cb
-      }
-    })
-  }
-
-  /** Codebook as a broadcastable (block, cell, cvec, cnorm) frame. */
-  private def pqCodebookDf(spark: SparkSession, dir: String): DataFrame =
-    codebookDf(spark, pqCodebook(spark, dir))
-
-  /** A codebook array as a broadcastable (block, cell, cvec, cnorm)
-    * frame — shared by the session-trained and the store-loaded paths. */
-  private def codebookDf(spark: SparkSession,
-      arr: Array[Array[Array[Double]]]): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    arr.zipWithIndex.flatMap { case (cells, b) =>
-      cells.zipWithIndex.map { case (c, i) => (b, i, c.toSeq, sqNorm(c)) }
-    }.toSeq.toDF("block", "cell", "cvec", "cnorm")
-  }
-
   /** ‖c‖² as every quantizer frame stores it (`cnorm`). */
   private def sqNorm(c: Array[Double]): Double = c.map(x => x * x).sum
-
-  /** Explode a vector column into its PQ sub-blocks. */
-  private def subBlocks(df: DataFrame, vecCol: String, sub: Int): DataFrame =
-    df.select(df.columns.filter(_ != vecCol).map(col) :+
-      posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1})," +
-        s" b -> slice($vecCol, b * $sub + 1, $sub))")).as(Seq("block", "bvec")): _*)
-
-  /** Corpus PQ codes (vec_id, codes: array<int> of length [[PqBlocks]])
-    * — the 8-byte-per-vector index payload, assigned once per session
-    * (broadcast codebook, min-struct argmin per block, re-packed into
-    * block order) and served from [[SessionCache]]. At serve time
-    * candidate ranking touches ONLY these codes — never the full
-    * vectors — which is the memory/bandwidth win PQ exists for. */
-  private def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionCache.cachedDirView(spark, "graft_pq_codes", dir) {
-      val (cells, assigned) = ivfIndex(spark, dir, ivfCells(corpusSize(spark, dir)))
-      // codes quantize the RESIDUAL re the vector's own coarse cell
-      val base = residualized(assigned.filter(col("vec_id") < PlantedIdOffset), cells)
-      subBlocks(base, "rvec", vecDim(spark, dir) / PqBlocks)
-        .join(broadcast(pqCodebookDf(spark, dir)), "block")
-        .withColumn("__d",
-          col("cnorm") - GraftFunctions.dotProduct(col("bvec"), col("cvec")) * 2.0)
-        .groupBy("vec_id", "block")
-        .agg(min(struct(col("__d"), col("cell"))).getField("cell").as("code"))
-        .groupBy("vec_id")
-        .agg(expr("transform(array_sort(collect_list(struct(block, code)))," +
-          " s -> s.code)").as("codes"))
-    }
 
   /** The frozen IVF+PQ quantizer as driver arrays, each indexed by id:
     * the coarse centroids with their squared norms as the cell table
     * stores them (`cnorm`, never recomputed), and the residual PQ
     * codebook, (block, code) → sub-vector. Quantizer-sized (≤ 4096 cells
-    * × dim, 8 × 16 codes), so the append encode and the serve plan use
-    * it on the driver and in task closures instead of joining frames of
-    * it. */
+    * × dim, 8 × 16 codes), so every encode and probe plan uses it on the
+    * driver and in task closures instead of joining frames of it. */
   final case class Quantizer(
       centroids: Array[Array[Double]],
       cnorms: Array[Double],
@@ -1159,47 +986,99 @@ object SimilarityOps {
     (rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
   }
 
-  /** The persistable IVF+PQ serving index: the probe-able cell table,
-    * the codes-joined corpus assignment, and the quantizer on the driver
-    * — exactly the state a build-once/serve-many deployment writes at
-    * index time and every serving session loads
-    * ([[graft.sources.AnnIndexStore]] is the parquet round-trip). */
+  /** The persistable IVF+PQ serving index: the corpus codes
+    * (vec_id, cell, codes) and the quantizer on the driver — exactly the
+    * state a build-once/serve-many deployment writes at index time and
+    * every serving session loads ([[graft.sources.AnnIndexStore]] is the
+    * parquet round-trip). */
   final case class IvfPqIndex(
-      cells: DataFrame,
       withCodes: DataFrame,
       quantizer: Quantizer) {
     def nCells: Int = quantizer.nCells
     def codebook: Array[Array[Array[Double]]] = quantizer.codebook
   }
 
-  /** The session-built coarse quantizer's cells as driver arrays, one
-    * collect of [[ivfIndex]]'s cached cell table per corpus snapshot
-    * ([[pqMemo]]'s key). */
-  private val cellArraysMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Double]], Array[Double])]()
+  /** The session-trained quantizer per corpus snapshot
+    * ([[graft.SessionCache.dirKey]]): ~1k doubles of driver metadata,
+    * trained once and shared by every build, search and join over that
+    * corpus. */
+  private val quantizerMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, Quantizer]()
 
-  /** Session-built index from the corpus at `dir` (every piece served
-    * from [[SessionCache]] / per-dir memos, so repeated calls are free). */
-  private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
-    val kCells = ivfCells(corpusSize(spark, dir))
-    val (cells, assigned) = ivfIndex(spark, dir, kCells)
-    // The serving index carries the codes NEXT TO the cell assignment
-    // (one session-cached join, r8): candidates leave the probe join
-    // already holding their 8 codes, so the candidate stream — the only
-    // O(queries x n/4) volume in the plan — never shuffles again to
-    // fetch them (the former cands-by-vec_id codes join was the x10
-    // scaling cliff: 4M-row exchange per run, slope 1.31).
-    val withCodes = graft.SessionCache.cachedDirView(
-      spark, "graft_pq_index", dir)(
-      assigned.filter(col("vec_id") < PlantedIdOffset).select("vec_id", "cell")
-        .join(pqCodes(spark, dir), "vec_id"))
-    // the collect runs outside the map ([[vecDim]]'s double-checked put)
+  /** The IVF+PQ quantizer of the corpus at `dir`, trained on first use.
+    * Training runs outside the map (a Spark job inside computeIfAbsent
+    * blocks every thread hashing to the same bin); a racing duplicate
+    * training is deterministic, so either result serves. */
+  private[graft] def corpusQuantizer(spark: SparkSession, dir: String): Quantizer = {
     val key = graft.SessionCache.dirKey(dir)
-    val arrays = Option(cellArraysMemo.get(key)).getOrElse {
-      val a = cellArrays(cells)
-      Option(cellArraysMemo.putIfAbsent(key, a)).getOrElse(a)
+    Option(quantizerMemo.get(key)).getOrElse {
+      val q = trainQuantizer(spark, dir)
+      Option(quantizerMemo.putIfAbsent(key, q)).getOrElse(q)
     }
-    IvfPqIndex(cells, withCodes, Quantizer(arrays._1, arrays._2, pqCodebook(spark, dir)))
+  }
+
+  /** Train the coarse cells and the residual PQ codebook, FAISS's
+    * train-once split. Each trains on a bounded deterministic sample of
+    * the corpus with its planted twins, ~64 vectors per cell or code:
+    * the rows whose xxhash64(vec_id) falls in residue class 0 of
+    * `n / cap + 1`, or every row when n is under the cap.
+    *  - cells: [[kmeansLite]]'s Lloyd over the cell sample, seed order;
+    *  - codebook: one 16-code k-means per 8-dim sub-block, trained on
+    *    RESIDUALS (vec − the centroid of its [[nearestCell]]), each block
+    *    sliced from the same seed-ordered residual sample. Residual
+    *    encoding is the FAISS IVFPQ default: the coarse quantizer removes
+    *    the between-cell component, so the PQ budget quantizes only the
+    *    within-cell displacement — tighter codes, better shortlist
+    *    ordering at the same 8 bytes/vector.
+    * One collect per distinct sample: when both caps select the same
+    * rows (k = 16 cells, or n under both caps) one collect serves both. */
+  private def trainQuantizer(spark: SparkSession, dir: String): Quantizer = {
+    val n = corpusSize(spark, dir)
+    val k = ivfCells(n)
+    val base = withPlanted(vectors(spark, dir))
+    def stride(cap: Long): Option[Long] = if (n > cap) Some(n / cap + 1) else None
+    def sample(st: Option[Long]): Array[Array[Double]] = seedOrdered(st.fold(base)(m =>
+      base.filter(pmod(xxhash64(col("vec_id")), lit(m)) === 0)))
+    val cellStride = stride(64L * k)
+    val cellSample = sample(cellStride)
+    val centroids = lloyd(cellSample, k, iters = 3)
+    // probe selection ranks exactly k cells; a short quantizer (corpus
+    // under k vectors) would make nProbe/k coverage claims wrong
+    require(centroids.length == k,
+      s"IVF: quantizer has ${centroids.length} cells, need $k " +
+        s"(training corpus too small)")
+    val cnorms = centroids.map(sqNorm)
+    val pqStride = stride(64L * PqCells)
+    val pqSample = if (pqStride == cellStride) cellSample else sample(pqStride)
+    val dim = centroids.head.length
+    require(dim % PqBlocks == 0, s"PQ: dim $dim not divisible by $PqBlocks blocks")
+    val sub = dim / PqBlocks
+    val resid = pqSample.map { v =>
+      val c = centroids(nearestCell(v, centroids, cnorms))
+      Array.tabulate(dim)(i => v(i) - c(i))
+    }
+    val codebook = Array.tabulate(PqBlocks) { b =>
+      val cb = lloyd(resid.map(_.slice(b * sub, (b + 1) * sub)), PqCells, iters = 3)
+      // the ADC lookup indexes a DENSE blocks x codes table
+      // (slot = b*PqCells + code) — a short codebook (training sample
+      // under PqCells rows) would silently shift every later block's
+      // distances, so fail loudly instead
+      require(cb.length == PqCells,
+        s"PQ block $b: codebook has ${cb.length} cells, need $PqCells " +
+          s"(training corpus too small to train a PQ quantizer)")
+      cb
+    }
+    Quantizer(centroids, cnorms, codebook)
+  }
+
+  /** The IVF+PQ index of the corpus at `dir`: the memoized quantizer
+    * ([[corpusQuantizer]]) and the corpus codes as one typed map over
+    * [[encodeVector]] ([[encodeWithIndex]], the store-append kernel). The
+    * codes frame is lazy: a consumer encodes as it scans, and the
+    * session keeps no view of it. */
+  private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
+    val q = corpusQuantizer(spark, dir)
+    IvfPqIndex(encodeWithIndex(spark, vectors(spark, dir), q), q)
   }
 
   /** IVF+PQ ANN top-k — the canonical large-corpus serving shape (FAISS
@@ -1220,12 +1099,13 @@ object SimilarityOps {
       queryStride: Long = 1L): DataFrame =
     ivfPqServe(spark, dir, queryStride, buildIvfPqIndex(spark, dir))
 
-  // ---- the quantizer on the driver: the append encode and the serve's
-  // probe plan. Each rule is the distributed algebra's, term for term,
-  // so cells, codes and scores stay bit-identical to an in-plan
-  // evaluation: every dot product sums left to right (the `dot_product`
-  // kernel's order), doubles compare as Spark orders them, and ties go
-  // to the lowest id (SimilaritySpec replays the frame algebra).
+  // ---- the quantizer on the driver: the one encoder (build, append,
+  // kNN graph) and the probe plans (IVF-flat, serve, kNN). Each rule is
+  // the frame algebra's, term for term, so cells, codes and scores stay
+  // bit-identical to an in-plan evaluation: every dot product sums left
+  // to right (the `dot_product` kernel's order), doubles compare as
+  // Spark orders them, and ties go to the lowest id (SimilaritySpec
+  // keeps the frame algebra as the reference).
 
   /** Spark's double ordering: 0.0 equals -0.0, NaN sorts above all. */
   private def cmpDouble(a: Double, b: Double): Int =
@@ -1240,20 +1120,27 @@ object SimilarityOps {
     s
   }
 
-  /** (cell, codes) of one vector under a frozen quantizer: the nearest
-    * cell by ‖v‖² − 2⟨v,C⟩ + cnorm ([[assignCells]]' distance), ties to
-    * the lowest cell; the residual r = v − C; per block b the code k
-    * minimizing ‖cb_k‖² − 2⟨r_b, cb_k⟩, ties to the lowest code. */
-  private[graft] def encodeVector(v: Array[Double], q: Quantizer): (Int, Array[Int]) = {
+  /** The nearest cell of `v` by ‖v‖² − 2⟨v,C⟩ + cnorm, ties to the lowest
+    * cell — the one routing rule of training, encode and search. */
+  private def nearestCell(v: Array[Double], centroids: Array[Array[Double]],
+      cnorms: Array[Double]): Int = {
     val vn = dot(v, v)
     var cell = 0
     var best = 0.0
     var c = 0
-    while (c < q.nCells) {
-      val d = vn - dot(v, q.centroids(c)) * 2.0 + q.cnorms(c)
+    while (c < centroids.length) {
+      val d = vn - dot(v, centroids(c)) * 2.0 + cnorms(c)
       if (c == 0 || cmpDouble(d, best) < 0) { best = d; cell = c }
       c += 1
     }
+    cell
+  }
+
+  /** (cell, codes) of one vector under a frozen quantizer: its
+    * [[nearestCell]]; the residual r = v − C; per block b the code k
+    * minimizing ‖cb_k‖² − 2⟨r_b, cb_k⟩, ties to the lowest code. */
+  private[graft] def encodeVector(v: Array[Double], q: Quantizer): (Int, Array[Int]) = {
+    val cell = nearestCell(v, q.centroids, q.cnorms)
     val cv = q.centroids(cell)
     val r = Array.tabulate(v.length)(i => v(i) - cv(i))
     val codes = Array.tabulate(q.codebook.length) { b =>
@@ -1295,18 +1182,18 @@ object SimilarityOps {
       dotAt(qv, (slot / PqCells) * cb.length, cb) * -2.0
     }
 
-  /** Encode a batch of (vec_id, vec) against a FROZEN index — nearest
-    * stored cell, residual PQ codes from the stored codebook — returning
-    * (vec_id, cell, codes) rows shaped exactly like `idx.withCodes`
-    * (the [[graft.sources.AnnIndexStore.append]] ingestion kernel). One
-    * map over the batch with the quantizer in the task closure
+  /** Encode a batch of (vec_id, vec) against a FROZEN quantizer —
+    * nearest stored cell, residual PQ codes from the stored codebook —
+    * returning (vec_id, cell, codes) rows, the shape of
+    * [[IvfPqIndex.withCodes]] (the build's corpus encode and the
+    * [[graft.sources.AnnIndexStore.append]] ingestion kernel). One map
+    * over the batch with the quantizer in the task closure
     * ([[encodeVector]]): no join, no shuffle, for any batch size; no
     * retraining, no base-corpus touch. */
   private[graft] def encodeWithIndex(spark: SparkSession, batch: DataFrame,
-      idx: IvfPqIndex): DataFrame = {
+      q: Quantizer): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val q = idx.quantizer
     val dim = q.centroids.head.length
     batch.select(col("vec_id"), col("vec")).as[(Long, Array[Double])]
       .map { case (id, v) =>
@@ -1342,10 +1229,7 @@ object SimilarityOps {
     val spark2 = spark
     import spark2.implicits._
     val nProbe = ivfProbes(idx.nCells)
-    val qs = withPlanted(vectors(spark, dir))
-      .filter(col("vec_id") >= PlantedIdOffset)
-      .filter(inGateSample(col("vec_id"), queryStride))
-      .select(col("vec_id"), col("vec")).as[(Long, Array[Double])].collect()
+    val qs = querySlice(spark, dir, queryStride)
     val queries = qs.toSeq.toDF("query_id", "qvec")
     // Residual ADC via the FAISS precomputed-tables decomposition: a
     // naive residual lookup table is per (query, probed cell) — a
@@ -1601,90 +1485,60 @@ object SimilarityOps {
     math.max(30, math.min(cap, (n / div).toInt))
   }
 
-  /** Graph membership (vec_id, cell, codes): the indexed base corpus
-    * plus the planted twins encoded through the FROZEN index via
-    * [[encodeWithIndex]] — the store-append kernel reused, so the twins
-    * arrive exactly as late-indexed vectors would in production. Cached
-    * per (dir, snapshot): the encode is one map over n/25 rows. */
-  private def knnGraphCodes(spark: SparkSession, dir: String,
-      idx: IvfPqIndex): DataFrame =
-    graft.SessionCache.cachedDirView(spark, "graft_knn_codes", dir) {
-      val twins = withPlanted(vectors(spark, dir))
-        .filter(col("vec_id") >= PlantedIdOffset)
-      idx.withCodes.unionByName(encodeWithIndex(spark, twins, idx))
-    }
-
   /** Every graph vector's top-10 neighbors — the corpus-scale kNN-graph
     * self-join (the primitive behind SemDeDup-at-scale tuning,
     * curriculum dedup, and density-based filtering), served through the
-    * session IVF+PQ index as an index-to-index join. NEVER the O(n²)
-    * cosine self-join:
+    * corpus IVF+PQ quantizer as an index-to-index join. NEVER the O(n²)
+    * cosine self-join. The graph is the base corpus plus its planted
+    * twins, and every graph vector is a query:
     *
-    *  1. probe selection: each graph vector ranks the broadcast coarse
-    *     cells and keeps its [[KnnProbeCells]] nearest (bounded-heap
-    *     [[graft.plans.TopKPerGroupExec]] over the n·K scored rows — a
-    *     window would sort every query's K rows after a full exchange);
-    *  2. candidates: probes ⋈ graph codes ON CELL — the stream is
-    *     n · probes · cellsize rows of (codes, ADC terms), no vectors;
-    *  3. ADC ranking from the 8-byte codes via the same residual
-    *     precomputed-tables decomposition as [[ivfPqServe]] — T2 per
-    *     cell broadcast, T3 per query CARRIED ON THE PROBE ROWS (the
-    *     serve path broadcasts T3 because its query set is bounded;
-    *     corpus-wide T3 cannot broadcast, and attaching it to the ×P
-    *     probe rows lets the candidate stream inherit it through the
-    *     cell join without ever shuffling candidates on query_id);
+    *  1. probes: one typed flatMap per graph vector emits its
+    *     [[KnnProbeCells]] nearest cells ([[probeCells]], each with its
+    *     __qc = −2⟨q,C⟩) and carries its T3 ([[pqT3]], the
+    *     cell-independent ADC half) on every probe row — corpus-wide T3
+    *     cannot broadcast, and riding the ×P probe rows lets the
+    *     candidate stream inherit it through the cell join without ever
+    *     shuffling candidates on query_id;
+    *  2. graph codes: one map over [[encodeWithIndex]], the store-append
+    *     kernel, so the twins are encoded exactly as late-indexed
+    *     vectors would be in production;
+    *  3. candidates: probes ⋈ graph codes ON CELL — the stream is
+    *     n · probes · cellsize rows of (codes, ADC terms), no vectors —
+    *     ranked from the 8-byte codes by the same residual
+    *     precomputed-tables decomposition as [[ivfPqServe]]: __qc + the
+    *     T2 walk (per cell, broadcast from the driver) + the T3 walk;
     *  4. bounded exact re-rank: top-[[knnShortlistDepth]] per query by
     *     ADC (slim (query_id, vec_id, __adc) rows through the heap
-    *     operator), then exact cosine against the corpus vectors.
+    *     operator), then exact cosine against the graph vectors.
     *
     * Self-edges are excluded in-plan. Output: (query_id, rank, vec_id,
     * cos_ppm) for EVERY graph vector — base corpus and twins. */
   def annKnnJoinRanked(spark: SparkSession, dir: String): DataFrame = {
-    val idx = buildIvfPqIndex(spark, dir)
-    val graph = knnGraphCodes(spark, dir, idx)
-    val qframe = withPlanted(vectors(spark, dir))
-    val cells = idx.cells
-    val n = corpusSize(spark, dir)
-
-    // 1. probe cells per graph vector; __qc = −2⟨q,C⟩ carried for ADC
-    val scoredCells = qframe
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-      .join(broadcast(cells), lit(true))
-      .withColumn("__qc", GraftFunctions.dotProduct(col("qvec"), col("cvec")) * -2.0)
-      .withColumn("__l2",
-        GraftFunctions.dotProduct(col("qvec"), col("qvec")) + col("__qc") + col("cnorm"))
-      .select("query_id", "cell", "__qc", "__l2")
-    val probes = graft.plans.TopK.topKPerGroup(scoredCells, KnnProbeCells(idx.nCells),
-        Seq(col("query_id")), Seq(col("__l2"), col("cell")))
-      .select("query_id", "cell", "__qc")
-
-    // 3a. per-query T3 (cell-independent ADC half): one linear pass over
-    // the graph vectors — blocks·cells slots, 128 doubles per query
-    val dim = vecDim(spark, dir)
-    val sub = dim / PqBlocks
-    val cb = codebookDf(spark, idx.codebook).select(col("block"),
-      col("cell").as("code"), col("cvec").as("codevec"))
-    val t3 = subBlocks(
-        qframe.select(col("vec_id").as("query_id"), col("vec").as("qvec")), "qvec", sub)
-      .join(broadcast(cb), "block")
-      .select(col("query_id"), (col("block") * PqCells + col("code")).as("slot"),
-        (GraftFunctions.dotProduct(col("bvec"), col("codevec")) * -2.0).as("d"))
-      .groupBy("query_id")
-      .agg(expr("transform(array_sort(collect_list(struct(slot, d))), s -> s.d)").as("t3"))
-
-    // 3b. T2 (query-independent half) from driver-side quantizer metadata
     val spark2 = spark
     import spark2.implicits._
+    val q = corpusQuantizer(spark, dir)
+    val qframe = withPlanted(vectors(spark, dir))
+    val nProbe = KnnProbeCells(q.nCells)
+
+    // 1. probes with their T3
+    val probes = qframe.select(col("vec_id"), col("vec")).as[(Long, Array[Double])]
+      .flatMap { case (id, qv) =>
+        val t3 = pqT3(qv, q.codebook)
+        probeCells(qv, q, nProbe).map { case (cell, qc) => (id, cell, qc, t3) }
+      }
+      .toDF("query_id", "cell", "__qc", "t3")
+
+    // 3. T2 (query-independent half) from driver-side quantizer metadata
     val t2 = broadcast(
-      pqT2Rows(idx.quantizer.centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) },
-        idx.codebook, sub)
+      pqT2Rows(q.centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) },
+        q.codebook, q.codebook.head.head.length)
         .toDF("cell", "t2"))
 
-    // 2+3c. candidates inherit T3 through the cell join; ADC is computed
+    // 2+3. candidates inherit T3 through the cell join; ADC is computed
     // in the same stage, so the only thing that ever shuffles on
     // query_id is the slim (query_id, vec_id, __adc) stream below
-    val approx = probes.join(t3, "query_id")
-      .join(graph, "cell")
+    val approx = probes
+      .join(encodeWithIndex(spark, qframe, q), "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .join(t2, "cell")
       .select(col("query_id"), col("vec_id"),
@@ -1693,7 +1547,8 @@ object SimilarityOps {
           + GraftFunctions.adcLookup(col("codes"), col("t3"), PqCells)).as("__adc"))
 
     // 4. bounded exact re-rank
-    val shortlist = graft.plans.TopK.topKPerGroup(approx, knnShortlistDepth(n),
+    val shortlist = graft.plans.TopK.topKPerGroup(approx,
+      knnShortlistDepth(corpusSize(spark, dir)),
       Seq(col("query_id")), Seq(col("__adc"), col("vec_id")))
     rankedTop10(shortlist
       .join(qframe, "vec_id")

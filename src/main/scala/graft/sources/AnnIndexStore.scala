@@ -8,9 +8,9 @@ import graft.similarity.SimilarityOps
 import graft.similarity.SimilarityOps.{IvfPqIndex, Quantizer}
 
 /** Cross-SESSION persistence for the IVF+PQ serving index — the piece
-  * that turns the per-JVM [[graft.SessionCache]] build-once/serve-many
-  * split into the real deployment shape: at 100 TB the index build (a
-  * full-corpus k-means assignment + PQ encode) is a batch job whose
+  * that turns the per-JVM build-once/serve-many split (the quantizer
+  * memoized per corpus snapshot) into the real deployment shape: at
+  * 100 TB the index build (a full-corpus encode) is a batch job whose
   * output OUTLIVES the JVM, and serving sessions load it instead of
   * rebuilding (FAISS writes .index files; a lakehouse writes index
   * TABLES — this store does the latter, so the index is itself
@@ -52,6 +52,7 @@ object AnnIndexStore {
   private def appendedTable(path: String) = s"$path/appended_vectors"
 
   private val VectorSchema = StructType.fromDDL("vec_id BIGINT, vec ARRAY<DOUBLE>")
+  private val CodesSchema = StructType.fromDDL("vec_id BIGINT, cell INT, codes ARRAY<INT>")
   // the frozen quantizer files' schemas, as write() lays them out: read
   // with them, a load opens no footer to infer one
   private val CellsSchema = StructType.fromDDL("cell INT, cvec ARRAY<DOUBLE>, cnorm DOUBLE")
@@ -68,26 +69,32 @@ object AnnIndexStore {
   private def live(table: String): LakeTable.Manifest =
     LakeTable.manifest(table, LakeTable.latestVersion(table))
 
-  /** Build (via the session cache — free if already built) and persist
-    * the serving index for the corpus at `dataDir`. A REBUILD starts
-    * clean, with an empty appended set (left behind, serve() would
-    * silently union stale vectors into the rerank base). */
+  /** Build and persist the serving index for the corpus at `dataDir`:
+    * the quantizer is trained once per corpus snapshot
+    * ([[SimilarityOps.corpusQuantizer]] — free if already trained) and
+    * the corpus codes are encoded by one map inside the codes table's
+    * append. A REBUILD starts clean, with an empty appended set (left
+    * behind, serve() would silently union stale vectors into the rerank
+    * base). */
   def write(spark: SparkSession, dataDir: String, path: String): Unit = {
     LakeTable.deleteRecursively(path)
     val idx = SimilarityOps.buildIvfPqIndex(spark, dataDir)
+    val q = idx.quantizer
+    val spark2 = spark
+    import spark2.implicits._
     // cells are quantizer-sized (~sqrt(corpus) rows): one file, so every
     // later read()/serve()/append() lists and scans one task instead of
     // one per build partition (§6 small files)
-    idx.cells.coalesce(1).write.mode("overwrite").parquet(s"$path/cells.parquet")
-    val spark2 = spark
-    import spark2.implicits._
+    q.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq, q.cnorms(i)) }
+      .toSeq.toDF("cell", "cvec", "cnorm")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/cells.parquet")
     idx.codebook.zipWithIndex.flatMap { case (cells, b) =>
       cells.zipWithIndex.map { case (c, k) => (b, k, c.toSeq) }
     }.toSeq.toDF("block", "code", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook.parquet")
     val build = java.util.UUID.randomUUID().toString
     LakeTable.createEmpty(appendedTable(path), VectorSchema, Seq("vec_id"))
-    LakeTable.createEmpty(codesTable(path), idx.withCodes.schema, Seq("vec_id"),
+    LakeTable.createEmpty(codesTable(path), CodesSchema, Seq("vec_id"),
       props = Map("snapshot" -> graft.Tables.snapshot(s"$dataDir/embeddings.parquet"),
         "build" -> build,
         "nCells" -> idx.nCells.toString, "blocks" -> idx.codebook.length.toString,
@@ -143,7 +150,6 @@ object AnnIndexStore {
           "return wrong neighbors; rebuild with write(), or pass " +
           "allowStale=true for forensics only")
     IvfPqIndex(
-      spark.read.schema(CellsSchema).parquet(s"$path/cells.parquet"),
       LakeTable.readSnapshot(spark, codesTable(path), m, m.files),
       quantizer(spark, path, prop("build"),
         prop("nCells").toInt, prop("blocks").toInt, prop("codes").toInt))
@@ -206,7 +212,7 @@ object AnnIndexStore {
     val t = appendedTable(path)
     val added = LakeTable.append(spark, t, batch0.select(col("vec_id"), col("vec")))
     LakeTable.append(spark, codesTable(path), SimilarityOps.encodeWithIndex(spark,
-      LakeTable.readSnapshot(spark, t, live(t), added), idx))
+      LakeTable.readSnapshot(spark, t, live(t), added), idx.quantizer))
   }
 
   /** OPTIMIZE for the index: compact the codes and appended-vector

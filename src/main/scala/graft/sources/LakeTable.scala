@@ -1239,16 +1239,24 @@ object LakeTable {
 
   /** The table schema after unioning in a batch's columns (merge-side
     * schema evolution): existing fields keep their place, new fields
-    * append. Type conflicts on a shared name fail loudly. */
+    * append. Type conflicts on a shared name fail loudly. Nullability is
+    * no conflict at any level ([[writeData]] lands every column
+    * nullable, and the manifest's DDL reads array elements and map
+    * values back as nullable whatever the create wrote), but a batch
+    * type that differs from the table's only in nullability widens the
+    * table's column to nullable at every level: a read trusts a NOT NULL
+    * in the manifest and would turn a landed null into a default value. */
   private def evolveSchema(prior: StructType, batch: StructType): StructType = {
-    val priorByName = prior.map(f => f.name -> f).toMap
-    batch.foreach { f =>
-      priorByName.get(f.name).foreach { p =>
-        require(p.dataType == f.dataType,
+    val batchByName = batch.map(f => f.name -> f).toMap
+    val kept = prior.fields.map { p =>
+      batchByName.get(p.name).fold(p) { f =>
+        require(ColumnBridge.sameIgnoringNullability(p.dataType, f.dataType),
           s"LakeTable: column ${f.name} type conflict (${p.dataType} vs ${f.dataType})")
+        if (p.dataType == f.dataType && (p.nullable || !f.nullable)) p
+        else p.copy(dataType = ColumnBridge.nullableType(p.dataType), nullable = true)
       }
     }
-    StructType(prior.fields ++ batch.filterNot(f => priorByName.contains(f.name))
+    StructType(kept ++ batch.filterNot(f => prior.fieldNames.contains(f.name))
       .map(f => StructField(f.name, f.dataType, nullable = true)))
   }
 

@@ -73,6 +73,14 @@ object ColumnBridge {
     * `array<t>`/`map<k, v>` cast that only widens `containsNull`, so the
     * written schema would fall back to the input's nullability. */
   def asNullable(c: Column): Column = column(AsNullable(expression(c)))
+
+  /** `a` and `b` are one type once every nullability flag is ignored, at
+    * every level (`DataType.equalsIgnoreNullability` is `private[sql]`). */
+  def sameIgnoringNullability(a: DataType, b: DataType): Boolean =
+    DataType.equalsIgnoreNullability(a, b)
+
+  /** `t` with every nullability flag set, at every level. */
+  def nullableType(t: DataType): DataType = t.asNullable
 }
 
 /** Pass-through whose type is `child`'s with every nullability flag set

@@ -15,9 +15,11 @@ class AnnIndexStoreSpec extends SparkSpec {
     .createTempDirectory("graft_ann_index").toString
 
   /** Spark jobs one fresh IVF+PQ build + store write may run at sf0.001:
-    * 30 measured, plus headroom. Training the quantizers as distributed
-    * Lloyd iterations again would run ~200. */
-  private val JobBudget = 40
+    * 9 measured, plus headroom. Assigning and encoding the corpus with
+    * the frame algebra (cross join, residual join, per-block argmin
+    * groupBys, four checkpointed views) ran 26; training the quantizers
+    * as distributed Lloyd iterations would run ~200. */
+  private val JobBudget = 12
 
   private def tables(dir: String) = Seq(s"$dir/codes", s"$dir/appended_vectors")
 
@@ -52,9 +54,10 @@ class AnnIndexStoreSpec extends SparkSpec {
     for (b <- live.codebook.indices)
       assert(loaded.codebook(b).map(_.toSeq).toSeq == live.codebook(b).map(_.toSeq).toSeq,
         s"codebook block $b drifted through parquet")
-    // index tables row-identical
-    assert(loaded.cells.exceptAll(live.cells).isEmpty &&
-      live.cells.exceptAll(loaded.cells).isEmpty)
+    // cells bit-identical, codes row-identical
+    assert(loaded.quantizer.centroids.map(_.toSeq).toSeq ==
+      live.quantizer.centroids.map(_.toSeq).toSeq)
+    assert(loaded.quantizer.cnorms.toSeq == live.quantizer.cnorms.toSeq)
     assert(loaded.withCodes.exceptAll(live.withCodes).isEmpty &&
       live.withCodes.exceptAll(loaded.withCodes).isEmpty)
     // and the search served from the LOADED index equals the live path
@@ -153,16 +156,24 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(sparkJobs(AnnIndexStore.read(spark, SfDir, dir)) == 2)
   }
 
+  private def tempViews(): Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
   test("building the IVF+PQ index on a fresh corpus stays within its Spark job budget") {
-    // a corpus dir no session cache has seen: the build trains, assigns
-    // and encodes from scratch
+    // a corpus dir no memo has seen: the build trains and encodes from
+    // scratch
     val data = java.nio.file.Files.createTempDirectory("graft_ann_jobs")
     java.nio.file.Files.copy(java.nio.file.Paths.get(SfDir, "embeddings.parquet"),
       data.resolve("embeddings.parquet"))
+    val views = tempViews()
     val jobs = sparkJobs(AnnIndexStore.write(spark, data.toString, s"$data/ann"))
+    val left = tempViews() -- views
     LakeTable.deleteRecursively(data.toString)
     assert(jobs > 0 && jobs <= JobBudget,
       s"IVF+PQ build ran $jobs Spark jobs (budget $JobBudget)")
+    // the quantizer is a driver value and the codes are encoded inside
+    // the codes table's append: nothing is checkpointed into the session
+    assert(left.isEmpty, s"the build left session views: ${left.mkString(", ")}")
   }
 
   test("a store log without the snapshot property fails and names it") {
@@ -283,7 +294,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     // each table's data/, and neither commit happens
     val (qid, srcRank, twin) = twinOfServed(dir, 7000002L)
     twin.write.parquet(s"$dir/appended_vectors/data/append-v9-crashed")
-    SimilarityOps.encodeWithIndex(spark, twin, AnnIndexStore.read(spark, SfDir, dir))
+    SimilarityOps.encodeWithIndex(spark, twin, AnnIndexStore.read(spark, SfDir, dir).quantizer)
       .write.parquet(s"$dir/codes/data/append-v9-crashed")
     assert(idsOnDisk(dir).contains(7000002L), "no orphan file landed")
     assert(served(dir) == served0, "uncommitted append files changed what serve returns")

@@ -407,6 +407,37 @@ class LakeTableSpec extends SparkSpec {
     assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
   }
 
+  test("merge takes a batch whose types differ from the table's only in nullability") {
+    // array(id, id + 1) has NOT NULL elements; the manifest's DDL reads
+    // them back nullable, so the batch built by the create's own
+    // expression must still merge
+    val p = freshPath("evolve_nullability")
+    LakeTable.create(spark, p, spark.range(0, 10).selectExpr(
+      "id AS k", "array(id, id + 1) AS arr", "id * 10 AS v"), Seq("k"))
+    LakeTable.merge(spark, p, spark.range(5, 15).selectExpr(
+      "id AS k", "array(id, id + 1) AS arr", "id * 10 AS v"), Seq("k"))
+    assert(LakeTable.read(spark, p).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSet ==
+      (0L until 15L).map(k => (k, Seq(k, k + 1), k * 10)).toSet)
+    // a struct field created NOT NULL takes a nullable batch field
+    val ps = freshPath("evolve_nullability_struct")
+    LakeTable.create(spark, ps, spark.range(0, 4).selectExpr(
+      "id AS k", "named_struct('a', id) AS st"), Seq("k"))
+    LakeTable.merge(spark, ps, spark.range(2, 6).selectExpr(
+      "id AS k", "named_struct('a', IF(id = 3, NULL, id)) AS st"), Seq("k"))
+    assert(LakeTable.read(spark, ps).collect().map { r =>
+      val st = r.getStruct(1)
+      (r.getLong(0), if (st.isNullAt(0)) None else Some(st.getLong(0)))
+    }.toSet == Set((0L, Some(0L)), (1L, Some(1L)), (2L, Some(2L)), (3L, None),
+      (4L, Some(4L)), (5L, Some(5L))))
+    // a real conflict still fails and names the column
+    val e = intercept[IllegalArgumentException] {
+      LakeTable.merge(spark, p, spark.range(1).selectExpr(
+        "id AS k", "array(id, id + 1) AS arr", "CAST(id AS STRING) AS v"), Seq("k"))
+    }
+    assert(e.getMessage.contains("column v type conflict (LongType vs StringType)"), e.getMessage)
+  }
+
   test("schema evolution: new column unions in, old versions keep the original schema") {
     import spark.implicits._
     val p = freshPath("evolve")

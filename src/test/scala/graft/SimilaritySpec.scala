@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, VectorOps}
 import graft.similarity.SimilarityOps
@@ -721,10 +723,11 @@ class SimilaritySpec extends SparkSpec {
       s"measured mean recall $meanPct below the pinned floor")
   }
 
-  // ---- the frozen quantizer on the driver vs the distributed algebra it
-  // replaced: the append encode (cross-join argmin, residual, per-block
-  // argmin), the serve's probe window and its T3 aggregation, kept here
-  // as the reference the driver paths must equal bit for bit
+  // ---- the quantizer on the driver vs the distributed algebra it
+  // replaced: the cross-join assignment, the residual codebook training,
+  // the encode (residual, per-block argmin), the probe window and the T3
+  // aggregation, kept here as the reference the build, the encode, the
+  // IVF-flat search, the serve and the kNN join must equal bit for bit
 
   private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     GraftFunctions.dotProduct(a, b)
@@ -740,18 +743,32 @@ class SimilaritySpec extends SparkSpec {
       posexplode(expr(s"transform(sequence(0, 7), b -> slice($vecCol, b * $sub + 1, $sub))"))
         .as(Seq("block", "bvec")): _*)
 
-  private def referenceEncode(batch: org.apache.spark.sql.DataFrame,
-      cells: org.apache.spark.sql.DataFrame, cb: Array[Array[Array[Double]]]) = {
-    val sub = cb.head.head.length
-    val assigned = batch.withColumn("__vn", dot(col("vec"), col("vec")))
+  /** (cell, cvec, cnorm) frame of a quantizer's cells. */
+  private def cellsFrame(q: SimilarityOps.Quantizer) =
+    q.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq, q.cnorms(i)) }
+      .toSeq.toDF("cell", "cvec", "cnorm")
+
+  /** Nearest-cell assignment (vec_id, vec, cell): a broadcast cross join
+    * and the lexicographic min of (distance, cell) per vector. */
+  private def referenceAssign(batch: org.apache.spark.sql.DataFrame,
+      cells: org.apache.spark.sql.DataFrame) =
+    batch.withColumn("__vn", dot(col("vec"), col("vec")))
       .join(broadcast(cells), lit(true))
       .withColumn("__d", col("__vn") - dot(col("vec"), col("cvec")) * 2.0 + col("cnorm"))
       .groupBy("vec_id")
       .agg(first(col("vec")).as("vec"),
         min(struct(col("__d"), col("cell"))).getField("cell").as("cell"))
-    val resid = assigned.join(broadcast(cells.select(col("cell"), col("cvec"))), "cell")
-      .select(col("vec_id"), col("cell").as("ivf_cell"),
-        expr("zip_with(vec, cvec, (a, b) -> a - b)").as("rvec"))
+
+  /** (vec_id, cell, rvec = vec − centroid(cell)) of the assignment. */
+  private def referenceResiduals(batch: org.apache.spark.sql.DataFrame,
+      cells: org.apache.spark.sql.DataFrame) =
+    referenceAssign(batch, cells).join(broadcast(cells.select(col("cell"), col("cvec"))), "cell")
+      .select(col("vec_id"), col("cell"), expr("zip_with(vec, cvec, (a, b) -> a - b)").as("rvec"))
+
+  private def referenceEncode(batch: org.apache.spark.sql.DataFrame,
+      cells: org.apache.spark.sql.DataFrame, cb: Array[Array[Array[Double]]]) = {
+    val sub = cb.head.head.length
+    val resid = referenceResiduals(batch, cells).withColumnRenamed("cell", "ivf_cell")
     subBlocksOf(resid, "rvec", sub)
       .join(broadcast(codebookFrame(cb)), "block")
       .withColumn("__d", col("cnorm") - dot(col("bvec"), col("cvec")) * 2.0)
@@ -791,9 +808,10 @@ class SimilaritySpec extends SparkSpec {
     * reference algebra over `vecs` (vec_id, vec) bit for bit. */
   private def assertDriverMatchesAlgebra(idx: SimilarityOps.IvfPqIndex,
       vecs: org.apache.spark.sql.DataFrame, nProbe: Int): Unit = {
-    val encoded = SimilarityOps.encodeWithIndex(spark, vecs, idx)
+    val cells = cellsFrame(idx.quantizer)
+    val encoded = SimilarityOps.encodeWithIndex(spark, vecs, idx.quantizer)
       .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
-    val reference = referenceEncode(vecs, idx.cells, idx.codebook)
+    val reference = referenceEncode(vecs, cells, idx.codebook)
       .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
     assert(encoded.nonEmpty && encoded == reference)
     val queries = vecs.select(col("vec_id").as("query_id"), col("vec").as("qvec"))
@@ -802,7 +820,7 @@ class SimilaritySpec extends SparkSpec {
       SimilarityOps.probeCells(qv, idx.quantizer, nProbe).zipWithIndex
         .map { case ((cell, qc), r) => (id, r + 1, cell, bits(qc)) }
     }.sorted
-    val refProbes = referenceProbes(queries, idx.cells, nProbe)
+    val refProbes = referenceProbes(queries, cells, nProbe)
       .as[(Long, Int, Int, Double)].collect().map(r => (r._1, r._2, r._3, bits(r._4))).toSeq.sorted
     assert(probes == refProbes)
     val t3 = qs.map { case (id, qv) => (id, SimilarityOps.pqT3(qv, idx.codebook).map(bits).toSeq) }
@@ -826,6 +844,107 @@ class SimilaritySpec extends SparkSpec {
     assertDriverMatchesAlgebra(idx, vecs.filter(col("vec_id") % 7 === 0), nProbe = idx.nCells)
   }
 
+  /** The corpus at `dir` as (vec_id, vec). */
+  private def corpusOf(dir: String) = Tables.embeddings(spark, dir)
+    .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("vec"))
+
+  /** `base` with its planted twins: every 25th vector re-keyed +1e6 and
+    * scaled by 1.01. */
+  private def withTwins(base: DataFrame) = base.unionByName(base.filter(col("vec_id") % 25 === 0)
+    .select((col("vec_id") + 1000000L).as("vec_id"), transform(col("vec"), x => x * 1.01).as("vec")))
+
+  /** The build's bounded training sample: residue class 0 of
+    * xxhash64(vec_id) mod n / cap + 1 once n exceeds the cap. */
+  private def trainSample(df: DataFrame, n: Long, cap: Long) =
+    if (n > cap) df.filter(pmod(xxhash64(col("vec_id")), lit(n / cap + 1)) === 0) else df
+
+  private def bitsOf(a: Array[Array[Double]]) = a.map(_.map(bits).toSeq).toSeq
+
+  test("the IVF+PQ build's cells, codebook and codes equal the frame-algebra training and encode bit for bit") {
+    val base = corpusOf(SfDir)
+    val all = withTwins(base)
+    val n = base.count()
+    val k = math.max(16, math.min(4096, math.ceil(math.sqrt(n / 8.0)).toInt))
+    // cells: Lloyd over the cell sample of the corpus with its twins
+    val centroids = SimilarityOps.kmeansLite(trainSample(all, n, 64L * k), k, iters = 3)
+    val cnorms = centroids.map(c => c.map(x => x * x).sum)
+    val cells = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq, cnorms(i)) }
+      .toSeq.toDF("cell", "cvec", "cnorm")
+    // codebook: per sub-block, Lloyd over that slice of the residual
+    // sample, the residuals taken against the cross-join assignment
+    val resid = trainSample(referenceResiduals(all, cells), n, 64L * 16)
+    val sub = centroids.head.length / 8
+    val codebook = Array.tabulate(8) { b =>
+      SimilarityOps.kmeansLite(resid.select(col("vec_id"),
+        slice(col("rvec"), b * sub + 1, sub).as("vec")), 16, iters = 3)
+    }
+    val idx = SimilarityOps.buildIvfPqIndex(spark, SfDir)
+    assert(bitsOf(idx.quantizer.centroids) == bitsOf(centroids))
+    assert(idx.quantizer.cnorms.map(bits).toSeq == cnorms.map(bits).toSeq)
+    codebook.indices.foreach { b =>
+      assert(bitsOf(idx.codebook(b)) == bitsOf(codebook(b)), s"codebook block $b")
+    }
+    val codes = idx.withCodes.as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
+    assert(codes.size == n)
+    assert(codes == referenceEncode(base, cells, codebook)
+      .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.mkString(",")).toSeq.sorted
+
+  test("IVF-flat, range search and the kNN join return the rows of the frame-algebra probe plan") {
+    val q = SimilarityOps.buildIvfPqIndex(spark, SfDir).quantizer
+    val cells = cellsFrame(q)
+    val base = corpusOf(SfDir)
+    val all = withTwins(base)
+    val n = base.count()
+    def top(scored: DataFrame, depth: Int, order: Column*) =
+      scored.withColumn("rank", row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
+        .filter(col("rank") <= depth)
+    def ranked(scored: DataFrame) = top(scored, 10, col("__cos").desc, col("vec_id"))
+      .select(col("query_id"), col("rank").cast("long"), col("vec_id"),
+        round(col("__cos") * 1000000.0).cast("long"))
+    // IVF-flat: the planted queries' nearest cells by the probe window,
+    // their base-corpus vectors by the cross-join assignment
+    val assigned = referenceAssign(all, cells)
+    val queries = assigned.filter(col("vec_id") >= 1000000L)
+      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+    val cands = referenceProbes(queries, cells, math.max(6, (q.nCells + 3) / 4))
+      .select("query_id", "cell").join(queries, "query_id")
+      .join(assigned.filter(col("vec_id") < 1000000L), "cell")
+      .select(col("query_id"), col("vec_id"),
+        GraftFunctions.cosineSim(col("qvec"), col("vec")).as("__cos"))
+    val ivf = sortedRows(SimilarityOps.annTopkIvfRanked(spark, SfDir))
+    assert(ivf.nonEmpty && ivf == sortedRows(ranked(cands)))
+    val range = sortedRows(SimilarityOps.annRangeScored(spark, SfDir, 1L))
+    assert(range.nonEmpty && range == sortedRows(
+      cands.filter(col("__cos") >= SimilarityOps.RangeTauPpm / 1e6)
+        .select(col("query_id"), col("vec_id"), round(col("__cos") * 1000000.0).cast("long"))))
+    // kNN join: every graph vector's probe window with its T3, the graph
+    // codes by the frame-algebra encode, ADC, the shortlist window, the
+    // exact rerank
+    val cb = q.codebook
+    val graphQ = all.select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+    val t2 = SimilarityOps.pqT2Rows(q.centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) },
+      cb, cb.head.head.length).toDF("cell", "t2")
+    val adc = referenceProbes(graphQ, cells, SimilarityOps.KnnProbeCells(q.nCells))
+      .select("query_id", "cell", "__qc").join(referenceT3(graphQ, cb), "query_id")
+      .join(referenceEncode(all, cells, cb), "cell")
+      .filter(col("vec_id") =!= col("query_id"))
+      .join(t2, "cell")
+      .select(col("query_id"), col("vec_id"),
+        (col("__qc") + GraftFunctions.adcLookup(col("codes"), col("t2"), 16)
+          + GraftFunctions.adcLookup(col("codes"), col("t3"), 16)).as("__adc"))
+    val depth = math.max(30,
+      math.min(math.max(200, 4 * math.ceil(math.sqrt(n.toDouble)).toInt), (n / 10).toInt))
+    val knnCands = top(adc, depth, col("__adc"), col("vec_id")).select("query_id", "vec_id")
+      .join(all, "vec_id").join(graphQ, "query_id")
+      .select(col("query_id"), col("vec_id"),
+        GraftFunctions.cosineSim(col("qvec"), col("vec")).as("__cos"))
+    val knn = sortedRows(SimilarityOps.annKnnJoinRanked(spark, SfDir))
+    assert(knn.nonEmpty && knn == sortedRows(ranked(knnCands)))
+  }
+
   test("driver encode and probe ranking break planted ties to the lower id, like the algebra") {
     // 8 blocks x 2 dims; cells 1 and 2 are mirror images about 0 and
     // cell 0 sits far off, so the zero vector is equidistant from 1 and 2
@@ -841,9 +960,7 @@ class SimilaritySpec extends SparkSpec {
       else if (k == 9) Array(4.0 + 10.0, 3.0) else Array(k + 10.0, 3.0)
     }
     val q = SimilarityOps.Quantizer(centroids, cnorms, codebook)
-    val cells = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq, cnorms(i)) }
-      .toSeq.toDF("cell", "cvec", "cnorm")
-    val idx = SimilarityOps.IvfPqIndex(cells, spark.emptyDataFrame, q)
+    val idx = SimilarityOps.IvfPqIndex(spark.emptyDataFrame, q)
     val vecs = Seq(
       // equidistant from cells 1 and 2; residual (-1, 0) in block 0
       // (code 1), (0, 0) in blocks 1-7: equidistant from codes 0 and 1
@@ -853,7 +970,7 @@ class SimilaritySpec extends SparkSpec {
       // cell 0, residual (14, 3) in every block: codes 4 and 9 tie
       (3L, Array.tabulate(dim)(i => if (i % 2 == 0) 19.0 else 8.0)),
       (4L, Array.tabulate(dim)(i => i * 0.25 - 2.0))).toDF("vec_id", "vec")
-    val enc = SimilarityOps.encodeWithIndex(spark, vecs, idx)
+    val enc = SimilarityOps.encodeWithIndex(spark, vecs, q)
       .as[(Long, Int, Seq[Int])].collect().sortBy(_._1)
     assert(enc(0) == ((1L, 1, 1 +: Seq.fill(7)(0))), enc(0))
     assert(enc(1) == ((2L, 1, 1 +: Seq.fill(7)(0))), enc(1))
