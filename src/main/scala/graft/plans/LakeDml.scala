@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, input_file_name, lit, max, when}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, lit, max, when}
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.sources.{GraftLakeCatalogTable, GraftLakeSource, LakeIo, LakeTable}
@@ -202,7 +202,7 @@ object LakeDml extends PredicateHelper {
 
   /** Every classification read carries each target row's source file
     * in this column, through the statement's materialized batch:
-    * `input_file_name()` over the scan, a percent-encoded URI that
+    * [[LakeTable.readLocated]]'s file column, a percent-encoded URI that
     * [[touched]] decodes. */
   private[graft] val FileCol = LakeTable.PosFileCol
 
@@ -224,15 +224,9 @@ object LakeDml extends PredicateHelper {
   private[graft] def touched(version: Int, files: Seq[String]): LakeTable.TouchedFiles =
     LakeTable.TouchedFiles(version, files.map(LakeIo.normUri).toSet)
 
-  /** `filter` applies on the scan BEFORE the file column:
-    * `input_file_name()` is nondeterministic, and no filter pushes
-    * through a projection that computes one. */
   private def classified(spark: SparkSession, path: String, m: LakeTable.Manifest,
-      entries: Seq[LakeTable.FileEntry], filter: Option[Column] = None): Classified = {
-    val snap = LakeTable.readSnapshot(spark, path, m, entries)
-    Classified(m.version,
-      filter.fold(snap)(c => snap.filter(c)).withColumn(FileCol, input_file_name()))
-  }
+      entries: Seq[LakeTable.FileEntry], filter: Option[Column] = None): Classified =
+    Classified(m.version, LakeTable.readLocated(spark, path, m, entries, filter))
 }
 
 object LakeDmlStrategy extends SparkStrategy with PredicateHelper {

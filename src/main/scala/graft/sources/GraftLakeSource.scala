@@ -494,16 +494,25 @@ private[graft] class GraftLakeUncreatedTable(path: String)
   * optionally narrowed to a subset of its entries — graft's own reads
   * pin the files one commit added, or a DML statement's pruned
   * candidates ([[LakeTable.readSnapshot]]). BATCH_READ only — see the
-  * capability note on [[GraftLakeSource]]. */
+  * capability note on [[GraftLakeSource]].
+  *
+  * One metadata column, [[GraftLakeTable.RowIndexCol]]: each row's
+  * ordinal within its data file (the parquet row index, the Iceberg
+  * `_pos` column), what positional deletes record. A read that selects
+  * it gets it; column pruning drops it from every read that does not. */
 private[graft] class GraftLakeTable(spark: SparkSession, path: String,
     private[graft] val m: LakeTable.Manifest,
     entries: Option[Seq[LakeTable.FileEntry]] = None)
     extends org.apache.spark.sql.connector.catalog.Table
-    with org.apache.spark.sql.connector.catalog.SupportsRead {
+    with org.apache.spark.sql.connector.catalog.SupportsRead
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   private[graft] def tablePath: String = path
 
   override def name(): String = s"graftlake `$path` @v${m.version}"
   override def schema(): StructType = m.schema
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(GraftLakeTable.RowIndexColumn)
 
   /** Honest catalog METADATA (DESCRIBE / SHOW CREATE / SHOW
     * TBLPROPERTIES render these; V1-fallback writes ignore them): the
@@ -544,6 +553,21 @@ private[graft] class GraftLakeTable(spark: SparkSession, path: String,
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     new GraftLakeScanBuilder(spark, path, m, entries.getOrElse(m.files))
+}
+
+private[graft] object GraftLakeTable {
+  /** The row-index metadata column's name: Spark's own temporary
+    * row-index field, which the parquet readers fill from footer offsets
+    * (correct under row-group/page skipping, split reads and vectorized
+    * batches) wherever it appears in a read schema — so the scan reads
+    * it under this name with no rename layer. */
+  val RowIndexCol: String = org.apache.spark.sql.execution.datasources.parquet
+    .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+
+  private val RowIndexColumn = new org.apache.spark.sql.connector.catalog.MetadataColumn {
+    override def name(): String = RowIndexCol
+    override def dataType(): org.apache.spark.sql.types.DataType = LongType
+  }
 }
 
 /** V2 ScanBuilder: column pruning + filter pushdown land here, and
@@ -823,24 +847,21 @@ private[graft] class GraftLakeScanBuilder(spark: SparkSession, path: String,
       // unmapped) — the delegate reads physical, and the composite's
       // ordinal remap surfaces the logical order. Partition columns are
       // never mapped (rename/drop refuse them).
-      // Positional-delete groups additionally request the parquet ROW
-      // INDEX via Spark's own temporary-column contract: a field named
-      // ROW_INDEX_TEMPORARY_COLUMN_NAME in the read schema is populated
-      // by the parquet readers from footer offsets (correct under
-      // row-group/page skipping and splits — the machinery behind
-      // `_metadata.row_index`, reachable here because the V2 factory
-      // wires ParquetRowIndexUtil the same as the V1 format).
+      // The parquet ROW INDEX rides as a trailing data field named
+      // [[GraftLakeTable.RowIndexCol]], read when the query selects the
+      // metadata column or a positional group probes it: the parquet
+      // readers fill that field from footer offsets. It is neither
+      // mapped nor part of `dataSchema` — no file stores it.
+      val rowIdx = GraftLakeTable.RowIndexCol
       val readDataSchema = StructType(
-        wanted.filterNot(f => partKeys.contains(f.name))
+        wanted.filterNot(f => partKeys.contains(f.name) || f.name == rowIdx)
           .map(f => f.copy(name = m.phys(f.name))) ++
-          (if (withRowIdx) Seq(StructField(
-            org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-              .ROW_INDEX_TEMPORARY_COLUMN_NAME,
+          (if (withRowIdx || wanted.fieldNames.contains(rowIdx)) Seq(
             // NULLABLE on purpose: the column is absent from the FILE
             // schema, and the reader's required-column check refuses a
             // required-but-missing field before the row-index generator
             // (matched by NAME) ever fills it
-            org.apache.spark.sql.types.LongType, nullable = true))
+            StructField(rowIdx, LongType, nullable = true))
            else Seq.empty))
       val readPartSchema = StructType(wanted.filter(f => partKeys.contains(f.name)))
       val partSchemaFull = StructType(m.schema.filter(f => partKeys.contains(f.name)))
@@ -987,10 +1008,7 @@ private[graft] class GraftLakeScanBuilder(spark: SparkSession, path: String,
             // order is logical)
             val remap = wanted.fieldNames.toIndexedSeq.map(f => outSchema.fieldIndex(m.phys(f)))
             GraftLakeScanGroup(scan, GroupRead(dvs, remap, pos,
-              if (pos.isEmpty) -1
-              else outSchema.fieldIndex(
-                org.apache.spark.sql.execution.datasources.parquet
-                  .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)))
+              if (pos.isEmpty) -1 else outSchema.fieldIndex(GraftLakeTable.RowIndexCol)))
         }
       // the composite carries its OWN runtime-filter support (group
       // structure pinned; a clustered composite pads emptied buckets so
@@ -1179,9 +1197,10 @@ private[graft] final case class SidecarFactories(
   *    hash lookup against the exact layout its own key projection emits;
   *  - positional sidecars ([[deletedFor]]) materialize a per-source-file
   *    set of deleted row ordinals, probed as a primitive long membership
-  *    test. Their `__file` strings are `_metadata.file_path` renderings,
-  *    normalized through [[LakeIo.normUri]] to the raw filesystem name —
-  *    the key the reader derives from its partition's file.
+  *    test. Their `__file` strings are `input_file_name()` renderings
+  *    (the positional delete read them through this scan), normalized
+  *    through [[LakeIo.normUri]] to the raw filesystem name — the key the
+  *    reader derives from its partition's file.
   *
   * Cache lifetime: executor process, bounded by the distinct sidecar
   * sets read between compactions (compaction both materializes sidecars

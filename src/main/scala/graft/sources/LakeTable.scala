@@ -142,8 +142,8 @@ object LakeTable {
       // [[deletePos]]/[[deletePosWhere]] commit from the doomed frame
       // the sidecar was written from, so COUNT(*) stays metadata-only
       // BETWEEN compactions on a DV-active table (count = rows -
-      // posDel). Each commit drops the ordinals a prior positional
-      // sidecar already holds, so pairs never double-count. -1 with a
+      // posDel). That frame is read with every prior sidecar applied,
+      // so its ordinals are new and pairs never double-count. -1 with a
       // non-empty `pos` = unknown (pre-cardinality manifest) — refuses
       // the pushdown, never mis-counts. Equality sidecars carry no
       // cardinality (their doomed set is key-valued, applied per read)
@@ -778,62 +778,30 @@ object LakeTable {
 
   // ---- reads ----
 
-  /** Helper-column names for positional deletes: each row's source file
-    * (as `_metadata.file_path` renders it) and its ROW ORDINAL within
-    * that file (the parquet row index — correct under row-group/page
-    * skipping, split reads, and vectorized batches, because it is
-    * computed from footer offsets, not counted by the consumer). */
+  /** Helper-column names for rows located in their files: the source
+    * file, as `input_file_name()` renders it (a percent-encoded URI that
+    * [[LakeIo.normUri]] decodes to the manifest's raw name), and the
+    * ROW ORDINAL within that file (the scan's row-index metadata column,
+    * [[GraftLakeTable.RowIndexCol]]). */
   private[graft] val PosFileCol = "_gl_dv_file"
   private[graft] val PosIdxCol = "_gl_dv_pos"
 
-  /** Raw file read with the MANIFEST's schema — no footer/mergeSchema
-    * pass (files written before a schema-evolving commit read their
-    * missing columns as null) and NO deletion sidecars: what the writes
-    * that locate rows in files read — [[deletePos]]'s (file, row
-    * ordinal) pairs and touched-file discovery. Every other read is
-    * [[readSnapshot]].
-    * Partition-layout tables store their partition columns in the
-    * DIRECTORY, not the parquet: entries group by their
-    * (manifest-recorded) partition values, each group reads its
-    * data-only schema, and the partition columns come back as typed
-    * literals. Each entry reads under ITS OWN layout (`entry.part.keys`),
-    * not the manifest header's: after a no-rewrite [[evolvePartitioning]],
-    * files written under the old layout still store the new partition
-    * column in their DATA (and vice versa). */
-  private def readRaw(spark: SparkSession, m: Manifest,
-      entries: Seq[FileEntry], withPos: Boolean = false): DataFrame = {
-    // position helpers ride the FILE SCAN itself (`_metadata` resolves
-    // only against a file-source relation, before any projection)
-    def metaCols: Seq[org.apache.spark.sql.Column] =
-      if (!withPos) Seq.empty
-      else Seq(col("_metadata.file_path").as(PosFileCol),
-        col("_metadata.row_index").as(PosIdxCol))
-    if (entries.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](),
-        if (!withPos) m.schema
-        else StructType(m.schema.fields ++ Seq(
-          StructField(PosFileCol, StringType), StructField(PosIdxCol, LongType))))
-    // data files speak PHYSICAL column names (identity unless the table
-    // carries a column mapping): read physical, surface logical
-    def toLogical(df: DataFrame, fields: Seq[StructField]): DataFrame =
-      if (m.colMap.isEmpty && !withPos) df
-      else df.select(fields.map(f => col(m.phys(f.name)).as(f.name)) ++ metaCols: _*)
-    if (entries.forall(_.part.isEmpty))
-      return toLogical(
-        spark.read.schema(m.physSchema(m.schema)).parquet(entries.map(_.path): _*),
-        m.schema)
-    val outCols = m.schema.map(f => col(f.name)) ++
-      (if (withPos) Seq(col(PosFileCol), col(PosIdxCol)) else Seq.empty)
-    entries.groupBy(_.part).toSeq.map { case (part, es) =>
-      val dataFields = m.schema.filterNot(f => part.contains(f.name))
-      val base = toLogical(
-        spark.read.schema(m.physSchema(dataFields)).parquet(es.map(_.path): _*),
-        dataFields)
-      part.foldLeft(base) { case (df, (c, v)) =>
-        val dt = m.schema(m.schema.fieldIndex(c)).dataType
-        df.withColumn(c, lit(v).cast(dt))
-      }.select(outCols: _*)
-    }.reduce(_ unionByName _)
+  /** [[readSnapshot]] of `entries` with each row located in its file:
+    * the file in [[PosFileCol]] and, with `positions`, the row ordinal in
+    * [[PosIdxCol]]. The one read behind touched-file discovery,
+    * positional deletes and the SQL DML classification; sidecars apply,
+    * so a row an earlier delete erased is never located again. `filter`
+    * applies on the scan BEFORE the file column: `input_file_name()` is
+    * nondeterministic, and no filter pushes through a projection that
+    * computes one. */
+  private[graft] def readLocated(spark: SparkSession, path: String, m: Manifest,
+      entries: Seq[FileEntry], filter: Option[Column] = None,
+      positions: Boolean = false): DataFrame = {
+    val snap = readSnapshot(spark, path, m, entries)
+    val located = filter.fold(snap)(c => snap.filter(c))
+      .withColumn(PosFileCol, input_file_name())
+    if (positions) located.withColumn(PosIdxCol, col(GraftLakeTable.RowIndexCol))
+    else located
   }
 
   /** The committed rows of `entries` (files of manifest `m` at `path`):
@@ -1321,8 +1289,8 @@ object LakeTable {
 
   /** The files of manifest `version` holding a live row whose key a DML
     * statement claims, as the statement's own classification pass read
-    * them (`_metadata.file_path` renderings, [[LakeIo.normUri]]-decoded
-    * — the [[normKey]] axis of manifest paths). */
+    * them ([[readLocated]]'s file column, [[LakeIo.normUri]]-decoded —
+    * the [[normKey]] axis of manifest paths). */
   final case class TouchedFiles(version: Int, files: Set[String])
 
   /** Touched-file discovery for a keyed rewrite or sidecar against `m`:
@@ -1336,16 +1304,16 @@ object LakeTable {
     * pruned batch) skip the scan outright: running it would still BUILD
     * the batch-keys broadcast (a full pass over the batch source) just
     * to probe an empty relation. */
-  private def touchedFiles(spark: SparkSession, m: Manifest, keys: DataFrame,
-      keyCols: Seq[String], known: Option[TouchedFiles]): Set[String] =
+  private def touchedFiles(spark: SparkSession, path: String, m: Manifest,
+      keys: DataFrame, keyCols: Seq[String], known: Option[TouchedFiles]): Set[String] =
     known.filter(_.version == m.version).map(_.files).getOrElse {
       val candidates = envelopeCandidates(m, keys, keyCols)
       if (candidates.isEmpty) Set.empty[String]
-      else readRaw(spark, m, candidates).withColumn("__file", input_file_name())
+      else readLocated(spark, path, m, candidates)
         .join(broadcast(keys), keyCols, "left_semi")
-        .select("__file").distinct()
-        .collect().map(r => LakeIo.normUri(r.getString(0))) // input_file_name is a
-        .toSet // percent-ENCODED URI; decode to the raw name. Bounded: ≤ #files.
+        .select(PosFileCol).distinct()
+        .collect().map(r => LakeIo.normUri(r.getString(0))) // bounded: ≤ #files
+        .toSet
     }
 
   /** Test-only interleave point, invoked between touched-file discovery
@@ -1376,7 +1344,7 @@ object LakeTable {
     // touched-file discovery, ONE rewrite, ONE commit for a statement
     // that carries both (a key in both sets resolves update-wins — the
     // delete removes the snapshot row, the update batch re-adds it)
-    val touched = touchedFiles(spark, m, claimed, keyCols, known)
+    val touched = touchedFiles(spark, path, m, claimed, keyCols, known)
     val (touchedEntries, carried) = m.files.partition(e => touched(LakeIo.normKey(e.path)))
     // rewrite = surviving rows of touched files (read with the MANIFEST
     // schema and minus their sidecars — a deleted row must not resurrect
@@ -1576,7 +1544,7 @@ object LakeTable {
     require(current > 0, s"LakeTable: cannot delete from missing table at $path")
     val m = manifest(path, current)
     val keyRows = keys.select(keyCols.map(k => col(k).cast(m.schema(k).dataType).as(k)): _*)
-    val touched = touchedFiles(spark, m, keyRows, keyCols, known)
+    val touched = touchedFiles(spark, path, m, keyRows, keyCols, known)
     // churn = the touched entries re-added with the sidecar attached
     // (remove-then-add replaces them in place); untouched files never
     // appear in the record
@@ -1624,10 +1592,9 @@ object LakeTable {
     val keyRows = keys.select(keyCols.map(col): _*)
     // doomed positions: ONE envelope-pruned scan carrying the parquet
     // row index + source file, semi-joined on the (broadcast) keys
-    val candidates = envelopeCandidates(m, keyRows, keyCols)
-    val doomed = readRaw(spark, m, candidates, withPos = true)
-      .join(broadcast(keyRows), keyCols, "left_semi")
-    commitPosSidecar(spark, path, m, candidates, doomed)
+    commitPosSidecar(spark, path, m,
+      readLocated(spark, path, m, envelopeCandidates(m, keyRows, keyCols), positions = true)
+        .join(broadcast(keyRows), keyCols, "left_semi"))
   }
 
   /** [[deletePos]] with an arbitrary row PREDICATE instead of a key
@@ -1642,30 +1609,22 @@ object LakeTable {
     val m = manifest(path, current)
     // NULL-predicate rows SURVIVE (SQL DELETE three-valued logic): only
     // rows where cond is definitively true are doomed
-    val doomed = readRaw(spark, m, m.files, withPos = true)
-      .filter(coalesce(cond, lit(false)))
-    commitPosSidecar(spark, path, m, m.files, doomed)
+    commitPosSidecar(spark, path, m, readLocated(spark, path, m, m.files,
+      filter = Some(coalesce(cond, lit(false))), positions = true))
   }
 
   /** Shared positional-delete commit (review r18 #7): write the doomed
     * (file, ordinal) rows as ONE sidecar parquet, flip the touched
-    * entries, publish one `delete-pos` version. `doomed` must still
-    * carry [[PosFileCol]]/[[PosIdxCol]] and come from a [[readRaw]] of
-    * `read`; localCheckpoint pins ONE materialization — the
+    * entries, publish one `delete-pos` version. `doomedRows` comes from
+    * a [[readLocated]] with positions of manifest `m`, so every prior
+    * sidecar already applied and each (file, ordinal) is new by
+    * construction; localCheckpoint pins ONE materialization — the
     * touched-file set and the sidecar bytes must describe the same
     * rows. */
   private def commitPosSidecar(spark: SparkSession, path: String, m: Manifest,
-      read: Seq[FileEntry], doomedRows: DataFrame): Int = {
-    val fresh = doomedRows
+      doomedRows: DataFrame): Int = {
+    val doomed = doomedRows
       .select(col(PosFileCol).as("__file"), col(PosIdxCol).as("__pos"))
-    // readRaw applies no sidecar, so `fresh` still holds ordinals that
-    // an earlier positional sidecar of the read files deletes: drop
-    // them, so each (file, ordinal) is recorded — and counted in
-    // posDel — once (both sides render the file as `_metadata.file_path`)
-    val priorDirs = read.flatMap(_.pos).distinct
-    val doomed = (if (priorDirs.isEmpty) fresh
-      else fresh.join(spark.read.schema(PosSidecarSchema).parquet(priorDirs: _*),
-        Seq("__file", "__pos"), "left_anti"))
       .localCheckpoint()
     // one bounded collect serves both the touched set and the per-file
     // DOOMED CARDINALITY (the Delta DV-cardinality design): the doomed
@@ -1735,7 +1694,7 @@ object LakeTable {
     * evolution as a HEADER-ONLY churn commit — the Delta/Iceberg
     * metadata-only ADD COLUMN. No byte of data moves: every file
     * carries by reference, existing rows read the new columns as null
-    * (the manifest schema is the read authority — [[readRaw]] never
+    * (the manifest schema is the read authority — the scan never
     * opens a footer to discover a schema), and as-of reads of earlier
     * versions keep the narrower schema they committed with. Added
     * columns are forced nullable: every already-committed row HAS no

@@ -320,6 +320,29 @@ class LakeTableSpec extends SparkSpec {
     val mc = LakeTable.manifest(p, LakeTable.latestVersion(p))
     assert(mc.dvPaths.isEmpty && mc.posDvPaths.isEmpty)
     assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect)
+    // the same stitched file read as byte SPLITS: each split's row
+    // index must still count from the file's first row, for the pure
+    // scan (first delete) and the positional composite (second)
+    val ps = freshPath("stitch_pos_split")
+    LakeTable.create(spark, ps, (1L to 400L).map(k => (k, "base", k)).toDF("k", "s", "v"),
+      Seq("k"), nBuckets = 4)
+    assert(compactJobs(ps, targetFiles = 1) == 0)
+    val splitConf = Seq("spark.sql.files.maxPartitionBytes" -> "1500",
+      "spark.sql.files.openCostInBytes" -> "0")
+    val priorConf = splitConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      splitConf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val splits = LakeTable.read(spark, ps).rdd.getNumPartitions
+      assert(splits == 5, s"the one file should read as 5 splits, got $splits")
+      LakeTable.deletePosWhere(spark, ps, col("v") % 23 === 0)
+      LakeTable.deletePos(spark, ps, (1L to 400L by 29).toDF("k"), Seq("k"))
+      val expectSplit = (1L to 400L).filterNot(k => k % 23 == 0 || k % 29 == 1)
+        .map(k => (k, "base", k)).toSet
+      assert(rows(LakeTable.read(spark, ps).select("k", "s", "v")) == expectSplit)
+      assert(rows(spark.read.format("graftlake").load(ps).select("k", "s", "v")) == expectSplit)
+      assert(LakeTable.read(spark, ps).count() == expectSplit.size)
+    } finally priorConf.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("compact keeps the scan rewrite for pre-addColumns files, sidecars and column mappings") {
@@ -683,9 +706,9 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.manifest(p, 2).posDvPaths.size == 1)
     assert(LakeTable.manifest(p, 2).dvPaths.isEmpty)
     val expect2 = (1L to 400L).filterNot(erased.contains).map(k => (k, "base", k)).toSet
-    // V1 read path (ordinal anti-join on (_metadata.file_path, row_index))
+    // the API read and the graftlake source plan the same V2 scan (the
+    // composite reader's executor-side long-set probe)
     assert(rows(LakeTable.read(spark, p).select("k", "s", "v")) == expect2)
-    // V2 read path (composite reader's executor-side long-set probe)
     assert(rows(spark.read.format("graftlake").load(p).select("k", "s", "v")) == expect2)
     // time travel still sees the erased rows; the feed is O(delta) deletes
     assert(rows(LakeTable.read(spark, p, Some(1)).select("k", "s", "v")).size == 400)
@@ -758,6 +781,47 @@ class LakeTableSpec extends SparkSpec {
     val m = LakeTable.manifest(p, LakeTable.latestVersion(p))
     assert(m.files.map(_.posDel).sum == 30L)
     assert(LakeTable.read(spark, p).select("k").as[Long].collect().toSet == (31L to 100L).toSet)
+  }
+
+  test("positional deletes read through the one scan: job budgets on a sidecar-carrying table") {
+    import spark.implicits._
+    val p = freshPath("dvposjobs")
+    LakeTable.create(spark, p, (1L to 400L).map(k => (k, "base", k)).toDF("k", "s", "v"),
+      Seq("k"), nBuckets = 4)
+    LakeTable.deletePos(spark, p, Seq(7L).toDF("k"), Seq("k"))
+    val posJobs = sparkJobSites {
+      LakeTable.deletePos(spark, p, Seq(7L, 11L, 12L, 300L).toDF("k"), Seq("k")); () }
+    assert(posJobs.size <= 6,
+      s"deletePos ran ${posJobs.size} Spark jobs (budget 6):\n${posJobs.mkString("\n")}")
+    val whereJobs = sparkJobSites {
+      LakeTable.deletePosWhere(spark, p, col("v") % 97 === 0); () }
+    assert(whereJobs.size <= 4,
+      s"deletePosWhere ran ${whereJobs.size} Spark jobs (budget 4):\n${whereJobs.mkString("\n")}")
+    val expect = (1L to 400L).filterNot(k => Set(7L, 11L, 12L, 300L)(k) || k % 97 == 0)
+      .map(k => (k, "base", k)).toSet
+    assert(rows(LakeTable.read(spark, p)) == expect)
+    assert(LakeTable.read(spark, p).count() == expect.size)
+  }
+
+  test("touched-file discovery reads with sidecars applied: an erased row is never found again") {
+    import spark.implicits._
+    val p = freshPath("dvposdiscover")
+    LakeTable.create(spark, p, (1L to 100L).map(k => (k, "base", k)).toDF("k", "s", "v"),
+      Seq("k"), nBuckets = 4)
+    val created = LakeTable.manifestFiles(p, 1).toSet
+    LakeTable.deletePos(spark, p, Seq(5L).toDF("k"), Seq("k"))
+    // key 5 is gone: an equality delete of it finds no file to flip...
+    val before = LakeTable.manifest(p, LakeTable.latestVersion(p)).files
+    val vdv = LakeTable.deleteDV(spark, p, Seq(5L).toDF("k"), Seq("k"))
+    assert(LakeTable.manifest(p, vdv).files == before,
+      "deleteDV attached a sidecar for a row an earlier sidecar deleted")
+    // ...and a copy-on-write delete rewrites none
+    val vd = LakeTable.delete(spark, p, Seq(5L).toDF("k"), Seq("k"))
+    assert(LakeTable.manifestFiles(p, vd).toSet == created,
+      "delete rewrote a file for a row an earlier sidecar deleted")
+    val expect = (1L to 100L).filterNot(_ == 5L).map(k => (k, "base", k)).toSet
+    assert(rows(LakeTable.read(spark, p)) == expect)
+    assert(LakeTable.read(spark, p).count() == 99L)
   }
 
   test("bloom index: no false negative on any value; lifecycle declare->write->backfill; rename refusal") {
@@ -1420,13 +1484,22 @@ class LakeTableSpec extends SparkSpec {
     val day1 = java.sql.Date.valueOf(day0.plusDays(1))
     assert(state(spark.sql(s"SELECT k, d, s FROM pevt WHERE d = DATE'$day1'")) ==
       expect.filter(_._2 == day1.toString))
+    // a positional delete across both layouts: row ordinals of one
+    // old-layout file and of the new-layout file, from the one scan
+    assert(LakeTable.deletePos(spark, p, Seq(3L, 1000L).toDF("k"), Seq("k")) == 4)
+    val flipped = LakeTable.manifest(p, 4).files.filter(_.pos.nonEmpty)
+    assert(flipped.map(_.part.isEmpty).sorted == Seq(false, true),
+      s"the delete must flip one file of each layout: ${flipped.map(_.path)}")
+    val expectDel = expect.filterNot(r => r._1 == 3L || r._1 == 1000L)
+    assert(state(LakeTable.read(spark, p).select("k", "d", "s")) == expectDel)
+    assert(state(spark.read.format("graftlake").load(p).select("k", "d", "s")) == expectDel)
     // compact migrates everything to the CURRENT layout — uniform again
     LakeTable.compact(spark, p, targetFiles = 2)
-    val m4 = LakeTable.manifest(p, 4)
-    assert(m4.files.forall(_.part.contains("d")), "compact did not migrate the layout")
-    assert(state(LakeTable.read(spark, p).select("k", "d", "s")) == expect)
+    val m5 = LakeTable.manifest(p, 5)
+    assert(m5.files.forall(_.part.contains("d")), "compact did not migrate the layout")
+    assert(state(LakeTable.read(spark, p).select("k", "d", "s")) == expectDel)
     // pruning on the partition column now cuts whole directories
-    val (kept, total) = LakeTable.prunedEntries(p, 4, "d", day1, day1)
+    val (kept, total) = LakeTable.prunedEntries(p, 5, "d", day1, day1)
     assert(kept.nonEmpty && kept.size < total)
   }
 
@@ -1625,6 +1698,19 @@ class LakeTableSpec extends SparkSpec {
       "delete was a silent no-op under a Hive-escaped partition value")
     LakeTable.deleteDV(spark, p, Seq(Tuple1(8L)).toDF("k"), Seq("k"))
     assert(LakeTable.read(spark, p).count() == 58)
+    // positional deletes record each row's file as input_file_name()
+    // renders it; the reader's normUri key must meet that rendering
+    // under both escaped directories. One key per partition, repeated
+    // (the repeat finds nothing), then a predicate delete.
+    LakeTable.deletePos(spark, p, Seq(10L, 11L).toDF("k"), Seq("k"))
+    LakeTable.deletePos(spark, p, Seq(10L, 11L).toDF("k"), Seq("k"))
+    LakeTable.deletePosWhere(spark, p, col("v") === 20L || col("v") === 21L)
+    val expectPos = expect.filterNot(r => Set(6L, 8L, 10L, 11L, 20L, 21L)(r._1))
+    assert(LakeTable.read(spark, p).select("k", "c", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet == expectPos)
+    assert(Seq(LakeTable.read(spark, p).count(),
+      LakeTable.read(spark, p).collect().length.toLong,
+      spark.read.format("graftlake").load(p).count()) == Seq.fill(3)(expectPos.size.toLong))
   }
 
   test("addColumns: header-only schema evolution; as-of keeps the committed schema") {
